@@ -64,8 +64,7 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame, *,
 def semantic_contamination_hits(corpus_emb: DataFrame, eval_emb: DataFrame,
                                 *, threshold: float = 0.9,
                                 id_col: str = "vec_id",
-                                vec_col: str = "embedding",
-                                impl: str = "hybrid") -> DataFrame:
+                                vec_col: str = "embedding") -> DataFrame:
     """Per-corpus-doc EMBEDDING-space contamination: how many eval
     vectors each corpus vector matches at cosine >= threshold, and
     the best match. The semantic companion of contamination_hits —
@@ -74,64 +73,40 @@ def semantic_contamination_hits(corpus_emb: DataFrame, eval_emb: DataFrame,
     modern data cards, e.g. the phi/FineWeb-Edu decontamination
     passes).
 
-    Scale shape mirrors the n-gram pass exactly: the eval side is
-    small by construction → BROADCAST nested-loop against the
-    streaming corpus (a map stage — the corpus never shuffles);
-    the similarity filter runs BEFORE the per-doc aggregation, so
-    the one keyed aggregation's input is bounded by contamination
-    density, never corpus x eval. Columns: doc_id, n_hits,
-    max_sim (round 6).
-
-    impl="hybrid" (default): the corpus × eval cosines run
-    VECTORIZED — the bounded eval matrix is collected once (the same
+    Scale shape mirrors the n-gram pass: the eval side is small by
+    construction, so its matrix is collected once (the same
     model-sized-collect contract as the topic seeds) and each Arrow
-    corpus batch is matmul'd against it at threshold − 1e-6; only the
-    surviving (doc, eval) candidates — bounded by contamination
-    density — are re-scored with the hash-exact JVM fold that decides
-    the rounded `sim >= threshold` comparison. matmul vs sequential
-    fold differ ≲1e-13 ≪ the margin, so the candidate set provably
-    contains every true hit. impl="expr" keeps the all-pairs JVM
-    fold (the verification semantics: one interpreted 2·d-element
-    fold per corpus × eval pair — the engine's documented hotspot
-    shape, ~8× slower at sf0.1).
+    corpus batch is matmul'd against it at threshold − 1e-6 — a map
+    stage, the corpus never shuffles. Only the surviving (doc, eval)
+    candidates — bounded by contamination density — are re-scored
+    with the JVM cosine fold (eval side broadcast) that decides the
+    rounded `sim >= threshold` comparison the oracle replays. matmul
+    vs sequential fold differ ≲1e-13 ≪ the margin, so the candidate
+    set provably contains every true hit. The one keyed aggregation
+    sees only the hits. An empty eval set flags nothing.
+    Columns: doc_id, n_hits, max_sim (round 6).
     """
-    from parlerproject_spark.functions.vectors import cosine
-
-    ev = eval_emb.select(F.col(id_col).alias("__eid"),
-                         F.col(vec_col).alias("__ev"))
-    if impl == "expr":
-        sim = F.round(cosine(vec_col, "__ev"), 6)
-        return (corpus_emb.select(F.col(id_col).alias("doc_id"),
-                                  F.col(vec_col))
-                .crossJoin(F.broadcast(ev))
-                .select("doc_id", sim.alias("sim"))
-                .filter(F.col("sim") >= threshold)
-                .groupBy("doc_id")
-                .agg(F.count("*").alias("n_hits"),
-                     F.max("sim").alias("max_sim")))
-    if impl != "hybrid":
-        raise ValueError(f"unknown impl: {impl}")
-
     import numpy as np
     import pandas as pd
 
+    from parlerproject_spark.functions.vectors import cosine
+
+    id_type = corpus_emb.schema[id_col].dataType.simpleString()
+    eid_type = eval_emb.schema[id_col].dataType.simpleString()
+    ev = eval_emb.select(F.col(id_col).alias("__eid"),
+                         F.col(vec_col).alias("__ev"))
     ev_rows = ev.collect()          # eval suite: small by construction
     if not ev_rows:
-        # shape-(0,) eval matrix has no axis-1 to norm over; the expr
-        # path already returns the correct empty grouped frame
-        return semantic_contamination_hits(
-            corpus_emb, eval_emb, threshold=threshold, id_col=id_col,
-            vec_col=vec_col, impl="expr")
+        return corpus_emb.sparkSession.createDataFrame(
+            [], f"doc_id {id_type}, n_hits bigint, max_sim double")
     E = np.array([list(r["__ev"]) for r in ev_rows], dtype=np.float64)
     eids = np.array([r["__eid"] for r in ev_rows])
     en = np.linalg.norm(E, axis=1)
     thr = threshold - 1e-6
-    id_type = corpus_emb.schema[id_col].dataType.simpleString()
-    eid_type = eval_emb.schema[id_col].dataType.simpleString()
 
     def prefilter(it):
         for pdf in it:
-            if len(pdf) == 0 or len(eids) == 0:
+            if len(pdf) == 0:
                 continue
             X = np.array(pdf["__v"].tolist(), dtype=np.float64)
             xn = np.linalg.norm(X, axis=1)
@@ -148,9 +123,10 @@ def semantic_contamination_hits(corpus_emb: DataFrame, eval_emb: DataFrame,
             .mapInPandas(prefilter,
                          schema=f"doc_id {id_type}, __eid {eid_type}")
             # duplicate corpus ids: d dup rows each flag the pair, and
-            # the re-score join fans back out by d — distinct() keeps
-            # the hybrid count identical to the expr path's d (the
-            # re-score still judges every dup row on its own vector)
+            # the re-score join fans back out by d — distinct() makes
+            # that fan-out count each dup row exactly once, as the
+            # oracle's all-pairs join does (the re-score still judges
+            # every dup row on its own vector)
             .distinct())
     sim = F.round(cosine("__cv", "__ev"), 6)
     return (cand

@@ -122,8 +122,7 @@ def sampled_density_assign(vectors: DataFrame, *, sample_mod: int = 4,
                            mode: str = "exact", dim: int | None = None,
                            num_planes: int = 6, num_tables: int = 8,
                            id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           impl: str = "arrow") -> DataFrame:
+                           vec_col: str = "embedding") -> DataFrame:
     """Sampled-fit / full-assign density topics — the distributed
     HDBSCAN-analogue BERTopic actually needs (reference
     code/bertopicTest.py:53-61 fits HDBSCAN on everything because it
@@ -179,8 +178,7 @@ def sampled_density_assign(vectors: DataFrame, *, sample_mod: int = 4,
     exemplar_vecs = [list(r[vec_col]) for r in ex_rows]
     labels = [int(r["cluster"]) for r in ex_rows]
     assigned = _assign(vectors, exemplar_vecs, id_col=id_col,
-                       vec_col=vec_col, impl=impl,
-                       outlier_threshold=assign_threshold)
+                       vec_col=vec_col, outlier_threshold=assign_threshold)
     lab = F.lit(labels)
     return assigned.select(
         F.col(id_col),

@@ -70,9 +70,9 @@ def hard_negatives(vectors: DataFrame, *, k: int,
                                     id_col=id_col, vec_col=vec_col,
                                     train_mod=train_mod, round_c=round_c)
         cent = centroid_literal(unit_rows(centroids))
-        # candidate side: nearest cell per vector, computed on the
-        # deterministic expression path (pure map, ties to lowest
-        # cell — same contract as topics._assign(impl="expr")); at
+        # candidate side: nearest cell per vector, computed with a
+        # sequential JVM dot fold (pure map, argmax ties to the lowest
+        # cell — the summation order a SQL replay reproduces); at
         # scale this is the PARTITIONED BY cell index table
         sims_b = F.transform(cent, lambda c: dot(F.col("vb"), c))
         cand = (b.withColumn(

@@ -417,6 +417,9 @@ def hashed_embedding(docs: DataFrame, *, dim: int = 16,
     O(tokens · dim) work per row via JVM HOFs, the right trade at
     small dim. For dim beyond ~64, prefer the explode →
     (id, bucket) groupBy shape (one corpus exchange, O(tokens)).
+    NULL text has no tokens, like the empty string: its embedding is
+    the zero vector (the hashed_bow_docs oracle's coalesce-to-0.0
+    replay gives the same), never a NULL array.
     Columns: <id_col>, embedding (array<double>, length dim).
     """
     if dim < 1:
@@ -432,7 +435,7 @@ def hashed_embedding(docs: DataFrame, *, dim: int = 16,
     # per row, then each token increments its bucket's slot — the
     # hashing is O(tokens), the fold O(tokens·dim) integer adds.
     # Counts are sums of exact 1.0s, so values are unchanged.
-    buckets = F.transform(tokenize(text_col),
+    buckets = F.transform(tokenize(F.coalesce(F.col(text_col), F.lit(""))),
                           lambda t: stable_hash31(t) % dim)
     vec = F.aggregate(
         buckets,

@@ -6,9 +6,9 @@ Two paths, mirroring how a 100 TB vector table is actually served:
   a single narrow pass, no shuffle except the final top-k merge
   (TakeOrderedAndProject).
 - LSH-bucketed ANN: deterministic random-hyperplane signatures with
-  multi-probe querying. Plane weights are *data* in a broadcast
-  dimension table (not literals baked into the expression tree —
-  keeps task binaries small and the plane count a runtime knob).
+  multi-probe querying. Plane weights come from an md5 family (no
+  RNG state) and sign-test every vector in one numpy matmul per
+  Arrow batch (not literals baked into the expression tree).
   Probing hamming-distance-1 buckets trades a small constant factor
   on the (tiny) query side for much better recall.
 
@@ -133,43 +133,15 @@ def knn_bruteforce(vectors: DataFrame, query: DataFrame, *, k: int = 10,
     return scored.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def plane_table(spark, *, dim: int, num_planes: int, num_tables: int) -> DataFrame:
-    """The hyperplane dimension table: one row per hash table,
-    (tbl, ws: array<array<double>>) with ws ordered by plane index.
-    num_tables rows — broadcast everywhere it is used."""
-    rows = [
-        (t, [[_plane_weight(t, p, d) for d in range(dim)] for p in range(num_planes)])
-        for t in range(num_tables)
-    ]
-    return spark.createDataFrame(rows, "tbl int, ws array<array<double>>")
-
-
-def _signatures(df: DataFrame, planes: DataFrame, *, vec_col: str,
-                key_cols: list[str]) -> DataFrame:
-    """Bit signature per (row, table): sign of <vec, plane> folded
-    into a bigint (first plane = MSB). One broadcast-nested-loop
-    against the tiny per-table plane rows and a pure-map fold — no
-    shuffle at all on the corpus side."""
-    def dotp(w):
-        return F.aggregate(
-            F.zip_with(F.col(vec_col), w, lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    sig = F.aggregate(
-        F.col("ws"), F.lit(0).cast("bigint"),
-        lambda acc, w: acc * 2 + F.when(dotp(w) >= 0, 1).otherwise(0))
-    return (df.crossJoin(F.broadcast(planes))
-            .select(*key_cols, vec_col, "tbl", sig.alias("sig")))
-
-
 def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
                       dim: int, num_planes: int, num_tables: int) -> DataFrame:
-    """Arrow fast path for `_signatures`: the (N×dim)·(dim×T·P) dot
-    products run as ONE numpy matmul per batch (BLAS) instead of
-    T·P·dim interpreted lambda steps per row. Same plane family,
-    same MSB-first bit fold; still a pure map — zero shuffle. Use
-    symmetrically (corpus AND query) so float summation order can
-    never put identical vectors in different buckets."""
+    """Bit signature per (row, table): sign of <vec, plane> for each
+    of the table's planes (`_plane_weight`), folded MSB-first into a
+    bigint. The (N×dim)·(dim×T·P) dot products run as ONE numpy
+    matmul per batch (BLAS) instead of T·P·dim interpreted lambda
+    steps per row; a pure map — zero shuffle. Use symmetrically
+    (corpus AND query) so float summation order can never put
+    identical vectors in different buckets."""
     import numpy as np
     import pandas as pd
 
@@ -199,45 +171,30 @@ def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
 
 
 def knn_lsh(vectors: DataFrame, query: DataFrame, *, dim: int, k: int = 10,
-            num_planes: int = 6, num_tables: int = 8, impl: str = "arrow",
+            num_planes: int = 6, num_tables: int = 8,
             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """ANN cosine top-k: random-hyperplane LSH with multi-probe.
 
-    Corpus side: one signature per (vector, table) — a narrow map +
-    one partial-aggregated shuffle, done once. At scale you persist
-    this instead of recomputing per query: `build_lsh_index` writes
-    it partitionBy(tbl, sig) and `probe_lsh_index` prunes to the
-    probed buckets at planning time.
-    Signatures default to the Arrow/BLAS path (`_signatures_arrow`);
-    impl="expr" keeps the pure-JVM expression form. Adjudicated r4
-    (tools/bench_ann_impl.py, noop-forced evaluation, warm workers):
-    arrow wins at EVERY size tested — 2k rows 2.2s vs 2.6s, 20k 3.9
-    vs 13.6, 200k 24.3 vs 138.7 (dim=64, 48 planes) — because the
-    HOF lambda path is interpreted per element while the matmul is
-    BLAS. The r3 bench regression attributed to this switch did not
-    reproduce; default stays "arrow" unconditionally.
+    Corpus side: one signature per (vector, table) — a narrow
+    Arrow/BLAS map (`_signatures_arrow`) + one partial-aggregated
+    shuffle, done once. At scale you persist this instead of
+    recomputing per query: `build_lsh_index` writes it
+    partitionBy(tbl, sig) and `probe_lsh_index` prunes to the probed
+    buckets at planning time. The matmul beat an interpreted
+    per-element fold at every size measured in r4 — 2k rows 2.2 s vs
+    2.6 s, 20k 3.9 vs 13.6, 200k 24.3 vs 138.7 (dim=64, 48 planes).
     Query side: exact signature plus every hamming-1 neighbor
     (num_planes probes/table) — a few dozen broadcast rows. Exact
     cosine re-rank inside probed buckets only. Recall < 1 by design;
     `knn_bruteforce` is the oracle. Columns: vec_id, sim.
     """
-    spark = vectors.sparkSession
-    if impl == "arrow":
-        corpus = _signatures_arrow(
-            vectors, vec_col=vec_col, key_cols=[id_col], dim=dim,
-            num_planes=num_planes, num_tables=num_tables) \
-            .select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig")
-        qsig = _signatures_arrow(
-            query.select(F.col("q")), vec_col="q", key_cols=[], dim=dim,
-            num_planes=num_planes, num_tables=num_tables)
-        return _lsh_probe_rank(corpus, qsig, vec_col=vec_col, k=k,
-                               num_planes=num_planes)
-    planes = plane_table(spark, dim=dim, num_planes=num_planes, num_tables=num_tables)
-
-    corpus = _signatures(vectors, planes, vec_col=vec_col, key_cols=[id_col]) \
+    corpus = _signatures_arrow(
+        vectors, vec_col=vec_col, key_cols=[id_col], dim=dim,
+        num_planes=num_planes, num_tables=num_tables) \
         .select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig")
-
-    qsig = _signatures(query.select(F.col("q")), planes, vec_col="q", key_cols=[])
+    qsig = _signatures_arrow(
+        query.select(F.col("q")), vec_col="q", key_cols=[], dim=dim,
+        num_planes=num_planes, num_tables=num_tables)
     return _lsh_probe_rank(corpus, qsig, vec_col=vec_col, k=k,
                            num_planes=num_planes)
 
@@ -268,8 +225,8 @@ def knn_ivf(vectors: DataFrame, query: DataFrame, *, k: int = 10,
     hash-sample (topics.lloyd_centroids) — cell quality needs only a
     sample, so index training never scans the full corpus; tiny
     inputs fall back to full-table training automatically. Every
-    vector is then assigned to its nearest centroid by a narrow map
-    against a single centroid-matrix literal (no shuffle). At scale
+    vector is then assigned to its nearest centroid by a narrow Arrow
+    matmul map (topics._assign, no shuffle). At scale
     the assignment is precomputed once and the table is PARTITIONED
     BY cell, so a probe reads nprobe/num_cells of the data — that
     partition pruning is the entire point of IVF.
@@ -291,16 +248,16 @@ def knn_ivf(vectors: DataFrame, query: DataFrame, *, k: int = 10,
                                 train_mod=train_mod, round_c=round_c)
     cent_rows = unit_rows(centroids)
 
-    # r14: the query side is a BOUNDED probe set by contract (a
-    # serving-layer lookup, not a corpus) — collect it once and rank
-    # its top-nprobe cells on the driver, so the single-query case
-    # fuses the probe filter INTO the full-corpus assignment pass
+    # r14: a single-row query side ranks its top-nprobe cells on the
+    # driver (limit(2) tells one row from many without collecting a
+    # large probe set), so it fuses the probe filter INTO the
+    # full-corpus assignment pass
     # (guide §4.2): rows outside the probed cells never cross the
     # Arrow boundary back, and the BroadcastExchange + probe-join
     # stage disappears from the plan. The driver dot replicates the
     # JVM fold exactly (same sequential acc + x*y double adds), and
     # the (−sim, cell) tuple sort is the array_sort struct order.
-    qrows = query.select("q").collect()
+    qrows = query.select("q").limit(2).collect()
     if len(qrows) == 1:
         qv = [float(x) for x in qrows[0]["q"]]
 
@@ -384,8 +341,8 @@ def append_ivf_index(vectors: DataFrame, path: str,
     drifted corpus eventually warrants a rebuild, but day-to-day
     ingest must not reshuffle a 100 TB index).
 
-    The append is one narrow assignment map (centroids broadcast
-    inside the expression) + a partitioned append write: only the
+    The append is one narrow assignment map (topics._assign against
+    the given centroids) + a partitioned append write: only the
     cells the new vectors land in gain files, probes keep pruning by
     the same partition column, and a concurrent reader sees the old
     snapshot until the write commits.
@@ -897,7 +854,6 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
                        mode: str = "exact", dim: int | None = None,
                        num_planes: int = 4, num_tables: int = 8,
                        id_col: str = "vec_id", vec_col: str = "embedding",
-                       impl: str = "arrow",
                        cache_out: list | None = None) -> DataFrame:
     """Margin-based parallel-pair mining (Artetxe & Schwenk 2019,
     the CCMatrix/LASER bitext-mining criterion): score every
@@ -934,29 +890,24 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
     a = src.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = tgt.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     id_t = src.schema[id_col].dataType.simpleString()
-    pairs = None
     if mode == "exact":
         # r13/r14: the tgt side is driver-collected (exact mode's
-        # bounded-sides contract, cap-enforced — it was already
-        # F.broadcast()) and ships via sc.broadcast as a matrix, so
-        # each tgt vector crosses the Python boundary once per
-        # executor instead of once per PAIR:
-        # the |src|×|tgt| nested-loop join of 2·dim-wide rows (6.4 GB
-        # of Arrow traffic at sf0.1's 2 500×2 500 halves) disappears.
-        # Scoring is bit-identical (_bcast_cosine_scorer); spread FIRST
-        # so the per-src-row cross scoring parallelizes beyond the
-        # scan's few input splits. impl="expr" keeps the join form.
-        if impl == "arrow":
-            from parlerproject_spark.operators.dedup import (
-                _bcast_cosine_scorer, _bcast_partner_matrix,
-                _collect_bounded_partners)
-            ids_b, vecs_b = _collect_bounded_partners(b, "id_b", "vb")
-            bc = _bcast_partner_matrix(tgt.sparkSession, ids_b, vecs_b)
-            sims = spread_input(a).mapInPandas(
-                _bcast_cosine_scorer(bc, -2.0, upper=False),
-                schema=f"id_a {id_t}, id_b {id_t}, sim double")
-        else:
-            pairs = spread_input(a).join(F.broadcast(b))
+        # bounded-sides contract, cap-enforced) and ships via
+        # sc.broadcast as a matrix, so each tgt vector crosses the
+        # Python boundary once per executor instead of once per PAIR:
+        # no |src|×|tgt| nested-loop join of 2·dim-wide rows (6.4 GB
+        # of Arrow traffic at sf0.1's 2 500×2 500 halves) is planned.
+        # Scoring is bit-identical (see _bcast_cosine_scorer); spread
+        # FIRST so the per-src-row cross scoring parallelizes beyond
+        # the scan's few input splits.
+        from parlerproject_spark.operators.dedup import (
+            _bcast_cosine_scorer, _bcast_partner_matrix,
+            _collect_bounded_partners)
+        ids_b, vecs_b = _collect_bounded_partners(b, "id_b", "vb")
+        bc = _bcast_partner_matrix(tgt.sparkSession, ids_b, vecs_b)
+        sims = spread_input(a).mapInPandas(
+            _bcast_cosine_scorer(bc, -2.0, upper=False),
+            schema=f"id_a {id_t}, id_b {id_t}, sim double")
     elif mode == "lsh":
         if dim is None:
             raise ValueError("lsh mode requires dim=")
@@ -978,18 +929,12 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
         cand = (sig_a.select("id_a", "tbl", "sig")
                 .join(sig_b.select("id_b", "tbl", "sig"), ["tbl", "sig"])
                 .select("id_a", "id_b").distinct())
-        pairs = (cand.join(a, "id_a").join(b, "id_b")
-                 .select("id_a", "va", "id_b", "vb"))
+        sims = (cand.join(a, "id_a").join(b, "id_b")
+                .select("id_a", "va", "id_b", "vb")
+                .mapInPandas(_pair_cosine_scorer(-2.0),
+                             schema=f"id_a {id_t}, id_b {id_t}, sim double"))
     else:
         raise ValueError(f"unknown mode {mode!r}")
-    if pairs is not None and impl == "arrow":
-        sims = pairs.select("id_a", "va", "id_b", "vb").mapInPandas(
-            _pair_cosine_scorer(-2.0),
-            schema=f"id_a {id_t}, id_b {id_t}, sim double")
-    elif pairs is not None:
-        sims = pairs.select(
-            "id_a", "id_b",
-            (F.round(cosine("va", "vb"), 6) + F.lit(0.0)).alias("sim"))
     # sims feeds THREE consumers (fwd means, bwd means, the margin
     # re-join) and Spark shares no subplans — without materialization
     # the |A|×|B| scoring pass runs three times (measured 6.1 s →

@@ -47,14 +47,17 @@ def word_freq_table(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
             .groupBy("word").agg(F.count("*").alias("n")))
 
 
+def _word_symbols() -> F.Column:
+    """The `word` column split into characters + EOW sentinel."""
+    return F.concat(F.filter(F.split(F.col("word"), ""),
+                             lambda c: F.length(c) > 0),
+                    F.array(F.lit(EOW)))
+
+
 def _initial_symbols(words: DataFrame) -> DataFrame:
     """Split each word into characters + EOW sentinel.
     Columns: word, n, syms (array<string>)."""
-    chars = F.split(F.col("word"), "")
-    return words.select(
-        "word", "n",
-        F.concat(F.filter(chars, lambda c: F.length(c) > 0),
-                 F.array(F.lit(EOW))).alias("syms"))
+    return words.select("word", "n", _word_symbols().alias("syms"))
 
 
 def _pair_counts(symtab: DataFrame) -> DataFrame:
@@ -68,30 +71,15 @@ def _pair_counts(symtab: DataFrame) -> DataFrame:
             .groupBy("p.a", "p.b").agg(F.sum("n").alias("cnt")))
 
 
-def _apply_merge(symtab: DataFrame, a: str, b: str) -> DataFrame:
-    """Greedy left-to-right replacement of adjacent (a, b) with a||b
-    in every symbol array — a pure fold (narrow map, zero shuffle):
-    append each symbol unless the running array ends with `a` and the
-    symbol is `b`, in which case fuse them."""
-    la, lb = F.lit(a), F.lit(b)
-    merged = F.aggregate(
-        "syms",
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == la) & (s == lb),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                     F.array(F.concat(la, lb)))
-        ).otherwise(F.concat(acc, F.array(s))))
-    return symtab.withColumn("syms", merged)
-
-
 def _apply_merges_arrow(symtab: DataFrame,
                         merges: "list[tuple[str, str, str]]") -> DataFrame:
     """Apply an ORDERED merge list [(a, b, merged), ...] to every
     symbol array in one Arrow pass — merge i fully rewrites the array
-    (greedy left-to-right, exactly `_apply_merge`'s fold) before
-    merge i+1 sees it, so the composition is bit-identical to
-    chaining len(merges) interpreted JVM folds. One narrow
+    (greedy left-to-right: append each symbol unless the running
+    array ends with `a` and the symbol is `b`, in which case fuse
+    them) before merge i+1 sees it, so the composition is
+    bit-identical to chaining len(merges) interpreted JVM folds
+    (`_apply_merge_to`). One narrow
     mapInPandas node replaces that fold chain: a training ROUND's
     whole batch applies in one pass over the vocab table instead of
     one interpreted fold per merge plus a mid-round checkpoint every
@@ -212,80 +200,32 @@ def train_bpe(docs: DataFrame, *, n_merges: int = 50,
 
 def apply_bpe(docs: DataFrame, merges: list[tuple[str, str]], *,
               id_col: str = "doc_id",
-              text_col: str = "text",
-              impl: str = "arrow") -> DataFrame:
+              text_col: str = "text") -> DataFrame:
     """Segment each document's tokens with a learned merge list —
     merges replay in training order over each word's symbols (the
     standard BPE encoder).
 
-    Scale shape: the merge fold is evaluated ONCE PER DISTINCT WORD
-    (the segmentation of a word doesn't depend on the document), so
-    the expensive nested-fold expression runs over the vocabulary
-    table — the same table training iterated — and documents get
-    their pieces back by a token-keyed join. Encoding cost is
-    vocab × merges + one keyed join, instead of corpus × merges:
-    the r4 bench cut bpe_segment_docs ~4× with this split. The
-    vocab side is a corpus-derived aggregate — sizes follow the
-    corpus, so the join stays a shuffle join (AQE may broadcast a
-    small vocab at test scale; at 100 TB it must not, and nothing
-    here forces it).
+    Scale shape: the merge replay runs ONCE PER DISTINCT WORD (the
+    segmentation of a word doesn't depend on the document), over the
+    vocabulary table — the same table training iterated — with the
+    trainer's own kernel (`_apply_merges_arrow`: one Arrow pass, all
+    merges in order, ~5x faster at sf0.1 than nesting n_merges
+    interpreted fold expressions); documents get their pieces back
+    by a token-keyed join. Encoding cost is vocab × merges + one
+    keyed join, instead of corpus × merges: the r4 bench cut
+    bpe_segment_docs ~4× with this split. The vocab side is a
+    corpus-derived aggregate — sizes follow the corpus, so the join
+    stays a shuffle join (AQE may broadcast a small vocab at test
+    scale; at 100 TB it must not, and nothing here forces it).
     Columns: <id_col>, n_words, n_pieces, pieces (array<string>,
     EOW markers stripped).
     """
     toked = docs.select(F.col(id_col).alias("doc_id"),
                         tokenize(text_col).alias("ws"))
-    vocab_words = toked.select(F.explode("ws").alias("word")).distinct()
-    if impl == "arrow":
-        # Same left-to-right greedy replay, vectorized per vocab
-        # batch in Python instead of n_merges NESTED interpreted
-        # aggregate() expressions (the expr form re-walks every
-        # word's symbol array once per merge through an interpreted
-        # lambda with O(len) array rebuilds — measured ~5x slower at
-        # sf0.1 with 50 merges). Pure string algorithm, bit-identical
-        # output; the reference-BPE pytest pins both forms.
-        from collections.abc import Iterator
-
-        import pandas as pd
-
-        mlist = list(merges)
-
-        def seg(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            def one(word: str) -> list[str]:
-                syms = list(word) + [EOW]
-                for a, b in mlist:
-                    out: list[str] = []
-                    for s in syms:
-                        if out and out[-1] == a and s == b:
-                            out[-1] = a + b
-                        else:
-                            out.append(s)
-                    syms = out
-                return syms
-
-            for pdf in it:
-                yield pd.DataFrame({"word": pdf["word"],
-                                    "syms": [one(w) for w in pdf["word"]]})
-
-        words = vocab_words.mapInPandas(
-            seg, schema="word string, syms array<string>")
-    else:
-        words = vocab_words.withColumn("syms", F.concat(
-            F.filter(F.split("word", ""),
-                     lambda c: F.length(c) > 0),
-            F.array(F.lit(EOW))))
-        for a, b in merges:
-            la, lb = F.lit(a), F.lit(b)
-            words = words.withColumn(
-                "syms",
-                F.aggregate(
-                    "syms",
-                    F.expr("cast(array() as array<string>)"),
-                    lambda acc, s: F.when(
-                        (F.size(acc) > 0)
-                        & (F.element_at(acc, -1) == la) & (s == lb),
-                        F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                                 F.array(F.concat(la, lb)))
-                    ).otherwise(F.concat(acc, F.array(s)))))
+    vocab_words = (toked.select(F.explode("ws").alias("word")).distinct()
+                   .select("word", _word_symbols().alias("syms")))
+    words = _apply_merges_arrow(vocab_words,
+                                [(a, b, a + b) for a, b in merges])
     strip = F.transform("syms", lambda s: F.replace(s, F.lit(EOW),
                                                     F.lit("")))
     vocab = words.select(
@@ -339,9 +279,11 @@ def _wp_merged(a: str, b: str) -> str:
 
 def _apply_merge_to(symtab: DataFrame, a: str, b: str,
                     merged: str) -> DataFrame:
-    """_apply_merge with an explicit merged-symbol spelling (BPE
-    fuses to a||b; WordPiece strips the right side's ## prefix).
-    Same greedy left-to-right pure fold, zero shuffle."""
+    """Greedy left-to-right replacement of adjacent (a, b) with
+    `merged` in every symbol array (BPE fuses to a||b; WordPiece
+    strips the right side's ## prefix) — a pure fold (narrow map,
+    zero shuffle): append each symbol unless the running array ends
+    with `a` and the symbol is `b`, in which case fuse them."""
     la, lb, lm = F.lit(a), F.lit(b), F.lit(merged)
     out = F.aggregate(
         "syms",

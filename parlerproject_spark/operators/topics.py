@@ -5,8 +5,8 @@ The reference runs BERTopic — embed → UMAP → HDBSCAN → c-TF-IDF
 scalable decomposition (SURVEY §7.3#4):
 
 - clustering: distributed Lloyd's k-means over the embedding column.
-  Assignment is a narrow map against BROADCAST centroids (pure
-  Column arithmetic, JVM-side); the centroid update is one
+  Assignment is a narrow map (one numpy matmul per Arrow batch
+  against the driver-held centroid matrix); the centroid update is one
   partial-aggregated groupBy per iteration. k×dim floats cross the
   driver per iteration — nothing else does. This is the LDA/k-means
   "scalable analogue" promised in SURVEY §2.10 M3; we do not
@@ -27,7 +27,6 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parlerproject_spark.functions.vectors import dot
 from parlerproject_spark.operators.relational import share_of_total
 from parlerproject_spark.operators.text_analysis import topic_terms
 
@@ -42,8 +41,8 @@ def centroid_literal(centroids: list[list[float]]) -> F.Column:
 
 def unit_rows(centroids: list[list[float]]) -> list[list[float]]:
     """L2-normalize each centroid driver-side: argmax_c cos(v, c) ==
-    argmax_c dot(v, c/|c|), so assignment needs ONE aggregate per
-    cell instead of three (dot + two norms) — the vector's own norm
+    argmax_c dot(v, c/|c|), so assignment needs ONE dot per cell
+    instead of three (dot + two norms) — the vector's own norm
     is a constant factor across cells and drops out of the argmax."""
     out = []
     for c in centroids:
@@ -53,22 +52,17 @@ def unit_rows(centroids: list[list[float]]) -> list[list[float]]:
 
 
 def _assign(vectors: DataFrame, centroids: list[list[float]], *,
-            id_col: str, vec_col: str, impl: str = "arrow",
+            id_col: str, vec_col: str,
             outlier_threshold: float | None = None,
             keep_topics: list[int] | None = None) -> DataFrame:
-    """Nearest-centroid (cosine) assignment — a pure map either way
-    (no join, no shuffle); argmax ties break to the lowest cell
-    index in both implementations.
-
-    impl="arrow" (default): one numpy (N×dim)·(dim×k) matmul per
-    Arrow batch — BLAS does in microseconds what k×dim interpreted
-    lambda steps per row cannot. Determinism caveat: BLAS float
-    reduction order varies by build/architecture, so a near-exact
-    tie between two centroids can flip assignment across
-    environments; impl="expr" (single pre-normalized centroid
-    literal, dot-product expression per cell, pure JVM) evaluates in
-    a fixed order — use it where bit-for-bit cross-engine stability
-    outweighs throughput.
+    """Nearest-centroid (cosine) assignment — a pure map (no join, no
+    shuffle): one numpy (N×dim)·(dim×k) matmul per Arrow batch
+    against the pre-normalized centroids, argmax ties to the lowest
+    cell index. BLAS does in microseconds what k×dim interpreted
+    lambda steps per row cannot. The SQL oracles replay the argmax
+    with a sequential fold; BLAS reduction order differs by ≲ d·ulp,
+    which can flip an assignment only on a near-exact tie between
+    two centroids.
 
     `outlier_threshold`: when set, a vector whose best cosine
     similarity falls below it gets topic -1 — the engine's analogue
@@ -77,58 +71,45 @@ def _assign(vectors: DataFrame, centroids: list[list[float]], *,
     back). Zero-norm vectors are always outliers under a threshold
     (cosine undefined).
 
-    `keep_topics`: when set (arrow impl), rows whose argmax topic is
-    NOT in the list are dropped INSIDE the Python pass — the IVF
-    probe filter fused into the assignment map (guide §4: pass only
-    the rows the consumer needs back across the Arrow boundary;
-    ~(1 - nprobe/num_cells) of the corpus never re-crosses it).
-    Identical to filtering the returned `topic` column afterwards."""
-    if impl == "arrow":
-        import numpy as np
-        import pandas as pd
+    `keep_topics`: when set, rows whose argmax topic is NOT in the
+    list are dropped INSIDE the Python pass — the IVF probe filter
+    fused into the assignment map, so only the rows the consumer
+    needs cross the Arrow boundary back (~(1 - nprobe/num_cells) of
+    the corpus never re-crosses it). Identical to filtering the
+    returned `topic` column afterwards."""
+    import numpy as np
+    import pandas as pd
 
-        C = np.array(unit_rows(centroids), dtype=np.float64)
-        keep = (np.array(sorted(keep_topics), dtype=np.int32)
-                if keep_topics is not None else None)
-        fields = {f.name: f.dataType.simpleString()
-                  for f in vectors.schema.fields}
-        out_schema = (f"{id_col} {fields[id_col]}, "
-                      f"{vec_col} {fields[vec_col]}, topic int")
+    C = np.array(unit_rows(centroids), dtype=np.float64)
+    keep = (np.array(sorted(keep_topics), dtype=np.int32)
+            if keep_topics is not None else None)
+    fields = {f.name: f.dataType.simpleString()
+              for f in vectors.schema.fields}
+    out_schema = (f"{id_col} {fields[id_col]}, "
+                  f"{vec_col} {fields[vec_col]}, topic int")
 
-        def gen(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                sims = V @ C.T
-                topic = np.argmax(sims, axis=1).astype(np.int32)
-                if outlier_threshold is not None:
-                    vn = np.linalg.norm(V, axis=1)
-                    best = sims[np.arange(len(V)), topic]
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        cos = np.where(vn > 0, best / vn, -np.inf)
-                    topic = np.where(cos < outlier_threshold,
-                                     np.int32(-1), topic).astype(np.int32)
-                out = pd.DataFrame({id_col: pdf[id_col].values,
-                                    vec_col: pdf[vec_col].values,
-                                    "topic": topic})
-                if keep is not None:
-                    out = out[np.isin(topic, keep)]
-                yield out
+    def gen(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            sims = V @ C.T
+            topic = np.argmax(sims, axis=1).astype(np.int32)
+            if outlier_threshold is not None:
+                vn = np.linalg.norm(V, axis=1)
+                best = sims[np.arange(len(V)), topic]
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    cos = np.where(vn > 0, best / vn, -np.inf)
+                topic = np.where(cos < outlier_threshold,
+                                 np.int32(-1), topic).astype(np.int32)
+            out = pd.DataFrame({id_col: pdf[id_col].values,
+                                vec_col: pdf[vec_col].values,
+                                "topic": topic})
+            if keep is not None:
+                out = out[np.isin(topic, keep)]
+            yield out
 
-        return vectors.select(id_col, vec_col).mapInPandas(gen, out_schema)
-
-    cent = centroid_literal(unit_rows(centroids))
-    sims = F.transform(cent, lambda c: dot(F.col(vec_col), c))
-    best = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-    if outlier_threshold is not None:
-        from parlerproject_spark.functions.vectors import l2_norm
-        vn = l2_norm(vec_col)
-        cos = F.array_max(sims) / vn
-        best = F.when((vn > 0) & (cos >= F.lit(outlier_threshold)), best) \
-                .otherwise(F.lit(-1)).cast("int")
-    return vectors.select(F.col(id_col), F.col(vec_col),
-                          best.alias("topic"))
+    return vectors.select(id_col, vec_col).mapInPandas(gen, out_schema)
 
 
 def _round_half_away(x: float, d: int) -> float:

@@ -113,9 +113,12 @@ def expect_suite(df: DataFrame, rules: Sequence[Expectation],
     report is one action — the previous form collected the counter
     row at DataFrame-BUILD time and re-parallelized a Python list,
     which cost ~6 driver-synchronized jobs per call (guide §1.3) and
-    made report construction eager. The arithmetic is unchanged:
-    F.round is HALF_UP on the same double the old
-    Decimal(...).quantize(HALF_UP) rounded.
+    made report construction eager. pass_rate is F.round(…, 6):
+    HALF_UP on the double's SHORTEST decimal form (Java
+    BigDecimal.valueOf), which agrees with DuckDB's round(). The old
+    Decimal(double).quantize(HALF_UP) rounded the exact binary value
+    instead, so on a tie such as 1 − 36/1600000 (0.9999775) the two
+    differ by 1e-6 (0.999978 now, 0.999977 before).
     """
     if not rules:
         raise ValueError("expect_suite needs at least one rule")

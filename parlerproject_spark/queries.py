@@ -5428,7 +5428,7 @@ def _bpe_oracle(n_merges: int = 20) -> str:
     Symbol arrays ride as delimiter-WRAPPED strings
     (chr(31)||sym||chr(31) per symbol): SQL replace() substitutes
     non-overlapping matches LEFT-TO-RIGHT, which is exactly the
-    greedy fold _apply_merge implements, and the wrapping makes the
+    greedy fold _apply_merges_arrow implements, and the wrapping makes the
     (a,b) adjacency pattern match whole symbols only. Each round:
     adjacent-pair counts from the split string, argmax with the
     (cnt desc, a asc, b asc) tie-break, one literal replace. A round

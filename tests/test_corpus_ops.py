@@ -95,30 +95,34 @@ def test_semantic_decontaminate_eval_side_broadcasts(spark, sf_dir):
         semantic_contamination_hits)
     emb = load_table(spark, "embeddings", sf_dir)
     ev = emb.filter(F.col("vec_id") % 20 == 0)
-    plan = semantic_contamination_hits(emb, ev, threshold=0.3,
-                                       impl="expr") \
+    plan = semantic_contamination_hits(emb, ev, threshold=0.3) \
         ._jdf.queryExecution().executedPlan().toString()
-    # eval side rides a broadcast nested loop; corpus never shuffles
-    # before the bounded per-doc aggregation
-    assert "BroadcastNestedLoopJoin" in plan
+    # the eval projection (__ev) is the direct child of a
+    # BroadcastExchange feeding the exact re-score, and no corpus ×
+    # eval nested loop is planned
+    lines = plan.splitlines()
+    assert any("BroadcastExchange" in a and " AS __ev#" in b
+               for a, b in zip(lines, lines[1:])), plan
+    assert "NestedLoopJoin" not in plan and "Cartesian" not in plan
 
 
-def test_semantic_contamination_hybrid_matches_expr(spark, sf_dir):
-    """The default hybrid path (collected eval matrix, Arrow matmul
-    prefilter at threshold−1e-6, exact JVM fold on candidates) must
-    be row-identical to the all-pairs expr path — including n_hits
-    and the rounded max_sim."""
+def test_semantic_contamination_empty_eval_set(spark):
+    """An empty eval set flags nothing: the result is an empty frame
+    with the non-empty case's columns and types."""
     from parlerproject_spark.operators.decontaminate import (
         semantic_contamination_hits)
-    emb = load_table(spark, "embeddings", sf_dir).limit(300)
-    ev = emb.filter(F.col("vec_id") % 20 == 0)
-    corpus = emb.filter(F.col("vec_id") % 20 != 0)
-    kw = dict(threshold=0.3)
-    expr = sorted(map(tuple, semantic_contamination_hits(
-        corpus, ev, impl="expr", **kw).collect()))
-    hyb = sorted(map(tuple, semantic_contamination_hits(
-        corpus, ev, impl="hybrid", **kw).collect()))
-    assert expr == hyb and len(expr) > 0
+    ev = spark.createDataFrame([(100, [1.0, 0.0])],
+                               "vec_id long, embedding array<double>")
+    corpus = spark.createDataFrame([(1, [0.99, 0.1]), (2, [0.0, 1.0])],
+                                   "vec_id long, embedding array<double>")
+    full = semantic_contamination_hits(corpus, ev, threshold=0.9)
+    empty = semantic_contamination_hits(corpus, ev.filter(F.lit(False)),
+                                        threshold=0.9)
+    assert full.count() == 1
+    assert empty.columns == ["doc_id", "n_hits", "max_sim"]
+    assert [f.dataType for f in empty.schema] == \
+        [f.dataType for f in full.schema]
+    assert empty.collect() == []
 
 
 # ---- sessionization ------------------------------------------------------

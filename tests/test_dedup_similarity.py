@@ -188,6 +188,14 @@ def test_knn_ivf_probes_prune_to_nprobe_cells(spark):
            similarity.knn_ivf(vecs, q, k=12, num_cells=3, nprobe=1,
                               max_iter=4).collect()}
     assert got == {1, 20, 21, 22}
+    # a multi-row query side takes the broadcast probe-join form: each
+    # query row probes its own nearest cell, and nothing else is read
+    q2 = spark.createDataFrame([([0.0, 1.0, 0.05],), ([1.0, 0.05, 0.0],)],
+                               ["q"])
+    got2 = {r["vec_id"] for r in
+            similarity.knn_ivf(vecs, q2, k=12, num_cells=3, nprobe=1,
+                               max_iter=4).collect()}
+    assert got2 == {1, 20, 21, 22, 0, 10, 11, 12}
 
 
 def test_lsh_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
@@ -390,7 +398,8 @@ def test_semantic_dedup_drops_planted_near_dups_keeps_lowest_id(spark):
 
 def test_semantic_dedup_k1_equals_bruteforce_components(spark):
     """With one cluster the cell-confined join IS the all-pairs
-    join: keep-set must equal brute-force CC keep-set."""
+    join: keep-set must equal brute-force CC keep-set, whether the
+    cell's gram runs as one row block or as eight (block=4)."""
     from parlerproject_spark.operators.dedup import (duplicate_clusters,
                                                      embedding_near_dups,
                                                      semantic_dedup)
@@ -400,6 +409,10 @@ def test_semantic_dedup_k1_equals_bruteforce_components(spark):
     got = {r["vec_id"] for r in
            semantic_dedup(d, threshold=0.98, k=1).collect()
            if r["keep"]}
+    assert got == {r["vec_id"] for r in
+                   semantic_dedup(d, threshold=0.98, k=1,
+                                  block=4).collect()
+                   if r["keep"]}
     pairs = embedding_near_dups(d, threshold=0.98, mode="exact")
     comps = duplicate_clusters(pairs)
     dropped = {r["doc_id"] for r in comps.collect()
@@ -418,39 +431,6 @@ def test_semantic_dedup_transitive_chain_keeps_one(spark):
     out = {r["vec_id"]: r["keep"] for r in
            semantic_dedup(d, threshold=0.95, k=1).collect()}
     assert out == {10: True, 11: False, 12: False}
-
-
-def test_semantic_dedup_arrow_impl_matches_expr(spark, sf_dir):
-    """The block-wise Arrow gram path must produce the identical
-    (vec_id, cluster, keep) frame as the oracled JVM-expression join
-    path — block=7 forces multiple row blocks per cell so the
-    blocking logic itself is exercised (r5 advice: the dense
-    |cell|² matrix OOMs on skewed cells; the blocked form must stay
-    result-identical)."""
-    from parlerproject_spark.operators.dedup import semantic_dedup
-    emb = load_table(spark, "embeddings", sf_dir).limit(120)
-    kw = dict(threshold=0.9, k=4, round_c=6)
-    expr = sorted(map(tuple, semantic_dedup(emb, impl="expr",
-                                            **kw).collect()))
-    arrow = sorted(map(tuple, semantic_dedup(emb, impl="arrow", block=7,
-                                             **kw).collect()))
-    assert expr == arrow
-
-
-def test_semantic_dedup_hybrid_impl_matches_expr(spark, sf_dir):
-    """The default hybrid path (vectorized prefilter at threshold−1e-6
-    → exact JVM fold on survivors) must be result-identical to the
-    pure-expr verification semantics: matmul vs sequential-fold
-    rounding differs by ≲1e-13, far inside the prefilter margin, so
-    the exact fold alone decides every pair."""
-    from parlerproject_spark.operators.dedup import semantic_dedup
-    emb = load_table(spark, "embeddings", sf_dir).limit(120)
-    kw = dict(threshold=0.9, k=4, round_c=6)
-    expr = sorted(map(tuple, semantic_dedup(emb, impl="expr",
-                                            **kw).collect()))
-    hybrid = sorted(map(tuple, semantic_dedup(emb, impl="hybrid", block=7,
-                                              **kw).collect()))
-    assert expr == hybrid
 
 
 # Product quantization ------------------------------------------------------
@@ -519,20 +499,6 @@ def test_ivfpq_index_probe_prunes_and_recalls(spark, sf_dir, tmp_path):
     filt = re.findall(r"PartitionFilters: \[cell#\d+ IN \(([^)]*)\)\]",
                       plan)
     assert filt and all(len(f.split(",")) <= 3 for f in filt), plan
-
-
-def test_embedding_near_dups_exact_arrow_expr_parity(spark, sf_dir):
-    """Exact mode's Arrow scorer and pure-JVM fold agree pair-for-pair
-    including the rounded sim (the HALF_UP contract)."""
-    from parlerproject_spark.catalog import load_table
-    emb = load_table(spark, "embeddings", sf_dir)
-    a = {(r["id_a"], r["id_b"]): r["sim"]
-         for r in dedup.embedding_near_dups(
-             emb, threshold=0.3, mode="exact", impl="arrow").collect()}
-    e = {(r["id_a"], r["id_b"]): r["sim"]
-         for r in dedup.embedding_near_dups(
-             emb, threshold=0.3, mode="exact", impl="expr").collect()}
-    assert a == e
 
 
 def test_exact_mode_bounded_sides_cap(spark, sf_dir, monkeypatch):

@@ -154,23 +154,6 @@ def test_density_assign_exemplar_self_assignment(spark, sf_dir):
         assert got[vid] == cl, (vid, got[vid], cl)
 
 
-def test_density_assign_arrow_expr_parity(spark, sf_dir):
-    """impl='arrow' (BLAS matmul) and impl='expr' (JVM fold) agree on
-    every int topic — argmax + threshold decisions never sit on the
-    float reduction-order boundary for real data."""
-    from parlerproject_spark.operators.density import (
-        sampled_density_assign)
-    emb = load_table(spark, "embeddings", sf_dir)
-    kw = dict(sample_mod=4, sim_threshold=0.3, min_pts=3,
-              assign_threshold=0.15, exemplars_per_cluster=4,
-              mode="exact")
-    a = {r["vec_id"]: r["topic"]
-         for r in sampled_density_assign(emb, impl="arrow", **kw).collect()}
-    e = {r["vec_id"]: r["topic"]
-         for r in sampled_density_assign(emb, impl="expr", **kw).collect()}
-    assert a == e
-
-
 def test_density_assign_empty_fit_is_all_noise(spark):
     """A sample with no dense region (min_pts unreachable) labels the
     whole corpus -1 instead of crashing on an empty exemplar set."""

@@ -168,20 +168,6 @@ def test_fingerprint_overlap_flags_containment(spark):
     assert all(3 not in p for p in pairs)
 
 
-def test_winnow_arrow_and_expr_identical(spark, sf_dir):
-    """The Arrow/numpy fast path and the pure-JVM expression path
-    must produce byte-identical fingerprint sets."""
-    from parlerproject_spark.catalog import load_table
-    from parlerproject_spark.operators import text_analysis as ta
-
-    docs = load_table(spark, "documents", sf_dir).limit(200)
-    a = {(r["doc_id"], r["fp"])
-         for r in ta.winnow_fingerprints(docs, impl="arrow").collect()}
-    b = {(r["doc_id"], r["fp"])
-         for r in ta.winnow_fingerprints(docs, impl="expr").collect()}
-    assert a == b and len(a) > 0
-
-
 def test_winnow_norm_vertical_tab_engine_independent(spark):
     """\x0B regression: Java \\s includes vertical tab, RE2 \\s does
     not — the explicit whitespace class must make both engines turn

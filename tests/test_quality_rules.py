@@ -120,6 +120,10 @@ def test_repetition_duplicate_lines_counted(spark):
     assert abs(r["dup_line_frac"] - 0.5) < 1e-9
     assert r["pass_dup_line"] is False  # 0.5 > 0.30
     assert r["keep"] is False
+    # lines are space-trimmed and empty ones dropped (SQL trim()):
+    # "pad line  " repeats "pad line", the blank lines do not count
+    r = _rep(spark, "  \n  \npad line  \npad line")
+    assert r["dup_line_frac"] == 0.5
 
 
 def test_repetition_duplicate_paragraphs_counted(spark):
@@ -166,25 +170,15 @@ def test_repetition_top_ngram_tie_breaks_lexicographically(spark):
     assert r1["top2gram_char_frac"] == r2["top2gram_char_frac"]
 
 
-def test_repetition_arrow_equals_expr(spark):
-    """The Arrow per-doc implementation is row-identical to the
-    expression form on adversarial fixtures: duplicate lines/paras,
-    tie-broken top grams, short docs, empty-after-trim lines."""
-    from parlerproject_spark.operators.quality_rules import (
-        gopher_repetition_flags)
-    docs = spark.createDataFrame(
-        [(1, "aa bb cc\naa bb cc\n\naa bb cc"),
-         (2, "x y x y x y x y"),
-         (3, "one"),                      # no 2-grams at all
-         (4, "  \n  \npad line  \npad line"),
-         (5, "aa dd bb cc"),              # top-gram tie
-         (6, "w1 w2 w3 " * 50 + "tail")],
-        "doc_id bigint, text string")
-    a = gopher_repetition_flags(docs, impl="arrow").orderBy("doc_id")
-    e = gopher_repetition_flags(docs, impl="expr").orderBy("doc_id")
-    assert [(f.name, f.dataType) for f in a.schema] == \
-           [(f.name, f.dataType) for f in e.schema]
-    assert a.collect() == e.collect()
+def test_repetition_rounds_ties_like_sql_round(spark):
+    # 3 repeats among 640 lines: 3/640 = 0.0046875 is a 7th-decimal
+    # tie whose double lies just below it; Spark's and DuckDB's
+    # round() both give 0.004688 (half up on the shortest form)
+    import duckdb
+    lines = [f"l{i}" for i in range(637)] + ["l0"] * 3
+    want = duckdb.sql("SELECT round(3 / 640, 6)").fetchone()[0]
+    assert want == 0.004688
+    assert _rep(spark, "\n".join(lines))["dup_line_frac"] == want
 
 
 class TestReadabilityScores:

@@ -89,3 +89,26 @@ def test_norm_frame_mirrors_driver_crash_on_array_cells():
     a = pd.DataFrame({"id": [2, 1], "v": [0.1234567, 7.0]})
     b = pd.DataFrame({"v": [7.0, 0.1234572], "id": [1, 2]})
     assert value_hash(a) == value_hash(b)
+
+
+def test_slow_manifest_names_only_collected_tests():
+    """Every node id in tests/slow_tests.txt must name a collected
+    test. conftest marks the ids it finds and silently ignores the
+    rest, so a deleted or renamed test would otherwise leave a dead
+    entry (and a renamed heavy test would quietly join the default
+    gate)."""
+    import os
+    import subprocess
+    import sys
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    out = subprocess.run(
+        [sys.executable, "-m", "pytest", "tests", "--collect-only", "-q",
+         "-m", "", "-p", "no:cacheprovider"],
+        cwd=os.path.dirname(here), capture_output=True, text=True).stdout
+    collected = {ln.strip() for ln in out.splitlines() if "::" in ln}
+    with open(os.path.join(here, "slow_tests.txt")) as fh:
+        listed = {ln.strip() for ln in fh
+                  if ln.strip() and not ln.startswith("#")}
+    assert collected, out
+    assert not listed - collected, sorted(listed - collected)

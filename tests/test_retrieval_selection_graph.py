@@ -540,7 +540,7 @@ def test_hashed_embedding_counts_and_determinism(spark):
 
     df = spark.createDataFrame(
         [(1, "Spark joins data. Spark queries data."),
-         (2, ""), (3, "zzz")],
+         (2, ""), (3, "zzz"), (4, None)],
         "doc_id long, text string")
     got = {r["doc_id"]: r["embedding"]
            for r in hashed_embedding(df, dim=8).collect()}
@@ -548,6 +548,7 @@ def test_hashed_embedding_counts_and_determinism(spark):
     # doc 1: 6 tokens total (spark x2, data x2, joins, queries)
     assert sum(got[1]) == 6.0
     assert sum(got[2]) == 0.0  # empty text -> zero vector, row kept
+    assert got[4] == [0.0] * 8  # NULL text -> zero vector, never NULL
     # bucket positions follow the md5 stable hash exactly
     def bucket(t):
         return (int(hashlib.md5(t.encode()).hexdigest()[:15], 16)

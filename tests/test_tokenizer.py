@@ -269,7 +269,7 @@ def test_apply_merges_arrow_equals_chained_jvm_folds(spark):
     merge would have consumed it (already-applied merges never
     re-run)."""
     from parlerproject_spark.operators.tokenizer import (
-        _apply_merge, _apply_merges_arrow)
+        _apply_merge_to, _apply_merges_arrow)
     rows = [
         ("caba", 1, ["c", "a", "b", "a"]),
         ("aab", 2, ["a", "a", "b"]),
@@ -286,7 +286,7 @@ def test_apply_merges_arrow_equals_chained_jvm_folds(spark):
     for batch in batches:
         want = st
         for a, b in batch:
-            want = _apply_merge(want, a, b)
+            want = _apply_merge_to(want, a, b, a + b)
         got = _apply_merges_arrow(st, [(a, b, a + b) for a, b in batch])
         w = {r["word"]: list(r["syms"]) for r in want.collect()}
         g = {r["word"]: list(r["syms"]) for r in got.collect()}

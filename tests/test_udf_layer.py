@@ -126,20 +126,18 @@ def test_outlier_threshold_marks_dispersed_vectors(spark):
             + [(90, [0.0, 1.0, 0.0, 0.05]), (91, [0.05, 1.0, 0.0, 0.0]),
                (92, [0.0, 0.0, 0.0, 0.0])])
     vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    for impl in ("arrow", "expr"):
-        cents = topics.lloyd_centroids(vecs, k=2, max_iter=4)
-        out = topics._assign(vecs, cents, id_col="vec_id",
-                             vec_col="embedding", impl=impl,
-                             outlier_threshold=0.8)
-        got = {r["vec_id"]: r["topic"] for r in out.collect()}
-        assert got[90] == -1 and got[91] == -1 and got[92] == -1
-        assert all(got[i] != -1 for i in range(20))
-        # reduce_outliers maps every -1 back to its nearest topic
-        reduced = {r["vec_id"]: r["topic"]
-                   for r in topics.reduce_outliers(
-                       out.select("vec_id", "topic"), vecs, cents).collect()}
-        assert all(t != -1 for t in reduced.values())
-        assert all(reduced[i] == got[i] for i in range(20))  # non-outliers keep
+    cents = topics.lloyd_centroids(vecs, k=2, max_iter=4)
+    out = topics._assign(vecs, cents, id_col="vec_id",
+                         vec_col="embedding", outlier_threshold=0.8)
+    got = {r["vec_id"]: r["topic"] for r in out.collect()}
+    assert got[90] == -1 and got[91] == -1 and got[92] == -1
+    assert all(got[i] != -1 for i in range(20))
+    # reduce_outliers maps every -1 back to its nearest topic
+    reduced = {r["vec_id"]: r["topic"]
+               for r in topics.reduce_outliers(
+                   out.select("vec_id", "topic"), vecs, cents).collect()}
+    assert all(t != -1 for t in reduced.values())
+    assert all(reduced[i] == got[i] for i in range(20))  # non-outliers keep
 
 
 def test_outlier_threshold_zero_share_on_tight_clusters(spark):
