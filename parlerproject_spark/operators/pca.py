@@ -148,42 +148,6 @@ def pca_project(vectors: DataFrame, mu, comps, evals, *,
         gen, f"{id_col} {id_type}, {out_col} array<double>")
 
 
-def embedding_drift(ref: DataFrame, cur: DataFrame, *,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Embedding-SPACE drift between two corpus snapshots — the
-    vector-side companion of the scalar PSI/KS monitors: per-
-    dimension mean shift aggregated to the centroid L2 displacement
-    and the worst single dimension. A retrained or silently-swapped
-    embedding model shows up here long before any scalar column
-    drifts.
-
-    Shape: one posexplode per side (d rows per vector, map-stage),
-    one keyed mean aggregation per dimension (map-side combined,
-    d result rows), one d-row reduction to the scalar report — the
-    corpus is touched once per side, nothing wider than d ever
-    shuffles.
-
-    Columns: n_ref, n_cur, centroid_shift (L2, round 6),
-    max_dim_shift (round 6).
-    """
-    def dims(df, tag):
-        return (df.select(F.posexplode(vec_col).alias("i", "x"))
-                .groupBy("i")
-                .agg(F.avg("x").alias(f"mu_{tag}")))
-
-    nr = ref.count()
-    nc = cur.count()
-    j = dims(ref, "ref").join(dims(cur, "cur"), "i")
-    d = F.col("mu_ref").cast("double") - F.col("mu_cur").cast("double")
-    return (j.agg(
-        F.round(F.sqrt(F.sum(d * d)), 6).alias("centroid_shift"),
-        F.round(F.max(F.abs(d)), 6).alias("max_dim_shift"))
-        .select(F.lit(nr).cast("long").alias("n_ref"),
-                F.lit(nc).cast("long").alias("n_cur"),
-                "centroid_shift", "max_dim_shift"))
-
-
 def landmark_anchors(vectors: DataFrame, *, n_anchors: int = 8,
                      id_col: str = "vec_id",
                      vec_col: str = "embedding") -> list[tuple]:

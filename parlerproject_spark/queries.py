@@ -17,8 +17,12 @@ Conventions:
 
 from __future__ import annotations
 
+import functools
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -54,363 +58,35 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# The driver samples ~50 queries per round; this ordering decides which.
-# Policy: never-driver-sampled first, then ascending last-driver-sampled
-# round (original registry order within a tier). With 321 registered
-# queries and a ~50-query sample the full rotation cycle is
-# ~ceil(321/50) = 7 rounds — every query gets a fresh driver
-# CORRECTNESS row at most ~7 rounds stale. (All 321 also pass the
-# local oracle replica, tools/check_oracle.py, every session — the
-# driver sample is the independent confirmation, not the only check.)
-# Regenerated round 13 from CORRECTNESS_r01..r12: whole list ordered
-# by staleness (latest driver-GREEN round ascending, never-green
-# first), so the ~50-query sample always covers the oldest tier.
-# Head = 4 never-driver-green queries (hashed_bow_docs' fixed form
-# plus the three r12 additions) + the round-6 tier.
-_DRIVER_PRIORITY: list[str] = [
-    # round-13 additions (never sampled) lead, per the
-    # never-driver-green-first policy (ADVICE r12)
-    "containment_pairs_docs",
-    "psi_timeline_events",
-    "mahalanobis_outliers_embeddings",
-    "simhash_pairs_docs",
-    "epochs_to_exhaust_sources",
-    "seasonal_decompose_events",
-    "fd_audit_orders",
-    "wasserstein_drift_events",
-    "token_gini_sources",
-    "user_entropy_events",
-    "activity_profile_events",
-    "token_entropy_docs",
-    "format_signals_docs",
-    "acf_users",
-    "hashed_bow_docs",
-    "normalize_ws_docs",
-    "concat_object_urls",
-    "exif_ts_roundtrip",
-    "json_extract_props",
-    "dms_to_decimal_parse",
-    "running_sum_orders",
-    "lag_delta_events",
-    "doc_frequency",
-    "token_counts_docs",
-    "quality_scores_docs",
-    "topic_terms_ctfidf",
-    "exact_dedup_docs",
-    "minhash_signatures",
-    "minhash_lsh_pairs",
-    "simhash_docs",
-    "knn_bruteforce",
-    "embedding_norms",
-    "language_id_docs",
-    "sliding_window_events",
-    "session_window_events",
-    "collect_sorted_events",
-    "argmax_events",
-    "map_keys_props",
-    "median_value_events",
-    "semantic_decontaminate_embeddings",
-    "token_budget_sample_docs",
-    "gopher_repetition_docs",
-    "logreg_quality_scores_docs",
-    "cut_substring_spans_docs",
-    "ngram_novelty_docs",
-    "group_head_sample_docs",
-    "centroid_outlier_embeddings",
-    "rag_context_budget",
-    "dbscan_clusters_lsh",
-    "hard_negatives_cell",
-    "funnel_view_click_purchase",
-    "cohort_retention_weekly",
-    "rolling_features_events",
-    "touch_attribution_events",
-    "srm_check_events",
-    "weighted_sample_docs",
-    "calibrate_scores_docs",
-    "fim_transform_docs",
-    "scene_cuts_media",
-    "ranking_metrics_docs",
-    "roc_auc_docs",
-    "calibration_docs",
-    "fleiss_kappa_docs",
-    "kaplan_meier_users",
-    "knn_lsh",
-    "knn_ivf",
-    "topic_assignments",
-    "topic_outlier_assignments",
-    "embedding_near_dup_lsh",
-    "semantic_dedup_embeddings",
-    "density_topic_assignments",
-    "curriculum_order_docs",
-    "length_bucket_batches_docs",
-    "quantile_band_docs",
-    "robust_outliers_events",
-    "benford_values_events",
-    "source_minhash_similarity",
-    "vocab_coverage_sources",
-    "linear_trend_users",
-    "diff_in_diff_events",
-    "stream_enrich_segments",
-    "psi_gate_events",
-    "margin_pairs_embeddings",
-    "bleu_pairs_docs",
-    "grouped_roc_auc_sources",
-    "ips_policy_value_events",
-    "t_closeness_events",
-    "association_source_lang",
-    "repetition_spans_docs",
-    "truncation_recall_embeddings",
-    "selection_parity_sources",
-    "conformal_coverage_docs",
-    "weak_label_summary_docs",
-    "active_learning_batch_docs",
-    "theil_sen_trend_users",
-    "rfm_scores_users",
-    "group_sequential_ab_events",
-    "cuped_lift_events",
-    "mann_whitney_arms_events",
-    "distinct_ngram_sources",
-    "loso_quality_sources",
-    "ece_docs",
-    "association_rules_events",
-    "readability_docs",
-    "k_core_users",
-    "heaps_law_sources",
-    "gini_user_value_events",
-    "graph_stats_events",
-    "gains_curve_docs",
-    "required_sample_size_events",
-    "cv_fold_auc_docs",
-    "spearman_length_tokens_sources",
-    "topk_orders",
-    "window_rank_orders",
-    "tumbling_window_events",
-    "approx_distinct_users",
-    "embed_documents_fake",
-    "landmark_projection_embeddings",
-    "landmark_topic_assignments",
-    "media_features",
-    "asof_join_purchase_view",
-    "clean_corpus_pipeline",
-    "q22_idle_rich_customers",
-    "pivot_event_values_by_day",
-    "unpivot_part_metrics",
-    "left_join_order_gaps",
-    "full_outer_reconcile_keys",
-    "grouping_sets_order_stats",
-    "ntile_value_quartiles",
-    "value_quartiles_bucketed",
-    "q2_min_price_part",
-    "q8_market_share",
-    "q9_profit_by_nation",
-    "q11_top_nation_balances",
-    "q13_order_count_distribution",
-    "q16_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q20_bulk_ship_suppliers",
-    "q21_sole_late_supplier",
-    "repetition_ratio_docs",
-    "type_token_ratio_docs",
-    "length_band_filter_docs",
-    "stream_dedup_events",
-    "quantize_embeddings_int8",
-    "salted_agg_user_totals",
-    "audio_chunk_parts",
-    "leakage_safe_split_docs",
-    "dp_event_type_counts",
-    "pipeline_zip_archive_metadata",
-    "dialogue_assembly_events",
-    "chunk_documents_docs",
-    "groundedness_docs",
-    "maxsim_rerank_embeddings",
-    "late_interaction_topk_embeddings",
-    "purged_time_folds_events",
-    "profile_drift_events",
-    "k_anonymity_events",
-    "preference_pairs_events",
-    "bradley_terry_sources",
-    "token_js_divergence_sources",
-    "dictionary_tag_docs",
-    "dictionary_tag_arrow_docs",
-    "ngram_jaccard_pairs",
-    "html_extract_posts",
-    "frame_sample_parts",
-    "embedding_near_dup_pairs",
-    "geomean_value_by_type",
-    "fingerprint_overlap_pairs",
-    "q6_revenue_delta",
-    "q10_returned_customers",
-    "q4_priority_late_ship",
-    "q12_priority_by_returnflag",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q18_large_orders",
-    "q19_brand_disjunction",
-    "hourly_counts_gap_filled",
-    "json_malformed_taxonomy",
-    "near_dup_clusters",
-    "language_id_script_aware",
-    "pipeline_archive_metadata",
-    "pii_redaction_docs",
-    "line_dedup_docs",
-    "pack_sequences_docs",
-    "phash_near_dup_media",
-    "lm_score_docs",
-    "range_join_value_tiers",
-    "view_purchase_stream_join",
-    "rename_suffix_docs",
-    "doc_frequency_stopworded",
-    "sentence_split_udtf",
-    "rolling_fingerprints_docs",
-    "q7_nation_volume",
-    "window_family_orders",
-    "train_val_test_split",
-    "robust_zscores_by_user",
-    "robust_zscores_native",
-    "decontaminate_corpus",
-    "dpo_pipeline_events",
-    "sessionize_events",
-    "stratified_sample_docs",
-    "corpus_shuffle_order",
-    "vocab_coverage_docs",
-    "domain_mix_weights_docs",
-    "url_dedup_normalized",
-    "rrf_hybrid_docs",
-    "bpe_merges_docs",
-    "bpe_segment_docs",
-    "doremi_weights_by_source",
-    "bpe_fertility_by_source",
-    "knn_pq",
-    "pca_whiten_embeddings",
-    "unigram_vocab_docs",
-    "unigram_segment_docs",
-    "citation_support_docs",
-    "citation_pr_docs",
-    "margin_pairs_lsh_embeddings",
-    "chrf_pairs_docs",
-    "pass_at_k_events",
-    "expectations_orders",
-    "wordpiece_merges_docs",
-    "wordpiece_segment_docs",
-    "krippendorff_alpha_events",
-    "rouge_l_pairs_docs",
-    "edit_distance_pairs_docs",
-    "auto_expectations_orders",
-    "krippendorff_ordinal_events",
-    "krippendorff_interval_events",
-    "knn_sq",
-    "diversity_by_source_docs",
-    "unimax_mixture_docs",
-    "quantile_match_events",
-    "mojibake_repair_fixture",
-    "card_luhn_fixture",
-    "token_f1_pairs_docs",
-    "sentence_chunks_docs",
-    "q1_pricing_summary",
-    "q3_segment_revenue",
-    "q5_region_revenue",
-    "global_sum_gb",
-    "group_count_events",
-    "share_of_total_events",
-    "distinct_customers_per_priority",
-    "rollup_nation_counts",
-    "cube_status_priority",
-    "semi_join_building_orders",
-    "anti_join_idle_customers",
-    "lookup_join_nation_region",
-    "union_merge_docs",
-    "intersect_custkeys",
-    "except_custkeys",
-    "filter_contains_docs",
-    "filter_suffix_sources",
-    "filter_nonempty_docs",
-    "when_case_acctbal",
-    "media_resize",
-    "cdc_snapshot_diff_orders",
-    "cdc_merge_latest_events",
-    "incremental_rollup_events",
-    "rollup_serve_monthly",
-    "distinct_users_hll_rollup",
-    "audience_overlap_theta",
-    "value_quantiles_kll",
-    "zorder_events_stats",
-    "exact_substring_spans",
-    "bm25_ranked_docs",
-    "pmi_collocations_docs",
-    "dsir_weights_docs",
-    "perplexity_buckets_docs",
-    "nb_quality_scores_docs",
-    "cointeraction_edges_events",
-    "cointeraction_pagerank",
-    "cms_user_freq_estimates",
-    "bloom_incremental_dedup_docs",
-    "scd2_user_type_history",
-    "dsir_resample_docs",
-    "gopher_quality_docs",
-    "c4_line_filter_docs",
-    "decayed_trending_users",
-    "snapshot_asof_user_state",
-    "personalized_pagerank_user0",
-    "grouped_split_by_source",
-    "pretraining_corpus_pipeline",
-    "rag_pipeline_docs",
-    "pack_sequences_ffd_docs",
-    "dbscan_clusters_embeddings",
-    "hard_negatives_embeddings",
-    "embedding_covariance",
-    "unicode_normalize_docs",
-    "time_weighted_value_users",
-    "interpolate_hourly_values",
-    "fuzzy_best_match_parts",
-    "markov_transitions_events",
-    "corpus_zipf_stats_docs",
-    "triangle_counts_events",
-    "label_propagation_events",
-    "item_cf_similarity_events",
-    "stupid_backoff_docs",
-    "textrank_keywords_docs",
-    "compression_ratio_docs",
-    "spatial_user_pairs",
-    "cusum_changepoints_events",
-    "int8_quantize_embeddings",
-    "mixture_weights_sources",
-    "ab_test_purchase_events",
-    "bfs_distances_events",
-    "mmr_rerank_embeddings",
-    "source_overlap_jaccard",
-    "fk_integrity_audit",
-    "profile_events_table",
-    "key_skew_events",
-    "heavy_hitters_users",
-    "phrase_count_docs",
-    "incremental_near_dup_docs",
-    "canonical_docs_near_dup",
-    "psi_drift_events",
-    "training_shard_manifest",
-    "ks_drift_events",
-    "split_skew_join_events",
-    "bootstrap_ci_events",
-    "except_all_priorities",
-    "intersect_all_priorities",
-    "ses_forecast_users",
-    "trimmed_mean_events",
-    "negative_samples_docs",
-    "retractable_rollup_events",
-    "erase_audit_events",
-    "embedding_drift_snapshots",
-    "source_scorecard_docs",
-    "corpus_refresh_pipeline",
-    "search_snippets_docs",
-    "hybrid_rerank_docs",
-    "blocklist_filter_docs",
-    "pack_waste_ffd_docs",
-    "tar_shard_counts_docs",
-]
+_RECORDS_DIR = Path(__file__).resolve().parent.parent
 
-def _ordered_names() -> list[str]:
-    prio = [n for n in _DRIVER_PRIORITY if n in _REGISTRY]
-    rest = [n for n in _REGISTRY if n not in set(prio)]
-    return prio + rest
+
+@functools.cache
+def _ordered_names(records_dir: Path = _RECORDS_DIR) -> tuple[str, ...]:
+    """Registry order for the driver, stalest first.
+
+    The driver hash-checks the first ~50 names each round and writes
+    the results to `CORRECTNESS_rNN.json` in the repo root. A query's
+    last check is the latest round where it passed: `hash_match`, or a
+    rows-only (`no_oracle`) run that returned rows. Never-passed
+    queries count as round 0. Sorting by that round (stable, so ties
+    keep registry order) puts the oldest tier at the head, and each
+    new record file rotates the sample with no code edit. Names in
+    the records that are no longer registered are ignored; with no
+    records this is plain registry order.
+    """
+    last = dict.fromkeys(_REGISTRY, 0)
+    for path in records_dir.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        for name, rec in json.loads(path.read_text()).items():
+            if name in last and (
+                    rec.get("hash_match")
+                    or (rec.get("err") == "no_oracle"
+                        and rec.get("spark_rows") is not None)):
+                last[name] = max(last[name], int(m[1]))
+    return tuple(sorted(last, key=last.get))
 
 
 def queries() -> dict[str, QueryFn]:

@@ -53,19 +53,6 @@ def test_oracled_queries_emit_only_atomic_columns(spark):
         "concat_ws, and mirror in the oracle SQL")
 
 
-def test_every_query_has_an_entry_in_driver_priority(spark):
-    """Every registered query must be rotation-eligible: present in
-    _DRIVER_PRIORITY exactly once, and vice versa."""
-    from parlerproject_spark.queries import _DRIVER_PRIORITY
-
-    qs = set(entry.queries())
-    pri = list(_DRIVER_PRIORITY)
-    assert len(pri) == len(set(pri)), "duplicate names in priority"
-    assert set(pri) == qs, (
-        f"priority/registry drift: only-in-priority={set(pri) - qs} "
-        f"only-in-registry={qs - set(pri)}")
-
-
 def test_norm_frame_mirrors_driver_crash_on_array_cells():
     """The local gate must reproduce the DRIVER's canonicalizer
     behavior: sort the RAW columns before stringifying, so a frame

@@ -6,8 +6,14 @@ Usage: python tools/profile_query.py name [name ...]
 
 Times each query with the same methodology as bench.py (noop sink,
 median of N runs, warm JVM) and, with --plan-dir, writes
-<dir>/<name>_<suffix>.txt holding `.explain("formatted")` plus the
-executed-plan string (post-AQE shape, exchange/scan counts).
+<dir>/<name>_<suffix>.txt holding `.explain("formatted")`.
+
+Each query's JSON record also carries `jobs`: the Spark jobs its first
+run launched, counted through a job group. That is every
+driver-synchronized action (collects inside iterative trainers, eager
+checkpoints, AQE stage-jobs of the noop write), i.e. the number of
+sequential driver round trips. Unlike wall time it is deterministic
+and immune to CPU steal on a shared host.
 """
 
 from __future__ import annotations
@@ -21,6 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parlerproject_spark import queries as Q  # noqa: E402
+from parlerproject_spark.plans import inspect  # noqa: E402
 from parlerproject_spark.session import get_spark  # noqa: E402
 
 
@@ -48,25 +55,32 @@ def main() -> None:
     Q.flagship(spark, sf_dir).count()
     spark.range(32).mapInPandas(lambda it: it, "id long").count()
 
+    def timed_run(fn) -> float:
+        start = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - start, 3)
+
+    sc = spark.sparkContext
     out: dict[str, dict] = {}
     for name in names:
         fn = registry[name]
-        per = []
-        for _ in range(runs):
-            start = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            per.append(round(time.perf_counter() - start, 3))
+        group = f"profile:{name}"
+        sc.setJobGroup(group, name)
+        per = [timed_run(fn)]
+        sc.setJobGroup(None, None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        per += [timed_run(fn) for _ in range(runs - 1)]
         df = fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-        executed = df._jdf.queryExecution().executedPlan().toString()
+        plan = inspect.formatted_plan(df)
+        executed = inspect.executed_plan(df)
         n_ex = len(set(re.findall(r"Exchange .*?\[plan_id=(\d+)\]", executed)))
         n_scan = len(re.findall(r"Scan parquet", plan))
         n_py = len(re.findall(
             r"BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|"
             r"FlatMapGroupsInPandas", plan))
         out[name] = {"runs": per, "median": sorted(per)[len(per) // 2],
-                     "exchanges": n_ex, "scans": n_scan, "python_nodes": n_py}
+                     "jobs": jobs, "exchanges": n_ex, "scans": n_scan,
+                     "python_nodes": n_py}
         if plan_dir:
             os.makedirs(plan_dir, exist_ok=True)
             with open(os.path.join(plan_dir, f"{name}_{suffix}.txt"),
