@@ -14,6 +14,20 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
 
+def round_half_up(x, d: int = 6):
+    """Round half away from zero at `d` decimals — what SQL round()
+    does in Spark and DuckDB. numpy's np.round and Python's round()
+    are half-to-even and disagree with the oracle at exact binary
+    halves (2.5 → 2 vs 3, 0.125 at d=2 → 0.12 vs 0.13). Scalar in →
+    float out, array in → float64 array out; NaN passes through.
+    Every Python-side rounding that must hash-match an oracle's
+    round() goes through here."""
+    s = 10.0 ** d
+    x = np.asarray(x, dtype=np.float64)
+    r = np.where(x >= 0, np.floor(x * s + 0.5), np.ceil(x * s - 0.5)) / s
+    return r if r.ndim else float(r)
+
+
 _geo_mean_cache = None
 
 
@@ -83,10 +97,8 @@ def robust_zscores(df, *, key_col: str = "user_id", val_col: str = "value",
             mad = float(np.median(np.abs(xs - med)))
         if mad > 0:
             z = (x - med) / mad
-            # HALF_UP to match DuckDB round() (np.round is half-to-even)
-            zr = np.where(z >= 0, np.floor(z * 1e6 + 0.5),
-                          np.ceil(z * 1e6 - 0.5)) / 1e6
-            zout = pd.array(zr, dtype="Float64")  # NaN (null x) -> NA
+            # NaN (null x) -> NA
+            zout = pd.array(round_half_up(z), dtype="Float64")
         else:
             zout = pd.array(np.zeros_like(x), dtype="Float64")
         return pd.DataFrame({key_col: pdf[key_col],

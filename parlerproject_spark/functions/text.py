@@ -38,18 +38,16 @@ def normalize_ws(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
-def tokenize(col: Column | str, *, lowercase: bool = True) -> Column:
-    """Whitespace/punctuation tokenizer → array<string>.
+def tokenize(col: Column | str) -> Column:
+    """Lowercasing whitespace/punctuation tokenizer → array<string>.
 
-    Splits on any non-alphanumeric run (the BPE-ish regex boundary),
-    drops empties. Mirrors the reference's CountVectorizer default
-    token pattern (code/bertopicTest.py:42-50) closely enough for
-    vocabulary/DF parity.
+    Splits the lowercased text on any non-alphanumeric run (the
+    BPE-ish regex boundary), drops empties. Mirrors the reference's
+    CountVectorizer default token pattern (code/bertopicTest.py:42-50)
+    closely enough for vocabulary/DF parity.
     """
     c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
-    return F.filter(F.split(c, r"[^a-z0-9]+" if lowercase else r"[^A-Za-z0-9]+"),
+    return F.filter(F.split(F.lower(c), r"[^a-z0-9]+"),
                     lambda t: F.length(t) > 0)
 
 

@@ -19,9 +19,10 @@ oracle can replay them bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.functions.text import (fingerprint_md5,
                                                 stable_hash31,
                                                 stable_hash60, tokenize)
@@ -161,11 +162,58 @@ def posting_list_pairs(posting: DataFrame, key: str) -> DataFrame:
             .agg(F.count("*").alias("n_common")))
 
 
+def _persisted_pairs(postings: DataFrame, key: str) -> DataFrame:
+    """Pair counts from a hub-capped posting table (<key>, doc_id):
+    the one kernel behind ngram_jaccard_pairs, containment_pairs and
+    text_analysis.fingerprint_overlap.
+
+    The posting lists (groupBy(key) → sorted doc_id array; the
+    caller's df cap bounds each list) ride the caller's key
+    distribution with zero extra exchange, and are PERSISTED
+    (memory-and-disk — they are the df-capped index, far smaller than
+    the raw gram stream) so the scan + hash cascade runs once. They
+    are consumed twice: (1) in-array pair expansion (posexplode →
+    explode-of-slice, codegen-friendly Generates) → narrow
+    (id_a, id_b) aggregation, (2) re-explode → per-doc list counts,
+    joined back onto the AGGREGATED pairs (joins over pair rows, not
+    the corpus). Duplicate doc_ids inside a list (two grams colliding
+    to one 31-bit hash) survive both, so pair multiplicity and |A|
+    match the SQL oracles' self-join bit-for-bit.
+
+    Cache lifetime: the lazy API cannot know when the caller is done,
+    so the lists outlive the call; `caching.release_all` drops them at
+    the session (or query) boundary.
+    Columns: id_b, id_a, n_common, n_a, n_b (id_a < id_b).
+    """
+    from pyspark import StorageLevel
+
+    lists = (postings.groupBy(key)
+             .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
+             .persist(StorageLevel.MEMORY_AND_DISK))
+    ex = lists.select("ds", F.posexplode("ds").alias("i", "id_a"))
+    pairs = (ex.select(
+        "id_a",
+        F.explode(F.expr("slice(ds, i + 2, size(ds) - i - 1)")).alias("id_b"))
+        .filter(F.col("id_a") != F.col("id_b"))
+        .groupBy("id_a", "id_b").agg(F.count("*").alias("n_common")))
+    ns = (lists.select(F.explode("ds").alias("doc_id"))
+          .groupBy("doc_id").agg(F.count("*").alias("n")))
+    return (pairs
+            .join(ns.select(F.col("doc_id").alias("id_a"),
+                            F.col("n").alias("n_a")), "id_a")
+            .join(ns.select(F.col("doc_id").alias("id_b"),
+                            F.col("n").alias("n_b")), "id_b"))
+
+
+def _jaccard() -> Column:
+    return F.round(F.col("n_common")
+                   / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6)
+
+
 def ngram_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         threshold: float = 0.5,
-                        max_df: int = 128,
-                        eager: bool = False) -> DataFrame:
+                        max_df: int = 128) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard similarity over
     the max_df-capped shingle universe.
 
@@ -177,70 +225,30 @@ def ngram_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     sides, so the capped universe is self-consistent and the oracle
     mirrors it exactly.
 
-    Plan shape (the fingerprint_overlap pattern — r8): the shingle
-    stream crosses exactly TWO full-width exchanges (spread + sh);
-    the df cap is a window over the sh exchange and the posting-list
-    groupBy(sh) rides the SAME distribution (zero extra exchange).
-    The earlier formulation ping-ponged the corpus sh → doc_id → sh
-    (three exchanges) just to carry each doc's shingle count on
-    every pair row; instead the bounded lists are PERSISTED (they
-    are the df-capped index, far smaller than the raw shingle
-    stream) and consumed twice: (1) in-array pair expansion →
-    narrow (id_a, id_b) aggregation, (2) re-explode → per-doc
-    retained-shingle counts, joined back onto the AGGREGATED pairs
-    (joins over pair rows, not the corpus). Duplicate doc_ids inside
-    a list (two grams colliding to one 31-bit hash) survive both the
-    expansion and the re-explode count, so pair multiplicity and |A|
-    match the previous formulation and the SQL oracle bit-for-bit.
-
-    Cache lifetime: same contract as fingerprint_overlap — pass
-    `eager=True` to materialize the pair table, unpersist the lists
-    immediately, and get the persisted result back (batch shape);
-    the lazy default leaves the index cached until the
-    ContextCleaner collects it.
+    Plan shape: the shingle stream crosses exactly TWO full-width
+    exchanges (spread + sh); the df cap is a window over the sh
+    exchange and _persisted_pairs' posting-list groupBy(sh) rides the
+    SAME distribution (zero extra exchange). The earlier formulation
+    ping-ponged the corpus sh → doc_id → sh (three exchanges) just to
+    carry each doc's shingle count on every pair row.
     Columns: id_a, id_b (id_a < id_b), jaccard.
     """
-    from pyspark import StorageLevel
-
     from parlerproject_spark.operators.layout import spread_input
 
     # The tokenize cascade is compute-bound: make sure it isn't
     # serialized on a handful of scan splits (no-op at scale).
     sh = capped_shingles(spread_input(docs), id_col=id_col,
                          text_col=text_col, n=n, max_df=max_df)
-    lists = (sh.groupBy("sh")
-             .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    ex = lists.select("ds", F.posexplode("ds").alias("i", "id_a"))
-    pairs = (ex.select(
-        "id_a",
-        F.explode(F.expr("slice(ds, i + 2, size(ds) - i - 1)")).alias("id_b"))
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b").agg(F.count("*").alias("n_common")))
-    ns = (lists.select(F.explode("ds").alias("doc_id"))
-          .groupBy("doc_id").agg(F.count("*").alias("n")))
-    j = (pairs
-         .join(ns.select(F.col("doc_id").alias("id_a"),
-                         F.col("n").alias("n_a")), "id_a")
-         .join(ns.select(F.col("doc_id").alias("id_b"),
-                         F.col("n").alias("n_b")), "id_b"))
-    out = (j.withColumn("jaccard", F.round(
-               F.col("n_common")
-               / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "jaccard"))
-    if eager:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()            # materialize pairs off the posting lists
-        lists.unpersist()      # then release the (much larger) index
-    return out
+    return (_persisted_pairs(sh, "sh")
+            .withColumn("jaccard", _jaccard())
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 def containment_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 3,
                       threshold: float = 0.8,
-                      max_df: int = 128,
-                      eager: bool = False) -> DataFrame:
+                      max_df: int = 128) -> DataFrame:
     """ASYMMETRIC near-dup pairs by n-gram overlap coefficient
     (round 13): containment = |A∩B| / min(|A|, |B|) over the
     max_df-capped shingle universe. Symmetric Jaccard misses the
@@ -254,51 +262,23 @@ def containment_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     and 'contained' documents).
 
     Plan shape is ngram_jaccard_pairs' exactly (one tokenize
-    cascade, hub-capped posting lists persisted and consumed for
-    in-array pair expansion + per-doc sizes, joins only over
-    AGGREGATED pair rows, never the corpus). Jaccard rides along on
-    every emitted row so the consumer can tell near-identical pairs
-    (both high) from true containment (containment high, jaccard
-    low). Cache lifetime: same eager contract as
-    ngram_jaccard_pairs.
+    cascade, then _persisted_pairs). Jaccard rides along on every
+    emitted row so the consumer can tell near-identical pairs (both
+    high) from true containment (containment high, jaccard low).
 
     Columns: id_a, id_b (id_a < id_b), containment, jaccard
     (both round 6).
     """
-    from pyspark import StorageLevel
-
     from parlerproject_spark.operators.layout import spread_input
 
     sh = capped_shingles(spread_input(docs), id_col=id_col,
                          text_col=text_col, n=n, max_df=max_df)
-    lists = (sh.groupBy("sh")
-             .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    ex = lists.select("ds", F.posexplode("ds").alias("i", "id_a"))
-    pairs = (ex.select(
-        "id_a",
-        F.explode(F.expr("slice(ds, i + 2, size(ds) - i - 1)")).alias("id_b"))
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b").agg(F.count("*").alias("n_common")))
-    ns = (lists.select(F.explode("ds").alias("doc_id"))
-          .groupBy("doc_id").agg(F.count("*").alias("n")))
-    j = (pairs
-         .join(ns.select(F.col("doc_id").alias("id_a"),
-                         F.col("n").alias("n_a")), "id_a")
-         .join(ns.select(F.col("doc_id").alias("id_b"),
-                         F.col("n").alias("n_b")), "id_b"))
-    out = (j.withColumn("containment", F.round(
-               F.col("n_common") / F.least("n_a", "n_b"), 6))
-           .withColumn("jaccard", F.round(
-               F.col("n_common")
-               / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
-           .filter(F.col("containment") >= threshold)
-           .select("id_a", "id_b", "containment", "jaccard"))
-    if eager:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        lists.unpersist()
-    return out
+    return (_persisted_pairs(sh, "sh")
+            .withColumn("containment", F.round(
+                F.col("n_common") / F.least("n_a", "n_b"), 6))
+            .withColumn("jaccard", _jaccard())
+            .filter(F.col("containment") >= threshold)
+            .select("id_a", "id_b", "containment", "jaccard"))
 
 
 def duplicate_clusters(pairs: DataFrame, *, id_a: str = "id_a",
@@ -778,10 +758,7 @@ def _pair_cosine_scorer(threshold: float):
             num = (A * B).sum(axis=1)
             den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
             with np.errstate(invalid="ignore", divide="ignore"):
-                raw = np.where(den > 0, num / den, np.nan)
-                sim = np.where(raw >= 0,
-                               np.floor(raw * 1e6 + 0.5),
-                               np.ceil(raw * 1e6 - 0.5)) / 1e6
+                sim = round_half_up(np.where(den > 0, num / den, np.nan))
             out = pd.DataFrame({"id_a": pdf["id_a"].values,
                                 "id_b": pdf["id_b"].values, "sim": sim})
             yield out[out["sim"] >= threshold]
@@ -882,10 +859,8 @@ def _bcast_cosine_scorer(partner_bc, threshold: float, *,
                 num = (A[i] * Mi).sum(axis=1)
                 den = na[i] * nbi
                 with np.errstate(invalid="ignore", divide="ignore"):
-                    raw = np.where(den > 0, num / den, np.nan)
-                    sim = np.where(raw >= 0,
-                                   np.floor(raw * 1e6 + 0.5),
-                                   np.ceil(raw * 1e6 - 0.5)) / 1e6
+                    sim = round_half_up(
+                        np.where(den > 0, num / den, np.nan))
                 keep = sim >= threshold
                 if keep.any():
                     out_a.append(np.full(keep.sum(), id_a))

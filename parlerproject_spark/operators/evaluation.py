@@ -16,7 +16,7 @@ vocabulary.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -86,89 +86,105 @@ def ranking_metrics(results: DataFrame, judgments: DataFrame, *,
         .alias("recall"))
 
 
-def roc_auc(df: DataFrame, *, score_col: str = "score",
-            label_col: str = "label",
-            n_buckets: int = 1024) -> DataFrame:
-    """Exact tie-corrected ROC-AUC (the Mann-Whitney statistic) as a
-    one-row frame: n_pos, n_neg, auc.
+# Range buckets of the two-level prefix sum (see _rank_sum).
+_N_BUCKETS = 1024
+
+
+def _rank_sum(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The tie-exact rank-sum kernel behind roc_auc, grouped_roc_auc
+    and mann_whitney_u. `rows` carries *keys, __s (double value) and
+    __y (0/1 label); the result is one row per distinct
+    (*keys, __s): __pos, __neg and
+    __c = pos · (neg_below + neg/2), so per group
+    Σ__c / (Σ__pos · Σ__neg) = AUC and Σ__c = U.
 
     NOT the textbook per-row global rank — that is a full corpus sort.
-    The corpus collapses to one row per DISTINCT score (one
-    map-side-combined aggregation); the cumulative-histogram identity
-    AUC = Σ_s pos_s · (neg_below_s + neg_s/2) / (n_pos·n_neg)
-    is tie-exact. A float-scored classifier has distinct-scores ≈ rows,
-    so the prefix sum is TWO-LEVEL rather than one global window:
-    scores range-bucket into ≤`n_buckets` ordered buckets (floor over
-    (s−min)/(max−min) is IEEE-monotone, so bucket order == score
-    order); cross-bucket negative offsets come from a broadcast
-    cross-join over the ≤B-row bucket-total frame (B² ≤ 1M cells, all
-    driver-free); the within-bucket prefix runs under a
-    `partitionBy(bucket)` window whose partitions hold ~distinct/B
-    rows each. No unpartitioned window anywhere — every shuffle is
-    keyed and every single-partition structure is ≤n_buckets rows.
+    The input collapses to the per-(keys, value) histogram (one
+    map-side-combined aggregation), PERSISTED: it is the reduction
+    artifact with four consumers (bounds, bucketed rows, bucket
+    totals, final sums). A 100 TB pipeline with raw float scores
+    quantizes first, so the cached relation stays reduction-sized.
+    A float-scored classifier has distinct values ≈ rows, so the
+    prefix sum is TWO-LEVEL rather than one window per group: values
+    range-bucket into ≤_N_BUCKETS ordered buckets per group (floor
+    over (s−lo)/(hi−lo) is IEEE-monotone, so bucket order == value
+    order); cross-bucket negative offsets come from a window over
+    the ≤_N_BUCKETS bucket rows `partitionBy(keys)`; the
+    within-bucket prefix runs `partitionBy(keys, bucket)`. Ungrouped
+    callers pass a constant key column, so the per-group structures
+    are ≤_N_BUCKETS rows and the within-bucket partitions hold
+    ~distinct/B rows each.
+
+    NaN values are ISOLATED from the bucketing math: Spark's max()
+    treats NaN as the largest double (span would go NaN and
+    floor(NaN) is 0 — collapsing EVERY row into bucket 0). Bounds are
+    computed over non-NaN values only and NaN rows are routed
+    straight to the top bucket, where the within-bucket ORDER BY (NaN
+    sorts above every double) keeps the cumulative identity exact.
     """
-    lab = F.col(label_col).cast("int")
-    # the distinct-score histogram IS the operator's reduction
-    # artifact (four consumers: bounds, bucketed rows, bucket totals,
-    # final sum) — persist it so each consumer reads the one
-    # materialization instead of re-running the corpus aggregation.
-    # Size = distinct scores; a 100 TB pipeline with raw float scores
-    # quantizes first (n_buckets exists for exactly that), so the
-    # cached relation stays reduction-sized, not corpus-sized.
-    per = (df.select(F.col(score_col).cast("double").alias("__s"),
-                     lab.alias("__y"))
-           .groupBy("__s")
+    per = (rows.groupBy(*keys, "__s")
            .agg(F.sum("__y").alias("__pos"),
                 F.sum(1 - F.col("__y")).alias("__neg"))
            .persist())
-    # NaN scores are ISOLATED from the bucketing math: Spark's
-    # max() treats NaN as the largest double (span would go NaN and
-    # floor(NaN) is 0 — collapsing EVERY row into bucket 0, i.e. one
-    # global window). Bounds are computed over non-NaN scores only
-    # and NaN rows are routed straight to the top bucket, where the
-    # within-bucket ORDER BY (NaN sorts above every double) keeps the
-    # cumulative identity exact.
     s_fin = F.when(F.isnan(F.col("__s")), F.lit(None)).otherwise(F.col("__s"))
-    bounds = per.agg(F.min(s_fin).alias("__lo"), F.max(s_fin).alias("__hi"))
+    bounds = (per.groupBy(*keys)
+              .agg(F.min(s_fin).alias("__lo"), F.max(s_fin).alias("__hi")))
     span = F.col("__hi") - F.col("__lo")
-    bucket = F.when(F.isnan(F.col("__s")), F.lit(n_buckets - 1)).otherwise(
+    top = F.lit(_N_BUCKETS - 1)
+    bucket = F.when(F.isnan(F.col("__s")), top).otherwise(
         F.coalesce(
             F.when(span > 0,
                    F.least(F.floor((F.col("__s") - F.col("__lo"))
-                                   / span * n_buckets),
-                           F.lit(n_buckets - 1))).otherwise(F.lit(0)),
-            F.lit(n_buckets - 1))).cast("long")
-    b = (per.crossJoin(F.broadcast(bounds))
-         .select("__s", "__pos", "__neg", bucket.alias("__b")))
-    btot = b.groupBy("__b").agg(F.sum("__neg").alias("__bneg"))
-    lower = btot.select(F.col("__b").alias("__b2"),
-                        F.col("__bneg").alias("__bneg2"))
-    off = (btot.crossJoin(F.broadcast(lower))
-           .groupBy("__b")
-           .agg(F.sum(F.when(F.col("__b2") < F.col("__b"),
-                             F.col("__bneg2")).otherwise(F.lit(0)))
-                .alias("__off")))
-    w = (Window.partitionBy("__b").orderBy("__s")
-         .rowsBetween(Window.unboundedPreceding, -1))
+                                   / span * _N_BUCKETS),
+                           top)).otherwise(F.lit(0)),
+            top)).cast("long")
+    b = (per.join(F.broadcast(bounds), keys)
+         .select(*keys, "__s", "__pos", "__neg", bucket.alias("__b")))
+    wo = (Window.partitionBy(*keys).orderBy("__b")
+          .rowsBetween(Window.unboundedPreceding, -1))
+    btot = (b.groupBy(*keys, "__b")
+            .agg(F.sum("__neg").alias("__bneg"))
+            .select(*keys, "__b",
+                    F.coalesce(F.sum("__bneg").over(wo), F.lit(0))
+                    .alias("__off")))
+    wi = (Window.partitionBy(*keys, "__b").orderBy("__s")
+          .rowsBetween(Window.unboundedPreceding, -1))
     neg_below = (F.col("__off")
-                 + F.coalesce(F.sum("__neg").over(w), F.lit(0)))
+                 + F.coalesce(F.sum("__neg").over(wi), F.lit(0)))
     contrib = F.col("__pos") * (neg_below.cast("double")
                                 + F.col("__neg") / 2.0)
-    return (b.join(F.broadcast(off), "__b")
-            .select("__pos", "__neg", contrib.alias("__c"))
-            .agg(F.sum("__pos").cast("long").alias("n_pos"),
-                 F.sum("__neg").cast("long").alias("n_neg"),
-                 # try_divide: a single-class input has no ranking to
-                 # score — auc is null, not an ANSI divide-by-zero.
-                 # The n_pos·n_neg product is taken in DOUBLE (both
-                 # sums cast first, mirroring the oracle's CAST):
-                 # bigint·bigint overflows once both classes pass
-                 # ~3×10⁹ rows — the 100 TB regime (r10 ADVICE's
-                 # WordPiece bug class).
-                 F.round(F.try_divide(F.sum("__c"),
-                                      F.sum("__pos").cast("double")
-                                      * F.sum("__neg").cast("double")), 6)
-                 .alias("auc")))
+    return (b.join(btot, [*keys, "__b"])
+            .select(*keys, "__s", "__pos", "__neg", contrib.alias("__c")))
+
+
+def _auc_columns() -> list[Column]:
+    return [F.sum("__pos").cast("long").alias("n_pos"),
+            F.sum("__neg").cast("long").alias("n_neg"),
+            # try_divide: a single-class input has no ranking to
+            # score — auc is null, not an ANSI divide-by-zero. The
+            # n_pos·n_neg product is taken in DOUBLE (both sums cast
+            # first, mirroring the oracle's CAST): bigint·bigint
+            # overflows once both classes pass ~3×10⁹ rows — the
+            # 100 TB regime (r10 ADVICE's WordPiece bug class).
+            F.round(F.try_divide(F.sum("__c"),
+                                 F.sum("__pos").cast("double")
+                                 * F.sum("__neg").cast("double")), 6)
+            .alias("auc")]
+
+
+def roc_auc(df: DataFrame, *, score_col: str = "score",
+            label_col: str = "label") -> DataFrame:
+    """Exact tie-corrected ROC-AUC (the Mann-Whitney statistic) as a
+    one-row frame: n_pos, n_neg, auc — the cumulative-histogram
+    identity AUC = Σ_s pos_s · (neg_below_s + neg_s/2) / (n_pos·n_neg)
+    over `_rank_sum` with one constant group key. No unpartitioned
+    window anywhere — every shuffle is keyed and every
+    single-partition structure is ≤_N_BUCKETS rows.
+    """
+    rows = df.select(F.lit(0).alias("__g"),
+                     F.col(score_col).cast("double").alias("__s"),
+                     F.col(label_col).cast("int").alias("__y"))
+    return _rank_sum(rows, ["__g"]).agg(*_auc_columns())
 
 
 def calibration_report(df: DataFrame, *, prob_col: str = "prob",
@@ -333,21 +349,14 @@ def bleu_pairs(cand: DataFrame, ref: DataFrame, *,
 
 
 def grouped_roc_auc(df: DataFrame, group_cols: list[str], *,
-                    score_col: str = "score", label_col: str = "label",
-                    n_buckets: int = 1024) -> DataFrame:
+                    score_col: str = "score",
+                    label_col: str = "label") -> DataFrame:
     """Per-slice ROC-AUC — one exact tie-corrected AUC per group
     (per source, per language, per annotator batch): the sliced-eval
     readout that catches a classifier scoring 0.9 overall while
     failing one slice entirely.
 
-    Same cumulative-histogram identity as `roc_auc` (AUC = Σ pos·
-    (neg_below + neg_tied/2) / (P·N)), and the same shuffle-bounded
-    prefix-sum discipline, but the GROUP key makes both windows
-    naturally partitioned: per-(group, score) histogram → per-group
-    range-bucketing (floor over (s−lo)/(hi−lo), IEEE-monotone) →
-    cross-bucket offsets from a window over the ≤n_buckets bucket
-    rows `partitionBy(group)` → within-bucket prefix
-    `partitionBy(group, bucket)`. Every exchange is keyed on the
+    `_rank_sum` keyed on the group: every exchange is keyed on the
     group (+ bucket); no structure anywhere exceeds a group's
     distinct-score count split B ways. Single-class groups report
     auc NULL (no ranking exists), not a divide-by-zero.
@@ -359,64 +368,14 @@ def grouped_roc_auc(df: DataFrame, group_cols: list[str], *,
 
     Columns: *group_cols, n_pos, n_neg, auc.
     """
-    lab = F.col(label_col).cast("int")
     nn = F.lit(True)
     for c in group_cols:
         nn = nn & F.col(c).isNotNull()
-    df = df.filter(nn)
-    # per-(group, score) histogram persisted — the roc_auc
-    # reduction-artifact contract: its consumers (per-group bounds,
-    # bucketed rows, bucket totals, final sums) read one
-    # materialization instead of re-running the corpus aggregation
-    per = (df.select(*group_cols,
-                     F.col(score_col).cast("double").alias("__s"),
-                     lab.alias("__y"))
-           .groupBy(*group_cols, "__s")
-           .agg(F.sum("__y").alias("__pos"),
-                F.sum(1 - F.col("__y")).alias("__neg"))
-           .persist())
-    # NaN isolation — same reasoning as roc_auc above: per-group
-    # bounds over non-NaN scores only (max() would propagate NaN and
-    # floor(NaN)=0 collapses the group into one bucket); NaN rows go
-    # straight to the top bucket where NaN's sort position keeps the
-    # identity exact.
-    s_fin = F.when(F.isnan(F.col("__s")), F.lit(None)).otherwise(F.col("__s"))
-    bounds = (per.groupBy(*group_cols)
-              .agg(F.min(s_fin).alias("__lo"), F.max(s_fin).alias("__hi")))
-    span = F.col("__hi") - F.col("__lo")
-    bucket = F.when(F.isnan(F.col("__s")), F.lit(n_buckets - 1)).otherwise(
-        F.coalesce(
-            F.when(span > 0,
-                   F.least(F.floor((F.col("__s") - F.col("__lo"))
-                                   / span * n_buckets),
-                           F.lit(n_buckets - 1))).otherwise(F.lit(0)),
-            F.lit(n_buckets - 1))).cast("long")
-    b = (per.join(bounds, list(group_cols))
-         .select(*group_cols, "__s", "__pos", "__neg",
-                 bucket.alias("__b")))
-    wo = (Window.partitionBy(*group_cols).orderBy("__b")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    btot = (b.groupBy(*group_cols, "__b")
-            .agg(F.sum("__neg").alias("__bneg"))
-            .select(*group_cols, "__b",
-                    F.coalesce(F.sum("__bneg").over(wo), F.lit(0))
-                    .alias("__off")))
-    wi = (Window.partitionBy(*group_cols, "__b").orderBy("__s")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    neg_below = (F.col("__off")
-                 + F.coalesce(F.sum("__neg").over(wi), F.lit(0)))
-    contrib = F.col("__pos") * (neg_below.cast("double")
-                                + F.col("__neg") / 2.0)
-    return (b.join(btot, [*group_cols, "__b"])
-            .select(*group_cols, "__pos", "__neg", contrib.alias("__c"))
-            .groupBy(*group_cols)
-            .agg(F.sum("__pos").cast("long").alias("n_pos"),
-                 F.sum("__neg").cast("long").alias("n_neg"),
-                 # n_pos·n_neg in DOUBLE, not bigint — see roc_auc
-                 F.round(F.try_divide(F.sum("__c"),
-                                      F.sum("__pos").cast("double")
-                                      * F.sum("__neg").cast("double")), 6)
-                 .alias("auc")))
+    rows = df.filter(nn).select(*group_cols,
+                                F.col(score_col).cast("double").alias("__s"),
+                                F.col(label_col).cast("int").alias("__y"))
+    return (_rank_sum(rows, list(group_cols))
+            .groupBy(*group_cols).agg(*_auc_columns()))
 
 
 def off_policy_value(logs: DataFrame, target_probs: dict, *,
@@ -546,8 +505,7 @@ def conformal_coverage(df: DataFrame, *, score_col: str = "score",
 
 
 def mann_whitney_u(df: DataFrame, *, value_col: str = "value",
-                   group_col: str = "arm",
-                   n_buckets: int = 1024) -> DataFrame:
+                   group_col: str = "arm") -> DataFrame:
     """Mann–Whitney U (Wilcoxon rank-sum) between two groups — the
     nonparametric arm comparison for heavy-tailed metrics where the
     t/z-on-means test is dominated by outliers: U = #{(i,j):
@@ -555,75 +513,34 @@ def mann_whitney_u(df: DataFrame, *, value_col: str = "value",
     approximation z = (U − n₁n₀/2)/σ using the TIE-CORRECTED
     variance σ² = n₁n₀/12·((n+1) − Σ(t³−t)/(n(n−1))).
 
-    U is the same cumulative-histogram identity as roc_auc's
-    numerator (label = group), so the implementation reuses that
-    operator's shuffle-bounded two-level prefix sum — per-distinct-
-    value histogram, range-bucketing, broadcast cross-bucket
-    offsets, partitionBy(bucket) window — and the tie term Σ(t³−t)
-    is one extra expression on the same histogram. No global rank
-    window exists anywhere.
+    U is roc_auc's numerator with label = group: Σ__c of `_rank_sum`
+    (one constant group key), and the tie term Σ(t³−t) is one extra
+    expression on the same per-value rows. No global rank window
+    exists anywhere.
 
     Columns (one row): n_1, n_0, u (round 6), z (round 6; null when
     a group is empty or all values tie).
     """
-    g = F.col(group_col).cast("int")
-    # distinct-value histogram persisted — the roc_auc reduction-
-    # artifact contract: four consumers, one materialization
-    per = (df.select(F.col(value_col).cast("double").alias("__s"),
-                     g.alias("__g"))
-           .groupBy("__s")
-           .agg(F.sum("__g").alias("__n1"),
-                F.sum(1 - F.col("__g")).alias("__n0"))
-           .persist())
-    # NaN isolation — same reasoning as roc_auc: bounds over non-NaN
-    # values only (max() propagates NaN; floor(NaN)=0 would collapse
-    # everything into bucket 0); NaN values route to the top bucket
-    # where NaN's sort position keeps the cumulative identity exact.
-    s_fin = F.when(F.isnan(F.col("__s")), F.lit(None)).otherwise(F.col("__s"))
-    bounds = per.agg(F.min(s_fin).alias("__lo"), F.max(s_fin).alias("__hi"))
-    span = F.col("__hi") - F.col("__lo")
-    bucket = F.when(F.isnan(F.col("__s")), F.lit(n_buckets - 1)).otherwise(
-        F.coalesce(
-            F.when(span > 0,
-                   F.least(F.floor((F.col("__s") - F.col("__lo"))
-                                   / span * n_buckets),
-                           F.lit(n_buckets - 1))).otherwise(F.lit(0)),
-            F.lit(n_buckets - 1))).cast("long")
-    b = (per.crossJoin(F.broadcast(bounds))
-         .select("__s", "__n1", "__n0", bucket.alias("__b")))
-    btot = b.groupBy("__b").agg(F.sum("__n0").alias("__b0"))
-    lower = btot.select(F.col("__b").alias("__b2"),
-                        F.col("__b0").alias("__b02"))
-    off = (btot.crossJoin(F.broadcast(lower))
-           .groupBy("__b")
-           .agg(F.sum(F.when(F.col("__b2") < F.col("__b"),
-                             F.col("__b02")).otherwise(F.lit(0)))
-                .alias("__off")))
-    w = (Window.partitionBy("__b").orderBy("__s")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    below = F.col("__off") + F.coalesce(F.sum("__n0").over(w), F.lit(0))
-    t = F.col("__n1") + F.col("__n0")
+    rows = df.select(F.lit(0).alias("__g"),
+                     F.col(value_col).cast("double").alias("__s"),
+                     F.col(group_col).cast("int").alias("__y"))
     # tie correction in DOUBLE from the first multiply: t is a
     # per-distinct-VALUE tie count, and a discrete metric at corpus
     # scale (e.g. value=0) makes t³ blow past int64 at just
     # t ≥ ~2.1M — the earliest-overflowing member of the count-
     # product bug class (oracle mirrors: t::DOUBLE * t * t - t)
-    td = t.cast("double")
-    contrib = (b.join(F.broadcast(off), "__b")
-               .select("__n1", "__n0",
-                       (F.col("__n1") * (below.cast("double")
-                                         + F.col("__n0") / 2.0))
-                       .alias("__c"),
-                       (td * td * td - td).alias("__t3")))
-    n1, n0 = F.sum("__n1").cast("double"), F.sum("__n0").cast("double")
+    td = (F.col("__pos") + F.col("__neg")).cast("double")
+    contrib = _rank_sum(rows, ["__g"]).select(
+        "__pos", "__neg", "__c", (td * td * td - td).alias("__t3"))
+    n1, n0 = F.sum("__pos").cast("double"), F.sum("__neg").cast("double")
     n = n1 + n0
     u = F.sum("__c")
     sigma2 = (n1 * n0 / 12.0
               * ((n + 1.0) - F.sum("__t3") / (n * (n - 1.0))))
     z = F.when(sigma2 > 0, (u - n1 * n0 / 2.0) / F.sqrt(sigma2))
     return contrib.agg(
-        F.sum("__n1").cast("long").alias("n_1"),
-        F.sum("__n0").cast("long").alias("n_0"),
+        F.sum("__pos").cast("long").alias("n_1"),
+        F.sum("__neg").cast("long").alias("n_0"),
         F.round(u, 6).alias("u"),
         F.round(z, 6).alias("z"))
 
@@ -791,6 +708,34 @@ def _answer_grams(answers: DataFrame, key_col: str, answer_col: str,
                     .alias("gram")))
 
 
+def _citation_frames(answers: DataFrame, citations: DataFrame,
+                     sources: DataFrame, *, key_col: str, answer_col: str,
+                     src_col: str, source_col: str,
+                     source_key_col: str | None,
+                     n: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The three keyed frames citation_support and
+    citation_precision_recall probe: answer grams (__k, gram) — the
+    groundedness exchange contract; DISTINCT citation edges
+    (__k, __s); and each source's DISTINCT gram set flagged
+    (__s, gram, __hit = 1), tokenized through a spread_input barrier.
+    `source_key_col` names the sources' key (default: key_col)."""
+    from parlerproject_spark.functions.text import tokenize, word_ngrams
+    from parlerproject_spark.operators.layout import spread_input
+
+    ag = _answer_grams(answers, key_col, answer_col, n)
+    cit = (citations.select(F.col(key_col).alias("__k"),
+                            F.col(src_col).alias("__s"))
+           .distinct())
+    skey = source_key_col or key_col
+    hit = (spread_input(sources.select(F.col(skey).alias("__s"),
+                                       tokenize(source_col).alias("__t")))
+           .select("__s", F.explode(word_ngrams(F.col("__t"), n))
+                   .alias("gram"))
+           .distinct()
+           .withColumn("__hit", F.lit(1)))
+    return ag, cit, hit
+
+
 def citation_support(answers: DataFrame, citations: DataFrame,
                      sources: DataFrame, *, key_col: str = "doc_id",
                      answer_col: str = "answer", src_col: str = "src_id",
@@ -821,20 +766,10 @@ def citation_support(answers: DataFrame, citations: DataFrame,
     tokens are omitted (no grams — the groundedness convention).
     Columns: <key_col>, <src_col>, n_grams, n_supported, support.
     """
-    from parlerproject_spark.functions.text import tokenize, word_ngrams
-    from parlerproject_spark.operators.layout import spread_input
-
-    ag = _answer_grams(answers, key_col, answer_col, n)
-    cit = (citations.select(F.col(key_col).alias("__k"),
-                            F.col(src_col).alias("__s"))
-           .distinct())
-    skey = source_key_col or key_col
-    sgd = (spread_input(sources.select(F.col(skey).alias("__s"),
-                                       tokenize(source_col).alias("__t")))
-           .select("__s", F.explode(word_ngrams(F.col("__t"), n))
-                   .alias("gram"))
-           .distinct())
-    hit = sgd.withColumn("__hit", F.lit(1))
+    ag, cit, hit = _citation_frames(
+        answers, citations, sources, key_col=key_col,
+        answer_col=answer_col, src_col=src_col, source_col=source_col,
+        source_key_col=source_key_col, n=n)
     pair = (ag.join(cit, "__k")
             .join(hit, ["__s", "gram"], "left")
             .groupBy("__k", "__s")
@@ -871,19 +806,10 @@ def citation_precision_recall(answers: DataFrame, citations: DataFrame,
     omitted; an answer none of whose citations exist still reports
     (precision 0, recall 0).
     """
-    from parlerproject_spark.functions.text import tokenize, word_ngrams
-    from parlerproject_spark.operators.layout import spread_input
-
-    ag = _answer_grams(answers, key_col, answer_col, n)
-    cit = (citations.select(F.col(key_col).alias("__k"),
-                            F.col(src_col).alias("__s"))
-           .distinct())
-    skey = source_key_col or key_col
-    sgd = (spread_input(sources.select(F.col(skey).alias("__s"),
-                                       tokenize(source_col).alias("__t")))
-           .select("__s", F.explode(word_ngrams(F.col("__t"), n))
-                   .alias("gram"))
-           .distinct())
+    ag, cit, hit = _citation_frames(
+        answers, citations, sources, key_col=key_col,
+        answer_col=answer_col, src_col=src_col, source_col=source_col,
+        source_key_col=source_key_col, n=n)
     # ONE probe, ONE chain (the round-11 scan-budget audit caught
     # the old covered/supporting/per_key/cit_stats four-branch form
     # re-reading every input 2-3x): each (answer gram, citation)
@@ -895,8 +821,7 @@ def citation_precision_recall(answers: DataFrame, citations: DataFrame,
     # exactly once.
     agv = ag.groupBy("__k", "gram").agg(F.count(F.lit(1)).alias("__cnt"))
     probe = (agv.join(cit, "__k")
-             .join(sgd.withColumn("__hit", F.lit(1)),
-                   ["__s", "gram"], "left"))
+             .join(hit, ["__s", "gram"], "left"))
     gram_rollup = (probe.groupBy("__k", "gram")
                    .agg(F.first("__cnt").alias("__cnt"),
                         F.max(F.coalesce("__hit", F.lit(0)))

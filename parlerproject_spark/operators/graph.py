@@ -94,65 +94,38 @@ def cointeraction_edges(events: DataFrame, *,
             .distinct())
 
 
-def _warn_if_not_converged(prev: DataFrame, cur: DataFrame,
-                           tol: float, iters: int, what: str) -> None:
-    """Eager convergence check between the last two iterations: the
-    max per-node |Δrank| after the fixed budget. Like
-    dedup.duplicate_clusters' fixed-point count, this runs a job at
-    construction time — callers opt in via `tol`, keeping the
-    default fixed-iteration contract fully lazy (and the oracle's
-    unrolled CTEs bit-identical)."""
-    delta = (prev.select("node", F.col("rank").alias("r0"))
-             .join(cur.select("node", F.col("rank").alias("r1")), "node")
-             .agg(F.max(F.abs(F.col("r1") - F.col("r0"))).alias("d"))
-             .collect()[0]["d"])
-    if delta is not None and delta > tol:
-        import warnings
-        warnings.warn(
-            f"{what}: max |Δrank| = {delta:.3e} > tol={tol:g} after "
-            f"iters={iters} — ranks have not converged; raise iters "
-            "(power iteration contracts geometrically in the damping "
-            "factor, so a few more rounds usually suffice)",
-            RuntimeWarning, stacklevel=3)
+def _power_iteration(edges: DataFrame, start: DataFrame, *,
+                     iters: int, damping: float,
+                     tol: float | None = None,
+                     weight_col: str | None = None) -> DataFrame:
+    """The one PageRank power iteration behind `pagerank` and
+    `personalized_pagerank`: from `start` (node, rank = the initial
+    vector, tel = the per-node teleport term (1-d)·p(v)), run
+    r_{t+1}(v) = tel(v) + d * sum_{u->v} r_t(u) * w(u,v) / out(u)
+    exactly `iters` rounds, where out(u) is u's out-degree, or its
+    outgoing weight sum with `weight_col`. (Simplified form: dangling
+    mass is not redistributed — documented, and mirrored verbatim by
+    the oracles.)
 
+    Plan: out-degrees are one aggregation; every iteration is ONE
+    shuffle join (rank ⋈ edges on src) plus ONE keyed aggregation on
+    dst, then a left join back to the node set for rankless nodes —
+    the exact dataflow Pregel compiles to. Iteration count is fixed
+    and small (the standard "k rounds of power iteration" contract),
+    so the lineage stays bounded; the caller localCheckpoints the
+    derived edges once, so the upstream edge derivation (a window over
+    the raw log) does not replay per iteration (measured 3.5× on the
+    sf0.1 personalized query).
 
-def pagerank(edges: DataFrame, *, iters: int = 3,
-             damping: float = 0.85,
-             tol: float | None = None,
-             weight_col: str | None = None) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list:
-    r_{t+1}(v) = (1 - d)/N + d * sum_{u->v} r_t(u) / outdeg(u),
-    starting uniform, run exactly `iters` rounds. (Simplified form:
-    dangling mass is not redistributed — documented, and mirrored
-    verbatim by the oracle.)
-
-    With `weight_col`, the weighted variant: each neighbor receives
-    r_t(u) * w(u,v) / outstrength(u) (outstrength = sum of u's
-    outgoing weights) — same plan shape, the degree aggregate just
-    becomes a sum.
-
-    Plan: nodes and out-degrees are one aggregation each; every
-    iteration is ONE shuffle join (rank ⋈ edges on src) plus ONE
-    keyed aggregation on dst, then a left join back to the node set
-    for rankless nodes — the exact dataflow Pregel compiles to.
-    Iteration count is fixed and small (the standard "k rounds of
-    power iteration" contract), so the lineage stays bounded; for
-    convergence-driven runs at scale, checkpoint per iteration as
-    dedup.duplicate_clusters does. Pass `tol` to get an eager
-    post-hoc convergence check (RuntimeWarning when the last
-    iteration still moved any node's rank by more than tol — the
-    duplicate_clusters non-convergence guard, r4 verdict #6).
+    `tol` adds an eager post-hoc convergence check: the max per-node
+    |Δrank| of the last iteration, with a RuntimeWarning above tol
+    (the duplicate_clusters non-convergence guard, r4 verdict #6).
+    Like duplicate_clusters' fixed-point count it runs a job at
+    construction time, so the default stays fully lazy (and the
+    oracles' unrolled CTEs bit-identical).
 
     Columns: node, rank (round 6).
     """
-    # truncate the edge-derivation lineage once: every iteration
-    # re-references edges, and without this the upstream window over
-    # the raw log replays per iteration (same cure as
-    # personalized_pagerank / duplicate_clusters)
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node")))
-             .distinct())
     if weight_col is None:
         outdeg = edges.groupBy("src").agg(
             F.count("*").cast("double").alias("deg"))
@@ -161,11 +134,7 @@ def pagerank(edges: DataFrame, *, iters: int = 3,
         outdeg = edges.groupBy("src").agg(
             F.sum(weight_col).cast("double").alias("deg"))
         wexpr = F.col(weight_col).cast("double")
-    n = nodes.agg(F.count("*").cast("double").alias("n_nodes"))
-    base = F.col("n_nodes")
-    ranks = (nodes.crossJoin(F.broadcast(n))
-             .select("node", (F.lit(1.0) / base).alias("rank"), "n_nodes"))
-    prev = ranks
+    ranks = prev = start
     for _ in range(iters):
         prev = ranks
         contrib = (ranks
@@ -175,22 +144,65 @@ def pagerank(edges: DataFrame, *, iters: int = 3,
                            (F.col("rank") * wexpr / F.col("deg"))
                            .alias("c")))
         summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (ranks.select("node", "n_nodes")
+        ranks = (ranks.select("node", "tel")
                  .join(summed, "node", "left")
                  .select("node",
-                         ((1.0 - damping) / base
+                         (F.col("tel")
                           + damping * F.coalesce(F.col("s"), F.lit(0.0)))
                          .alias("rank"),
-                         "n_nodes"))
+                         "tel"))
     if tol is not None and iters > 0:
-        _warn_if_not_converged(prev, ranks, tol, iters, "pagerank")
+        delta = (prev.select("node", F.col("rank").alias("r0"))
+                 .join(ranks.select("node", F.col("rank").alias("r1")),
+                       "node")
+                 .agg(F.max(F.abs(F.col("r1") - F.col("r0"))).alias("d"))
+                 .collect()[0]["d"])
+        if delta is not None and delta > tol:
+            import warnings
+            warnings.warn(
+                f"pagerank: max |Δrank| = {delta:.3e} > tol={tol:g} after "
+                f"iters={iters} — ranks have not converged; raise iters "
+                "(power iteration contracts geometrically in the damping "
+                "factor, so a few more rounds usually suffice)",
+                RuntimeWarning, stacklevel=3)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
+
+
+def _nodes(edges: DataFrame) -> DataFrame:
+    return (edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node")))
+            .distinct())
+
+
+def pagerank(edges: DataFrame, *, iters: int = 3,
+             damping: float = 0.85,
+             tol: float | None = None,
+             weight_col: str | None = None) -> DataFrame:
+    """Fixed-iteration PageRank over a directed edge list:
+    r_{t+1}(v) = (1 - d)/N + d * sum_{u->v} r_t(u) / outdeg(u),
+    starting uniform, run exactly `iters` rounds of
+    `_power_iteration`.
+
+    With `weight_col`, the weighted variant: each neighbor receives
+    r_t(u) * w(u,v) / outstrength(u) (outstrength = sum of u's
+    outgoing weights) — same plan shape, the degree aggregate just
+    becomes a sum. Pass `tol` to get the eager convergence check.
+
+    Columns: node, rank (round 6).
+    """
+    edges = edges.localCheckpoint(eager=True)
+    nodes = _nodes(edges)
+    n = nodes.agg(F.count("*").cast("double").alias("n_nodes"))
+    start = (nodes.crossJoin(F.broadcast(n))
+             .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("rank"),
+                     ((1.0 - damping) / F.col("n_nodes")).alias("tel")))
+    return _power_iteration(edges, start, iters=iters, damping=damping,
+                            tol=tol, weight_col=weight_col)
 
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame, *,
                           iters: int = 3,
-                          damping: float = 0.85,
-                          tol: float | None = None) -> DataFrame:
+                          damping: float = 0.85) -> DataFrame:
     """Personalized PageRank: the teleport distributes over `seeds`
     (column: node) instead of uniformly — rank concentrates around
     the seed set's neighborhood, the standard
@@ -198,52 +210,24 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame, *,
 
     r_{t+1}(v) = (1-d) * 1[v in seeds]/|seeds|
                  + d * sum_{u->v} r_t(u)/outdeg(u),
-    starting from the teleport vector. Same join+agg-per-round shape
-    as `pagerank`; the seed indicator rides a broadcast semi-join
-    flag. Oracle unrolls the same iterations. Columns: node, rank
-    (round 6).
+    starting from the teleport vector: `_power_iteration` with the
+    seed indicator riding a broadcast semi-join flag. Oracle unrolls
+    the same iterations. Columns: node, rank (round 6).
     """
-    # checkpoint the derived graph once: every iteration references
-    # edges/outdeg/base through the growing rank lineage, and without
-    # truncation the upstream edge derivation (a window over the raw
-    # log) re-executes per iteration — the duplicate_clusters lesson;
-    # measured 3.5× on the sf0.1 query
     edges = edges.localCheckpoint(eager=True)
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node")))
-             .distinct())
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     seed_nodes = seeds.select(F.col("node")).distinct()
     ns = seed_nodes.agg(F.count("*").cast("double").alias("n_seeds"))
-    base = (nodes
-            .join(F.broadcast(seed_nodes.withColumn("__s", F.lit(1))),
-                  "node", "left")
-            .crossJoin(F.broadcast(ns))
-            .select("node",
-                    (F.coalesce(F.col("__s"), F.lit(0)).cast("double")
-                     / F.col("n_seeds")).alias("tp"))
-            .localCheckpoint(eager=True))
-    ranks = base.select("node", F.col("tp").alias("rank"), "tp")
-    prev = ranks
-    for _ in range(iters):
-        prev = ranks
-        contrib = (ranks
-                   .join(outdeg.withColumnRenamed("src", "node"), "node")
-                   .join(edges.withColumnRenamed("src", "node"), "node")
-                   .select(F.col("dst").alias("node"),
-                           (F.col("rank") / F.col("deg")).alias("c")))
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (ranks.select("node", "tp")
-                 .join(summed, "node", "left")
-                 .select("node",
-                         ((1.0 - damping) * F.col("tp")
-                          + damping * F.coalesce(F.col("s"), F.lit(0.0)))
-                         .alias("rank"),
-                         "tp"))
-    if tol is not None and iters > 0:
-        _warn_if_not_converged(prev, ranks, tol, iters,
-                               "personalized_pagerank")
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
+    tp = (_nodes(edges)
+          .join(F.broadcast(seed_nodes.withColumn("__s", F.lit(1))),
+                "node", "left")
+          .crossJoin(F.broadcast(ns))
+          .select("node",
+                  (F.coalesce(F.col("__s"), F.lit(0)).cast("double")
+                   / F.col("n_seeds")).alias("tp"))
+          .localCheckpoint(eager=True))
+    start = tp.select("node", F.col("tp").alias("rank"),
+                      ((1.0 - damping) * F.col("tp")).alias("tel"))
+    return _power_iteration(edges, start, iters=iters, damping=damping)
 
 
 def undirected_edges(edges: DataFrame) -> DataFrame:

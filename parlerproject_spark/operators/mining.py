@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.functions.vectors import dot, l2_norm
 
 
@@ -110,10 +111,8 @@ def hard_negatives(vectors: DataFrame, *, k: int,
             nb = np.linalg.norm(B, axis=1)
             den = np.outer(na, nb)
             with np.errstate(invalid="ignore", divide="ignore"):
-                raw = np.where(den > 0, (A @ B.T) / den, np.nan)
-            sim = np.where(raw >= 0,
-                           np.floor(raw * 1e6 + 0.5),
-                           np.ceil(raw * 1e6 - 0.5)) / 1e6
+                sim = round_half_up(np.where(den > 0, (A @ B.T) / den,
+                                             np.nan))
             ga = adf["ga"].values
             gb = bdf["gb"].values
             ai = adf["anchor_id"].values

@@ -32,12 +32,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parlerproject_spark.functions.py_udfs import round_half_up
 
-def embedding_moments(vectors: DataFrame, *, vec_col: str = "embedding",
-                      upper_only: bool = True) -> DataFrame:
-    """Population covariance matrix as rows (i, j, cov), j ≥ i when
-    upper_only (the matrix is symmetric). 0-based indices, cov
-    rounded to 6 decimals (cross-engine float contract)."""
+
+def embedding_moments(vectors: DataFrame, *,
+                      vec_col: str = "embedding") -> DataFrame:
+    """Population covariance matrix as rows (i, j, cov), upper
+    triangle j ≥ i only (the matrix is symmetric). 0-based indices,
+    cov rounded to 6 decimals (cross-engine float contract)."""
     import numpy as np
     import pandas as pd
 
@@ -61,24 +63,19 @@ def embedding_moments(vectors: DataFrame, *, vec_col: str = "embedding",
            .select(F.col("val").alias("n"))
     mu = tot.filter((F.col("i") >= 0) & (F.col("j") == -1)) \
             .select(F.col("i").alias("mi"), F.col("val").alias("sx"))
-    cov = (tot.filter(F.col("j") >= 0)
-           .crossJoin(F.broadcast(n))
-           .join(F.broadcast(mu.select(F.col("mi").alias("i"),
-                                       F.col("sx").alias("sxi"))), "i")
-           .join(F.broadcast(mu.select(F.col("mi").alias("j"),
-                                       F.col("sx").alias("sxj"))), "j")
-           .select("i", "j",
-                   # + 0.0 folds IEEE -0.0 to +0.0 — a rounded-to-zero
-                   # negative product hashes as "-0.0" otherwise
-                   (F.round(F.col("val") / F.col("n")
-                            - (F.col("sxi") / F.col("n"))
-                            * (F.col("sxj") / F.col("n")), 6)
-                    + F.lit(0.0)).alias("cov")))
-    if not upper_only:
-        cov = cov.union(
-            cov.filter(F.col("i") != F.col("j"))
-               .select(F.col("j").alias("i"), F.col("i").alias("j"), "cov"))
-    return cov
+    return (tot.filter(F.col("j") >= 0)
+            .crossJoin(F.broadcast(n))
+            .join(F.broadcast(mu.select(F.col("mi").alias("i"),
+                                        F.col("sx").alias("sxi"))), "i")
+            .join(F.broadcast(mu.select(F.col("mi").alias("j"),
+                                        F.col("sx").alias("sxj"))), "j")
+            .select("i", "j",
+                    # + 0.0 folds IEEE -0.0 to +0.0 — a rounded-to-zero
+                    # negative product hashes as "-0.0" otherwise
+                    (F.round(F.col("val") / F.col("n")
+                             - (F.col("sxi") / F.col("n"))
+                             * (F.col("sxj") / F.col("n")), 6)
+                     + F.lit(0.0)).alias("cov")))
 
 
 def pca_components(vectors: DataFrame, *, n_components: int,
@@ -221,10 +218,7 @@ def landmark_projection(vectors: DataFrame, *, n_anchors: int = 8,
                 num = (X * A[j]).sum(axis=1)
                 den = xn * a_norm[j]
                 with np.errstate(invalid="ignore", divide="ignore"):
-                    raw = np.where(den > 0, num / den, 0.0)
-                    sim = np.where(raw >= 0,
-                                   np.floor(raw * 1e6 + 0.5),
-                                   np.ceil(raw * 1e6 - 0.5)) / 1e6
+                    sim = round_half_up(np.where(den > 0, num / den, 0.0))
                 cols.append(sim)
             P = np.stack(cols, axis=1)
             yield pd.DataFrame({id_col: pdf[id_col].values,
@@ -260,12 +254,8 @@ def power_components(vectors: DataFrame, *, n_components: int,
     """
     import numpy as np
 
-    scale = 10.0 ** round_c
-
     def rc(a):
-        a = np.asarray(a, dtype=np.float64)
-        return np.where(a >= 0, np.floor(a * scale + 0.5),
-                        np.ceil(a * scale - 0.5)) / scale
+        return round_half_up(a, round_c)
 
     rows = embedding_moments(vectors, vec_col=vec_col).collect()
     sums = {(r["i"], r["j"]): r["cov"] for r in rows

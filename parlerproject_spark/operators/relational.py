@@ -20,22 +20,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def semi_join(big: DataFrame, keys: DataFrame, on: str | Sequence[str],
-              *, broadcast_keys: bool = True) -> DataFrame:
+def semi_join(big: DataFrame, keys: DataFrame,
+              on: str | Sequence[str]) -> DataFrame:
     """Membership filter: rows of `big` whose key appears in `keys`.
 
     Reference semantics: extract only tar members named in the
     GPS-detected list (analysis/preview_data.ipynb:127-129,312-316;
     planned in code/data_processing_scripts/create_metadata_df.py:9-12).
-    Broadcast by default — the key list is the small side by
-    construction.
+    Broadcast — the key list is the small side by construction.
     """
-    keys = F.broadcast(keys) if broadcast_keys else keys
-    return big.join(keys, on=on, how="left_semi")
+    return big.join(F.broadcast(keys), on=on, how="left_semi")
 
 
-def anti_join(work: DataFrame, done: DataFrame, on: str | Sequence[str],
-              *, broadcast_done: bool = True) -> DataFrame:
+def anti_join(work: DataFrame, done: DataFrame,
+              on: str | Sequence[str]) -> DataFrame:
     """Remaining-work filter: rows of `work` with no match in `done`.
 
     The idiomatic replacement for all three of the reference's resume
@@ -43,10 +41,10 @@ def anti_join(work: DataFrame, done: DataFrame, on: str | Sequence[str],
     resume-at-listing-offset (download_image_files.py:20-23), and
     resume-by-log-row-count (ID_matching_metadata.py:25-30,78-83).
     Running it twice yields zero rows the second time — idempotent by
-    construction instead of by checkpoint file.
+    construction instead of by checkpoint file. The done set is
+    broadcast.
     """
-    done = F.broadcast(done) if broadcast_done else done
-    return work.join(done, on=on, how="left_anti")
+    return work.join(F.broadcast(done), on=on, how="left_anti")
 
 
 def lookup_join(facts: DataFrame, dim: DataFrame, on: str | Sequence[str],

@@ -23,14 +23,44 @@ from pyspark.sql import functions as F
 from parlerproject_spark.functions.text import stable_hash31, tokenize
 
 
+# Okapi BM25 term-saturation and length-normalization constants.
+_K1, _B = 1.2, 0.75
+
+
+def _bm25_top_k(postings: DataFrame, stats: DataFrame,
+                top_k: int) -> DataFrame:
+    """Score, cut and rank — the one BM25 kernel behind bm25_scores
+    and probe_text_index. `postings` carries the query terms' rows
+    (doc_id, tf, dl, df); `stats` is the one-row (n_docs, avgdl)
+    frame, broadcast. score(d) = Σ_t idf(t)·tf·(k1+1) /
+    (tf + k1·(1−b+b·|d|/avgdl)), idf(t) = ln((N − df + 0.5)/(df + 0.5)
+    + 1) (the Lucene form — always positive); the top-k cut is
+    TakeOrderedAndProject, and the rank window runs over ≤top_k rows.
+    Columns: doc_id, score (round 6), rank.
+    """
+    scored = (postings
+              .crossJoin(F.broadcast(stats))
+              .select("doc_id",
+                      (F.log((F.col("n_docs") - F.col("df") + 0.5)
+                             / (F.col("df") + 0.5) + 1.0)
+                       * (F.col("tf") * (_K1 + 1.0))
+                       / (F.col("tf") + _K1 * (1.0 - _B + _B * F.col("dl")
+                                               / F.col("avgdl"))))
+                      .alias("s")))
+    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    return (scored.groupBy("doc_id")
+            .agg(F.round(F.sum("s"), 6).alias("score"))
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            .limit(top_k)
+            .select("doc_id", "score",
+                    F.row_number().over(w).cast("long").alias("rank")))
+
+
 def bm25_scores(docs: DataFrame, query_terms: list[str], *,
                 id_col: str = "doc_id", text_col: str = "text",
-                k1: float = 1.2, b: float = 0.75,
                 top_k: int = 20) -> DataFrame:
-    """Okapi BM25 ranked retrieval: score(d, q) = sum over query
-    terms of idf(t) * tf(t,d)*(k1+1) / (tf(t,d) + k1*(1-b+b*|d|/avgdl)),
-    idf(t) = ln((N - df + 0.5)/(df + 0.5) + 1)  (the Lucene form —
-    always positive).
+    """Okapi BM25 ranked retrieval (k1 = 1.2, b = 0.75; see
+    _bm25_top_k for the scoring formula).
 
     Plan: tokenization is a narrow map; `postings` is ONE exploded
     groupBy (map-side combine) with the query-term isin filter pushed
@@ -58,23 +88,11 @@ def bm25_scores(docs: DataFrame, query_terms: list[str], *,
                 .agg(F.count("*").cast("double").alias("tf"),
                      F.first("dl").alias("dl")))
     df_w = Window.partitionBy("term")
-    scored = (postings
-              .withColumn("df", F.count("*").over(df_w).cast("double"))
-              .crossJoin(F.broadcast(stats))
-              .select("doc_id",
-                      (F.log((F.col("n_docs") - F.col("df") + 0.5)
-                             / (F.col("df") + 0.5) + 1.0)
-                       * (F.col("tf") * (k1 + 1.0))
-                       / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl")
-                                              / F.col("avgdl"))))
-                      .alias("s")))
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.groupBy("doc_id")
-            .agg(F.round(F.sum("s"), 6).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(top_k)
-            .select(F.col("doc_id").alias(id_col), "score",
-                    F.row_number().over(w).cast("long").alias("rank")))
+    return (_bm25_top_k(
+                postings.withColumn(
+                    "df", F.count("*").over(df_w).cast("double")),
+                stats, top_k)
+            .withColumnRenamed("doc_id", id_col))
 
 
 def pmi_collocations(docs: DataFrame, *, text_col: str = "text",
@@ -177,13 +195,13 @@ def build_text_index(docs: DataFrame, path: str, *,
 
 
 def probe_text_index(spark, path: str, query_terms: list[str], *,
-                     k1: float = 1.2, b: float = 0.75,
                      top_k: int = 20) -> DataFrame:
     """BM25 top-k against a persisted index. The query terms' buckets
     are computed DRIVER-SIDE (md5 of a handful of strings), so the
     postings/df scans carry a literal `bucket IN (...)` partition
-    filter — only those directories' files are read. Scoring math is
-    identical to bm25_scores. Columns: doc_id, score, rank.
+    filter — only those directories' files are read. Scoring is
+    bm25_scores' own kernel (_bm25_top_k). Columns: doc_id, score,
+    rank.
     """
     import hashlib
     qt = sorted({t.lower() for t in query_terms})
@@ -197,23 +215,7 @@ def probe_text_index(spark, path: str, query_terms: list[str], *,
                    & F.col("term").isin(qt))
            .select("term", "df"))
     stats = spark.read.parquet(f"{path}/stats")
-    from pyspark.sql import Window
-    scored = (post.join(F.broadcast(dfs), "term")
-              .crossJoin(F.broadcast(stats))
-              .select("doc_id",
-                      (F.log((F.col("n_docs") - F.col("df") + 0.5)
-                             / (F.col("df") + 0.5) + 1.0)
-                       * (F.col("tf") * (k1 + 1.0))
-                       / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl")
-                                              / F.col("avgdl"))))
-                      .alias("s")))
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.groupBy("doc_id")
-            .agg(F.round(F.sum("s"), 6).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(top_k)
-            .select("doc_id", "score",
-                    F.row_number().over(w).cast("long").alias("rank")))
+    return _bm25_top_k(post.join(F.broadcast(dfs), "term"), stats, top_k)
 
 
 # Phrase search --------------------------------------------------------------

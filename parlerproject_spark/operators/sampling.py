@@ -554,7 +554,8 @@ def curriculum_order(df: DataFrame, *, id_col: str, band_col: str,
     two-level prefix sum: docs hash into `shards` independent
     streams per band; (band, shard) group sizes — a ≤B·S-row frame —
     get cross-group offsets from a broadcast cross join (no
-    unpartitioned window, same shape as evaluation.roc_auc); the
+    unpartitioned window; the two-level prefix sum of
+    evaluation._rank_sum); the
     within-group rank is a `partitionBy(band, shard)` row_number
     over the seeded md5 key. Equivalent to
     row_number() over (order by band, shard, md5(seed:id), id) - 1,

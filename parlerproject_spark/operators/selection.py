@@ -381,7 +381,7 @@ def quantile_band_filter(df: DataFrame, *, group_col: str,
 
     A row survives iff its within-group ascending rank r (ties
     broken by id) satisfies lo·n < r ≤ hi·n. Rank is a two-level
-    prefix sum (the evaluation.roc_auc shape, keyed by group):
+    prefix sum (the evaluation._rank_sum kernel's shape):
     scores range-bucket into ≤`n_buckets` ordered buckets per group
     (floor over (s−min)/span is IEEE-monotone, so bucket order
     follows score order and equal scores share a bucket); the
@@ -393,7 +393,7 @@ def quantile_band_filter(df: DataFrame, *, group_col: str,
 
     The two reduction artifacts — per-group bounds (one row per
     group) and per-(group, bucket) offsets (≤n_buckets rows per
-    group) — persist (round-13, the roc_auc idiom), so the FINAL
+    group) — persist (round-13, the _rank_sum idiom), so the FINAL
     ranked pass is the only corpus consumer: one scan, one keyed
     exchange, two broadcast joins against cached model-sized tables
     (was 4 corpus scans).

@@ -25,6 +25,7 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.functions.vectors import cosine
 
 
@@ -504,7 +505,6 @@ def train_pq(vectors: DataFrame, *, dim: int, m: int = 8, ksub: int = 16,
                 break
         C = np.array(init + [sub[i % len(sub)]
                              for i in range(ksub - len(init))])
-        scale = 10.0 ** round_c
         for _ in range(max_iter):
             d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             a = d2.argmin(axis=1)
@@ -512,12 +512,8 @@ def train_pq(vectors: DataFrame, *, dim: int, m: int = 8, ksub: int = 16,
                 mask = a == c
                 if mask.any():
                     mu = sub[mask].mean(axis=0)
-                    # HALF_UP at round_c (np.round is banker's; SQL
-                    # round is half-away — the _pair_cosine_scorer
-                    # rounding identity, hash-stable vs DuckDB)
-                    C[c] = np.where(mu >= 0,
-                                    np.floor(mu * scale + 0.5),
-                                    np.ceil(mu * scale - 0.5)) / scale
+                    # SQL round(), not np.round's half-to-even
+                    C[c] = round_half_up(mu, round_c)
         books.append([[float(x) for x in c] for c in C])
     return books
 
@@ -552,21 +548,19 @@ def encode_pq(vectors: DataFrame, codebooks: list, *,
             .mapInPandas(gen, "vec_id long, codes array<int>"))
 
 
-def knn_pq(vectors: DataFrame, query_vec: list, codebooks: list, *,
-           k: int = 10, rerank: int = 64,
-           id_col: str = "vec_id",
-           vec_col: str = "embedding") -> DataFrame:
-    """ANN cosine top-k by asymmetric distance (ADC): the query
-    builds one m × ksub dot-product lookup table DRIVER-SIDE
-    (microseconds), every encoded vector scores as the SUM of m
-    table lookups — a narrow map over the code table that never
-    touches the raw vectors — then the top `rerank` candidates
-    re-rank by exact cosine against the original vectors (a
-    key-join on a TakeOrdered-bounded candidate set).
+def _adc_rerank(codes: DataFrame, rows: DataFrame, vec_col: str,
+                query_vec: list, codebooks: list, *, k: int,
+                rerank: int) -> DataFrame:
+    """PQ asymmetric-distance (ADC) scoring + exact cosine rerank —
+    the one kernel behind knn_pq and probe_ivfpq_index. `codes` is
+    (vec_id, codes), `rows` is (vec_id, <vec_col>).
 
-    At 100 TB the scan side is the 32×-compressed code table; only
-    `rerank` rows' full vectors are ever read per query. Recall < 1
-    by design (pytest measures vs knn_bruteforce).
+    The query builds one m × ksub dot-product lookup table
+    DRIVER-SIDE (microseconds); every encoded vector scores as the
+    SUM of m table lookups — a JVM expression zipping the code array
+    with the literal table, no Python in the scan — then the top
+    `rerank` candidates re-rank by exact cosine against the original
+    vectors (a key-join on a TakeOrdered-bounded candidate set).
 
     Candidate ranking is approximate COSINE, not raw dot product:
     alongside the q·centroid lookup table, a second table holds the
@@ -576,11 +570,14 @@ def knn_pq(vectors: DataFrame, query_vec: list, codebooks: list, *,
     rerank pool toward large-norm vectors on unnormalized input and
     costs recall (r4 ADVICE) — the final exact stage is cosine, so
     the candidate stage must rank in the same geometry.
-    Columns: vec_id, sim.
+
+    The ADC score is rounded to 6 dp before the rerank cut: the
+    candidate set becomes deterministic across engines (rounded ties
+    break by id), so an oracle replaying the same codebooks selects
+    the same rerank pool — unrounded last-ulp sums could flip rank
+    `rerank`. Columns: vec_id, sim.
     """
     import numpy as np
-
-    from parlerproject_spark.functions.vectors import cosine
 
     B = [np.array(b, dtype=np.float64) for b in codebooks]
     m, dsub = len(B), B[0].shape[1]
@@ -591,10 +588,6 @@ def knn_pq(vectors: DataFrame, query_vec: list, codebooks: list, *,
     n2 = [(B[s] * B[s]).sum(axis=1) for s in range(m)]
     n2_lit = F.lit([[float(x) for x in row] for row in n2])
 
-    codes = encode_pq(vectors, codebooks, id_col=id_col, vec_col=vec_col)
-    # score = sum over subspaces of lut[s][code_s]: zip the code array
-    # with the literal table (JVM expression — no Python in the scan)
-
     def lut_sum(table):
         return F.aggregate(
             F.zip_with(F.col("codes"), table,
@@ -602,21 +595,36 @@ def knn_pq(vectors: DataFrame, query_vec: list, codebooks: list, *,
             F.lit(0.0), lambda acc, x: acc + x)
 
     recon_norm = F.sqrt(F.greatest(lut_sum(n2_lit), F.lit(1e-12)))
-    # round the ADC score before the rerank cut: the candidate set
-    # becomes deterministic across engines (rounded ties break by
-    # id), so an oracle replaying the same codebooks selects the
-    # same rerank pool — unrounded last-ulp sums could flip rank 64
     score = F.round(lut_sum(lut_lit) / recon_norm, 6)
     cand = (codes.select("vec_id", score.alias("adc"))
             .orderBy(F.col("adc").desc(), F.col("vec_id").asc())
             .limit(rerank))
     qlit = F.lit([float(x) for x in query_vec])
-    return (vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col))
-            .join(F.broadcast(cand.select("vec_id")), "vec_id")
+    return (rows.join(F.broadcast(cand.select("vec_id")), "vec_id")
             .select("vec_id",
                     F.round(cosine(vec_col, qlit), 6).alias("sim"))
             .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
             .limit(k))
+
+
+def knn_pq(vectors: DataFrame, query_vec: list, codebooks: list, *,
+           k: int = 10, rerank: int = 64,
+           id_col: str = "vec_id",
+           vec_col: str = "embedding") -> DataFrame:
+    """ANN cosine top-k by PQ asymmetric distance (see _adc_rerank):
+    encode every vector (encode_pq, a narrow map), score the codes
+    against the query's lookup tables, re-rank the top `rerank` by
+    exact cosine.
+
+    At 100 TB the scan side is the 32×-compressed code table; only
+    `rerank` rows' full vectors are ever read per query. Recall < 1
+    by design (pytest measures vs knn_bruteforce).
+    Columns: vec_id, sim.
+    """
+    codes = encode_pq(vectors, codebooks, id_col=id_col, vec_col=vec_col)
+    rows = vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col))
+    return _adc_rerank(codes, rows, vec_col, query_vec, codebooks,
+                       k=k, rerank=rerank)
 
 
 def build_ivfpq_index(vectors: DataFrame, path: str, *, dim: int,
@@ -665,56 +673,25 @@ def probe_ivfpq_index(spark, path: str, query_vec: list, *, k: int = 10,
     """Top-k cosine probe against a persisted IVF+PQ index: the
     query ranks the cell centroids DRIVER-SIDE → a literal
     `cell IN (...)` partition filter (planning-time pruning reads
-    nprobe/num_cells of the files); inside the probed cells the scan
-    scores PQ codes by the ADC lookup table (pure JVM expression);
-    only the top `rerank` candidates' full vectors are touched for
-    exact cosine. Columns: vec_id, sim."""
+    nprobe/num_cells of the files); inside the probed cells the
+    stored PQ codes score and re-rank exactly as in knn_pq
+    (_adc_rerank). Columns: vec_id, sim."""
     import json as _json
 
     import numpy as np
 
-    from parlerproject_spark.functions.vectors import cosine
-
     model = _json.loads(
         spark.read.parquet(f"{path}/model").first()["model"])
     C = np.array(model["centroids"], dtype=np.float64)
-    books = model["codebooks"]
     q = np.array(query_vec, dtype=np.float64)
     with np.errstate(invalid="ignore", divide="ignore"):
         cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     cells = [int(c) for c in np.argsort(-(cn @ q))[:nprobe]]
-
-    B = [np.array(b, dtype=np.float64) for b in books]
-    mm, dsub = len(B), B[0].shape[1]
-    lut = [B[s] @ q[s * dsub:(s + 1) * dsub] for s in range(mm)]
-    lut_lit = F.lit([[float(x) for x in row] for row in lut])
-    # approximate-cosine ADC (see knn_pq): rank candidates by
-    # (q·x̂)/|x̂| with |x̂|² from a centroid self-dot table, so the
-    # candidate geometry matches the exact-cosine re-rank
-    n2 = [(B[s] * B[s]).sum(axis=1) for s in range(mm)]
-    n2_lit = F.lit([[float(x) for x in row] for row in n2])
-
-    def lut_sum(table):
-        return F.aggregate(
-            F.zip_with(F.col("codes"), table,
-                       lambda c, row: F.element_at(row, c + 1)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    score = lut_sum(lut_lit) / F.sqrt(
-        F.greatest(lut_sum(n2_lit), F.lit(1e-12)))
-
     rows = spark.read.parquet(f"{path}/rows").filter(
         F.col("cell").isin(cells))
-    cand = (rows.select("vec_id", score.alias("adc"))
-            .orderBy(F.col("adc").desc(), F.col("vec_id").asc())
-            .limit(rerank))
-    qlit = F.lit([float(x) for x in query_vec])
-    return (rows.select("vec_id", vec_col)
-            .join(F.broadcast(cand.select("vec_id")), "vec_id")
-            .select("vec_id",
-                    F.round(cosine(vec_col, qlit), 6).alias("sim"))
-            .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-            .limit(k))
+    return _adc_rerank(rows.select("vec_id", "codes"),
+                       rows.select("vec_id", vec_col), vec_col, query_vec,
+                       model["codebooks"], k=k, rerank=rerank)
 
 
 def int8_quantize(embs: DataFrame, *, id_col: str = "vec_id",

@@ -11,7 +11,7 @@ degrades to spilled sort, never to OOM.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -136,9 +136,10 @@ def psi_timeline(ref: DataFrame, cur: DataFrame, *, time_col: str,
     Columns: period, n_events, psi (round 6).
     """
     # the two reduction artifacts (1-row edges, bins-row reference
-    # histogram) persist — the roc_auc idiom — so their three
-    # consumers read one materialization each instead of re-running
-    # the reference scans per subtree (was 5 static source scans)
+    # histogram) persist — the evaluation._rank_sum idiom — so their
+    # three consumers read one materialization each instead of
+    # re-running the reference scans per subtree (was 5 static
+    # source scans)
     edges = ref.agg(F.min(val_col).cast("double").alias("__mn"),
                     F.max(val_col).cast("double").alias("__mx")).persist()
     w = (F.col("__mx") - F.col("__mn")) / F.lit(float(bins))
@@ -178,6 +179,38 @@ def psi_timeline(ref: DataFrame, cur: DataFrame, *, time_col: str,
             .select("period", "n_events", "psi"))
 
 
+def _cumulative_counts(ref: DataFrame, cur: DataFrame, key_col: str,
+                       value: Column) -> DataFrame:
+    """Per-(key, value) two-sample counts with running and total
+    counts — the one frame behind ks_drift and wasserstein_drift.
+
+    Shape: tag-and-union the two sides (zero shuffle), ONE keyed
+    aggregation to per-(key, value) counts, then cumulative sums and
+    per-key totals as windows over the same key partitioning — the
+    value ordering is a per-key sort inside the one exchange, never a
+    global sort. Keys present in only one snapshot are dropped: both
+    statistics are undefined there (and would divide by zero under
+    ANSI arithmetic otherwise).
+    Columns: <key_col>, __v (= `value`), c_ref, c_cur, cum_r, cum_c,
+    n_r, n_c.
+    """
+    def tag(side: DataFrame, r: int) -> DataFrame:
+        return side.select(F.col(key_col), value.alias("__v"),
+                           F.lit(r).alias("__r"), F.lit(1 - r).alias("__c"))
+
+    g = (tag(ref, 1).unionByName(tag(cur, 0))
+         .groupBy(key_col, "__v")
+         .agg(F.sum("__r").alias("c_ref"), F.sum("__c").alias("c_cur")))
+    byk = Window.partitionBy(key_col)
+    w = byk.orderBy("__v").rowsBetween(Window.unboundedPreceding,
+                                       Window.currentRow)
+    return (g.withColumn("cum_r", F.sum("c_ref").over(w))
+            .withColumn("cum_c", F.sum("c_cur").over(w))
+            .withColumn("n_r", F.sum("c_ref").over(byk))
+            .withColumn("n_c", F.sum("c_cur").over(byk))
+            .filter((F.col("n_r") > 0) & (F.col("n_c") > 0)))
+
+
 def ks_drift(ref: DataFrame, cur: DataFrame, *, key_col: str,
              val_col: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov statistic per key — the BINLESS
@@ -186,37 +219,16 @@ def ks_drift(ref: DataFrame, cur: DataFrame, *, key_col: str,
     PSI sees shifts through a fixed binning; KS catches any CDF
     separation (location, scale, shape) without choosing bins.
 
-    Shape: tag-and-union the two sides (zero shuffle), ONE keyed
-    aggregation to per-(key, value) counts, then cumulative sums
-    and per-key totals as windows over the same key partitioning —
-    the value ordering is a per-key sort inside the one exchange,
-    never a global sort. All arithmetic is integer counts divided
-    once at the end, so both engines agree bit-for-bit before the
-    final round.
+    Shape: `_cumulative_counts`, then one keyed max. All arithmetic
+    is integer counts divided once at the end, so both engines agree
+    bit-for-bit before the final round.
 
     Columns: <key_col>, ks (round 6), n_ref, n_cur.
     """
-    tagged = (ref.select(F.col(key_col), F.col(val_col).alias("__v"),
-                         F.lit(1).alias("__r"), F.lit(0).alias("__c"))
-              .unionByName(
-                  cur.select(F.col(key_col), F.col(val_col).alias("__v"),
-                             F.lit(0).alias("__r"), F.lit(1).alias("__c"))))
-    g = (tagged.groupBy(key_col, "__v")
-         .agg(F.sum("__r").alias("c_ref"), F.sum("__c").alias("c_cur")))
-    byk = Window.partitionBy(key_col)
-    w = byk.orderBy("__v").rowsBetween(Window.unboundedPreceding,
-                                       Window.currentRow)
-    cum = (g.withColumn("cum_r", F.sum("c_ref").over(w))
-           .withColumn("cum_c", F.sum("c_cur").over(w))
-           .withColumn("n_r", F.sum("c_ref").over(byk))
-           .withColumn("n_c", F.sum("c_cur").over(byk)))
-    # D is defined only when BOTH samples are non-empty; a key seen
-    # in one snapshot only is dropped (and would divide by zero
-    # under ANSI arithmetic otherwise)
-    both = cum.filter((F.col("n_r") > 0) & (F.col("n_c") > 0))
     d = F.abs(F.col("cum_r") / F.col("n_r")
               - F.col("cum_c") / F.col("n_c"))
-    return (both.groupBy(key_col)
+    return (_cumulative_counts(ref, cur, key_col, F.col(val_col))
+            .groupBy(key_col)
             .agg(F.round(F.max(d), 6).alias("ks"),
                  F.max("n_r").cast("long").alias("n_ref"),
                  F.max("n_c").cast("long").alias("n_cur")))
@@ -338,31 +350,16 @@ def wasserstein_drift(ref: DataFrame, cur: DataFrame, *, key_col: str,
     jitter and a 10-unit shift can share a KS yet differ 1000× in
     W1, which is what a paging threshold should be set on.
 
-    Shape: identical to ks_drift (tag-union, ONE keyed aggregation
-    to per-(key, value) counts, cumulative + total windows over the
-    same key exchange) plus a lead() over the same ordering for the
-    value gap. Keys present in only one snapshot are dropped (W1
-    undefined). Columns: <key_col>, w1 (round 6), n_ref, n_cur.
+    Shape: `_cumulative_counts` (as ks_drift) plus a lead() over the
+    same key exchange and value ordering for the value gap. Columns:
+    <key_col>, w1 (round 6), n_ref, n_cur.
     """
-    tagged = (ref.select(F.col(key_col), F.col(val_col).cast("double")
-                         .alias("__v"),
-                         F.lit(1).alias("__r"), F.lit(0).alias("__c"))
-              .unionByName(
-                  cur.select(F.col(key_col),
-                             F.col(val_col).cast("double").alias("__v"),
-                             F.lit(0).alias("__r"), F.lit(1).alias("__c"))))
-    g = (tagged.groupBy(key_col, "__v")
-         .agg(F.sum("__r").alias("c_ref"), F.sum("__c").alias("c_cur")))
-    byk = Window.partitionBy(key_col)
-    ordv = byk.orderBy("__v")
-    w = ordv.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = (g.withColumn("cum_r", F.sum("c_ref").over(w))
-           .withColumn("cum_c", F.sum("c_cur").over(w))
-           .withColumn("n_r", F.sum("c_ref").over(byk))
-           .withColumn("n_c", F.sum("c_cur").over(byk))
-           .withColumn("gap", F.lead("__v").over(ordv) - F.col("__v")))
-    both = cum.filter((F.col("n_r") > 0) & (F.col("n_c") > 0)
-                      & F.col("gap").isNotNull())
+    gap = (F.lead("__v").over(Window.partitionBy(key_col).orderBy("__v"))
+           - F.col("__v"))
+    both = (_cumulative_counts(ref, cur, key_col,
+                               F.col(val_col).cast("double"))
+            .withColumn("gap", gap)
+            .filter(F.col("gap").isNotNull()))
     term = (F.abs(F.col("cum_r") / F.col("n_r")
                   - F.col("cum_c") / F.col("n_c")) * F.col("gap"))
     return (both.groupBy(key_col)

@@ -376,8 +376,8 @@ def winnow_fingerprints(docs: DataFrame, *, k: int = 8, window: int = 4,
 
 def fingerprint_overlap(docs: DataFrame, *, k: int = 8, window: int = 4,
                         threshold: float = 0.8, max_df: int = 128,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        eager: bool = False) -> DataFrame:
+                        id_col: str = "doc_id",
+                        text_col: str = "text") -> DataFrame:
     """Near-dup pairs by winnowing-fingerprint containment
     (MOSS-style): |fp_a ∩ fp_b| / min(|fp_a|, |fp_b|) >= threshold,
     computed over fingerprints retained by the `max_df` hub cap.
@@ -395,65 +395,30 @@ def fingerprint_overlap(docs: DataFrame, *, k: int = 8, window: int = 4,
     The fingerprint index is repartitioned on fp BEFORE the df cap:
     winnowing itself is zero-shuffle, so without a barrier every
     consumer would recompute the whole hash cascade. The df cap is a
-    WINDOW over that exchange, and the posting-list groupBy(fp)
-    collect rides the SAME fp distribution — the full posting table
-    crosses exactly TWO full-width exchanges (spread + fp), where the
-    r5 ride-along formulation ping-ponged it fp → doc_id → fp (three)
-    just to carry each doc's fingerprint count on every pair row.
-    Instead the bounded lists are PERSISTED (memory-and-disk; they
-    are the df-capped index — far smaller than the raw fingerprint
-    stream) and consumed twice: (1) in-array pair expansion →
-    narrow (id_a, id_b) aggregation, (2) re-explode → per-doc
-    fingerprint counts, joined back onto the AGGREGATED pairs (two
-    joins over pair-count rows, not over the corpus). Measured 1.5×
-    faster at sf0.1; at 100 TB the persist is what guarantees the
-    scan + hash cascade runs once.
-
-    Cache lifetime: the lazy API cannot know when the caller is done,
-    so the persisted posting lists outlive the call. Spark's
-    CacheManager dedupes by logical plan (repeated calls on the SAME
-    input reuse one entry), but DIFFERENT inputs in one long session
-    accumulate MEMORY_AND_DISK blocks until the ContextCleaner GCs
-    them. Pass `eager=True` to materialize the (small) pair table,
-    unpersist the posting lists immediately, and return the persisted
-    result instead — the batch-job shape.
+    WINDOW over that exchange, and dedup._persisted_pairs'
+    posting-list groupBy(fp) rides the SAME fp distribution — the full
+    posting table crosses exactly TWO full-width exchanges (spread +
+    fp), where the r5 ride-along formulation ping-ponged it fp →
+    doc_id → fp (three) just to carry each doc's fingerprint count on
+    every pair row. The persisted lists (see _persisted_pairs for
+    their lifetime) were measured 1.5× faster at sf0.1; at 100 TB the
+    persist is what guarantees the scan + hash cascade runs once.
     Columns: id_a, id_b, containment.
     """
-    from pyspark import StorageLevel
-
+    from parlerproject_spark.operators.dedup import _persisted_pairs
     from parlerproject_spark.operators.layout import spread_input
 
     # The per-doc hash cascade is compute-bound: spread a
     # few-split scan across the cluster first (no-op at scale).
     raw = winnow_fingerprints(spread_input(docs), k=k, window=window,
                               id_col=id_col, text_col=text_col).repartition("fp")
-    lists = (raw.withColumn("df", F.count("*").over(Window.partitionBy("fp")))
-             .filter(F.col("df") <= max_df)
-             .groupBy("fp")
-             .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    ex = lists.select("ds", F.posexplode("ds").alias("i", "id_a"))
-    pairs = (ex.select(
-        "id_a",
-        F.explode(F.expr("slice(ds, i + 2, size(ds) - i - 1)")).alias("id_b"))
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b").agg(F.count("*").alias("n_common")))
-    ns = (lists.select(F.explode("ds").alias("doc_id"))
-          .groupBy("doc_id").agg(F.count("*").alias("n")))
-    j = (pairs
-         .join(ns.select(F.col("doc_id").alias("id_a"),
-                         F.col("n").alias("n_a")), "id_a")
-         .join(ns.select(F.col("doc_id").alias("id_b"),
-                         F.col("n").alias("n_b")), "id_b"))
+    capped = (raw.withColumn("df", F.count("*").over(Window.partitionBy("fp")))
+              .filter(F.col("df") <= max_df))
     cont = F.round(F.col("n_common") / F.least("n_a", "n_b"), 6)
-    out = (j.withColumn("containment", cont)
-           .filter(F.col("containment") >= threshold)
-           .select("id_a", "id_b", "containment"))
-    if eager:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()            # materialize pairs off the posting lists
-        lists.unpersist()      # then release the (much larger) index
-    return out
+    return (_persisted_pairs(capped, "fp")
+            .withColumn("containment", cont)
+            .filter(F.col("containment") >= threshold)
+            .select("id_a", "id_b", "containment"))
 
 
 # Bigram language-model quality scoring -----------------------------------

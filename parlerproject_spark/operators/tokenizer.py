@@ -296,8 +296,7 @@ def _apply_merge_to(symtab: DataFrame, a: str, b: str,
 
 
 def train_wordpiece(docs: DataFrame, *, n_merges: int = 20,
-                    text_col: str = "text", min_pair: int = 2,
-                    stats: dict | None = None
+                    text_col: str = "text"
                     ) -> list[tuple[str, str, str, int, int, int]]:
     """Learn `n_merges` WordPiece merges. Returns the ordered list
     [(left, right, merged, pair_cnt, left_cnt, right_cnt), ...].
@@ -305,7 +304,7 @@ def train_wordpiece(docs: DataFrame, *, n_merges: int = 20,
     Selection per round: the adjacent pair maximizing the likelihood
     score count(ab) / (count(a) · count(b)) — WordPiece's "merge
     what increases corpus likelihood most under a unigram LM", vs
-    BPE's raw count — subject to count(ab) ≥ min_pair; ties break
+    BPE's raw count — subject to count(ab) ≥ 2; ties break
     (score DESC, a ASC, b ASC). Scores are exact-integer ratios
     evaluated in ONE double division (engine-portable: identical
     IEEE result from identical integer args), so the learned
@@ -339,7 +338,6 @@ def train_wordpiece(docs: DataFrame, *, n_merges: int = 20,
     symtab = _wp_initial_symbols(word_freq_table(docs, text_col=text_col))
     symtab = symtab.localCheckpoint(eager=False)
     merges: list[tuple[str, str, str, int, int, int]] = []
-    rounds = 0
     # pair rows: struct(a, b) for every adjacent pair; symbol rows:
     # struct(s, NULL). One explode feeds one aggregation; NULL-b
     # never collides with a pair row because groupBy keys on b too.
@@ -352,11 +350,10 @@ def train_wordpiece(docs: DataFrame, *, n_merges: int = 20,
         counts = (symtab.select("n", F.explode(both).alias("p"))
                   .groupBy("p.a", "p.b").agg(F.sum("n").alias("cnt"))
                   .collect())
-        rounds += 1
         sym_c = {r["a"]: r["cnt"] for r in counts if r["b"] is None}
         best = None  # (score, a, b, cnt)
         for r in counts:
-            if r["b"] is None or r["cnt"] < min_pair:
+            if r["b"] is None or r["cnt"] < 2:
                 continue
             # denominator in DOUBLE: int64 ca*cb overflows silently
             # in Spark (wraps negative, corrupting the argmax) once
@@ -390,8 +387,6 @@ def train_wordpiece(docs: DataFrame, *, n_merges: int = 20,
         # nothing.
         symtab = _apply_merge_to(
             symtab, a, b, merged).localCheckpoint(eager=False)
-    if stats is not None:
-        stats["rounds"] = rounds
     return merges
 
 

@@ -27,6 +27,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.operators.relational import share_of_total
 from parlerproject_spark.operators.text_analysis import topic_terms
 
@@ -110,14 +111,6 @@ def _assign(vectors: DataFrame, centroids: list[list[float]], *,
             yield out
 
     return vectors.select(id_col, vec_col).mapInPandas(gen, out_schema)
-
-
-def _round_half_away(x: float, d: int) -> float:
-    """round() with DuckDB/Spark SQL semantics (half away from
-    zero) — Python's built-in round is banker's, which would diverge
-    from the oracle exactly at .5 ulp boundaries."""
-    p = 10.0 ** d
-    return math.copysign(math.floor(abs(x) * p + 0.5) / p, x)
 
 
 def _maxmin_init(cands: list[list[float]], k: int) -> list[int]:
@@ -257,7 +250,7 @@ def lloyd_centroids(vectors: DataFrame, *, k: int = 8, max_iter: int = 5,
                 if t in acc and cnt[t] > 0:
                     c = [x / cnt[t] for x in acc[t]]
                     if round_c is not None:
-                        c = [_round_half_away(x, round_c) for x in c]
+                        c = round_half_up(c, round_c).tolist()
                     new.append(c)
                 else:  # empty cluster keeps its old centroid (deterministic)
                     new.append(centroids[t])

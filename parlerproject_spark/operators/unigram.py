@@ -31,6 +31,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.operators.tokenizer import word_freq_table
 
 
@@ -110,15 +111,6 @@ def _em_counts(words: DataFrame, vocab: dict[str, float],
     return [(r["piece"], r["cnt"]) for r in rows]
 
 
-def _round_half_up(x: float, c: int = 6) -> float:
-    """HALF_UP rounding matching SQL round() — Python's round() is
-    banker's (half-to-even) and would desynchronize the oracle at
-    exact half boundaries."""
-    s = 10.0 ** c
-    return (math.floor(x * s + 0.5) / s if x >= 0
-            else math.ceil(x * s - 0.5) / s)
-
-
 def train_unigram(docs: DataFrame, *, vocab_size: int = 120,
                   n_iters: int = 3, max_piece_len: int = 6,
                   n_seed: int = 300, round_c: int = 6,
@@ -142,8 +134,8 @@ def train_unigram(docs: DataFrame, *, vocab_size: int = 120,
                  .limit(n_seed))
         pool = chars.unionByName(multi).collect()
         total0 = sum(r["score"] for r in pool)
-        vocab = {r["piece"]: _round_half_up(math.log(r["score"] / total0),
-                                            round_c)
+        vocab = {r["piece"]: round_half_up(math.log(r["score"] / total0),
+                                           round_c)
                  for r in pool}
 
         for _ in range(n_iters):
@@ -159,7 +151,7 @@ def train_unigram(docs: DataFrame, *, vocab_size: int = 120,
                 if len(p) == 1:
                     new[p] = max(counts.get(p, 0), 1)
             total = sum(new.values())
-            vocab = {p: _round_half_up(math.log(c / total), round_c)
+            vocab = {p: round_half_up(math.log(c / total), round_c)
                      for p, c in new.items()}
         return sorted(vocab.items())
     finally:

@@ -501,6 +501,30 @@ def test_ivfpq_index_probe_prunes_and_recalls(spark, sf_dir, tmp_path):
     assert filt and all(len(f.split(",")) <= 3 for f in filt), plan
 
 
+def test_ivfpq_probe_all_cells_equals_knn_pq(spark, tmp_path):
+    """Probing every cell of an IVF+PQ index scores the same codes as
+    knn_pq with the index's own codebooks, so both return the same
+    (vec_id, sim) rows."""
+    import json
+    import random
+
+    rng = random.Random(7)
+    emb = _vecs(spark, [(i, [rng.uniform(-1, 1) for _ in range(8)])
+                        for i in range(60)])
+    path = str(tmp_path / "ivfpq_all")
+    similarity.build_ivfpq_index(emb, path, dim=8, num_cells=4, m=2,
+                                 ksub=4, train_mod=None)
+    books = json.loads(spark.read.parquet(f"{path}/model")
+                       .first()["model"])["codebooks"]
+    qv = [rng.uniform(-1, 1) for _ in range(8)]
+    probed = [tuple(r) for r in similarity.probe_ivfpq_index(
+        spark, path, qv, k=10, nprobe=4, rerank=16).collect()]
+    direct = [tuple(r) for r in similarity.knn_pq(
+        emb, qv, books, k=10, rerank=16).collect()]
+    assert probed == direct
+    assert len(direct) == 10
+
+
 def test_exact_mode_bounded_sides_cap(spark, sf_dir, monkeypatch):
     """Exact mode enforces its bounded-sides contract with a clear
     error instead of silently collecting an unbounded partner side to

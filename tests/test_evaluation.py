@@ -438,6 +438,19 @@ def test_mann_whitney_nan_values_exact(spark):
     assert r["n_1"] == 2 and r["n_0"] == 2
 
 
+def test_mann_whitney_u_over_n1n0_equals_roc_auc(spark):
+    from parlerproject_spark.operators.evaluation import mann_whitney_u
+    # one rank-sum kernel: U / (n_1·n_0) is the AUC with label = arm,
+    # here over cross-arm ties (2.0, 5.0) and one NaN value
+    rows = [(2.0, 1), (2.0, 0), (5.0, 1), (5.0, 0), (5.0, 0), (1.0, 1),
+            (7.0, 0), (float("nan"), 1), (3.5, 0), (3.5, 1), (0.5, 0)]
+    df = spark.createDataFrame(rows, "value double, arm int")
+    mw = mann_whitney_u(df, value_col="value", group_col="arm").collect()[0]
+    auc = roc_auc(df, score_col="value", label_col="arm").collect()[0]
+    assert (mw["n_1"], mw["n_0"]) == (auc["n_pos"], auc["n_neg"]) == (5, 6)
+    assert round(mw["u"] / (mw["n_1"] * mw["n_0"]), 6) == auc["auc"]
+
+
 def test_gains_curve_out_of_range_scores_clamp(spark):
     from parlerproject_spark.operators.evaluation import gains_curve
     # a score below 0 must clamp into the LOWEST band (10), not mint

@@ -322,6 +322,20 @@ def test_personalized_pagerank_concentrates_on_seed_neighborhood(spark):
     assert pr[1] == max(pr.values())
 
 
+def test_personalized_pagerank_all_seeds_equals_pagerank(spark):
+    from parlerproject_spark.operators.graph import personalized_pagerank
+    # asymmetric graph with a hub, a dangling node (5) and a source
+    # node (4): every node a seed makes the teleport uniform
+    edges = _edges(spark, [(1, 2), (2, 3), (3, 1), (4, 1), (2, 5),
+                           (3, 2), (1, 3)])
+    seeds = spark.createDataFrame([(n,) for n in range(1, 6)], "node long")
+    ppr = sorted(tuple(r) for r in
+                 personalized_pagerank(edges, seeds, iters=4).collect())
+    pr = sorted(tuple(r) for r in pagerank(edges, iters=4).collect())
+    assert ppr == pr
+    assert len(pr) == 5
+
+
 def test_triangle_counts_on_known_graph(spark):
     from parlerproject_spark.operators.graph import triangle_counts
     # K4 on {1,2,3,4} (4 triangles, each node in 3) plus a pendant 5-1

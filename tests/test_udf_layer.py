@@ -285,3 +285,30 @@ def test_zlib_ratio_matches_inprocess_reference(spark):
                 len(zlib.compress(raw, 6)) / len(raw), abs=1e-12)
     # repetitive text compresses far better than natural text
     assert got[0] < got[1]
+
+
+# Exact binary halves: x·10^d is k + 0.5 exactly, where half-to-even
+# (np.round) and SQL round() (half away from zero) disagree.
+_HALVES = [(2.5, 0), (-2.5, 0), (0.125, 2), (-0.125, 2),
+           (0.0078125, 6), (-0.0078125, 6)]
+
+
+def test_round_half_up_matches_duckdb_round():
+    import duckdb
+    import numpy as np
+
+    from parlerproject_spark.functions.py_udfs import round_half_up
+
+    cases = _HALVES + [(1.5, 0), (-1 / 3, 6), (0.3, 6), (12345.6789, 2),
+                       (0.0, 6)]
+    for x, d in cases:
+        want = duckdb.sql(f"SELECT round({x!r}::DOUBLE, {d})").fetchone()[0]
+        got = round_half_up(x, d)
+        assert type(got) is float and got == want, (x, d, got, want)
+    for x, d in _HALVES:                  # the cases the helper exists for
+        assert np.round(x, d) != round_half_up(x, d)
+    arr = round_half_up(np.array([2.5, -2.5]), 0)
+    assert isinstance(arr, np.ndarray) and arr.tolist() == [3.0, -3.0]
+    assert math.isnan(round_half_up(float("nan")))
+    out = round_half_up(np.array([0.0078125, np.nan]))
+    assert out[0] == 0.007813 and math.isnan(out[1])

@@ -68,30 +68,24 @@ def dtype_family(s: pd.Series) -> str:
 
 
 def _parse_args(argv: list[str]):
-    jobs, prefix, rest = 1, None, []
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a in ("--jobs", "-j"):
-            i += 1
-            jobs = int(argv[i])
-        elif a.startswith("--jobs="):
-            jobs = int(a.split("=", 1)[1])
-        elif a == "--prefix":
-            i += 1
-            prefix = argv[i]
-        elif a.startswith("--prefix="):
-            prefix = a.split("=", 1)[1]
-        else:
-            rest.append(a)
-        i += 1
-    sf_dir = rest[0] if rest else "/root/testdata/sf0.01"
-    return sf_dir, set(rest[1:]), prefix, jobs
+    import argparse
+
+    ap = argparse.ArgumentParser(
+        description="Hash-check queries() against oracle_sql().")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("names", nargs="*", help="check only these queries")
+    ap.add_argument("--prefix", help="check queries whose name starts "
+                    "with PREFIX")
+    ap.add_argument("--jobs", "-j", type=int, default=1,
+                    help="shard the selection over N worker processes")
+    a = ap.parse_intermixed_args(argv)
+    return a.sf_dir, set(a.names), a.prefix, a.jobs
 
 
 def _run_sharded(sf_dir: str, names: list[str], jobs: int) -> int:
     """Round-robin the selected queries across `jobs` subprocess
-    workers (own JVM each, ~cores/jobs threads) and aggregate their
+    workers (own JVM each, ~cores/jobs threads, a host-sized driver
+    heap unless SPARK_GRAFT_DRIVER_MEM is set) and aggregate their
     per-query lines + failure counts."""
     import os
     import re
@@ -99,12 +93,20 @@ def _run_sharded(sf_dir: str, names: list[str], jobs: int) -> int:
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or "32")
     per = max(2, cpus // jobs)
+    # driver heap per shard: 80% of physical memory split over the
+    # shards, at least 2g — four default 8g heaps overcommit a 16 GiB
+    # host, and the kernel then kills a worker JVM mid-run
+    phys_gib = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                / 2 ** 30)
+    mem = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+           or f"{max(2, int(0.8 * phys_gib / jobs))}g")
     shards = [names[i::jobs] for i in range(jobs)]
     procs = []
     for shard in shards:
         if not shard:
             continue
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(per))
+        env = dict(os.environ, SPARK_GRAFT_CPUS=str(per),
+                   SPARK_GRAFT_DRIVER_MEM=mem)
         procs.append(subprocess.Popen(
             [sys.executable, os.path.abspath(__file__), sf_dir, *shard],
             stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
