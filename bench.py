@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from parlerproject_spark.session import get_spark  # noqa: E402
 from parlerproject_spark import queries as Q  # noqa: E402
+from parlerproject_spark.plans import inspect  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -333,28 +334,6 @@ EXTRA = [
 ]
 
 
-def _shuffle_count(df) -> int:
-    """DISTINCT Exchange operators in the pre-execution physical
-    plan — the number of shuffles the query schedules (AQE may later
-    coalesce partitions or convert joins, but the exchange
-    boundaries it starts from are the comparable metric).
-
-    Distinct by plan_id, not raw line count: the plan STRING
-    re-prints a shared subtree once per reference (and an
-    InMemoryRelation re-prints its entire cached child plan at every
-    cache reference), so a raw findall over a plan with persisted/
-    shared frames multiply-counts the same physical exchange — the
-    r6 corpus_refresh "160 shuffles" was ~19 real exchanges printed
-    ~8x."""
-    import re
-    text = df._jdf.queryExecution().executedPlan().toString()
-    ids = re.findall(
-        r"Exchange (?:hashpartitioning|rangepartitioning|"
-        r"RoundRobinPartitioning|SinglePartition).*?\[plan_id=(\d+)\]",
-        text)
-    return len(set(ids)) if ids else len(re.findall(r"\bExchange ", text))
-
-
 def _median(xs: list[float]) -> float:
     s = sorted(xs)
     mid = len(s) // 2
@@ -473,7 +452,12 @@ def main() -> None:
                 runs[name] = per
                 timings[name] = round(_median(per), 3)       # median of runs
                 spread[name] = round(max(per) - min(per), 3)  # noise bound
-                shuffles[name] = _shuffle_count(fn(spark, sf_dir))
+                # exchanges in the pre-execution plan: the shuffles the
+                # query schedules (AQE may later coalesce partitions or
+                # convert joins, but the exchange boundaries it starts
+                # from are the comparable metric)
+                shuffles[name] = inspect.exchange_count(
+                    inspect.executed_plan(fn(spark, sf_dir)))
             except Exception as exc:  # noqa: BLE001
                 errors[name] = f"{type(exc).__name__}: {exc}"[:200]
         return timings

@@ -105,22 +105,16 @@ def make_embed_udf(*, dim: int = DEFAULT_DIM, backend: str = "fake"):
 
 
 def embed_documents(docs: DataFrame, *, text_col: str = "text",
-                    dim: int = DEFAULT_DIM, backend: str = "fake",
-                    corpus_size: int | None = None) -> DataFrame:
+                    dim: int = DEFAULT_DIM,
+                    backend: str = "fake") -> DataFrame:
     """documents(..., text) → + embedding: array<float> (unit norm).
 
     Narrow map stage; no shuffle. Partition sizing note: at 1M+ docs
     the reference drops to batch 32 (embeddings.py:55-56) to bound
     memory — here the analogue is keeping Arrow batches
-    (maxRecordsPerBatch) × avg doc size inside worker memory.
-
-    Pass `corpus_size` to apply the reference's batch tier on the
-    session automatically (previously the caller had to remember
-    `spark.conf.set(*arrow_batch_conf(n))` — VERDICT r2 task 9). The
-    conf is session-wide, the same scope the manual form had; callers
-    interleaving differently-sized embed jobs on one session should
-    set it explicitly between jobs.
+    (maxRecordsPerBatch) × avg doc size inside worker memory: apply
+    the reference's batch tier with
+    `spark.conf.set(*arrow_batch_conf(n_docs))` before building the
+    plan.
     """
-    if corpus_size is not None:
-        docs.sparkSession.conf.set(*arrow_batch_conf(corpus_size))
     return docs.withColumn("embedding", make_embed_udf(dim=dim, backend=backend)(col(text_col)))

@@ -58,19 +58,13 @@ def observed(df: DataFrame, name: str, **aggs) -> tuple[DataFrame, Observation]:
 
 
 def run_with_manifest(df: DataFrame, *, name: str, out_dir: str,
-                      action: str = "count", **aggs) -> RunManifest:
-    """Execute one action over `df` with observed metrics and write
+                      **aggs) -> RunManifest:
+    """Execute one count over `df` with observed metrics and write
     the S14-style manifest. Throughput (rows/sec — the reference's
     docs/sec print) is derived, not measured row-by-row."""
     started = time.time()
     watched, obs = observed(df, name, **aggs)
-    if action == "count":
-        n = watched.count()
-    elif action == "noop_write":
-        watched.write.format("noop").mode("overwrite").save()
-        n = obs.get.get("rows", 0)
-    else:
-        raise ValueError(f"unknown action: {action}")
+    n = watched.count()
     elapsed = time.time() - started
     got = dict(obs.get)
     n = int(got.get("rows", n))

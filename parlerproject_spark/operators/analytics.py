@@ -214,13 +214,13 @@ def item_cooccurrence_similarity(events: DataFrame, *,
 
 def touch_attribution(events: DataFrame, *, user_col: str = "user_id",
                       ts_col: str = "ts", type_col: str = "event_type",
-                      id_col: str = "event_id", value_col: str = "value",
-                      conversion: str = "purchase") -> DataFrame:
-    """First/last-touch conversion attribution: every `conversion`
-    event's value is credited to the first and to the most recent
-    PRECEDING non-conversion event type (the "channel") of the same
-    user — the attribution report every growth pipeline derives from
-    its event stream.
+                      id_col: str = "event_id",
+                      value_col: str = "value") -> DataFrame:
+    """First/last-touch conversion attribution: every 'purchase'
+    (conversion) event's value is credited to the first and to the
+    most recent PRECEDING non-conversion event type (the "channel")
+    of the same user — the attribution report every growth pipeline
+    derives from its event stream.
 
     Shape: one (user, ts, id)-ordered window carries the running
     first/last non-conversion channel to each row (first/last with
@@ -237,11 +237,11 @@ def touch_attribution(events: DataFrame, *, user_col: str = "user_id",
     w = (Window.partitionBy(user_col)
          .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
          .rowsBetween(Window.unboundedPreceding, -1))
-    ch = F.when(F.col(type_col) != conversion, F.col(type_col))
+    ch = F.when(F.col(type_col) != "purchase", F.col(type_col))
     touched = (events
                .withColumn("__first_ch", F.first(ch, ignorenulls=True).over(w))
                .withColumn("__last_ch", F.last(ch, ignorenulls=True).over(w))
-               .filter(F.col(type_col) == conversion))
+               .filter(F.col(type_col) == "purchase"))
     stacked = touched.select(
         F.explode(F.array(
             F.struct(F.lit("first").alias("model"),
@@ -258,11 +258,10 @@ def touch_attribution(events: DataFrame, *, user_col: str = "user_id",
 
 
 def srm_check(events: DataFrame, *, user_col: str = "user_id",
-              arm_expr: str = "pmod(user_id, 2)",
-              expected: tuple[float, float] = (0.5, 0.5)) -> DataFrame:
+              arm_expr: str = "pmod(user_id, 2)") -> DataFrame:
     """Sample-ratio-mismatch guardrail for an A/B assignment: the
     chi-square statistic of observed arm sizes against the intended
-    split — the first validity check any experiment readout runs
+    50/50 split — the first validity check any experiment readout runs
     (a biased assignment invalidates ab_test_proportions before any
     effect-size math). Unit = user (distinct users per arm), df = 1,
     flag at the 95% critical value 3.841.
@@ -281,8 +280,8 @@ def srm_check(events: DataFrame, *, user_col: str = "user_id",
     n0 = F.coalesce(F.col("0").cast("double"), F.lit(0.0))
     n1 = F.coalesce(F.col("1").cast("double"), F.lit(0.0))
     tot = n0 + n1
-    e0, e1 = tot * expected[0], tot * expected[1]
-    chi2 = (n0 - e0) ** 2 / e0 + (n1 - e1) ** 2 / e1
+    e = tot * 0.5
+    chi2 = (n0 - e) ** 2 / e + (n1 - e) ** 2 / e
     return row.select(n0.cast("long").alias("n_0"),
                       n1.cast("long").alias("n_1"),
                       F.round(chi2, 6).alias("chi2"),
@@ -291,10 +290,9 @@ def srm_check(events: DataFrame, *, user_col: str = "user_id",
 
 def ab_test_proportions(events: DataFrame, *, user_col: str = "user_id",
                         arm_expr: str = "pmod(user_id, 2)",
-                        success_filter: str = "event_type = 'purchase'",
                         ) -> DataFrame:
     """Two-proportion z-test between experiment arms: unit = user,
-    success = the user has >= 1 event matching `success_filter`,
+    success = the user has >= 1 'purchase' event,
     arm = deterministic hash/modulo assignment.
 
     Shape: one per-user aggregation (bool_or of the success
@@ -309,7 +307,7 @@ def ab_test_proportions(events: DataFrame, *, user_col: str = "user_id",
     """
     per_user = (events
                 .groupBy(user_col)
-                .agg(F.max(F.expr(f"CASE WHEN {success_filter} "
+                .agg(F.max(F.expr("CASE WHEN event_type = 'purchase' "
                                   "THEN 1 ELSE 0 END")).alias("conv"))
                 .withColumn("arm", F.expr(arm_expr).cast("long")))
     arms = (per_user.groupBy("arm")
@@ -453,13 +451,13 @@ def robust_outliers(df: DataFrame, *, key_col: str = "user_id",
 
 def rfm_scores(events: DataFrame, *, user_col: str = "user_id",
                ts_col: str = "ts", value_col: str = "value",
-               asof=None, n_bands: int = 5) -> DataFrame:
+               asof=None) -> DataFrame:
     """RFM segmentation — recency / frequency / monetary scores, the
     classic user-value featurization (and the segment key behind
     "churn-risk big spenders" style slices): per user, days since
     last event (R), event count (F), summed value (M), each banded
-    1..n_bands by the METRIC'S OWN quantile cuts (band n_bands =
-    best: most recent, most frequent, highest value).
+    1..5 by the METRIC'S OWN quintile cuts (band 5 = best: most
+    recent, most frequent, highest value).
 
     Scale shape: one user-keyed aggregation builds the metric table
     (|users| rows); the quantile cuts are ONE exact `percentile`
@@ -486,7 +484,7 @@ def rfm_scores(events: DataFrame, *, user_col: str = "user_id",
         (F.unix_micros(asof.cast("timestamp")) / 1e6
          - F.unix_micros(F.col("__last").cast("timestamp")) / 1e6)
         .alias("__rsec"), "frequency", "monetary")
-    ps = [i / n_bands for i in range(1, n_bands)]
+    ps = [i / 5 for i in range(1, 5)]
     cuts = per.agg(
         F.percentile(F.col("__rsec") * -1, ps).alias("__rc"),
         F.percentile(F.col("frequency").cast("double"), ps).alias("__fc"),
@@ -514,13 +512,11 @@ def rfm_scores(events: DataFrame, *, user_col: str = "user_id",
 def group_sequential_ab(events: DataFrame, looks: list[str], *,
                         user_col: str = "user_id",
                         ts_col: str = "ts",
-                        arm_expr: str = "pmod(user_id, 2)",
-                        success_filter: str = "event_type = 'purchase'",
-                        boundary_z: float | None = None,
-                        alpha: float = 0.05) -> DataFrame:
+                        arm_expr: str = "pmod(user_id, 2)") -> DataFrame:
     """Group-sequential A/B monitoring — the two-proportion z-test of
     `ab_test_proportions` evaluated at K interim LOOKS (event-time
-    cutoffs) against a Bonferroni-spent boundary z_{1−α/(2K)}:
+    cutoffs) against a Bonferroni-spent boundary z_{1−α/(2K)},
+    α = 0.05, success = a 'purchase' event:
     peeking at an experiment K times at the naive 1.96 inflates the
     false-positive rate severalfold; spending α across looks is the
     fix every experimentation platform ships (Pocock 1977 framing;
@@ -536,26 +532,23 @@ def group_sequential_ab(events: DataFrame, looks: list[str], *,
     corpus size. A user enters look k's denominator only if active
     by that cutoff — the enrolled-by-then population.
 
-    `boundary_z`: override the boundary; default = the two-sided
-    Bonferroni z for (alpha, K) from the inverse-normal table
-    {0.05/K: K=1..5} (1.96, 2.2414, 2.3940, 2.4977, 2.5758).
+    The boundary is the two-sided Bonferroni z for K looks from the
+    inverse-normal table {0.05/K: K=1..5} (1.96, 2.2414, 2.3940,
+    2.4977, 2.5758); more than 5 looks raise ValueError.
 
     Columns: look (1-based), cutoff, n_0, n_1, conv_0, conv_1,
     z (round 6), boundary, crossed.
     """
-    k_looks = len(looks)
-    if boundary_z is None:
-        table = {1: 1.959964, 2: 2.241403, 3: 2.394000,
-                 4: 2.497705, 5: 2.575829}
-        if alpha != 0.05 or k_looks not in table:
-            raise ValueError("default boundary table covers alpha=0.05, "
-                             "K<=5; pass boundary_z= explicitly")
-        boundary_z = table[k_looks]
+    table = {1: 1.959964, 2: 2.241403, 3: 2.394000,
+             4: 2.497705, 5: 2.575829}
+    if len(looks) not in table:
+        raise ValueError("boundary table covers alpha=0.05, K=1..5 looks")
+    boundary_z = table[len(looks)]
     per_user = (events
                 .groupBy(user_col)
                 .agg(F.min(F.col(ts_col)).alias("__first"),
-                     F.min(F.expr(f"CASE WHEN {success_filter} THEN "
-                                  f"{ts_col} END")).alias("__succ"))
+                     F.min(F.expr("CASE WHEN event_type = 'purchase' "
+                                  f"THEN {ts_col} END")).alias("__succ"))
                 .withColumn("__arm", F.expr(arm_expr).cast("long")))
     aggs = []
     for i, cut in enumerate(looks):
@@ -595,7 +588,6 @@ def group_sequential_ab(events: DataFrame, looks: list[str], *,
 
 def cuped_adjustment(events: DataFrame, *, user_col: str = "user_id",
                      ts_col: str = "ts", value_col: str = "value",
-                     cutover: str = "2024-01-15",
                      arm_expr: str = "pmod(user_id, 2)") -> DataFrame:
     """CUPED variance reduction (Deng et al. 2013) for an A/B
     metric: adjust each user's post-period metric by their
@@ -606,8 +598,8 @@ def cuped_adjustment(events: DataFrame, *, user_col: str = "user_id",
     experimentation-platform trick for detecting small lifts.
 
     Shape: one user-keyed aggregation splits each user's value mass
-    at the cutover (X = pre sum, Y = post sum); θ and X̄ come from
-    ONE global covar_pop/var_pop/avg aggregate (running co-moment
+    at the 2024-01-15 cutover (X = pre sum, Y = post sum); θ and X̄
+    come from ONE global covar_pop/var_pop/avg aggregate (running co-moment
     sums, map-side combined) broadcast back as a 1-row frame; the
     adjusted per-arm means and variances are a second constant-width
     global row. Nothing above user granularity shuffles.
@@ -616,7 +608,7 @@ def cuped_adjustment(events: DataFrame, *, user_col: str = "user_id",
     Y), lift_adj (same on Y'), var_y, var_adj, var_reduction
     (1 − var_adj/var_y). All round 6.
     """
-    c = F.lit(cutover).cast("timestamp")
+    c = F.lit("2024-01-15").cast("timestamp")
     per = (events.groupBy(user_col)
            .agg(F.sum(F.when(F.col(ts_col) < c, F.col(value_col))
                       .otherwise(F.lit(0.0))).alias("__x"),
@@ -704,8 +696,8 @@ def association_rules(events: DataFrame, *, user_col: str = "user_id",
                     F.round(lift, 6).alias("lift")))
 
 
-def gini_coefficient(df: DataFrame, *, value_col: str = "value",
-                     n_buckets: int = 1024) -> DataFrame:
+def gini_coefficient(df: DataFrame, *,
+                     value_col: str = "value") -> DataFrame:
     """Gini concentration coefficient of a non-negative metric —
     the inequality readout for engagement/value/token-mass
     ("5% of users generate 80% of events" quantified): G =
@@ -715,7 +707,8 @@ def gini_coefficient(df: DataFrame, *, value_col: str = "value",
     same shuffle-bounded two-level bucketing as roc_auc (per-bucket
     totals, broadcast cross-bucket offsets, partitionBy(bucket)
     window) — two running quantities (count and value mass) instead
-    of one. No single-partition structure above n_buckets rows.
+    of one, over 1024 buckets. No single-partition structure above
+    1024 rows.
 
     Columns (one row): n, mean, gini (round 6; null when n·Σy = 0).
     """
@@ -726,9 +719,9 @@ def gini_coefficient(df: DataFrame, *, value_col: str = "value",
     bucket = F.coalesce(
         F.when(span > 0,
                F.least(F.floor((F.col("__v") - F.col("__lo"))
-                               / span * n_buckets),
-                       F.lit(n_buckets - 1))).otherwise(F.lit(0)),
-        F.lit(n_buckets - 1)).cast("long")
+                               / span * 1024),
+                       F.lit(1023))).otherwise(F.lit(0)),
+        F.lit(1023)).cast("long")
     b = (per.crossJoin(F.broadcast(bounds))
          .select("__v", "__c", bucket.alias("__b")))
     btot = (b.groupBy("__b")

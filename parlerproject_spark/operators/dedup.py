@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import session_broadcast
 from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.functions.text import (fingerprint_md5,
                                                 stable_hash31,
@@ -569,12 +570,13 @@ def minhash_signatures(docs: DataFrame, *, id_col: str = "doc_id",
 
 
 def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
-                      text_col: str = "text", n: int = 3,
+                      text_col: str = "text",
                       num_hashes: int = 12, bands: int = 4,
                       threshold: float = 0.5,
                       broadcast_candidates: bool | None = None) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash LSH, then
-    exact-Jaccard verification of candidates only.
+    """Candidate near-duplicate pairs via banded MinHash LSH over word
+    trigram shingles, then exact-Jaccard verification of candidates
+    only.
 
     bands=4 over 12 hashes → rows_per_band=3; collision prob at
     jaccard s is 1-(1-s^3)^4 (the standard S-curve). The banding
@@ -595,9 +597,9 @@ def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     # consumers (signature groupBy, size groupBy, both verify sides)
     # via ReuseExchange — without the explicit exchange each branch
     # would re-run tokenize→gram→hash over the corpus
-    sh = shingles(docs, id_col=id_col, text_col=text_col, n=n) \
+    sh = shingles(docs, id_col=id_col, text_col=text_col) \
         .repartition("doc_id")
-    sig = minhash_signatures(docs, id_col=id_col, text_col=text_col, n=n,
+    sig = minhash_signatures(docs, id_col=id_col, text_col=text_col,
                              num_hashes=num_hashes, _shingles_df=sh)
     band_cols = []
     for b in range(bands):
@@ -808,13 +810,14 @@ def _bcast_partner_matrix(spark, ids_b, vecs_b):
     driver and ship it via SparkContext.broadcast — the torrent
     broadcast moves it once per executor, where a task-closure
     capture would re-ship the pickled matrix with EVERY task
-    (VERDICT r13 item 3)."""
+    (VERDICT r13 item 3). `caching.release_all` destroys it at the
+    session's next query boundary."""
     import numpy as np
 
     M = np.array([list(v) for v in vecs_b], dtype=np.float64)
     ids_arr = np.array(ids_b)
     norm_b = np.linalg.norm(M, axis=1) if len(M) else np.zeros(0)
-    return spark.sparkContext.broadcast((ids_arr, M, norm_b))
+    return session_broadcast(spark, (ids_arr, M, norm_b))
 
 
 def _bcast_cosine_scorer(partner_bc, threshold: float, *,
@@ -960,7 +963,6 @@ def embedding_near_dups(vectors: DataFrame, *, threshold: float,
 def semantic_dedup(vectors: DataFrame, *, threshold: float = 0.95,
                    k: int = 16, id_col: str = "vec_id",
                    vec_col: str = "embedding",
-                   max_iter: int = 3,
                    round_c: int | None = None,
                    block: int = 2048) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): embedding-space semantic
@@ -972,8 +974,8 @@ def semantic_dedup(vectors: DataFrame, *, threshold: float = 0.95,
     is confined to cluster cells (n/k rows each), so total pair work
     is ~n²/k instead of n² while near-duplicates — which cluster
     together by construction — are still found. Clustering reuses
-    topics.lloyd_centroids (deterministic seeded init, rounded
-    centroids) and topics._assign; component formation reuses
+    topics.lloyd_centroids (3 rounds, deterministic seeded init,
+    rounded centroids) and topics._assign; component formation reuses
     duplicate_clusters (pointer jumping, O(log d) rounds).
 
     Pair generation is a vectorized prefilter plus an exact re-score.
@@ -1002,7 +1004,7 @@ def semantic_dedup(vectors: DataFrame, *, threshold: float = 0.95,
     from parlerproject_spark.functions.vectors import l2_norm
     from parlerproject_spark.operators.topics import _assign, lloyd_centroids
 
-    cents = lloyd_centroids(vectors, k=k, max_iter=max_iter,
+    cents = lloyd_centroids(vectors, k=k, max_iter=3,
                             id_col=id_col, vec_col=vec_col,
                             round_c=round_c)
     assigned = (_assign(vectors, cents, id_col=id_col, vec_col=vec_col)
@@ -1067,11 +1069,11 @@ def semantic_dedup(vectors: DataFrame, *, threshold: float = 0.95,
 
 
 def source_overlap_jaccard(docs: DataFrame, *, group_col: str = "source",
-                           text_col: str = "text", n: int = 3) -> DataFrame:
+                           text_col: str = "text") -> DataFrame:
     """Corpus-pair overlap audit: exact Jaccard similarity between
-    the distinct-shingle sets of every pair of source domains — the
-    cross-corpus contamination/diversity report run before deciding
-    mixture weights or dedup scope.
+    the distinct word-trigram shingle sets of every pair of source
+    domains — the cross-corpus contamination/diversity report run
+    before deciding mixture weights or dedup scope.
 
     The domain key simply rides the shingle cascade in the doc_id
     seat, a (group, sh) distinct collapses per-domain sets, and
@@ -1085,7 +1087,7 @@ def source_overlap_jaccard(docs: DataFrame, *, group_col: str = "source",
     indexes only see co-occurring keys).
     """
     sets = (shingles(docs.select(F.col(group_col).alias("doc_id"),
-                                 F.col(text_col).alias("text")), n=n)
+                                 F.col(text_col).alias("text")))
             .distinct())
     wn = Window.partitionBy("doc_id")
     posting = (sets.repartition("doc_id")
@@ -1099,6 +1101,14 @@ def source_overlap_jaccard(docs: DataFrame, *, group_col: str = "source",
 
 
 # Incremental near-dup + canonical selection --------------------------------
+
+#: Shingle n-gram size, hash count and band count of the persisted
+#: MinHash store. `write_minhash_store` builds with them and
+#: `incremental_near_dup_minhash` probes with them; a probe with other
+#: values would band different keys and miss matches silently.
+STORE_NGRAM = 3
+STORE_HASHES = 12
+STORE_BANDS = 4
 
 def minhash_band_buckets(sig: DataFrame, *, bands: int = 4,
                          rows_per_band: int = 3) -> DataFrame:
@@ -1117,21 +1127,21 @@ def minhash_band_buckets(sig: DataFrame, *, bands: int = 4,
 
 
 def write_minhash_store(docs: DataFrame, path: str, *,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 3, num_hashes: int = 12,
-                        bands: int = 4) -> None:
+                        id_col: str = "doc_id",
+                        text_col: str = "text") -> None:
     """Persist the corpus's near-dup state: banded bucket rows
     (PARTITIONED BY band) plus the df-uncapped shingle table — the
     standing index that lets every future ingest batch near-dup
     against 100 TB of history WITHOUT re-reading any historical
     text. Exactly the incremental shape bloom_incremental_dedup
     gives exact dedup, lifted to MinHash similarity."""
-    sh = shingles(docs, id_col=id_col, text_col=text_col, n=n) \
+    sh = shingles(docs, id_col=id_col, text_col=text_col, n=STORE_NGRAM) \
         .repartition("doc_id")
     sig = minhash_signatures(docs, id_col=id_col, text_col=text_col,
-                             n=n, num_hashes=num_hashes, _shingles_df=sh)
-    rows_per_band = num_hashes // bands
-    (minhash_band_buckets(sig, bands=bands, rows_per_band=rows_per_band)
+                             n=STORE_NGRAM, num_hashes=STORE_HASHES,
+                             _shingles_df=sh)
+    (minhash_band_buckets(sig, bands=STORE_BANDS,
+                          rows_per_band=STORE_HASHES // STORE_BANDS)
      .write.mode("overwrite").partitionBy("band")
      .parquet(f"{path}/buckets"))
     sh.write.mode("overwrite").parquet(f"{path}/shingles")
@@ -1141,8 +1151,7 @@ def incremental_near_dup_minhash(new_docs: DataFrame,
                                  seen_buckets: DataFrame,
                                  seen_shingles: DataFrame, *,
                                  id_col: str = "doc_id",
-                                 text_col: str = "text", n: int = 3,
-                                 num_hashes: int = 12, bands: int = 4,
+                                 text_col: str = "text",
                                  threshold: float = 0.5) -> DataFrame:
     """Near-duplicate matches of an INGEST BATCH against a standing
     corpus store — the production shape of MinHash dedup: history is
@@ -1169,14 +1178,15 @@ def incremental_near_dup_minhash(new_docs: DataFrame,
     corpus-scale shingle table is never globally aggregated.
     """
     from pyspark import StorageLevel
-    rows_per_band = num_hashes // bands
-    new_sh = shingles(new_docs, id_col=id_col, text_col=text_col, n=n) \
+    new_sh = shingles(new_docs, id_col=id_col, text_col=text_col,
+                      n=STORE_NGRAM) \
         .repartition("doc_id") \
         .persist(StorageLevel.MEMORY_AND_DISK)
     sig = minhash_signatures(new_docs, id_col=id_col, text_col=text_col,
-                             n=n, num_hashes=num_hashes, _shingles_df=new_sh)
-    probe = minhash_band_buckets(sig, bands=bands,
-                                 rows_per_band=rows_per_band)
+                             n=STORE_NGRAM, num_hashes=STORE_HASHES,
+                             _shingles_df=new_sh)
+    probe = minhash_band_buckets(sig, bands=STORE_BANDS,
+                                 rows_per_band=STORE_HASHES // STORE_BANDS)
     cand = (probe.alias("p")
             .join(seen_buckets.alias("s"),
                   (F.col("p.band") == F.col("s.band"))
@@ -1240,11 +1250,11 @@ def keep_best_per_cluster(docs: DataFrame, clusters: DataFrame, *,
 
 
 def group_minhash_similarity(docs: DataFrame, *, group_col: str = "source",
-                             text_col: str = "text", n: int = 3,
-                             num_hashes: int = 12) -> DataFrame:
+                             text_col: str = "text") -> DataFrame:
     """Corpus-level similarity audit: pairwise estimated Jaccard
     between GROUPS (sources, snapshots, domains) from per-group
-    MinHash signatures — "how much does src3 overlap src7" answered
+    MinHash signatures (word trigrams, the 12-permutation
+    MINHASH_A/B family) — "how much does src3 overlap src7" answered
     without ever intersecting the groups' shingle sets.
 
     The scale story is the sketch's mergeability: a group's
@@ -1256,14 +1266,15 @@ def group_minhash_similarity(docs: DataFrame, *, group_col: str = "source",
     signature frame (BroadcastNestedLoopJoin on the < inequality —
     G² cells of a tiny frame, never corpus-scale).
 
-    est_jaccard = matching permutations / num_hashes, the standard
+    est_jaccard = matching permutations / 12, the standard
     unbiased MinHash estimate. Columns: src_a, src_b, n_match,
     est_jaccard.
     """
     # shingles() keyed by the GROUP column: one row per doc still
     # (tokenize/gram are per-row), but the hash table is keyed by
     # group directly — no corpus-wide doc->group join
-    sh = shingles(docs, id_col=group_col, text_col=text_col, n=n)
+    sh = shingles(docs, id_col=group_col, text_col=text_col)
+    num_hashes = len(MINHASH_A)
     aggs = [
         F.min((F.col("sh") * MINHASH_A[i] + MINHASH_B[i]) % _P31)
         .alias(f"h{i}") for i in range(num_hashes)

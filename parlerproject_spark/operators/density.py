@@ -45,8 +45,7 @@ from parlerproject_spark.operators.dedup import (duplicate_clusters,
 def dbscan(vectors: DataFrame, *, sim_threshold: float, min_pts: int,
            id_col: str = "vec_id", vec_col: str = "embedding",
            mode: str = "exact", dim: int | None = None,
-           num_planes: int = 6, num_tables: int = 8,
-           max_iter: int = 8) -> DataFrame:
+           num_planes: int = 6, num_tables: int = 8) -> DataFrame:
     """DBSCAN over a vector column; cosine distance ε = 1 - sim_threshold.
 
     Returns one row per input vector: (id_col, cluster, is_core)
@@ -88,8 +87,7 @@ def dbscan(vectors: DataFrame, *, sim_threshold: float, min_pts: int,
     # core_edges is symmetric and duplicate-free by construction
     # (edges = pairs ∪ reversed(pairs) with canonical a<b input,
     # filtered by two semi joins) — tell CC to skip re-symmetrizing
-    cc = duplicate_clusters(core_edges, id_a="s", id_b="d",
-                            max_iter=max_iter, symmetric=True)
+    cc = duplicate_clusters(core_edges, id_a="s", id_b="d", symmetric=True)
     # duplicate_clusters only sees vertices that appear in an edge;
     # a core whose ε-neighbors are all non-core is a legitimate
     # singleton cluster (its own id), so pad with a left join.

@@ -265,13 +265,13 @@ def fleiss_kappa(ratings: DataFrame, *, n_raters: int,
 
 
 def bleu_pairs(cand: DataFrame, ref: DataFrame, *,
-               pair_col: str = "pair_id", text_col: str = "text",
-               eps: float = 1e-9) -> DataFrame:
+               pair_col: str = "pair_id",
+               text_col: str = "text") -> DataFrame:
     """Corpus-scale sentence-BLEU-2 between aligned (candidate,
     reference) text pairs — the standard n-gram-overlap score for
     generation/translation eval (Papineni et al. 2002): clipped
     modified precision p_n for n∈{1,2}, brevity penalty
-    exp(min(0, 1−r/c)), geometric mean with ε-smoothing for
+    exp(min(0, 1−r/c)), geometric mean with ε = 1e-9 smoothing for
     zero-overlap pairs.
 
     Scale shape: ONE scan per side — each side is a single linear
@@ -343,8 +343,8 @@ def bleu_pairs(cand: DataFrame, ref: DataFrame, *,
                    .otherwise(F.lit(0.0)).alias("bp"))
     bleu = F.round(
         F.col("bp") * F.exp(
-            0.5 * F.log(F.greatest("p1", F.lit(eps)))
-            + 0.5 * F.log(F.greatest("p2", F.lit(eps)))), 6)
+            0.5 * F.log(F.greatest("p1", F.lit(1e-9)))
+            + 0.5 * F.log(F.greatest("p2", F.lit(1e-9)))), 6)
     return out.withColumn("bleu", bleu)
 
 
@@ -598,18 +598,17 @@ def gains_curve(df: DataFrame, *, score_col: str = "score",
 
 
 def required_sample_size(events: DataFrame, *, user_col: str = "user_id",
-                         success_filter: str = "event_type = 'purchase'",
-                         mdes: list | None = None,
-                         z_alpha: float = 1.959964,
-                         z_beta: float = 0.841621) -> DataFrame:
+                         mdes: list | None = None) -> DataFrame:
     """Experiment power calculator seeded from the LIVE baseline:
-    estimate the current per-user conversion rate, then for each
+    estimate the current per-user conversion rate (share of users
+    with a 'purchase' event), then for each
     minimum detectable effect (absolute Δ) report the required
     users PER ARM for a two-proportion test at α=0.05 two-sided /
     80% power — n = (z_{α/2}+z_β)²·2p̄(1−p̄)/Δ² with p̄ the midpoint
     rate. The pre-experiment sizing every platform pairs with
     `group_sequential_ab`; z constants are the standard normal
-    quantiles as shared literals.
+    quantiles z_{α/2} = 1.959964 and z_β = 0.841621 as shared
+    literals.
 
     One per-user aggregation → one global rate row → |mdes| rows of
     closed-form algebra. Columns: mde, base_rate, n_per_arm,
@@ -618,13 +617,13 @@ def required_sample_size(events: DataFrame, *, user_col: str = "user_id",
     if mdes is None:
         mdes = [0.01, 0.02, 0.05]
     per_user = (events.groupBy(user_col)
-                .agg(F.max(F.expr(f"CASE WHEN {success_filter} "
+                .agg(F.max(F.expr("CASE WHEN event_type = 'purchase' "
                                   "THEN 1 ELSE 0 END")).alias("__c")))
     rate = per_user.agg(F.avg("__c").alias("__p"))
     parts = []
     for d in mdes:
         pbar = F.col("__p") + d / 2.0
-        n = (F.ceil(F.pow(F.lit(z_alpha + z_beta), 2) * 2.0
+        n = (F.ceil(F.pow(F.lit(1.959964 + 0.841621), 2) * 2.0
                     * pbar * (1.0 - pbar) / (d * d))
              .cast("long"))
         parts.append(rate.select(

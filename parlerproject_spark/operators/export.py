@@ -47,14 +47,14 @@ def shard_assignments(docs: DataFrame, *, n_shards: int,
 
 
 def shard_manifest(docs: DataFrame, *, n_shards: int,
-                   seed: str = "shard-v1", id_col: str = "doc_id",
+                   id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """Per-shard accounting: doc count, token sum, and an
     order-insensitive content checksum (sum of doc-id hashes mod
     2^31-1 — mergeable, so the manifest of a union is the merge of
     manifests). One aggregation over the shard plan.
     Columns: shard, n_docs, n_tokens, checksum."""
-    asg = shard_assignments(docs, n_shards=n_shards, seed=seed,
+    asg = shard_assignments(docs, n_shards=n_shards,
                             id_col=id_col, text_col=text_col)
     return (asg.groupBy("shard")
             .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -64,8 +64,7 @@ def shard_manifest(docs: DataFrame, *, n_shards: int,
 
 
 def write_training_shards(docs: DataFrame, path: str, *,
-                          n_shards: int, seed: str = "shard-v1",
-                          id_col: str = "doc_id",
+                          n_shards: int, id_col: str = "doc_id",
                           text_col: str = "text") -> dict:
     """Materialize the sharded corpus: Parquet PARTITIONED BY shard
     (shard=K directories — a loader maps shard dirs to workers),
@@ -73,14 +72,14 @@ def write_training_shards(docs: DataFrame, path: str, *,
     file content), plus `_manifest/` with the per-shard accounting
     table (underscore-prefixed so corpus readers of `path` skip it). Returns {n_shards, n_docs, n_tokens} totals.
     """
-    asg = shard_assignments(docs, n_shards=n_shards, seed=seed,
+    asg = shard_assignments(docs, n_shards=n_shards,
                             id_col=id_col, text_col=text_col)
     (docs.join(asg.select(id_col, "shard", "skey"), id_col)
          .repartition(n_shards, "shard")
          .sortWithinPartitions("shard", "skey")
          .drop("skey")
          .write.mode("overwrite").partitionBy("shard").parquet(path))
-    man = shard_manifest(docs, n_shards=n_shards, seed=seed,
+    man = shard_manifest(docs, n_shards=n_shards,
                          id_col=id_col, text_col=text_col)
     man.coalesce(1).write.mode("overwrite").parquet(f"{path}/_manifest")
     tot = (man.agg(F.sum("n_docs").alias("d"),

@@ -22,19 +22,18 @@ from pyspark.sql import functions as F
 
 
 def last_token(col: Column | str) -> Column:
-    """Default blocking key: the final whitespace token (for
-    adjective–noun style names, the head noun)."""
+    """Blocking key: the final whitespace token (for adjective–noun
+    style names, the head noun)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.element_at(F.split(c, " "), -1)
 
 
 def fuzzy_pairs(df: DataFrame, *, id_col: str, text_col: str,
-                max_dist: int, block: Column | None = None) -> DataFrame:
-    """Candidate pairs (id_a < id_b) sharing a block whose texts are
-    within max_dist edits. Columns: id_a, id_b, dist."""
-    blk = (block if block is not None else last_token(text_col)) \
-        .alias("blk")
-    t = df.select(F.col(id_col).alias("k"), F.col(text_col).alias("n"), blk)
+                max_dist: int) -> DataFrame:
+    """Candidate pairs (id_a < id_b) sharing a `last_token` block
+    whose texts are within max_dist edits. Columns: id_a, id_b, dist."""
+    t = df.select(F.col(id_col).alias("k"), F.col(text_col).alias("n"),
+                  last_token(text_col).alias("blk"))
     a, b = t.alias("a"), t.alias("b")
     return (a.join(b, (F.col("a.blk") == F.col("b.blk"))
                    & (F.col("a.k") < F.col("b.k")))

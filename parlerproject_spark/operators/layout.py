@@ -41,8 +41,7 @@ def scale_to_bits(col: Column | str, *, lo: float, hi: float,
     return F.greatest(F.lit(0), F.least(F.lit(top), scaled)).cast("bigint")
 
 
-def equi_depth_bits(df: DataFrame, col: str, *, bits: int = 8,
-                    relative_error: float = 0.001) -> Column:
+def equi_depth_bits(df: DataFrame, col: str, *, bits: int = 8) -> Column:
     """Equi-depth (quantile-rank) image of a column onto [0, 2^bits):
     the skew-proof pre-step for z-ordering. `scale_to_bits` is linear
     — a heavy-tailed column collapses most rows into a few low
@@ -52,12 +51,12 @@ def equi_depth_bits(df: DataFrame, col: str, *, bits: int = 8,
     rank, not value).
 
     Boundaries come from one driver-side approxQuantile pass
-    (sampled, the same mechanism a range partitioner uses); the
+    (relative error 0.001, the same mechanism a range partitioner
+    uses); the
     mapping is then `size(filter(boundaries, b -> b <= x))` over a
     2^bits-1 literal array — no join, no window, no UDF."""
     n = 1 << bits
-    cuts = df.approxQuantile(col, [i / n for i in range(1, n)],
-                             relative_error)
+    cuts = df.approxQuantile(col, [i / n for i in range(1, n)], 0.001)
     arr = F.lit([float(c) for c in cuts])
     x = F.col(col).cast("double")
     return F.size(F.filter(arr, lambda b: b <= x)).cast("bigint")
@@ -87,22 +86,22 @@ def zorder_key(cols: Sequence[Column | str], *, bits: int = 16) -> Column:
 
 
 def zorder_layout(df: DataFrame, cols: Sequence[Column | str], *,
-                  bits: int = 16, partitions: int = 32,
                   key_alias: str = "__zkey") -> DataFrame:
-    """Range-partition + sort by the z-key: the write-side layout
-    step. Each output partition (→ file at write time) covers a
-    contiguous z-range, i.e. a small hyper-rectangle in the
-    interleaved column space — the property file skipping needs.
+    """Range-partition (32 ranges) + sort by the 16-bit z-key: the
+    write-side layout step. Each output partition (→ file at write
+    time) covers a contiguous z-range, i.e. a small hyper-rectangle
+    in the interleaved column space — the property file skipping
+    needs.
     One range exchange (sampled boundaries), in-partition sort only.
     """
-    keyed = df.withColumn(key_alias, zorder_key(cols, bits=bits))
-    return (keyed.repartitionByRange(partitions, key_alias)
+    keyed = df.withColumn(key_alias, zorder_key(cols))
+    return (keyed.repartitionByRange(32, key_alias)
             .sortWithinPartitions(key_alias))
 
 
-def write_bucketed(df: DataFrame, table: str, *, by: str, buckets: int = 32,
-                   sort: bool = True) -> None:
-    """Persist as a bucketed (+ sorted) managed table. Sorting within
+def write_bucketed(df: DataFrame, table: str, *, by: str,
+                   buckets: int = 32) -> None:
+    """Persist as a bucketed, sorted managed table. Sorting within
     buckets additionally removes the sort from sort-merge joins.
 
     Drops any previous incarnation first — overwrite alone leaves the
@@ -115,13 +114,11 @@ def write_bucketed(df: DataFrame, table: str, *, by: str, buckets: int = 32,
         from urllib.parse import urlparse
         shutil.rmtree(f"{urlparse(warehouse).path}/{table.lower()}",
                       ignore_errors=True)
-    w = df.write.mode("overwrite").bucketBy(buckets, by)
-    if sort:
-        w = w.sortBy(by)
-    w.saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(buckets, by).sortBy(by) \
+        .saveAsTable(table)
 
 
-def spread_input(df: DataFrame, *, min_parallelism: int | None = None) -> DataFrame:
+def spread_input(df: DataFrame) -> DataFrame:
     """Round-robin spread of a NARROW scan before a CPU-heavy map.
 
     A tokenize/hash cascade over document text is compute-bound, but
@@ -135,7 +132,7 @@ def spread_input(df: DataFrame, *, min_parallelism: int | None = None) -> DataFr
     is never paid there. (This is the DataFrame analogue of
     `sc.textFile(..., minPartitions=n)`.)
     """
-    target = min_parallelism or int(
+    target = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     if df.rdd.getNumPartitions() >= target:
         return df

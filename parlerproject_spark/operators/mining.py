@@ -41,10 +41,11 @@ def hard_negatives(vectors: DataFrame, *, k: int,
                    sim_hi: float | None = None,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    mode: str = "exact", num_cells: int = 16,
-                   nprobe: int = 4, max_iter: int = 3,
-                   train_mod: int | None = 8,
+                   nprobe: int = 4,
                    round_c: int | None = None) -> DataFrame:
     """Top-k hardest different-group candidates per anchor.
+    mode="cell" restricts candidates to the nprobe nearest of
+    num_cells k-means cells (3 Lloyd rounds on a 1/8 hash-sample).
 
     Columns: anchor_id, neg_id, sim (cosine, round 6), rank (1-based
     bigint). Optional band: keep sim_lo ≤ sim < sim_hi (cap excludes
@@ -67,9 +68,9 @@ def hard_negatives(vectors: DataFrame, *, k: int,
         from parlerproject_spark.operators.topics import (centroid_literal,
                                                           lloyd_centroids,
                                                           unit_rows)
-        centroids = lloyd_centroids(vectors, k=num_cells, max_iter=max_iter,
+        centroids = lloyd_centroids(vectors, k=num_cells, max_iter=3,
                                     id_col=id_col, vec_col=vec_col,
-                                    train_mod=train_mod, round_c=round_c)
+                                    train_mod=8, round_c=round_c)
         cent = centroid_literal(unit_rows(centroids))
         # candidate side: nearest cell per vector, computed with a
         # sequential JVM dot fold (pure map, argmax ties to the lowest

@@ -159,15 +159,15 @@ _AUD_HEADER = 8  # magic + big-endian int32 sample rate
 
 
 def synth_audio(df: DataFrame, *, id_col: str = "doc_id",
-                seed_col: str = "text", sample_rate: int = 8000) -> DataFrame:
-    """Deterministic fake audio column: AUD1 | rate | one byte per
-    sample (md5-derived). One row per asset with (content, media_meta)
+                seed_col: str = "text") -> DataFrame:
+    """Deterministic fake audio column: AUD1 | 8000 Hz rate | one
+    byte per sample (md5-derived). One row per asset with (content, media_meta)
     — the audio twin of synth_media."""
     payload = F.encode(F.repeat(F.md5(F.col(seed_col)), 8), "ISO-8859-1")
-    header = F.concat(F.lit(_AUD_MAGIC), _pack_int(F.lit(sample_rate)))
+    header = F.concat(F.lit(_AUD_MAGIC), _pack_int(F.lit(8000)))
     return (df.withColumn("content", F.concat(header, payload))
             .withColumn("media_meta", F.struct(
-                F.lit(sample_rate).alias("sample_rate"),
+                F.lit(8000).alias("sample_rate"),
                 F.lit("audio/fake").alias("mime"))))
 
 
@@ -205,17 +205,17 @@ def frame_sample(videos: DataFrame, *, id_col: str = "doc_id",
 
 
 def scene_cuts(videos: DataFrame, *, id_col: str = "doc_id",
-               n_frames_col: str = "n_frames", every: int = 10,
-               max_hamming: int = 20, seed: str = "scene-v1") -> DataFrame:
+               n_frames_col: str = "n_frames",
+               every: int = 10) -> DataFrame:
     """Shot-boundary (scene-cut) detection over sampled frames: a cut
     is declared wherever consecutive sampled frames' perceptual
-    hashes differ in more than `max_hamming` of 60 bits — the
+    hashes differ in more than 20 of 60 bits — the
     frame-segmentation pass a video-training pipeline runs before
     clip extraction. Composes frame_sample (relational frame-index
     explode) with a per-frame pHash and ONE lag window per video.
 
     The per-frame hash here is the deterministic FAKE of the decode
-    seam (md5 of (seed, asset, frame_no) — 15 hex chars = 60 bits,
+    seam (md5 of ('scene-v1', asset, frame_no) — 15 hex chars = 60 bits,
     engine-portable): a real pHash from a decoded frame plugs into
     the same int64 contract at decode_features' `_decode_real` seam
     without touching the window or the cut logic, which is the part
@@ -229,7 +229,7 @@ def scene_cuts(videos: DataFrame, *, id_col: str = "doc_id",
     frames = frame_sample(videos, id_col=id_col,
                           n_frames_col=n_frames_col, every=every)
     ph = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit(seed), F.col(id_col).cast("string"),
+        ":", F.lit("scene-v1"), F.col(id_col).cast("string"),
         F.col("frame_no").cast("string"))), 1, 15), 16, 10).cast("bigint")
     w = Window.partitionBy(id_col).orderBy(F.col("frame_no").asc())
     hp = frames.withColumn("__ph", ph).withColumn(
@@ -239,7 +239,7 @@ def scene_cuts(videos: DataFrame, *, id_col: str = "doc_id",
     return (hp.select(
         F.col(id_col), "frame_no", "prev_frame",
         ham.alias("hamming"),
-        F.coalesce(ham > max_hamming, F.lit(False)).alias("is_cut")))
+        F.coalesce(ham > 20, F.lit(False)).alias("is_cut")))
 
 
 def phash_near_dup(assets: DataFrame, *, id_col: str = "asset_id",

@@ -23,7 +23,7 @@ Scale decomposition (the classic two-pass-free moment shape):
    builds.
 3. `pca_project` — broadcast the (d × n_components) matrix as a
    literal into a second `mapInPandas` matmul: a pure map, zero
-   shuffle. whiten=True scales component c by 1/√(λ_c + eps) so the
+   shuffle. whiten=True scales component c by 1/√(λ_c + 1e-9) so the
    output has (approximately) identity covariance.
 """
 
@@ -114,7 +114,7 @@ def pca_components(vectors: DataFrame, *, n_components: int,
 
 
 def pca_project(vectors: DataFrame, mu, comps, evals, *,
-                whiten: bool = False, eps: float = 1e-9,
+                whiten: bool = False,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 out_col: str = "pc") -> DataFrame:
     """Project vectors onto fitted components: (x − μ) · compsᵀ,
@@ -126,7 +126,7 @@ def pca_project(vectors: DataFrame, mu, comps, evals, *,
     M = np.asarray(comps, dtype=np.float64)
     mu_a = np.asarray(mu, dtype=np.float64)
     scale = (1.0 / np.sqrt(np.maximum(np.asarray(evals, dtype=np.float64),
-                                      0.0) + eps)
+                                      0.0) + 1e-9)
              if whiten else np.ones(M.shape[0]))
 
     def gen(it):
@@ -232,13 +232,12 @@ def landmark_projection(vectors: DataFrame, *, n_anchors: int = 8,
 
 
 def power_components(vectors: DataFrame, *, n_components: int,
-                     n_iters: int = 24, round_c: int = 6,
                      vec_col: str = "embedding"):
     """Deflated power-iteration PCA — the hash-oracleable twin of
     `pca_components`: same distributed moments, but the driver-side
-    d×d eigen step runs as n_components × n_iters fixed
+    d×d eigen step runs as n_components × 24 fixed
     matvec/normalize rounds with every iterate re-rounded to
-    `round_c` decimals (the lloyd/bradley_terry re-sync contract),
+    6 decimals (the lloyd/bradley_terry re-sync contract),
     followed by Hotelling deflation A ← A − λ v vᵀ (also re-rounded).
     Because the iteration count is FIXED and every intermediate
     re-rounds, an independent engine replaying the same unrolled
@@ -255,7 +254,7 @@ def power_components(vectors: DataFrame, *, n_components: int,
     import numpy as np
 
     def rc(a):
-        return round_half_up(a, round_c)
+        return round_half_up(a, 6)
 
     rows = embedding_moments(vectors, vec_col=vec_col).collect()
     sums = {(r["i"], r["j"]): r["cov"] for r in rows
@@ -265,7 +264,7 @@ def power_components(vectors: DataFrame, *, n_components: int,
     for (i, j), v in sums.items():
         A[i, j] = A[j, i] = v
     mu_rows = (vectors.select(F.posexplode(vec_col).alias("i", "x"))
-               .groupBy("i").agg(F.round(F.avg("x"), round_c).alias("mu"))
+               .groupBy("i").agg(F.round(F.avg("x"), 6).alias("mu"))
                .collect())
     mu = np.zeros(d)
     for r in mu_rows:
@@ -274,7 +273,7 @@ def power_components(vectors: DataFrame, *, n_components: int,
     comps, evals = [], []
     for _c in range(n_components):
         v = np.full(d, float(rc(1.0 / np.sqrt(d))))
-        for _t in range(n_iters):
+        for _t in range(24):
             w = A @ v
             nrm = float(np.sqrt((w * w).sum()))
             if nrm > 0:

@@ -21,7 +21,7 @@ nothing driver-side, fixed iteration count, and the strengths frame
 is localCheckpoint()ed per round (the standard iterative-lineage
 cut, as in graph.label_propagation). Determinism across engines
 comes from the round_c contract used by topics.lloyd_centroids:
-strengths re-round to `round_c` decimals after every normalized
+strengths re-round to 6 decimals after every normalized
 update, re-synchronizing float state so an unrolled-CTE oracle
 replays the fit exactly.
 """
@@ -34,11 +34,10 @@ from pyspark.sql import functions as F
 
 def pairwise_matchups(comparisons: DataFrame, *,
                       winner_col: str = "winner",
-                      loser_col: str = "loser",
-                      smoothing: float = 0.5) -> DataFrame:
+                      loser_col: str = "loser") -> DataFrame:
     """Directed matchup table from raw comparisons: one row per
     ORDERED item pair (i, j) that ever met, with `w` = wins of i
-    over j plus `smoothing` pseudo-wins and `n` = total (smoothed)
+    over j plus 0.5 pseudo-wins and `n` = total (smoothed)
     games of the pair. The Laplace pseudo-count keeps every item's
     total win mass positive, so an all-losing item gets a small
     positive strength instead of a hard zero that would divide the
@@ -54,20 +53,19 @@ def pairwise_matchups(comparisons: DataFrame, *,
                    F.col("__w").alias("__l"))
     return (d.join(rev, ["i", "j"], "full_outer")
             .select("i", "j",
-                    (F.coalesce("__w", F.lit(0.0)) + smoothing).alias("w"),
+                    (F.coalesce("__w", F.lit(0.0)) + 0.5).alias("w"),
                     (F.coalesce("__w", F.lit(0.0))
                      + F.coalesce("__l", F.lit(0.0))
-                     + 2 * smoothing).alias("n")))
+                     + 1.0).alias("n")))
 
 
 def bradley_terry(comparisons: DataFrame, *,
-                  winner_col: str = "winner", loser_col: str = "loser",
-                  iters: int = 3, smoothing: float = 0.5,
-                  round_c: int = 6) -> DataFrame:
-    """Bradley-Terry strengths from pairwise comparisons via `iters`
-    MM updates (Hunter 2004), mean-normalized and rounded to
-    `round_c` decimals each iteration (the cross-engine float
-    re-sync contract — see module docstring).
+                  winner_col: str = "winner",
+                  loser_col: str = "loser") -> DataFrame:
+    """Bradley-Terry strengths from pairwise comparisons via 3 MM
+    updates (Hunter 2004) over the 0.5-smoothed `pairwise_matchups`,
+    mean-normalized and rounded to 6 decimals each iteration (the
+    cross-engine float re-sync contract — see module docstring).
 
     Strengths start at 1.0 for every item that appears in any
     comparison. After each raw update p'_i = W_i / Σ_j n_ij/(p_i+p_j)
@@ -75,15 +73,15 @@ def bradley_terry(comparisons: DataFrame, *,
     which pins the MM fit's free scale so iteration counts, not
     drift, decide the output.
 
-    Columns: item, strength (round_c), n_wins, n_games — win/game
+    Columns: item, strength (round 6), n_wins, n_games — win/game
     counts are the UNSMOOTHED observed integers.
     """
     m = pairwise_matchups(comparisons, winner_col=winner_col,
-                          loser_col=loser_col, smoothing=smoothing) \
+                          loser_col=loser_col) \
         .localCheckpoint(eager=True)
     wtot = m.groupBy("i").agg(F.sum("w").alias("__W"))
     p = wtot.select(F.col("i").alias("item"), F.lit(1.0).alias("p"))
-    for _ in range(iters):
+    for _ in range(3):
         den = (m
                .join(p.select(F.col("item").alias("i"),
                               F.col("p").alias("__pi")), "i")
@@ -109,7 +107,7 @@ def bradley_terry(comparisons: DataFrame, *,
         # chain in order — the eager form cost one driver-
         # synchronized job per update for the same bounded table.
         p = (raw.select("item",
-                        F.round(F.col("__r") * z, round_c).alias("p"))
+                        F.round(F.col("__r") * z, 6).alias("p"))
              .localCheckpoint(eager=False))
     obs_w = (comparisons.groupBy(F.col(winner_col).alias("item"))
              .agg(F.count(F.lit(1)).alias("__ow")))

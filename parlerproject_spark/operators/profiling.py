@@ -442,16 +442,17 @@ def leave_one_out_deltas(df: DataFrame, *, group_col: str = "source",
                     F.round(glob - loo, 6).alias("delta"))
 
 
-def profile_drift(ref: DataFrame, cur: DataFrame, cols: Sequence[str], *,
-                  approx: bool = False) -> DataFrame:
+def profile_drift(ref: DataFrame, cur: DataFrame,
+                  cols: Sequence[str]) -> DataFrame:
     """Schema-content drift between two snapshots of the same table —
     the data-contract monitor run before retraining on a refreshed
     corpus: per column, null-rate movement, distinct-count movement,
     and whether the value range changed at all.
 
-    Composition of two `profile_table` passes (each ONE aggregation
-    over its snapshot) joined on col_name — a |cols|-row join, so the
-    whole report costs two scans regardless of column count.
+    Composition of two exact `profile_table` passes (each ONE
+    aggregation over its snapshot) joined on col_name — a |cols|-row
+    join, so the whole report costs two scans regardless of column
+    count.
     `range_changed` compares each engine's own min/max rendering, so
     it is representation-stable cross-engine (distinct values render
     distinct; equal values render equal).
@@ -460,8 +461,8 @@ def profile_drift(ref: DataFrame, cur: DataFrame, cols: Sequence[str], *,
     null_rate_delta (cur − ref, round 6), distinct_ref, distinct_cur,
     range_changed.
     """
-    pr = profile_table(ref, cols, approx=approx)
-    pc = profile_table(cur, cols, approx=approx)
+    pr = profile_table(ref, cols)
+    pc = profile_table(cur, cols)
     a = pr.select(F.col("col_name"),
                   F.col("n_rows").alias("n_ref"),
                   F.col("n_nulls").alias("__nl_r"),

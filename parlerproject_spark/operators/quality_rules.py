@@ -112,10 +112,10 @@ def gopher_quality_flags(docs: DataFrame, *, id_col: str = "doc_id",
 
 
 def c4_line_filter(docs: DataFrame, *, id_col: str = "doc_id",
-                   text_col: str = "text", min_line_words: int = 5,
+                   text_col: str = "text",
                    min_lines: int = 3) -> DataFrame:
     """C4 cleaning: keep only lines that end in terminal punctuation
-    and have >= `min_line_words` words; drop any line mentioning
+    and have >= 5 words; drop any line mentioning
     javascript, "lorem ipsum", or a curly brace; then drop documents
     with fewer than `min_lines` surviving lines. Returns the cleaned
     text with per-doc counters.
@@ -132,7 +132,7 @@ def c4_line_filter(docs: DataFrame, *, id_col: str = "doc_id",
         n_w = F.size(F.filter(F.split(t, r"\s+"),
                               lambda w: F.length(w) > 0))
         return (t.rlike(r'[.!?"”]$')
-                & (n_w >= min_line_words)
+                & (n_w >= 5)
                 & ~low.contains("javascript")
                 & ~low.contains("lorem ipsum")
                 & ~low.contains("{"))

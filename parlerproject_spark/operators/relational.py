@@ -47,12 +47,12 @@ def anti_join(work: DataFrame, done: DataFrame,
     return work.join(F.broadcast(done), on=on, how="left_anti")
 
 
-def lookup_join(facts: DataFrame, dim: DataFrame, on: str | Sequence[str],
-                *, how: str = "inner") -> DataFrame:
+def lookup_join(facts: DataFrame, dim: DataFrame,
+                on: str | Sequence[str]) -> DataFrame:
     """Dimension enrichment (reference: per-topic Count lookup,
-    code/bertopicTest.py:93-97). Small dim → broadcast hash join,
-    no shuffle of the fact side."""
-    return facts.join(F.broadcast(dim), on=on, how=how)
+    code/bertopicTest.py:93-97). Small dim → broadcast inner hash
+    join, no shuffle of the fact side."""
+    return facts.join(F.broadcast(dim), on=on, how="inner")
 
 
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:

@@ -130,16 +130,15 @@ def serve_rollup(spark, path: str) -> DataFrame:
 
 def distinct_sketch_rollup(events: DataFrame, *, bucket: F.Column,
                            key_cols: Sequence[str], id_col: str,
-                           lg_k: int = 12,
                            bucket_alias: str = "bucket") -> DataFrame:
     """Per-(bucket, key) HLL sketch of `id_col` — the mergeable
-    distinct-count state. `lg_k=12` ⇒ ~1.6 kB per sketch, ~1.6%
+    distinct-count state. lg_k = 12 ⇒ ~1.6 kB per sketch, ~1.6%
     relative error; the whole partial table for a year of daily
     buckets × 1k keys is ~600 MB — served from memory while the raw
     100 TB stays cold."""
     return (events
             .groupBy(bucket.alias(bucket_alias), *key_cols)
-            .agg(F.hll_sketch_agg(F.col(id_col), F.lit(lg_k))
+            .agg(F.hll_sketch_agg(F.col(id_col), F.lit(12))
                  .alias("hll_state")))
 
 
@@ -184,24 +183,21 @@ def theta_overlap(sketches: DataFrame, *, segment_col: str,
 
 def quantile_sketch_rollup(events: DataFrame, *, bucket: F.Column,
                            key_cols: Sequence[str], value_col: str,
-                           k: int = 200,
                            bucket_alias: str = "bucket") -> DataFrame:
-    """Per-(bucket, key) KLL sketch of a double measure — mergeable
+    """Per-(bucket, key) KLL sketch (k = 200) of a double measure — mergeable
     quantile state (exact median/p99 do NOT merge across partials;
     the sketch is the scalable substitute)."""
     return (events
             .groupBy(bucket.alias(bucket_alias), *key_cols)
             .agg(F.kll_sketch_agg_double(
-                F.col(value_col).cast("double"), F.lit(k))
+                F.col(value_col).cast("double"), F.lit(200))
                 .alias("kll_state")))
 
 
 def merge_quantile_sketches(rollup: DataFrame, *,
-                            key_cols: Sequence[str],
-                            quantiles: Sequence[float] = (0.5, 0.95, 0.99),
-                            ) -> DataFrame:
+                            key_cols: Sequence[str]) -> DataFrame:
     """Merge KLL partials across buckets and read out quantiles —
-    columns q_50, q_95, ... per key.
+    columns q_50, q_95, q_99 per key.
 
     Spark exposes KLL merge only as the pairwise scalar
     `kll_sketch_merge_double` (no merge AGGREGATE, unlike
@@ -221,7 +217,7 @@ def merge_quantile_sketches(rollup: DataFrame, *,
     cols = [
         F.kll_sketch_get_quantile_double(F.col("kll"), F.lit(float(q)))
         .alias(f"q_{int(q * 100)}")
-        for q in quantiles
+        for q in (0.5, 0.95, 0.99)
     ]
     return merged.select(*key_cols, *cols)
 

@@ -20,16 +20,15 @@ SAMPLE_BUCKETS = 10_000
 
 
 def stratified_sample(df: DataFrame, fractions: dict[str, float], *,
-                      strata_col: str, id_col: str,
-                      default_fraction: float = 0.0) -> DataFrame:
+                      strata_col: str, id_col: str) -> DataFrame:
     """Per-stratum deterministic sampling: a row survives iff its
     id's hash bucket (stable_hash31 % 10000) falls under its
-    stratum's fraction. Used to rebalance a corpus (e.g. downsample
-    over-represented languages) with zero shuffle — the filter runs
-    inside the scan stage, and membership is stable as the corpus
-    grows."""
+    stratum's fraction (strata not in `fractions` keep nothing). Used
+    to rebalance a corpus (e.g. downsample over-represented languages)
+    with zero shuffle — the filter runs inside the scan stage, and
+    membership is stable as the corpus grows."""
     bucket = stable_hash31(F.col(id_col).cast("string")) % SAMPLE_BUCKETS
-    thresh: Column = F.lit(int(default_fraction * SAMPLE_BUCKETS))
+    thresh: Column = F.lit(0)
     for stratum, frac in sorted(fractions.items()):
         thresh = F.when(F.col(strata_col) == stratum,
                         F.lit(int(frac * SAMPLE_BUCKETS))).otherwise(thresh)
@@ -37,14 +36,14 @@ def stratified_sample(df: DataFrame, fractions: dict[str, float], *,
 
 
 def group_head_sample(df: DataFrame, *, group_col: str, id_col: str,
-                      k: int, seed: str = "ghs-v1") -> DataFrame:
+                      k: int) -> DataFrame:
     """Fixed-size deterministic sample: exactly min(k, |group|) rows
     per group — the distributed, replayable stand-in for per-group
     reservoir sampling (per-domain eval slices, few-shot exemplar
     pools, balanced inspection panels all want "exactly k per
     bucket", which a fractional sampler can't promise).
 
-    Rank = row_number over an md5(seed:id) ordering inside each
+    Rank = row_number over an md5('ghs-v1':id) ordering inside each
     group; the hash order is uniform, content-stable (a row keeps or
     loses membership only when rank-k's hash boundary moves, not
     when unrelated rows arrive), and engine-portable. One exchange
@@ -54,7 +53,8 @@ def group_head_sample(df: DataFrame, *, group_col: str, id_col: str,
     with an approximate per-group count. Keeps all input columns and
     adds sample_rank (1-based).
     """
-    h = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
+    h = F.md5(F.concat_ws(":", F.lit("ghs-v1"),
+                          F.col(id_col).cast("string")))
     w = Window.partitionBy(group_col).orderBy(h, F.col(id_col))
     return (df.withColumn("sample_rank",
                           F.row_number().over(w).cast("long"))
@@ -62,8 +62,7 @@ def group_head_sample(df: DataFrame, *, group_col: str, id_col: str,
 
 
 def pack_sequences(docs: DataFrame, *, id_col: str, tokens_col: str,
-                   seq_len: int = 2048, shards: int = 16,
-                   seed: str = "pack-v1") -> DataFrame:
+                   seq_len: int = 2048, shards: int = 16) -> DataFrame:
     """Concat-and-chunk sequence packing — the training-batch
     construction step: documents are laid end-to-end in a fixed
     pseudo-random order and cut into `seq_len`-token sequences; each
@@ -76,11 +75,11 @@ def pack_sequences(docs: DataFrame, *, id_col: str, tokens_col: str,
     engine-neutral), and the running token offset is a window cumsum
     PER SHARD — never a single global ordering, which would serialize
     the cumsum at corpus scale. Within a shard the order is the
-    seeded md5 key, so re-runs and other engines produce the
+    md5('pack-v1':id) key, so re-runs and other engines produce the
     identical packing. One exchange on shard.
     Columns: <id_col>, shard, seq_no, tok_offset.
     """
-    key = F.md5(F.concat(F.lit(seed), F.lit(":"),
+    key = F.md5(F.concat(F.lit("pack-v1"), F.lit(":"),
                          F.col(id_col).cast("string")))
     shard = (stable_hash31(F.col(id_col).cast("string"))
              % shards).cast("int")
@@ -97,8 +96,8 @@ def pack_sequences(docs: DataFrame, *, id_col: str, tokens_col: str,
 
 def pack_sequences_harmonic(docs: DataFrame, *, id_col: str,
                             tokens_col: str, seq_len: int = 2048,
-                            shards: int = 16, small_k: int = 8,
-                            seed: str = "pack-v1") -> DataFrame:
+                            shards: int = 16,
+                            small_k: int = 8) -> DataFrame:
     """BOUNDARY-RESPECTING sequence packing — no document ever
     straddles two training sequences (the property concat-and-chunk
     `pack_sequences` gives up): the harmonic size-class member of
@@ -123,7 +122,7 @@ def pack_sequences_harmonic(docs: DataFrame, *, id_col: str,
       bins flagged `truncated`.
 
     Deterministic and engine-neutral end to end: stable_hash31
-    shards, md5(seed:id) within-shard order — the pack_sequences
+    shards, md5('pack-v1':id) within-shard order — the pack_sequences
     conventions — so the oracle replays every class, bin, and
     offset. One exchange on (shard, class); windows partition by
     (shard, class), never globally. Padding is first-class output:
@@ -134,7 +133,7 @@ def pack_sequences_harmonic(docs: DataFrame, *, id_col: str,
     """
     if seq_len < 1 or shards < 1 or small_k < 2:
         raise ValueError("seq_len/shards >= 1 and small_k >= 2")
-    key = F.md5(F.concat(F.lit(seed), F.lit(":"),
+    key = F.md5(F.concat(F.lit("pack-v1"), F.lit(":"),
                          F.col(id_col).cast("string")))
     shard = (stable_hash31(F.col(id_col).cast("string"))
              % shards).cast("int")
@@ -246,27 +245,25 @@ def domain_mix_weights(df: DataFrame, *, domain_col: str,
                     F.round(w / p, 6).alias("boost")))
 
 
-def grouped_split(df: DataFrame, *, group_col: str,
-                  train_pct: int = 80, val_pct: int = 10,
-                  seed: str = "split-v1") -> DataFrame:
-    """Leakage-safe train/val/test split: the split is assigned to
+def grouped_split(df: DataFrame, *, group_col: str) -> DataFrame:
+    """Leakage-safe 80/10/10 train/val/test split: the split is assigned to
     the GROUP (domain, source, url-host, near-dup cluster id...),
     never the row — every document of a group lands in the same
     split, so templated near-copies can't straddle train and eval
     (the contamination mode a doc-level split invites; the
     group-aware counterpart of queries.train_val_test_split).
 
-    Pure map on md5(seed:group) — join-free, RNG-free, stable as
+    Pure map on md5('split-v1':group) — join-free, RNG-free, stable as
     the corpus grows: new members of an existing group inherit its
     split. Columns: the input's + split.
     """
     from parlerproject_spark.functions.text import stable_hash31
 
     bucket = stable_hash31(
-        F.concat_ws(":", F.lit(seed), F.col(group_col).cast("string"))
+        F.concat_ws(":", F.lit("split-v1"), F.col(group_col).cast("string"))
     ) % 100
-    split = (F.when(bucket < train_pct, "train")
-             .when(bucket < train_pct + val_pct, "val")
+    split = (F.when(bucket < 80, "train")
+             .when(bucket < 90, "val")
              .otherwise("test"))
     return df.withColumn("split", split)
 
@@ -275,13 +272,12 @@ def sample_to_token_budget(docs: DataFrame, weights: DataFrame, *,
                            budget_tokens: int,
                            domain_col: str = "source",
                            id_col: str = "doc_id",
-                           text_col: str = "text",
-                           seed: str = "budget-v1") -> DataFrame:
+                           text_col: str = "text") -> DataFrame:
     """Deterministic mixture sampling to a TOKEN budget — the
     materialization step after domain_mix_weights: given per-domain
     mixture weights (columns: <domain_col>, w summing to 1) and a
     total token budget, emit the documents that fill each domain's
-    share (budget x w_d tokens), chosen in a seeded md5 order so the
+    share (budget x w_d tokens), chosen in md5('budget-v1':id) order so the
     sample is reproducible, engine-replayable, and growth-stable
     (adding new docs never evicts an already-chosen doc with a
     smaller hash... it can only push out the tail).
@@ -301,7 +297,7 @@ def sample_to_token_budget(docs: DataFrame, weights: DataFrame, *,
     """
     from parlerproject_spark.functions.text import token_count
 
-    key = F.md5(F.concat_ws(":", F.lit(seed),
+    key = F.md5(F.concat_ws(":", F.lit("budget-v1"),
                             F.col(id_col).cast("string")))
     toked = docs.select(
         F.col(id_col), F.col(domain_col),
@@ -319,13 +315,13 @@ def sample_to_token_budget(docs: DataFrame, weights: DataFrame, *,
 
 
 def mixture_weights(docs: DataFrame, *, group_col: str = "source",
-                    text_col: str = "text", alpha: float = 0.7,
-                    token_budget: int = 1_000_000) -> DataFrame:
+                    text_col: str = "text",
+                    alpha: float = 0.7) -> DataFrame:
     """Temperature-scaled data-mixture weights per source domain —
     the multilingual/multi-domain sampling scheme of GPT-3 / XLM-R
     (w_g ∝ p_g^alpha): raw token share p_g is flattened with
-    exponent alpha < 1 so small domains are up-sampled, then the
-    token budget is apportioned and re-expressed as epochs over
+    exponent alpha < 1 so small domains are up-sampled, then a
+    1M-token budget is apportioned and re-expressed as epochs over
     each domain (epochs > 1 ⇒ the domain will repeat).
 
     One token-count aggregation over the corpus (the groupBy is on
@@ -350,19 +346,18 @@ def mixture_weights(docs: DataFrame, *, group_col: str = "source",
     return (per
             .withColumn("weight", F.round(w, 6))
             .withColumn("budget_tokens",
-                        F.round(w * F.lit(float(token_budget)), 0)
+                        F.round(w * F.lit(1_000_000.0), 0)
                         .cast("long"))
             .withColumn("epochs",
-                        F.round(w * F.lit(float(token_budget))
+                        F.round(w * F.lit(1_000_000.0)
                                 / F.col("n_tokens"), 6))
             .select(group_col, "n_tokens", F.round("p_raw", 6).alias("p_raw"),
                     "weight", "budget_tokens", "epochs"))
 
 
 def epochs_to_exhaust(docs: DataFrame, *, group_col: str = "source",
-                      id_col: str = "doc_id", text_col: str = "text",
-                      budget_epochs: float = 4.0,
-                      tau: float = 0.7) -> DataFrame:
+                      id_col: str = "doc_id",
+                      text_col: str = "text") -> DataFrame:
     """Data-constrained scaling audit per source (round 13 —
     Muennighoff et al. 2023, "Scaling Data-Constrained Language
     Models"): how many EPOCHS of each source a training run will
@@ -372,9 +367,9 @@ def epochs_to_exhaust(docs: DataFrame, *, group_col: str = "source",
     — effective tokens are the canonical-document tokens only
     (md5-fingerprint dedup, min-id canonical, so a doc duplicated
     ACROSS sources counts once, in the canonical copy's source),
-    the budget is `budget_epochs` × total effective tokens
-    (their ~4-epoch value plateau), apportioned by the same
-    τ-temperature share every mixture query here uses. A source
+    the budget is 4 × total effective tokens (their ~4-epoch value
+    plateau), apportioned by the same τ = 0.7 temperature share every
+    mixture query here uses. A source
     whose epochs exceed the plateau is being repeated past the
     point of diminishing returns — shrink its weight or find more
     data.
@@ -405,12 +400,12 @@ def epochs_to_exhaust(docs: DataFrame, *, group_col: str = "source",
                 .cast("long").alias("effective_tokens")))
     tot = per.agg(
         F.sum(F.pow(F.col("effective_tokens").cast("double"),
-                    F.lit(tau))).alias("z"),
+                    F.lit(0.7))).alias("z"),
         F.sum("effective_tokens").cast("double").alias("eff_total"))
-    share = (F.pow(F.col("effective_tokens").cast("double"), F.lit(tau))
+    share = (F.pow(F.col("effective_tokens").cast("double"), F.lit(0.7))
              / F.col("z"))
     epochs = F.round(
-        F.lit(budget_epochs) * F.col("eff_total") * share
+        F.lit(4.0) * F.col("eff_total") * share
         / F.col("effective_tokens"), 6)
     return (per.crossJoin(F.broadcast(tot))
             .select(F.col("g").alias(group_col),
@@ -420,16 +415,15 @@ def epochs_to_exhaust(docs: DataFrame, *, group_col: str = "source",
                     .alias("dup_token_share"),
                     F.round(share, 6).alias("budget_share"),
                     epochs.alias("epochs"),
-                    (epochs > F.lit(budget_epochs)).alias("over_plateau")))
+                    (epochs > F.lit(4.0)).alias("over_plateau")))
 
 
 def weighted_reservoir_sample(df: DataFrame, k: int, *,
                               id_col: str = "doc_id",
-                              weight_col: str = "n_chars",
-                              seed: str = "wrs-v1") -> DataFrame:
+                              weight_col: str = "n_chars") -> DataFrame:
     """Deterministic weighted sample WITHOUT replacement of size k —
     the Efraimidis–Spirakis A-ES reservoir scheme as a relational
-    op: each row draws u = md5-uniform(seed:id) and is ranked by
+    op: each row draws u = md5-uniform('wrs-v1':id) and is ranked by
     u^(1/w); the k largest keys ARE a weighted sample without
     replacement (the classic one-pass result, here with the
     deterministic-uniform twist every sampling op in this engine
@@ -446,7 +440,7 @@ def weighted_reservoir_sample(df: DataFrame, k: int, *,
     Columns: <id_col>, weight, key (round 6).
     """
     u = ((F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit(seed), F.col(id_col))), 1, 8), 16, 10)
+        ":", F.lit("wrs-v1"), F.col(id_col))), 1, 8), 16, 10)
         .cast("bigint") + 1) / F.lit(float(2 ** 32)))
     # + 0.0 folds round's -0.0 to 0.0 (ln(u)/w rounds to zero for
     # huge weights; -0.0 vs 0.0 breaks cross-engine value hashes)
@@ -461,8 +455,7 @@ def weighted_reservoir_sample(df: DataFrame, k: int, *,
 
 def negative_sampling_draws(docs: DataFrame, n_draws: int, *,
                             text_col: str = "text",
-                            min_count: int = 5,
-                            seed: str = "neg-v1") -> DataFrame:
+                            min_count: int = 5) -> DataFrame:
     """Deterministic draws from the unigram^0.75 noise distribution
     — word2vec/contrastive-training negative sampling (Mikolov et
     al. 2013), as a relational op: vocabulary counts → tempered
@@ -474,7 +467,7 @@ def negative_sampling_draws(docs: DataFrame, n_draws: int, *,
     cumulative table bit-for-bit. The running bounds accumulate in
     token order (a window over the min_count-CUT vocabulary — a
     bounded extract, not the corpus), the total is max(hi) (order-
-    insensitive), and each draw's uniform comes from md5(seed:i).
+    insensitive), and each draw's uniform comes from md5('neg-v1':i).
 
     The draws-to-bucket match is a range join against the BROADCAST
     vocabulary bounds — at any corpus scale the vocab after the
@@ -497,7 +490,7 @@ def negative_sampling_draws(docs: DataFrame, n_draws: int, *,
     total = bounds.agg(F.max("hi").alias("__W"))
     spark = docs.sparkSession
     u = (F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit(seed), F.col("draw_id"))), 1, 8), 16, 10)
+        ":", F.lit("neg-v1"), F.col("draw_id"))), 1, 8), 16, 10)
         .cast("bigint") / F.lit(float(2 ** 32))) * F.col("__W")
     draws = (spark.range(n_draws)
              .select(F.col("id").alias("draw_id"))
@@ -510,9 +503,7 @@ def negative_sampling_draws(docs: DataFrame, n_draws: int, *,
 
 
 def leakage_safe_split(df: DataFrame, pairs: DataFrame, *,
-                       id_col: str = "doc_id",
-                       train_pct: int = 80, val_pct: int = 10,
-                       seed: str = "split-v1") -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """Near-dup-aware train/val/test split: the unit of assignment is
     the NEAR-DUPLICATE CLUSTER, so no two near-copies can straddle
     train and eval — the split-time half of decontamination (a plain
@@ -525,9 +516,9 @@ def leakage_safe_split(df: DataFrame, pairs: DataFrame, *,
     engine has. Clusters come from `dedup.duplicate_clusters`
     (min-label + pointer jumping, ids-only shuffles); documents in no
     pair are their own singleton cluster via one left join, and the
-    split is grouped_split's md5(seed:cluster) map — deterministic,
-    join-free past the one cluster attach, stable as the corpus
-    grows. Columns: <id_col>, cluster_id, split.
+    split is grouped_split's md5('split-v1':cluster) 80/10/10 map —
+    deterministic, join-free past the one cluster attach, stable as
+    the corpus grows. Columns: <id_col>, cluster_id, split.
     """
     from parlerproject_spark.operators.dedup import duplicate_clusters
 
@@ -537,8 +528,7 @@ def leakage_safe_split(df: DataFrame, pairs: DataFrame, *,
             .select(F.col(id_col),
                     F.coalesce("cluster_id", F.col(id_col))
                     .alias("cluster_id")))
-    return grouped_split(base, group_col="cluster_id",
-                         train_pct=train_pct, val_pct=val_pct, seed=seed)
+    return grouped_split(base, group_col="cluster_id")
 
 
 def curriculum_order(df: DataFrame, *, id_col: str, band_col: str,
@@ -603,8 +593,7 @@ def curriculum_order(df: DataFrame, *, id_col: str, band_col: str,
 def length_bucket_batches(docs: DataFrame, *, id_col: str,
                           tokens_col: str, batch_size: int = 32,
                           bucket_width: int = 64, n_buckets: int = 32,
-                          shards: int = 8,
-                          seed: str = "lbb-v1") -> DataFrame:
+                          shards: int = 8) -> DataFrame:
     """Length-bucketed inference/training batching with a padding-
     efficiency report: docs bucket by token count, batch ids form
     inside each (bucket, shard) stream, and each batch reports how
@@ -612,7 +601,7 @@ def length_bucket_batches(docs: DataFrame, *, id_col: str,
     construction that keeps short docs from being padded to the
     longest doc in the corpus.
 
-    Deterministic (seeded md5 order inside buckets) and parallel:
+    Deterministic (md5('lbb-v1':id) order inside buckets) and parallel:
     the shard salt keeps a popular length bucket from becoming one
     window partition (same salting as pack_sequences). One keyed
     exchange; per-batch aggregation combines map-side.
@@ -620,7 +609,8 @@ def length_bucket_batches(docs: DataFrame, *, id_col: str,
     Columns: bucket, shard, batch_id, n_docs, max_tokens,
     sum_tokens, pad_efficiency (= sum/(n·max), 1.0 = zero waste).
     """
-    key = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
+    key = F.md5(F.concat_ws(":", F.lit("lbb-v1"),
+                            F.col(id_col).cast("string")))
     bucket = F.least(F.floor(F.col(tokens_col) / bucket_width),
                      F.lit(n_buckets - 1)).cast("long")
     staged = docs.select(
@@ -681,16 +671,14 @@ def uncertainty_diverse_batch(df: DataFrame, *, k: int,
 def assemble_dialogues(events: DataFrame, *, key_col: str = "user_id",
                        ts_col: str = "ts", id_col: str = "event_id",
                        turn_col: str = "turn",
-                       gap_seconds: int = 1800,
-                       max_turns: int | None = None,
-                       sep: str = " | ") -> DataFrame:
+                       max_turns: int | None = None) -> DataFrame:
     """Conversation/dialogue assembly — the step that turns an event
     or message log into chat-format training rows: sessionize the
-    per-key timeline (relational.sessionize's lag+running-sum, one
-    exchange + one sort), keep the FIRST `max_turns` turns of each
-    session (context-window truncation is part of the data contract,
-    not an afterthought), and concatenate the ordered turns into one
-    transcript string per session.
+    per-key timeline (relational.sessionize's lag+running-sum at its
+    30-minute gap, one exchange + one sort), keep the FIRST
+    `max_turns` turns of each session (context-window truncation is
+    part of the data contract, not an afterthought), and concatenate the ordered turns into one
+    " | "-joined transcript string per session.
 
     `turn_col` is a caller-provided STRING column (the formatted
     turn — role tag, template, whatever the recipe says); the
@@ -707,7 +695,7 @@ def assemble_dialogues(events: DataFrame, *, key_col: str = "user_id",
     from parlerproject_spark.operators.relational import sessionize
 
     sess = sessionize(events, key_col=key_col, ts_col=ts_col,
-                      id_col=id_col, gap_seconds=gap_seconds)
+                      id_col=id_col)
     w = Window.partitionBy(key_col, "session_no") \
         .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
     ranked = sess.withColumn("__rn", F.row_number().over(w))
@@ -721,7 +709,7 @@ def assemble_dialogues(events: DataFrame, *, key_col: str = "user_id",
                             F.struct(F.col("__rn").alias("rn"),
                                      F.col(turn_col).alias("t")))),
                         lambda x: x["t"]),
-                    sep).alias("transcript")))
+                    " | ").alias("transcript")))
     return agg.select(key_col, "session_no", "n_turns", "transcript",
                       F.length("transcript").cast("long").alias("n_chars"))
 
@@ -780,9 +768,8 @@ def purged_time_folds(df: DataFrame, *, ts_col: str = "ts",
 
 
 def doremi_weights(domain_losses: DataFrame, *, domain_col: str = "domain",
-                   loss_col: str = "loss", ref_col: str = "ref_loss",
-                   eta: float = 1.0, n_rounds: int = 3,
-                   smoothing: float = 0.1, round_c: int = 6) -> DataFrame:
+                   loss_col: str = "loss",
+                   ref_col: str = "ref_loss") -> DataFrame:
     """DoReMi-style domain reweighting (Xie et al. 2023, "DoReMi:
     Optimizing Data Mixtures Speeds Up Language Model Pretraining")
     — the Group-DRO exponentiated-gradient update over per-domain
@@ -794,22 +781,23 @@ def doremi_weights(domain_losses: DataFrame, *, domain_col: str = "domain",
     paper's Algorithm 1):
 
         w ← w · exp(η · excess);  α ← (1−s) · w/Σw + s/k
+        (η = 1, s = 0.1)
 
     `mixture_weights` above is the STATIC temperature-scaling
     scheme; this is the loss-adaptive one. The full DoReMi loop
     retrains the proxy between updates — that outer loop is a
     training-system concern; this operator is the data-side update
-    applied `n_rounds` times to a fixed loss snapshot (with
+    applied 3 times to a fixed loss snapshot (with
     smoothing the rounds do not collapse into one step).
 
     Scale shape: the input is already per-domain (cardinality =
     domains, not corpus); every round is scalar algebra on that
     k-row frame joined to its own one-row normalizer via broadcast
     cross join (BNLJ — the engine-wide scalar-subquery pattern),
-    localCheckpoint()ed per round. Weights re-round to `round_c`
-    decimals each round (the lloyd/bradley_terry re-sync contract),
+    localCheckpoint()ed per round. Weights re-round to 6 decimals
+    each round (the lloyd/bradley_terry re-sync contract),
     so an unrolled-CTE oracle replays the fit exactly.
-    Columns: <domain_col>, excess, weight (round_c).
+    Columns: <domain_col>, excess, weight (round 6).
     """
     base = (domain_losses.select(
         F.col(domain_col).alias("__d"),
@@ -824,18 +812,17 @@ def doremi_weights(domain_losses: DataFrame, *, domain_col: str = "domain",
     w = (base.crossJoin(F.broadcast(kf))
          .select("__d", "__e", "__k", (1.0 / F.col("__k")).alias("__w"))
          .localCheckpoint(eager=False))
-    for _ in range(n_rounds):
-        up = w.withColumn("__w1", F.col("__w")
-                          * F.exp(F.lit(float(eta)) * F.col("__e")))
+    for _ in range(3):
+        up = w.withColumn("__w1", F.col("__w") * F.exp(F.col("__e")))
         z = up.agg(F.sum("__w1").alias("__z"))
         w = (up.crossJoin(F.broadcast(z))
              .select("__d", "__e", "__k",
-                     F.round((1.0 - smoothing) * F.col("__w1") / F.col("__z")
-                             + F.lit(float(smoothing)) / F.col("__k"),
-                             round_c).alias("__w"))
+                     F.round(0.9 * F.col("__w1") / F.col("__z")
+                             + F.lit(0.1) / F.col("__k"),
+                             6).alias("__w"))
              .localCheckpoint(eager=False))
     return w.select(F.col("__d").alias(domain_col),
-                    F.round("__e", round_c).alias("excess"),
+                    F.round("__e", 6).alias("excess"),
                     F.col("__w").alias("weight"))
 
 

@@ -103,12 +103,11 @@ def dsir_weights(raw: DataFrame, target: DataFrame, *,
 
 
 def perplexity_buckets(docs: DataFrame, *, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       n_buckets: int = 3) -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """CCNet-style perplexity bucketing: score every document with
     the corpus-trained bigram LM (text_analysis.lm_score) and band
-    the scores into `n_buckets` quantile cuts — bucket 1 ("head")
-    is the most natural text, the last bucket ("tail") the least.
+    the scores into tercile cuts — bucket 1 ("head") is the most
+    natural text, bucket 3 ("tail") the least.
     Pipelines keep head+middle or reweight by band.
 
     Scale shape: CCNet cuts by score QUANTILE EDGES, not by global
@@ -123,18 +122,18 @@ def perplexity_buckets(docs: DataFrame, *, id_col: str = "doc_id",
     Columns: <id_col>, lm_logp, bucket (1=head), band.
     """
     scored = lm_score(docs, id_col=id_col, text_col=text_col)
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
+    fracs = [1 / 3, 2 / 3]
     edges = scored.agg(F.percentile(
         "lm_logp", F.lit(fracs).cast("array<double>")).alias("qs"))
-    # k = #edges at or below this score (0..n-1); bucket 1 = head
+    # k = #edges at or below this score (0..2); bucket 1 = head
     k = F.size(F.filter(F.col("qs"),
                         lambda e: F.col("lm_logp") >= e))
     band = (F.when(F.col("bucket") == 1, "head")
-            .when(F.col("bucket") == n_buckets, "tail")
+            .when(F.col("bucket") == 3, "tail")
             .otherwise("middle"))
     return (scored.crossJoin(F.broadcast(edges))
             .select(id_col, "lm_logp",
-                    (F.lit(n_buckets) - k).cast("long").alias("bucket"))
+                    (F.lit(3) - k).cast("long").alias("bucket"))
             .withColumn("band", band))
 
 
@@ -225,21 +224,22 @@ def nb_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
 def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
                               text_col: str = "text",
                               label_col: str = "label",
-                              n_iters: int = 3, lr: float = 1.0,
-                              feat_hex: int = 2) -> DataFrame:
+                              n_iters: int = 3,
+                              lr: float = 1.0) -> DataFrame:
     """Logistic-regression quality scorer trained IN-ENGINE by
     full-batch gradient descent — the discriminative sibling of
     `nb_quality_classifier` (pipelines that outgrow NB's
     independence assumption train exactly this shape: fastText /
     CCNet-style linear classifiers over hashed token features).
 
-    Model: w over 16**feat_hex hashed-unigram buckets + intercept.
+    Model: w over 256 hashed-unigram buckets (the first two md5 hex
+    digits) + intercept.
     Features are tf-NORMALIZED counts (bucket count / doc tokens) so
     margins stay in a bounded range: no exp() overflow on long
     documents, and the gradient scale is corpus-size-invariant.
     Each of the `n_iters` unrolled iterations is pure relational
-    algebra — margins = feature⋈weights (weights are ≤ 16**feat_hex
-    + 1 rows, always BROADCAST) + one doc-keyed aggregate;
+    algebra — margins = feature⋈weights (weights are ≤ 257 rows,
+    always BROADCAST) + one doc-keyed aggregate;
     gradient = feature⋈residuals (both already doc-keyed) + one
     bucket-keyed aggregate of at most |w| rows; update = weights
     left-join gradient. Nothing ever collects to the driver and the
@@ -252,7 +252,7 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
 
     Columns: <id_col>, margin (round 6), prob (round 6), pred (1/0).
     """
-    n_buckets = 16 ** feat_hex
+    n_buckets = 256
     toks = docs.select(F.col(id_col).alias("doc_id"),
                        F.col(label_col).cast("double").alias("y"),
                        F.explode(tokenize(text_col)).alias("w"))
@@ -260,7 +260,7 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
     # Bucket ids are ints (md5-prefix hex → [0, n_buckets)); the
     # intercept lives at j = n_buckets.
     cnt = (toks.groupBy("doc_id",
-                        F.conv(F.substring(F.md5("w"), 1, feat_hex),
+                        F.conv(F.substring(F.md5("w"), 1, 2),
                                16, 10).cast("int").alias("j"))
            .agg(F.count("*").cast("double").alias("c")))
     ntok = cnt.groupBy("doc_id").agg(F.sum("c").alias("nt"))
@@ -371,8 +371,7 @@ def calibrate_scores(df: DataFrame, *, group_col: str = "source",
 
 def quantile_band_filter(df: DataFrame, *, group_col: str,
                          score_col: str, id_col: str,
-                         lo: float = 0.1, hi: float = 0.9,
-                         n_buckets: int = 512) -> DataFrame:
+                         lo: float = 0.1, hi: float = 0.9) -> DataFrame:
     """Per-group EXACT inter-quantile retention — keep each group's
     middle (lo, hi] score band (trim the worst and the
     suspiciously-best tails per source, the standard quality-prune
@@ -382,17 +381,17 @@ def quantile_band_filter(df: DataFrame, *, group_col: str,
     A row survives iff its within-group ascending rank r (ties
     broken by id) satisfies lo·n < r ≤ hi·n. Rank is a two-level
     prefix sum (the evaluation._rank_sum kernel's shape):
-    scores range-bucket into ≤`n_buckets` ordered buckets per group
+    scores range-bucket into ≤512 ordered buckets per group
     (floor over (s−min)/span is IEEE-monotone, so bucket order
     follows score order and equal scores share a bucket); the
     cross-bucket offset is a `partitionBy(group)` running sum over
-    ≤n_buckets rows per group; the within-bucket rank is a
+    ≤512 rows per group; the within-bucket rank is a
     `partitionBy(group, bucket)` row_number. Every shuffle is keyed
     on (group) or (group, bucket); no partition holds more than one
     bucket of one group.
 
     The two reduction artifacts — per-group bounds (one row per
-    group) and per-(group, bucket) offsets (≤n_buckets rows per
+    group) and per-(group, bucket) offsets (≤512 rows per
     group) — persist (round-13, the _rank_sum idiom), so the FINAL
     ranked pass is the only corpus consumer: one scan, one keyed
     exchange, two broadcast joins against cached model-sized tables
@@ -409,8 +408,8 @@ def quantile_band_filter(df: DataFrame, *, group_col: str,
     span = F.col("__hi") - F.col("__lo")
     bucket = F.when(span > 0,
                     F.least(F.floor((F.col("__s") - F.col("__lo"))
-                                    / span * n_buckets),
-                            F.lit(n_buckets - 1))) \
+                                    / span * 512),
+                            F.lit(511))) \
         .otherwise(F.lit(0)).cast("long")
     b = (base.join(F.broadcast(gb), group_col)
          .select(group_col, id_col, "__s", "__n", bucket.alias("__b")))

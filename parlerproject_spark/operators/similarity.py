@@ -111,6 +111,13 @@ def mahalanobis_outlier_scores(vectors: DataFrame, *, k: int = 50,
             .select(F.col("vid").alias(id_col), "mahal2"))
 
 
+#: LSH hyperplanes per table and hash tables, shared by `knn_lsh`,
+#: `build_lsh_index` and `probe_lsh_index`: an index built with one
+#: family and probed with another would return wrong rows silently.
+LSH_PLANES = 6
+LSH_TABLES = 8
+
+
 def _plane_weight(table: int, plane: int, dim: int) -> float:
     """Deterministic pseudo-random weight in [-1, 1) from md5 —
     reproducible everywhere, no RNG state."""
@@ -172,7 +179,6 @@ def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
 
 
 def knn_lsh(vectors: DataFrame, query: DataFrame, *, dim: int, k: int = 10,
-            num_planes: int = 6, num_tables: int = 8,
             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """ANN cosine top-k: random-hyperplane LSH with multi-probe.
 
@@ -185,19 +191,19 @@ def knn_lsh(vectors: DataFrame, query: DataFrame, *, dim: int, k: int = 10,
     per-element fold at every size measured in r4 — 2k rows 2.2 s vs
     2.6 s, 20k 3.9 vs 13.6, 200k 24.3 vs 138.7 (dim=64, 48 planes).
     Query side: exact signature plus every hamming-1 neighbor
-    (num_planes probes/table) — a few dozen broadcast rows. Exact
+    (LSH_PLANES probes/table) — a few dozen broadcast rows. Exact
     cosine re-rank inside probed buckets only. Recall < 1 by design;
     `knn_bruteforce` is the oracle. Columns: vec_id, sim.
     """
     corpus = _signatures_arrow(
         vectors, vec_col=vec_col, key_cols=[id_col], dim=dim,
-        num_planes=num_planes, num_tables=num_tables) \
+        num_planes=LSH_PLANES, num_tables=LSH_TABLES) \
         .select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig")
     qsig = _signatures_arrow(
         query.select(F.col("q")), vec_col="q", key_cols=[], dim=dim,
-        num_planes=num_planes, num_tables=num_tables)
+        num_planes=LSH_PLANES, num_tables=LSH_TABLES)
     return _lsh_probe_rank(corpus, qsig, vec_col=vec_col, k=k,
-                           num_planes=num_planes)
+                           num_planes=LSH_PLANES)
 
 
 def _lsh_probe_rank(corpus: DataFrame, qsig: DataFrame, *, vec_col: str,
@@ -217,12 +223,12 @@ def _lsh_probe_rank(corpus: DataFrame, qsig: DataFrame, *, vec_col: str,
 
 def knn_ivf(vectors: DataFrame, query: DataFrame, *, k: int = 10,
             num_cells: int = 16, nprobe: int = 4, max_iter: int = 3,
-            train_mod: int | None = 8, round_c: int | None = None,
+            round_c: int | None = None,
             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """IVF (inverted-file) ANN cosine top-k — the scale path next to
     `knn_lsh`.
 
-    Index side: k-means cells fit on the deterministic 1/train_mod
+    Index side: k-means cells fit on the deterministic 1/8
     hash-sample (topics.lloyd_centroids) — cell quality needs only a
     sample, so index training never scans the full corpus; tiny
     inputs fall back to full-table training automatically. Every
@@ -246,7 +252,7 @@ def knn_ivf(vectors: DataFrame, query: DataFrame, *, k: int = 10,
 
     centroids = lloyd_centroids(vectors, k=num_cells, max_iter=max_iter, init="maxmin",
                                 id_col=id_col, vec_col=vec_col,
-                                train_mod=train_mod, round_c=round_c)
+                                train_mod=8, round_c=round_c)
     cent_rows = unit_rows(centroids)
 
     # r14: a single-row query side ranks its top-nprobe cells on the
@@ -306,7 +312,6 @@ def knn_ivf(vectors: DataFrame, query: DataFrame, *, k: int = 10,
 
 
 def build_ivf_index(vectors: DataFrame, path: str, *, num_cells: int = 16,
-                    max_iter: int = 3, train_mod: int | None = 8,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     ) -> list[list[float]]:
     """Materialize the IVF index: assign every vector to its nearest
@@ -315,15 +320,16 @@ def build_ivf_index(vectors: DataFrame, path: str, *, num_cells: int = 16,
     alongside the table).
 
     This is the 100 TB shape `knn_ivf` simulates in one query: train
-    once on a hash-sample, assign once, and let every later probe
-    read only nprobe/num_cells of the data via partition pruning —
-    the scan never touches unprobed cells' files at all.
+    once (3 Lloyd rounds) on a 1/8 hash-sample, assign once, and let
+    every later probe read only nprobe/num_cells of the data via
+    partition pruning — the scan never touches unprobed cells' files
+    at all.
     """
     from parlerproject_spark.operators.topics import _assign, lloyd_centroids
 
-    centroids = lloyd_centroids(vectors, k=num_cells, max_iter=max_iter, init="maxmin",
+    centroids = lloyd_centroids(vectors, k=num_cells, max_iter=3, init="maxmin",
                                 id_col=id_col, vec_col=vec_col,
-                                train_mod=train_mod)
+                                train_mod=8)
     assigned = (_assign(vectors.select(F.col(id_col).alias("vec_id"),
                                        F.col(vec_col)),
                         centroids, id_col="vec_id", vec_col=vec_col)
@@ -370,34 +376,33 @@ def append_ivf_index(vectors: DataFrame, path: str,
 
 
 def build_lsh_index(vectors: DataFrame, path: str, *, dim: int,
-                    num_planes: int = 6, num_tables: int = 8,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     ) -> None:
     """Materialize the LSH index `knn_lsh` simulates per-query: one
     signature row per (vector, hash table), written Parquet
     PARTITIONED BY (tbl, sig) — i.e. the physical layout IS the hash
-    buckets (num_tables × 2^num_planes directories). A probe then
-    reads (1 + num_planes)/2^num_planes of each table's files via
+    buckets (LSH_TABLES × 2^LSH_PLANES directories). A probe then
+    reads (1 + LSH_PLANES)/2^LSH_PLANES of each table's files via
     planning-time partition pruning and never touches the rest.
 
     Signature generation is the Arrow/BLAS map (zero shuffle); the
     only cost beyond the scan is the partitioned write. The plane
     family is derived from (table, plane, dim) md5 — no RNG state —
-    so probes recompute identical planes from parameters alone.
+    so probes recompute identical planes from `dim` alone.
     """
     sig = _signatures_arrow(vectors, vec_col=vec_col, key_cols=[id_col],
-                            dim=dim, num_planes=num_planes,
-                            num_tables=num_tables)
+                            dim=dim, num_planes=LSH_PLANES,
+                            num_tables=LSH_TABLES)
     (sig.select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig")
         .write.mode("overwrite").partitionBy("tbl", "sig").parquet(path))
 
 
 def probe_lsh_index(spark, path: str, query_vec: list[float], *, dim: int,
-                    k: int = 10, num_planes: int = 6, num_tables: int = 8,
+                    k: int = 10,
                     vec_col: str = "embedding") -> DataFrame:
     """Top-k cosine probe against a persisted LSH index. The query's
     signature per table — plus every hamming-1 neighbor (multi-probe)
-    — is computed DRIVER-SIDE (num_tables × num_planes dot products,
+    — is computed DRIVER-SIDE (LSH_TABLES × LSH_PLANES dot products,
     microseconds), so the scan filter is a literal disjunction over
     the (tbl, sig) partition columns: pruning happens at planning
     time and the probe reads only the probed buckets' files.
@@ -405,13 +410,13 @@ def probe_lsh_index(spark, path: str, query_vec: list[float], *, dim: int,
     """
     q = [float(x) for x in query_vec]
     probes: list[tuple[int, int]] = []
-    for t in range(num_tables):
+    for t in range(LSH_TABLES):
         sig = 0
-        for p in range(num_planes):
+        for p in range(LSH_PLANES):
             w = [_plane_weight(t, p, d) for d in range(dim)]
             d_ = sum(a * b for a, b in zip(q, w))
             sig = sig * 2 + (1 if d_ >= 0 else 0)
-        sigs = {sig} | {sig ^ (1 << p) for p in range(num_planes)}
+        sigs = {sig} | {sig ^ (1 << p) for p in range(LSH_PLANES)}
         probes.extend((t, s) for s in sorted(sigs))
 
     by_tbl: dict[int, list[int]] = {}
@@ -460,12 +465,12 @@ def probe_ivf_index(spark, path: str, centroids: list[list[float]],
 # Product quantization -----------------------------------------------------
 
 def train_pq(vectors: DataFrame, *, dim: int, m: int = 8, ksub: int = 16,
-             max_iter: int = 5, sample_rows: int = 4096, round_c: int = 6,
              id_col: str = "vec_id",
              vec_col: str = "embedding") -> list:
     """Train product-quantization codebooks: split the `dim` space
     into `m` equal subspaces and fit `ksub` L2 k-means centroids per
-    subspace on a bounded deterministic sample (orderBy(id) head —
+    subspace (5 Lloyd rounds) on a bounded deterministic sample
+    (orderBy(id) head of 4096 rows —
     same bounded-collect contract as lloyd's init; codebook quality,
     like IVF cell quality, needs only a sample).
 
@@ -479,7 +484,7 @@ def train_pq(vectors: DataFrame, *, dim: int, m: int = 8, ksub: int = 16,
 
     Determinism contract (the lloyd_centroids round_c contract):
     init dedups on EXACT subvector equality and every centroid
-    update rounds to round_c decimals, re-synchronizing float state
+    update rounds to 6 decimals, re-synchronizing float state
     so an independent engine (the DuckDB oracle) replaying the same
     unrolled iterations lands on bit-identical codebooks.
     """
@@ -489,7 +494,7 @@ def train_pq(vectors: DataFrame, *, dim: int, m: int = 8, ksub: int = 16,
     dsub = dim // m
     rows = (vectors.select(F.col(id_col).alias("i"),
                            F.col(vec_col).alias("v"))
-            .orderBy("i").limit(sample_rows).collect())
+            .orderBy("i").limit(4096).collect())
     X = np.array([r["v"] for r in rows], dtype=np.float64)
     books = []
     for s in range(m):
@@ -505,7 +510,7 @@ def train_pq(vectors: DataFrame, *, dim: int, m: int = 8, ksub: int = 16,
                 break
         C = np.array(init + [sub[i % len(sub)]
                              for i in range(ksub - len(init))])
-        for _ in range(max_iter):
+        for _ in range(5):
             d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             a = d2.argmin(axis=1)
             for c in range(ksub):
@@ -513,7 +518,7 @@ def train_pq(vectors: DataFrame, *, dim: int, m: int = 8, ksub: int = 16,
                 if mask.any():
                     mu = sub[mask].mean(axis=0)
                     # SQL round(), not np.round's half-to-even
-                    C[c] = round_half_up(mu, round_c)
+                    C[c] = round_half_up(mu, 6)
         books.append([[float(x) for x in c] for c in C])
     return books
 
@@ -629,7 +634,7 @@ def knn_pq(vectors: DataFrame, query_vec: list, codebooks: list, *,
 
 def build_ivfpq_index(vectors: DataFrame, path: str, *, dim: int,
                       num_cells: int = 16, m: int = 8, ksub: int = 16,
-                      max_iter: int = 3, train_mod: int | None = 8,
+                      train_mod: int | None = 8,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding") -> None:
     """Materialize the combined IVF+PQ index — the FAISS-style
@@ -641,13 +646,14 @@ def build_ivfpq_index(vectors: DataFrame, path: str, *, dim: int,
     JSON sidecar under the same root, so probes need no state beyond
     the path.
 
-    Build cost: one sampled k-means per model (cells, m codebooks),
+    Build cost: one sampled k-means per model (cells: 3 Lloyd rounds
+    on the 1/train_mod hash-sample; m codebooks),
     one assignment + encode pass, one partitioned write."""
     import json as _json
 
     from parlerproject_spark.operators.topics import _assign, lloyd_centroids
 
-    cents = lloyd_centroids(vectors, k=num_cells, max_iter=max_iter, init="maxmin",
+    cents = lloyd_centroids(vectors, k=num_cells, max_iter=3, init="maxmin",
                             id_col=id_col, vec_col=vec_col,
                             train_mod=train_mod)
     books = train_pq(vectors, dim=dim, m=m, ksub=ksub,

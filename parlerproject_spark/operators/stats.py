@@ -108,15 +108,13 @@ def psi_drift(ref: DataFrame, cur: DataFrame, *, key_col: str,
 
 
 def psi_timeline(ref: DataFrame, cur: DataFrame, *, time_col: str,
-                 val_col: str, bins: int = 10,
-                 fmt: str = "yyyy-MM-dd") -> DataFrame:
+                 val_col: str, bins: int = 10) -> DataFrame:
     """Per-period PSI TIMELINE against one fixed reference window
     (round 13) — psi_drift answers "has the distribution moved
     between two snapshots"; production monitoring wants the curve:
-    one PSI value per day (or any date_format period) of the
-    current stream vs the frozen reference, so a drift ONSET is
-    datable and a transient ingest glitch distinguishable from a
-    sustained shift.
+    one PSI value per day (yyyy-MM-dd) of the current stream vs the
+    frozen reference, so a drift ONSET is datable and a transient
+    ingest glitch distinguishable from a sustained shift.
 
     Same binning contract as psi_drift (fixed-width over the
     reference [min, max] — exact IEEE edge arithmetic both engines
@@ -151,7 +149,8 @@ def psi_timeline(ref: DataFrame, cur: DataFrame, *, time_col: str,
              .select(b)
              .groupBy("bin").agg(F.count(F.lit(1)).alias("c_ref")))
     chist = (cur.crossJoin(F.broadcast(edges))
-             .select(F.date_format(F.col(time_col), fmt).alias("period"), b)
+             .select(F.date_format(F.col(time_col), "yyyy-MM-dd")
+                     .alias("period"), b)
              .groupBy("period", "bin")
              .agg(F.count(F.lit(1)).alias("c_cur")))
     periods = chist.groupBy("period").agg(
@@ -244,15 +243,14 @@ POISSON1_CDF = (0.36787944117, 0.73575888234, 0.91969860293,
 
 
 def bootstrap_ci(df: DataFrame, *, key_col: str, val_col: str,
-                 id_col: str, n_replicas: int = 200,
-                 seed: str = "boot-v1") -> DataFrame:
+                 id_col: str, n_replicas: int = 200) -> DataFrame:
     """Percentile-bootstrap confidence interval for the per-key MEAN
     via the POISSON bootstrap (Chamandy et al., Google 2012) — the
     bootstrap that distributes: classical resampling needs n draws
     from a global index (a shuffle per replica); Poisson(1) weights
     are i.i.d. PER ROW, so all `n_replicas` replicas materialize in
     ONE explode over the row stream and aggregate with map-side
-    combine. Weights are deterministic (md5(seed:replica:id) →
+    combine. Weights are deterministic (md5('boot-v1':replica:id) →
     uniform → inverse CDF over literal constants), so the whole
     estimator is engine-reproducible and the oracle replays it.
 
@@ -272,7 +270,7 @@ def bootstrap_ci(df: DataFrame, *, key_col: str, val_col: str,
     """
     reps = F.explode(F.sequence(F.lit(0), F.lit(n_replicas - 1))).alias("r")
     u = (F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit(seed), F.col("r"), F.col(id_col))), 1, 8), 16, 10)
+        ":", F.lit("boot-v1"), F.col("r"), F.col(id_col))), 1, 8), 16, 10)
         .cast("bigint") / F.lit(float(2 ** 32)))
     w = F.lit(9)
     for k in range(len(POISSON1_CDF) - 1, -1, -1):

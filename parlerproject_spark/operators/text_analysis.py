@@ -152,10 +152,10 @@ def language_id(docs: DataFrame, *, text_col: str = "text",
 
 
 def repetition_ratio(docs: DataFrame, *, id_col: str = "doc_id",
-                     text_col: str = "text", n: int = 3) -> DataFrame:
-    """Per-document n-gram repetition ratio — the standard
+                     text_col: str = "text") -> DataFrame:
+    """Per-document trigram repetition ratio — the standard
     boilerplate/spam signal in training-data quality filters
-    (1 - distinct_ngrams/total_ngrams; 0 = no repetition).
+    (1 - distinct_trigrams/total_trigrams; 0 = no repetition).
 
     Pure array expressions inside the scan stage: no explode, no
     shuffle, embarrassingly parallel at any scale.
@@ -164,9 +164,9 @@ def repetition_ratio(docs: DataFrame, *, id_col: str = "doc_id",
     toked = docs.select(F.col(id_col).alias("doc_id"),
                         tokenize(text_col).alias("toks"))
     grams = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - n),
-        lambda i: F.array_join(F.slice(F.col("toks"), i + 1, n), " "))
-    g = toked.filter(F.size("toks") >= n).select("doc_id", grams.alias("g"))
+        F.sequence(F.lit(0), F.size("toks") - 3),
+        lambda i: F.array_join(F.slice(F.col("toks"), i + 1, 3), " "))
+    g = toked.filter(F.size("toks") >= 3).select("doc_id", grams.alias("g"))
     rep = F.round(1.0 - F.size(F.array_distinct("g")) / F.size("g"), 6)
     return g.select("doc_id", rep.alias("rep_ratio"))
 
@@ -219,7 +219,7 @@ def token_entropy(docs: DataFrame, *, id_col: str = "doc_id",
 
 
 def line_dedup(docs: DataFrame, *, id_col: str = "doc_id",
-               text_col: str = "text", sep: str = "\n",
+               text_col: str = "text",
                max_line_df: int = 2) -> DataFrame:
     """Line-level corpus dedup (the RefinedWeb/Falcon boilerplate
     pass): a LINE that appears in more than `max_line_df` documents
@@ -236,7 +236,7 @@ def line_dedup(docs: DataFrame, *, id_col: str = "doc_id",
     both keyed well. Columns: <id_col>, clean_text, n_lines_kept.
     """
     lines = (docs.select(F.col(id_col).alias("doc_id"),
-                         F.posexplode(F.split(F.col(text_col), sep))
+                         F.posexplode(F.split(F.col(text_col), "\n"))
                          .alias("pos", "line"))
              .filter(F.length(F.trim("line")) > 0))
     keyed = lines.repartition(F.md5("line"))
@@ -253,7 +253,7 @@ def line_dedup(docs: DataFrame, *, id_col: str = "doc_id",
             .agg(F.array_join(
                     F.transform(F.array_sort(F.collect_list(
                         F.struct("pos", "line"))), lambda s: s["line"]),
-                    sep).alias("clean_text"),
+                    "\n").alias("clean_text"),
                  F.count("*").cast("long").alias("n_lines_kept"))
             .withColumnRenamed("doc_id", id_col))
 
@@ -543,8 +543,8 @@ def chunk_documents(docs: DataFrame, *, id_col: str = "doc_id",
                     F.array_join(chunk, " ").alias("chunk_text")))
 
 
-def corpus_zipf_stats(docs: DataFrame, *, text_col: str = "text",
-                      slope_top: int = 1000) -> DataFrame:
+def corpus_zipf_stats(docs: DataFrame, *,
+                      text_col: str = "text") -> DataFrame:
     """One-row corpus health diagnostic: Zipf slope + unigram
     entropy + vocabulary mass.
 
@@ -557,7 +557,7 @@ def corpus_zipf_stats(docs: DataFrame, *, text_col: str = "text",
 
     Plan: ONE exploded token count (map-side partial agg), a top-k
     cut (TakeOrdered, never a global sort) for the slope fit — the
-    fit uses the `slope_top` head because Zipf linearity holds in
+    fit uses the top-1000 head because Zipf linearity holds in
     the head while the low-frequency tail is a ties staircase — and
     a single-row regr_slope/entropy aggregate over bounded (k) and
     corpus-vocab-sized inputs respectively. Everything downstream of
@@ -576,7 +576,7 @@ def corpus_zipf_stats(docs: DataFrame, *, text_col: str = "text",
                     F.sum("tf").cast("long").alias("total_tokens"))
     w = Window.orderBy(F.col("tf").desc(), F.col("term").asc())
     head = (tf.orderBy(F.col("tf").desc(), F.col("term").asc())
-            .limit(slope_top)
+            .limit(1000)
             .withColumn("rank", F.row_number().over(w)))
     slope = head.agg(F.round(
         F.regr_slope(F.log("tf"), F.log("rank")), 6).alias("zipf_slope"))
@@ -590,8 +590,8 @@ def corpus_zipf_stats(docs: DataFrame, *, text_col: str = "text",
 
 
 def stupid_backoff_score(docs: DataFrame, train: DataFrame, *,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         alpha: float = 0.4) -> DataFrame:
+                         id_col: str = "doc_id",
+                         text_col: str = "text") -> DataFrame:
     """Trigram stupid-backoff LM score per document, trained on a
     separate corpus split (Brants et al. 2007 — the LM Google used
     at web scale precisely BECAUSE it's count-based and
@@ -599,7 +599,7 @@ def stupid_backoff_score(docs: DataFrame, train: DataFrame, *,
     the "probabilities" are scores S, not a distribution):
 
         S(w3|w1w2) = c(w1w2w3)/c(w1w2)        if trigram seen
-                   = α · c(w2w3)/c(w2)         elif bigram seen
+                   = α · c(w2w3)/c(w2)         elif bigram seen (α = 0.4)
                    = α² · (c(w3)+1)/(N+V)      else (add-one floor so
                                                 unseen words stay
                                                 finite — documented
@@ -670,8 +670,8 @@ def stupid_backoff_score(docs: DataFrame, train: DataFrame, *,
                   F.when(F.col("c3").isNotNull(),
                          F.col("c3") / F.col("c2"))
                   .when(F.col("c23").isNotNull(),
-                        alpha * F.col("c23") / F.col("c1w2"))
-                  .otherwise(alpha * alpha
+                        0.4 * F.col("c23") / F.col("c1w2"))
+                  .otherwise(0.4 * 0.4
                              * (F.coalesce(F.col("c1w3"), F.lit(0)) + 1.0)
                              / (F.col("N") + F.col("V")))).alias("lp")))
     return (scored.groupBy("doc_id")
@@ -681,8 +681,7 @@ def stupid_backoff_score(docs: DataFrame, train: DataFrame, *,
 
 
 def cooccurrence_edges(docs: DataFrame, *, text_col: str = "text",
-                       window: int = 2, min_len: int = 3,
-                       min_count: int = 2) -> DataFrame:
+                       window: int = 2, min_count: int = 2) -> DataFrame:
     """Undirected word co-occurrence graph: an edge (a, b, w) for
     every unordered token pair appearing within `window` positions
     in a document, weighted by corpus-wide co-occurrence count.
@@ -691,7 +690,7 @@ def cooccurrence_edges(docs: DataFrame, *, text_col: str = "text",
     per offset 1..window, the trigram-slice pattern — no self-join
     on position), so the only exchange is the final (a, b) count
     aggregation with map-side partial combine. Tokens shorter than
-    `min_len` are dropped BEFORE pairing (the cheap deterministic
+    3 characters are dropped BEFORE pairing (the cheap deterministic
     stop-word surrogate) and edges rarer than `min_count` are cut —
     both bound the graph: vocabulary-scale nodes, co-occurrence-
     support edges, regardless of corpus size.
@@ -701,7 +700,7 @@ def cooccurrence_edges(docs: DataFrame, *, text_col: str = "text",
 
     toks = docs.select(
         F.filter(tokenize(text_col),
-                 lambda t: F.length(t) >= min_len).alias("ts"))
+                 lambda t: F.length(t) >= 3).alias("ts"))
     pair_cols = []
     for off in range(1, window + 1):
         pair_cols.append(F.expr(
@@ -717,9 +716,7 @@ def cooccurrence_edges(docs: DataFrame, *, text_col: str = "text",
 
 
 def textrank_keywords(docs: DataFrame, *, text_col: str = "text",
-                      window: int = 2, min_len: int = 3,
-                      min_count: int = 2, iters: int = 3,
-                      damping: float = 0.85,
+                      window: int = 2, min_count: int = 2,
                       top_k: int = 25) -> DataFrame:
     """Corpus-level TextRank keywords (Mihalcea & Tarau 2004):
     weighted PageRank over the word co-occurrence graph, top-k terms
@@ -727,8 +724,9 @@ def textrank_keywords(docs: DataFrame, *, text_col: str = "text",
 
     Composition, not new machinery: cooccurrence_edges builds the
     bounded word graph, graph.pagerank(weight_col="w") runs the
-    fixed-iteration weighted rank (each undirected edge enters both
-    directions, so the random walk is symmetric), and the cut is a
+    fixed-iteration weighted rank (3 iterations, damping 0.85; each
+    undirected edge enters both directions, so the random walk is
+    symmetric), and the cut is a
     TakeOrdered top-k with (rank, term) tie-break. Everything
     downstream of the token count is vocabulary-scale.
     Columns: term, rank (round 6).
@@ -736,27 +734,25 @@ def textrank_keywords(docs: DataFrame, *, text_col: str = "text",
     from parlerproject_spark.operators.graph import pagerank
 
     und = cooccurrence_edges(docs, text_col=text_col, window=window,
-                             min_len=min_len, min_count=min_count)
+                             min_count=min_count)
     sym = (und.select(F.col("a").alias("src"), F.col("b").alias("dst"),
                       "w")
            .unionAll(und.select(F.col("b").alias("src"),
                                 F.col("a").alias("dst"), "w")))
-    pr = pagerank(sym, iters=iters, damping=damping, weight_col="w")
+    pr = pagerank(sym, weight_col="w")
     return (pr.select(F.col("node").alias("term"), "rank")
             .orderBy(F.col("rank").desc(), F.col("term").asc())
             .limit(top_k))
 
 
 def fim_transform(docs: DataFrame, *, id_col: str = "doc_id",
-                  text_col: str = "text", seed: str = "fim-v1",
-                  pre_tok: str = "<PRE>", suf_tok: str = "<SUF>",
-                  mid_tok: str = "<MID>") -> DataFrame:
+                  text_col: str = "text") -> DataFrame:
     """Fill-in-the-middle transformation (Bavarian et al. 2022) in
     PSM order: split each document at two deterministic positions
     into (prefix, middle, suffix) and emit
     `<PRE>prefix<SUF>suffix<MID>middle` — the data-side transform
     that teaches a causal LM to infill. Split points are md5-derived
-    from (seed, id) — reruns and the SQL oracle produce the identical
+    from ('fim-v1', id) — reruns and the SQL oracle produce the identical
     corpus, the same determinism contract as every sampling op here.
 
     Pure Column algebra (two hash mods + three substrings + concat)
@@ -764,7 +760,8 @@ def fim_transform(docs: DataFrame, *, id_col: str = "doc_id",
     any scale. Columns: <id_col>, n_chars, cut_a, cut_b, fim_text.
     """
     L = F.length(F.col(text_col))
-    h = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
+    h = F.md5(F.concat_ws(":", F.lit("fim-v1"),
+                          F.col(id_col).cast("string")))
     h1 = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint")
     h2 = F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint")
     a, b = h1 % (L + 1), h2 % (L + 1)
@@ -781,8 +778,8 @@ def fim_transform(docs: DataFrame, *, id_col: str = "doc_id",
         F.col(id_col), L.alias("n_chars"),
         F.col("__lo").cast("long").alias("cut_a"),
         F.col("__hi").cast("long").alias("cut_b"),
-        F.concat(F.lit(pre_tok), prefix, F.lit(suf_tok), suffix,
-                 F.lit(mid_tok), middle).alias("fim_text"))
+        F.concat(F.lit("<PRE>"), prefix, F.lit("<SUF>"), suffix,
+                 F.lit("<MID>"), middle).alias("fim_text"))
 
 
 def token_js_divergence(docs: DataFrame, *, group_col: str = "source",
@@ -1026,8 +1023,7 @@ def sentence_chunks(docs: DataFrame, *, budget_tokens: int = 64,
 
 
 def format_signals(docs: DataFrame, *, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   code_threshold: float = 0.08) -> DataFrame:
+                   text_col: str = "text") -> DataFrame:
     """Per-document structural FORMAT signals + a code/prose router
     label — the pretraining-mixture router that decides which
     tokenizer / quality ruleset / mixture bucket a document enters
@@ -1047,7 +1043,7 @@ def format_signals(docs: DataFrame, *, id_col: str = "doc_id",
         {}();=<>[] that natural prose barely uses,
       - code_score = 2·punct_code + symbol_ratio + indent_ratio/2
         (fixed weights, documented, deterministic), label = 'code'
-        iff code_score >= code_threshold else 'prose'.
+        iff code_score >= 0.08 else 'prose'.
 
     Zero-shuffle array/regex algebra inside the scan stage — every
     signal is a ratio of within-doc INTEGER counts (plus one
@@ -1089,7 +1085,7 @@ def format_signals(docs: DataFrame, *, id_col: str = "doc_id",
         F.round(symbol_ratio, 6).alias("symbol_ratio"),
         F.round(digit_ratio, 6).alias("digit_ratio"),
         F.round(score, 6).alias("code_score"),
-        F.when(score >= code_threshold, F.lit("code"))
+        F.when(score >= 0.08, F.lit("code"))
         .otherwise(F.lit("prose")).alias("label"))
 
 

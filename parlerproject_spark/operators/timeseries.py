@@ -112,12 +112,10 @@ def interpolate_grid(events: DataFrame, *, key_col: str = "user_id",
 
 def cusum_changepoints(events: DataFrame, *, key_col: str = "user_id",
                        ts_col: str = "ts", val_col: str = "value",
-                       order_tiebreak: str = "event_id",
-                       k: float = 0.5, h: float = 5.0,
-                       min_events: int = 5) -> DataFrame:
+                       k: float = 0.5, h: float = 5.0) -> DataFrame:
     """One-sided CUSUM drift statistic per key (Page 1954):
     standardize the key's value sequence, then fold
-    s_i = max(0, s_{i-1} + z_i - k) over time order; report the
+    s_i = max(0, s_{i-1} + z_i - k) over (ts, event_id) order; report the
     peak statistic, where it peaked, and how often it crossed `h`.
 
     The recursion is inherently sequential PER KEY — no window
@@ -127,18 +125,17 @@ def cusum_changepoints(events: DataFrame, *, key_col: str = "user_id",
     a single JVM `aggregate` higher-order function: one groupBy
     exchange, zero Python, state O(1) per element. Standardization
     (mean/std) happens in-array on the same sorted list, so the
-    whole operator is one exchange end to end. Keys with < 
-    `min_events` rows or zero variance carry no drift signal and
-    are dropped.
+    whole operator is one exchange end to end. Keys with < 5 rows
+    or zero variance carry no drift signal and are dropped.
     Columns: <key>, n_events, max_cusum (round 6), peak_idx
     (1-based, first peak wins), n_alarms (s > h).
     """
     rows = F.sort_array(F.collect_list(F.struct(
         F.col(ts_col).alias("t"),
-        F.col(order_tiebreak).alias("tb"),
+        F.col("event_id").alias("tb"),
         F.col(val_col).cast("double").alias("v"))))
     per = (events.groupBy(key_col).agg(rows.alias("rs"))
-           .filter(F.size("rs") >= min_events)
+           .filter(F.size("rs") >= 5)
            .withColumn("n", F.size("rs"))
            .withColumn("mu", F.expr(
                "aggregate(rs, 0.0d, (a, x) -> a + x.v) / n"))
@@ -241,9 +238,9 @@ def linear_trend(events: DataFrame, *, key_col: str = "user_id",
 
 def diff_in_diff(events: DataFrame, *, unit_col: str = "user_id",
                  ts_col: str = "ts", value_col: str = "value",
-                 cutover: str = "2024-01-15",
                  treat_expr=None) -> DataFrame:
-    """Difference-in-differences estimate for a cutover-style launch:
+    """Difference-in-differences estimate for a launch at the
+    2024-01-15 cutover:
     did = (ȳ_treat,post − ȳ_treat,pre) − (ȳ_ctrl,post − ȳ_ctrl,pre),
     the parallel-trends-adjusted effect when randomization happened
     at the UNIT level but exposure started at a point in time.
@@ -262,7 +259,7 @@ def diff_in_diff(events: DataFrame, *, unit_col: str = "user_id",
         treat_expr = (stable_hash31(F.col(unit_col).cast("string")) % 2
                       ).cast("int")
     post = (F.col(ts_col).cast("timestamp")
-            >= F.lit(cutover).cast("timestamp")).cast("int")
+            >= F.lit("2024-01-15").cast("timestamp")).cast("int")
     cells = (events
              .select(treat_expr.alias("__t"), post.alias("__p"),
                      F.col(value_col).cast("double").alias("__y"))
@@ -400,10 +397,9 @@ def theil_sen_trend(events: DataFrame, *, key_col: str = "user_id",
 
 def autocorrelation(events: DataFrame, *, key_col: str = "user_id",
                     ts_col: str = "ts", value_col: str = "value",
-                    order_col: str = "event_id",
-                    max_lag: int = 3) -> DataFrame:
+                    order_col: str = "event_id") -> DataFrame:
     """Per-key sample autocorrelation function (ACF) at lags
-    1..max_lag — the standard serial-dependence diagnostic: r_k ≈ 0
+    1..3 — the standard serial-dependence diagnostic: r_k ≈ 0
     means the series is white noise around its mean (metrics safe to
     treat i.i.d.), r_1 near 1 flags strong persistence (sessions,
     ramps), alternating-sign r_k flags oscillation. r_k uses the
@@ -421,7 +417,7 @@ def autocorrelation(events: DataFrame, *, key_col: str = "user_id",
     series) have no defined ACF and emit NULL r_k (try_divide), not
     a division error.
 
-    Columns: <key_col>, n, r1..r<max_lag> (round 6).
+    Columns: <key_col>, n, r1, r2, r3 (round 6).
     """
     kc = F.col(key_col)
     w = (Window.partitionBy(key_col)
@@ -434,29 +430,27 @@ def autocorrelation(events: DataFrame, *, key_col: str = "user_id",
     lags = base.select(
         key_col, "__xc",
         *[F.lag("__xc", k).over(w).alias(f"__l{k}")
-          for k in range(1, max_lag + 1)])
+          for k in range(1, 4)])
     aggs = [F.count("*").cast("long").alias("n"),
             F.sum(F.col("__xc") * F.col("__xc")).alias("__den")]
-    for k in range(1, max_lag + 1):
+    for k in range(1, 4):
         aggs.append(F.sum(F.col("__xc") * F.col(f"__l{k}"))
                     .alias(f"__num{k}"))
     out = lags.groupBy(key_col).agg(*aggs)
     return out.select(
         key_col, "n",
         *[F.round(F.try_divide(F.col(f"__num{k}"), F.col("__den")), 6)
-          .alias(f"r{k}") for k in range(1, max_lag + 1)])
+          .alias(f"r{k}") for k in range(1, 4)])
 
 
 def seasonal_decompose(events: DataFrame, *, time_col: str = "ts",
-                       value_col: str = "value",
-                       period: int = 7,
-                       anomaly_z: float = 2.0) -> DataFrame:
+                       value_col: str = "value") -> DataFrame:
     """Additive seasonal decomposition of the DAILY total series
     (round 13 — the classical moving-average decomposition every
     monitoring stack runs before alerting): total_t = trend_t
-    (centered (2·half+1)-day moving average, half = period//2)
+    (centered 7-day moving average)
     + seasonal_{dow(t)} (mean detrended value per day-of-week slot)
-    + residual_t, with |residual| > anomaly_z · stddev_pop(residual)
+    + residual_t, with |residual| > 2 · stddev_pop(residual)
     flagged. Decomposing before thresholding is what separates "it's
     Saturday" from a real incident — raw-total alerts fire every
     weekend.
@@ -473,7 +467,6 @@ def seasonal_decompose(events: DataFrame, *, time_col: str = "ts",
     is_anomaly (boolean on the ROUNDED residual so engines agree
     at the boundary).
     """
-    half = period // 2
     daily = (events.select(
                  F.date_format(F.col(time_col), "yyyy-MM-dd")
                  .alias("period"),
@@ -482,7 +475,7 @@ def seasonal_decompose(events: DataFrame, *, time_col: str = "ts",
              .groupBy("period", "dow")
              .agg(F.round(F.sum("v"), 6).alias("total")))
     w_ma = (Window.orderBy("period")
-            .rowsBetween(-half, half))
+            .rowsBetween(-3, 3))
     with_trend = daily.withColumn(
         "trend", F.round(F.avg("total").over(w_ma), 6))
     detr = with_trend.withColumn(
@@ -498,6 +491,6 @@ def seasonal_decompose(events: DataFrame, *, time_col: str = "ts",
     return (resid.withColumn(
                 "is_anomaly",
                 F.abs(F.col("residual")) > F.round(
-                    F.lit(anomaly_z) * sd, 6))
+                    F.lit(2.0) * sd, 6))
             .select("period", "dow", "total", "trend", "seasonal",
                     "residual", "is_anomaly"))

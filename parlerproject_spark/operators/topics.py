@@ -301,7 +301,6 @@ def reduce_outliers(assigned: DataFrame, vectors: DataFrame,
 def fit_topics(docs: DataFrame, vectors: DataFrame, *, k: int = 8,
                max_iter: int = 5, top_n: int = 10,
                doc_id_col: str = "doc_id", vec_id_col: str = "vec_id",
-               train_mod: int | None = None,
                outlier_threshold: float | None = None,
                method: str = "kmeans",
                density_kwargs: dict | None = None,
@@ -321,8 +320,8 @@ def fit_topics(docs: DataFrame, vectors: DataFrame, *, k: int = 8,
     (density.sampled_density_assign) — the HDBSCAN-analogue half,
     closest in spirit to the reference's actual clusterer (arbitrary
     cluster shapes, first-class noise); `density_kwargs` passes
-    through to it, and `outlier_threshold`/`k`/`max_iter`/
-    `train_mod` are kmeans-only.
+    through to it, and `outlier_threshold`/`k`/`max_iter` are
+    kmeans-only (k-means trains on the full table).
 
     projection="landmark" runs the clusterer in the anchor-
     similarity space of pca.landmark_projection instead of the raw
@@ -345,7 +344,7 @@ def fit_topics(docs: DataFrame, vectors: DataFrame, *, k: int = 8,
             vectors, **{"id_col": vec_id_col, **(density_kwargs or {})})
     elif method == "kmeans":
         assignment = kmeans_topics(vectors, k=k, max_iter=max_iter,
-                                   id_col=vec_id_col, train_mod=train_mod,
+                                   id_col=vec_id_col,
                                    outlier_threshold=outlier_threshold)
     else:
         raise ValueError(f"unknown method: {method}")

@@ -69,11 +69,11 @@ def _viterbi(word: str, logp: dict[str, float],
     return list(best[n][2]) if best[n] is not None else None
 
 
-def seed_pieces(words: DataFrame, *, max_piece_len: int = 6,
-                n_seed: int = 300) -> DataFrame:
+def seed_pieces(words: DataFrame, *, max_piece_len: int = 6) -> DataFrame:
     """Candidate piece table from the (word, freq) table: every
     substring up to max_piece_len, scored Σ freq·len over all its
-    occurrences. Chars are marked so pruning can never drop them.
+    occurrences. Chars are marked so pruning can never drop them;
+    the caller keeps the top-scoring multi-char pieces.
     Columns: piece, score (bigint), is_char."""
     subs = F.expr(f"""
       flatten(transform(sequence(1, length(word)),
@@ -113,12 +113,12 @@ def _em_counts(words: DataFrame, vocab: dict[str, float],
 
 def train_unigram(docs: DataFrame, *, vocab_size: int = 120,
                   n_iters: int = 3, max_piece_len: int = 6,
-                  n_seed: int = 300, round_c: int = 6,
+                  n_seed: int = 300,
                   text_col: str = "text") -> list[tuple[str, float]]:
     """Train the unigram LM; returns [(piece, logp)] sorted by piece.
     Only piece tables (≤ n_seed + alphabet rows) cross the driver.
 
-    Determinism contract (round 9): log-probs re-round to `round_c`
+    Determinism contract (round 9): log-probs re-round to 6
     decimals at seeding and after every M-step — the lloyd/PQ
     re-sync contract. Viterbi then compares sums of identical
     rounded doubles, so an independent engine replaying the same
@@ -134,8 +134,7 @@ def train_unigram(docs: DataFrame, *, vocab_size: int = 120,
                  .limit(n_seed))
         pool = chars.unionByName(multi).collect()
         total0 = sum(r["score"] for r in pool)
-        vocab = {r["piece"]: round_half_up(math.log(r["score"] / total0),
-                                           round_c)
+        vocab = {r["piece"]: round_half_up(math.log(r["score"] / total0), 6)
                  for r in pool}
 
         for _ in range(n_iters):
@@ -151,7 +150,7 @@ def train_unigram(docs: DataFrame, *, vocab_size: int = 120,
                 if len(p) == 1:
                     new[p] = max(counts.get(p, 0), 1)
             total = sum(new.values())
-            vocab = {p: round_half_up(math.log(c / total), round_c)
+            vocab = {p: round_half_up(math.log(c / total), 6)
                      for p, c in new.items()}
         return sorted(vocab.items())
     finally:

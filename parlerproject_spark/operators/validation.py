@@ -240,15 +240,14 @@ def infer_expectations(ref: DataFrame, cols: Sequence[str], *,
     return rules
 
 
-def auto_gate(ref: DataFrame, cur: DataFrame, cols: Sequence[str], *,
-              set_card_max: int = 20, spark=None) -> DataFrame:
+def auto_gate(ref: DataFrame, cur: DataFrame,
+              cols: Sequence[str]) -> DataFrame:
     """profile → rules → gate, composed: derive an expectation suite
     from a reference snapshot (`infer_expectations`) and evaluate it
     against the current snapshot (`expect_suite`). Cost = one profile
     pass + one bounded parameter agg over the reference, then the
     expect_suite single-aggregate pass over the current snapshot."""
-    return expect_suite(cur, infer_expectations(
-        ref, cols, set_card_max=set_card_max), spark=spark)
+    return expect_suite(cur, infer_expectations(ref, cols))
 
 
 def validation_sink(stream_df: DataFrame, rules: Sequence[Expectation],

@@ -67,14 +67,21 @@ def codegen_stage_count(df: DataFrame) -> int:
     return len(set(re.findall(r"\*\((\d+)\)", final_plan(df))))
 
 
-def exchange_count(df: DataFrame) -> int:
-    """DISTINCT shuffle exchanges in the final plan — the number to
-    minimize. Executes the frame. Distinct by plan_id: the plan
-    string re-prints shared/cached subtrees once per reference, so a
-    raw findall multiply-counts the same physical exchange (see
-    bench._shuffle_count)."""
-    text = final_plan(df)
+def exchange_count(plan: str) -> int:
+    """DISTINCT shuffle exchanges in a plan string (`executed_plan`
+    for the exchanges a query schedules, `final_plan` for the ones
+    AQE kept) — the number to minimize. Broadcast exchanges are not
+    shuffles and are not counted.
+
+    Distinct by plan_id, not raw line count: the plan string
+    re-prints a shared subtree once per reference (and an
+    InMemoryRelation re-prints its entire cached child plan at every
+    cache reference), so a raw findall over a plan with persisted/
+    shared frames multiply-counts the same physical exchange — the
+    r6 corpus_refresh "160 shuffles" was ~19 real exchanges printed
+    ~8x. A plan printed without plan ids falls back to the raw
+    count."""
     ids = re.findall(r"Exchange (?:hashpartitioning|rangepartitioning|"
                      r"RoundRobinPartitioning|SinglePartition)"
-                     r".*?\[plan_id=(\d+)\]", text)
-    return len(set(ids)) if ids else len(re.findall(r"\bExchange ", text))
+                     r".*?\[plan_id=(\d+)\]", plan)
+    return len(set(ids)) if ids else len(re.findall(r"\bExchange ", plan))

@@ -18,6 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Bucket edges shared by `value_bucket_shares` (the reference) and
+#: `batch_psi_gate` (the batch it is compared against).
+PSI_EDGES = (10.0, 20.0, 40.0, 80.0)
+
 
 def with_watermark(df: DataFrame, ts_col: str = "ts",
                    delay: str = "10 minutes") -> DataFrame:
@@ -31,22 +35,22 @@ def with_watermark(df: DataFrame, ts_col: str = "ts",
             .withWatermark(ts_col, delay))
 
 
-def tumbling_counts(df: DataFrame, *, ts_col: str = "ts", width: str = "1 hour",
+def tumbling_counts(df: DataFrame, *, ts_col: str = "ts",
                     keys: tuple[str, ...] = ("event_type",)) -> DataFrame:
-    """Non-overlapping event-time windows → count + value sum.
+    """Non-overlapping 1-hour event-time windows → count + value sum.
     Columns: window_start, *keys, cnt, total_value."""
-    return (df.groupBy(F.window(ts_col, width).alias("w"), *keys)
+    return (df.groupBy(F.window(ts_col, "1 hour").alias("w"), *keys)
             .agg(F.count("*").alias("cnt"),
                  F.round(F.sum("value"), 4).alias("total_value"))
             .select(F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss")
                     .alias("window_start"), *keys, "cnt", "total_value"))
 
 
-def sliding_counts(df: DataFrame, *, ts_col: str = "ts", width: str = "1 hour",
-                   slide: str = "30 minutes") -> DataFrame:
-    """Overlapping windows (each event lands in width/slide windows).
+def sliding_counts(df: DataFrame, *, ts_col: str = "ts") -> DataFrame:
+    """Overlapping 1-hour windows sliding by 30 minutes (each event
+    lands in two windows).
     Columns: window_start, cnt."""
-    return (df.groupBy(F.window(ts_col, width, slide).alias("w"))
+    return (df.groupBy(F.window(ts_col, "1 hour", "30 minutes").alias("w"))
             .agg(F.count("*").alias("cnt"))
             .select(F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss")
                     .alias("window_start"), "cnt"))
@@ -78,11 +82,11 @@ def read_event_stream(spark, path: str, schema) -> DataFrame:
             .parquet(path))
 
 
-def to_memory_sink(df: DataFrame, name: str, *, mode: str = "complete"):
+def to_memory_sink(df: DataFrame, name: str):
     """Test/debug sink: materialize a streaming aggregate into an
-    in-memory table. Returns the StreamingQuery."""
+    in-memory table in complete mode. Returns the StreamingQuery."""
     return (df.writeStream.format("memory").queryName(name)
-            .outputMode(mode).trigger(availableNow=True).start())
+            .outputMode("complete").trigger(availableNow=True).start())
 
 
 def dedup_events(df: DataFrame, *, key_cols: tuple[str, ...] = ("event_id",),
@@ -114,10 +118,10 @@ def foreach_batch_sink(df: DataFrame, write_fn, *, checkpoint: str):
 
 
 def view_to_purchase_joins(views: DataFrame, purchases: DataFrame, *,
-                           ts_col: str = "ts", within: str = "1 hour",
+                           ts_col: str = "ts",
                            key: str = "user_id") -> DataFrame:
     """Stream-stream inner join: purchases matched to a preceding
-    view by the same user within `within`. On streams BOTH sides
+    view by the same user within 1 hour. On streams BOTH sides
     must carry watermarks (passed in pre-watermarked) and the join
     condition must bound event time on both ends — that bound is
     what lets Spark expire buffered state instead of holding each
@@ -132,7 +136,7 @@ def view_to_purchase_joins(views: DataFrame, purchases: DataFrame, *,
     cond = ((F.col("v_user") == F.col("p_user"))
             & (F.col("purchase_ts") >= F.col("view_ts"))
             & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(
-                f"INTERVAL {within}")))
+                "INTERVAL 1 hour")))
     return (v.join(p, cond)
             .select(F.col("v_user").alias(key),
                     F.date_format("view_ts", "yyyy-MM-dd HH:mm:ss")
@@ -160,12 +164,20 @@ def enrich_with_dim(events: DataFrame, dim: DataFrame, *,
     return events.join(F.broadcast(dim), key_col, how)
 
 
+def _psi_bucket(value_col: str):
+    """Bucket index 0..len(PSI_EDGES) of a value: the first edge it
+    is below, else the last bucket."""
+    v = F.col(value_col).cast("double")
+    bucket = F.lit(len(PSI_EDGES))
+    for i, e in reversed(list(enumerate(PSI_EDGES))):
+        bucket = F.when(v < e, F.lit(i)).otherwise(bucket)
+    return bucket
+
+
 def batch_psi_gate(events: DataFrame, ref_shares: DataFrame, *,
-                   value_col: str = "value",
-                   edges: tuple[float, ...] = (10.0, 20.0, 40.0, 80.0),
-                   alert_threshold: float = 0.2) -> DataFrame:
+                   value_col: str = "value") -> DataFrame:
     """Per-micro-batch population-stability gate: bucket the batch's
-    values against fixed edges, compare shares to a broadcast
+    values against the fixed PSI_EDGES, compare shares to a broadcast
     reference distribution, and emit one PSI row per trigger —
     the streaming ingest-drift alarm (run inside foreachBatch; on a
     batch frame it is the one-shot audit the oracle replays).
@@ -173,19 +185,16 @@ def batch_psi_gate(events: DataFrame, ref_shares: DataFrame, *,
     PSI = Σ (p_b − q_b)·ln(p_b / q_b) over buckets, with the
     standard 1e-6 floor on both shares so empty buckets stay finite.
     One map-side-combined bucket count + a ≤|edges|+1-row broadcast
-    join; nothing above bucket granularity moves.
+    join; nothing above bucket granularity moves. The alert fires at
+    PSI > 0.2.
 
-    `ref_shares`: (bucket, q) — one row per bucket 0..len(edges)
+    `ref_shares`: (bucket, q) — one row per bucket 0..len(PSI_EDGES)
     (it is the spine the batch counts left-join onto, so it must
     cover every bucket), q summing to 1. An empty batch reports
     n=0 and alert=false (no evidence is not drift).
     Columns out: n, psi, alert.
     """
-    v = F.col(value_col).cast("double")
-    bucket = F.lit(len(edges))
-    for i, e in reversed(list(enumerate(edges))):
-        bucket = F.when(v < e, F.lit(i)).otherwise(bucket)
-    cnt = (events.select(bucket.alias("bucket"))
+    cnt = (events.select(_psi_bucket(value_col).alias("bucket"))
            .groupBy("bucket").agg(F.count("*").alias("__c")))
     tot = cnt.agg(F.sum("__c").cast("double").alias("__t"))
     c = F.coalesce(F.col("__c"), F.lit(0))
@@ -198,24 +207,19 @@ def batch_psi_gate(events: DataFrame, ref_shares: DataFrame, *,
                  F.round(F.sum("__term"), 6).alias("psi"))
             .withColumn("alert",
                         (F.col("n") > 0)
-                        & (F.col("psi") > alert_threshold)))
+                        & (F.col("psi") > 0.2)))
 
 
-def value_bucket_shares(df: DataFrame, *, value_col: str = "value",
-                        edges: tuple[float, ...] = (10.0, 20.0, 40.0,
-                                                    80.0)) -> DataFrame:
+def value_bucket_shares(df: DataFrame, *,
+                        value_col: str = "value") -> DataFrame:
     """Reference-distribution builder for batch_psi_gate: bucket
-    shares over the FULL spine 0..len(edges) (missing buckets
+    shares over the FULL spine 0..len(PSI_EDGES) (missing buckets
     zero-filled, so the gate's left-join spine requirement holds).
     Columns: bucket, q."""
-    v = F.col(value_col).cast("double")
-    bucket = F.lit(len(edges))
-    for i, e in reversed(list(enumerate(edges))):
-        bucket = F.when(v < e, F.lit(i)).otherwise(bucket)
-    cnt = (df.select(bucket.alias("bucket"))
+    cnt = (df.select(_psi_bucket(value_col).alias("bucket"))
            .groupBy("bucket").agg(F.count("*").alias("__c")))
     tot = cnt.agg(F.sum("__c").cast("double").alias("__t"))
-    spine = (df.sparkSession.range(len(edges) + 1)
+    spine = (df.sparkSession.range(len(PSI_EDGES) + 1)
              .select(F.col("id").cast("int").alias("bucket")))
     return (spine.join(F.broadcast(cnt), "bucket", "left")
             .crossJoin(F.broadcast(tot))

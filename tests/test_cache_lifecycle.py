@@ -11,6 +11,7 @@ boundaries (tools/check_oracle.py does) cannot accumulate caches.
 from __future__ import annotations
 
 import parlerproject_spark.queries as Q
+from parlerproject_spark import caching
 from parlerproject_spark.caching import cached_rdd_count, release_all
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -41,6 +42,21 @@ def test_release_all_drops_every_pinned_relation(spark):
     assert released >= 1
     assert cached_rdd_count(spark) == 0, (
         "release_all left cached relations behind")
+
+
+def test_release_all_destroys_partner_broadcast(spark):
+    """Exact-mode pair scoring ships its partner matrix as a
+    SparkContext broadcast; once the query has run, release_all must
+    destroy it on the driver and the executors instead of leaving it
+    pinned until GC."""
+    release_all(spark)
+    rows = Q.queries()["embedding_near_dup_pairs"](spark, SF_DIR).collect()
+    assert rows
+    pending = list(caching._BROADCASTS.get(spark.sparkContext, []))
+    assert len(pending) == 1, pending
+    release_all(spark)
+    assert not pending[0]._jbroadcast.isValid()
+    assert spark.sparkContext not in caching._BROADCASTS
 
 
 def test_release_between_queries_keeps_results_identical(spark):

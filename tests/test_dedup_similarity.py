@@ -202,8 +202,10 @@ def test_lsh_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
     """The persisted LSH index: build_lsh_index writes
     partitionBy(tbl, sig) — the directory layout IS the hash buckets.
     probe_lsh_index's literal (tbl, sig) disjunction must prune at
-    planning time (scan reads only probed buckets) and the probed
-    top hit must agree with brute force."""
+    planning time (scan reads only probed buckets), the probed
+    top hit must agree with brute force, and the persisted index must
+    return exactly the rows of the in-session `knn_lsh` (both read
+    LSH_PLANES/LSH_TABLES, so a build and a probe cannot disagree)."""
     emb = load_table(spark, "embeddings", sf_dir)
     path = str(tmp_path / "lsh")
     similarity.build_lsh_index(emb, path, dim=64)
@@ -218,13 +220,17 @@ def test_lsh_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
     import re
     m = re.search(r"partition count: (\d+)", plan)
     if m:
-        # ≤ (1 + num_planes) buckets per table actually exist & match
-        assert int(m.group(1)) <= 8 * (1 + 6), plan
+        # ≤ (1 + LSH_PLANES) buckets per table actually exist & match
+        assert int(m.group(1)) <= (similarity.LSH_TABLES
+                                   * (1 + similarity.LSH_PLANES)), plan
     # probe agrees with the in-query LSH path on recall shape
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q"))
     exact = {r["vec_id"] for r in
              similarity.knn_bruteforce(emb, q, k=5).collect()}
     assert len({r["vec_id"] for r in rows} & exact) >= 2
+    in_session = similarity.knn_lsh(emb, q, dim=64, k=5).collect()
+    assert ([(r["vec_id"], r["sim"]) for r in rows]
+            == [(r["vec_id"], r["sim"]) for r in in_session])
 
 
 def test_ivf_index_probe_prunes_partitions(spark, sf_dir, tmp_path):

@@ -58,7 +58,7 @@ def test_q1_stays_in_codegen(spark, sf_dir):
     df = Q.q1_pricing_summary(spark, sf_dir)
     assert inspect.codegen_stage_count(df) >= 1
     # scan→filter→partial-agg → exchange → final-agg: exactly one shuffle
-    assert inspect.exchange_count(df) == 1
+    assert inspect.exchange_count(inspect.final_plan(df)) == 1
 
 
 def test_share_of_total_single_scan(spark, sf_dir):
@@ -84,7 +84,8 @@ def test_clean_corpus_single_shuffle(spark, sf_dir):
     df = Q.queries()["clean_corpus_pipeline"](spark, sf_dir)
     # quality+lang gates are narrow; the md5 groupBy is the only
     # exchange (AQE may add a coalesce read, never a second shuffle)
-    assert inspect.exchange_count(df) == 1, inspect.final_plan(df)
+    plan = inspect.final_plan(df)
+    assert inspect.exchange_count(plan) == 1, plan
     assert any("lang" in f for f in inspect.pushed_filters(df))
 
 
@@ -99,7 +100,8 @@ def test_winnow_fingerprints_zero_shuffle(spark, sf_dir):
     df = Q.queries()["rolling_fingerprints_docs"](spark, sf_dir)
     # the whole algorithm runs in array expressions inside the scan
     # stage — any exchange here would be a 100 TB regression
-    assert inspect.exchange_count(df) == 0, inspect.final_plan(df)
+    plan = inspect.final_plan(df)
+    assert inspect.exchange_count(plan) == 0, plan
 
 
 def test_q19_disjunction_pushes_derived_predicates(spark, sf_dir):
@@ -259,6 +261,7 @@ def test_phrase_count_zero_shuffle_map(spark, sf_dir):
     """phrase_count is one regexp pass over the scan: no exchange,
     no join, and the scan reads only (doc_id, text)."""
     from parlerproject_spark.plans.inspect import (exchange_count,
+                                                   final_plan,
                                                    read_schema_columns)
     df = Q.queries()["phrase_count_docs"](spark, sf_dir)
     # the trailing orderBy adds one range exchange; the core is the
@@ -267,7 +270,7 @@ def test_phrase_count_zero_shuffle_map(spark, sf_dir):
     from parlerproject_spark.operators.retrieval import phrase_count
     core = phrase_count(load_table(spark, "documents", sf_dir),
                         "hash join")
-    assert exchange_count(core) == 0
+    assert exchange_count(final_plan(core)) == 0
     assert all(set(cols) <= {"doc_id", "text"}
                for cols in read_schema_columns(core))
     assert df.count() > 0

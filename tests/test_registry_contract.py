@@ -99,3 +99,79 @@ def test_slow_manifest_names_only_collected_tests():
                   if ln.strip() and not ln.startswith("#")}
     assert collected, out
     assert not listed - collected, sorted(listed - collected)
+
+
+# Parameters the option scan below never reports: column bindings (the
+# operators' schema contract, set by name on sibling operators) and
+# deployment settings.
+_COLUMN_SUFFIXES = ("_col", "_cols", "_alias", "_expr")
+_COLUMN_NAMES = {"key", "keys", "left_ts", "right_ts"}
+_DEPLOYMENT = {"sf_dir", "path", "out_dir", "timeout", "backend", "app_name"}
+# Where callers live: the engine itself, its tools, both benchmarks
+# and the tests.
+_CALLER_ROOTS = ("parlerproject_spark", "tools", "bench.py", "perfbench",
+                 "tests")
+
+
+def test_every_option_is_passed_by_a_caller():
+    """An option no caller sets has exactly one value in use, so it is
+    a constant, not an option. Scan every defaulted parameter of every
+    function in `parlerproject_spark/` (outside queries.py, whose
+    helpers generate the oracle SQL) whose name is unique in the
+    package, and fail if no call naming the function passes it by
+    keyword or position (positions after `self` for methods; a call
+    with `*` or `**` passes everything). Pure AST, no Spark."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "parlerproject_spark"
+
+    def py_files(p):
+        return sorted(p.rglob("*.py")) if p.is_dir() else [p]
+
+    defs, calls = defaultdict(list), defaultdict(list)
+    for src in _CALLER_ROOTS:
+        for f in py_files(root / src):
+            in_pkg = src == "parlerproject_spark"
+            for node in ast.walk(ast.parse(f.read_text())):
+                if isinstance(node, ast.Call):
+                    fn = node.func
+                    name = (fn.id if isinstance(fn, ast.Name) else
+                            fn.attr if isinstance(fn, ast.Attribute) else None)
+                    calls[name].append(node)
+                elif in_pkg and isinstance(node, (ast.FunctionDef,
+                                                  ast.AsyncFunctionDef)):
+                    defs[node.name].append((f, node))
+
+    def passes(call, pname, pos):
+        if (any(isinstance(a, ast.Starred) for a in call.args)
+                or any(k.arg is None for k in call.keywords)):
+            return True
+        return (any(k.arg == pname for k in call.keywords)
+                or (pos is not None and 0 <= pos < len(call.args)))
+
+    unset = []
+    for name, found in defs.items():
+        f, node = found[0]
+        if len(found) != 1 or f == pkg / "queries.py":
+            continue
+        a = node.args
+        positional = a.posonlyargs + a.args
+        skip = 1 if positional and positional[0].arg in ("self", "cls") else 0
+        first = len(positional) - len(a.defaults)
+        params = [(p.arg, i - skip) for i, p in enumerate(positional)
+                  if i >= first]
+        params += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                   if d is not None]
+        for pname, pos in params:
+            if (pname.endswith(_COLUMN_SUFFIXES) or pname in _COLUMN_NAMES
+                    or pname in _DEPLOYMENT):
+                continue
+            if not any(passes(c, pname, pos) for c in calls[name]):
+                module = ".".join(f.relative_to(root).with_suffix("").parts)
+                unset.append(f"{module}.{name}({pname})")
+    assert not unset, (
+        "options no caller sets — make each a constant at its use: "
+        + ", ".join(sorted(unset)))

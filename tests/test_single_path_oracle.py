@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry
@@ -21,7 +20,7 @@ from parlerproject_spark.caching import release_all
 
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
-from check_oracle import TABLES, dtype_family, value_hash  # noqa: E402
+from check_oracle import dtype_family, oracle_views, value_hash  # noqa: E402
 
 QUERIES = [
     "semantic_decontaminate_embeddings",
@@ -41,9 +40,7 @@ QUERIES = [
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_views(sf_dir)
     yield con
     con.close()
 

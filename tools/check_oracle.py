@@ -28,8 +28,17 @@ import pandas as pd
 
 sys.path.insert(0, "/root/repo")
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+
+def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per catalog table
+    (`catalog.TABLE_SCHEMAS`) over the parquet files in `sf_dir` —
+    the names every `oracle_sql()` query reads."""
+    from parlerproject_spark.catalog import TABLE_SCHEMAS
+
+    con = duckdb.connect()
+    for t in TABLE_SCHEMAS:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def norm_frame(df: pd.DataFrame) -> pd.DataFrame:
@@ -142,9 +151,7 @@ def main() -> int:
     from parlerproject_spark.session import get_spark
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_views(sf_dir)
 
     failures = 0
     from parlerproject_spark.caching import release_all

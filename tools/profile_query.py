@@ -73,7 +73,7 @@ def main() -> None:
         df = fn(spark, sf_dir)
         plan = inspect.formatted_plan(df)
         executed = inspect.executed_plan(df)
-        n_ex = len(set(re.findall(r"Exchange .*?\[plan_id=(\d+)\]", executed)))
+        n_ex = inspect.exchange_count(executed)
         n_scan = len(re.findall(r"Scan parquet", plan))
         n_py = len(re.findall(
             r"BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|"
