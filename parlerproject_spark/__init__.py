@@ -17,7 +17,14 @@ Layout:
   operators/ — relational, dedup, similarity, text-analysis operators
   sources/   — custom sources (archives, remote fetch)
   streaming/ — event-time / incremental operators
+
+Importing the package installs `_zipstamp`, so a Python worker that
+unpickles an engine function stops re-reading pyspark.zip on every task.
 """
+
+from parlerproject_spark import _zipstamp
+
+_zipstamp.install()
 
 from parlerproject_spark.session import get_spark
 from parlerproject_spark.catalog import load_table, load_tables, TABLE_SCHEMAS

@@ -246,8 +246,11 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
     corpus-scale feature table shuffles ONCE (localCheckpoint) and
     is re-read by every iteration, so the 100 TB cost is
     n_iters × (two keyed aggregations) — the same contract as
-    `pagerank`. Deterministic end-to-end (w0 = 0, fixed lr), so the
-    DuckDB oracle retrains the identical model with the iterations
+    `pagerank`. The fit is not one action chain: building it runs
+    `labels.count()` plus, under AQE, the shuffle and broadcast
+    stages below every lazy `localCheckpoint`, as sequential jobs.
+    Deterministic end-to-end (w0 = 0, fixed lr), so the DuckDB
+    oracle retrains the identical model with the iterations
     unrolled as CTEs.
 
     Columns: <id_col>, margin (round 6), prob (round 6), pred (1/0).
@@ -272,11 +275,14 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
              # iteration's margin AND gradient pass re-reads this
              # materialization instead of re-running the tokenize →
              # hash → normalize cascade (2·n_iters+1 consumers).
-             # LAZY (r13): the labels.count() below is the loop's
-             # only required driver sync; every other checkpoint
-             # materializes inside the job that first reads it, so
-             # the whole fit is ONE driver-visible action chain
-             # instead of 3 + n_iters eager checkpoint jobs.
+             # LAZY defers only the checkpoint's own RDD. Under AQE,
+             # localCheckpoint(eager=False) still calls
+             # executedPlan.execute(), and AdaptiveSparkPlanExec runs
+             # every shuffle and broadcast stage of the checkpointed
+             # plan there. So each checkpoint below launches jobs
+             # while the query is being built, on top of
+             # labels.count(): building logreg_quality_scores_docs
+             # at sf0.01 runs 29 jobs before its result is read.
              .localCheckpoint(eager=False))
     labels = (docs.select(F.col(id_col).alias("doc_id"),
                           F.col(label_col).cast("double").alias("y"))

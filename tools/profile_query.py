@@ -14,6 +14,13 @@ driver-synchronized action (collects inside iterative trainers, eager
 checkpoints, AQE stage-jobs of the noop write), i.e. the number of
 sequential driver round trips. Unlike wall time it is deterministic
 and immune to CPU steal on a shared host.
+
+`python_cpu_s` is the CPU time (utime+stime from /proc/<pid>/stat) that
+the JVM's live descendant processes, i.e. the PySpark daemon and its
+Python workers, spent over that same first run. It counts Python-worker
+CPU, including each task's fixed set-up; it is not a share of the
+query's wall time, since up to all cores run workers at once. A worker
+that exits during the run takes its CPU with it (Linux only).
 """
 
 from __future__ import annotations
@@ -29,6 +36,30 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from parlerproject_spark import queries as Q  # noqa: E402
 from parlerproject_spark.plans import inspect  # noqa: E402
 from parlerproject_spark.session import get_spark  # noqa: E402
+
+
+def _descendant_ticks(root: int) -> dict[int, int]:
+    """utime+stime clock ticks of each live descendant process of `root`."""
+    children: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        # Fields after "(comm)": state, ppid, ..., utime (14), stime (15).
+        fields = stat[stat.rindex(")") + 2:].split()
+        children.setdefault(int(fields[1]), []).append(int(entry))
+        ticks[int(entry)] = int(fields[11]) + int(fields[12])
+    out, stack = {}, list(children.get(root, []))
+    while stack:
+        pid = stack.pop()
+        out[pid] = ticks[pid]
+        stack.extend(children.get(pid, []))
+    return out
 
 
 def main() -> None:
@@ -61,14 +92,18 @@ def main() -> None:
         return round(time.perf_counter() - start, 3)
 
     sc = spark.sparkContext
+    jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
     out: dict[str, dict] = {}
     for name in names:
         fn = registry[name]
         group = f"profile:{name}"
         sc.setJobGroup(group, name)
+        before = _descendant_ticks(jvm_pid)
         per = [timed_run(fn)]
+        after = _descendant_ticks(jvm_pid)
         sc.setJobGroup(None, None)
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        py_cpu = sum(t - before.get(pid, 0) for pid, t in after.items())
         per += [timed_run(fn) for _ in range(runs - 1)]
         df = fn(spark, sf_dir)
         plan = inspect.formatted_plan(df)
@@ -80,7 +115,9 @@ def main() -> None:
             r"FlatMapGroupsInPandas", plan))
         out[name] = {"runs": per, "median": sorted(per)[len(per) // 2],
                      "jobs": jobs, "exchanges": n_ex, "scans": n_scan,
-                     "python_nodes": n_py}
+                     "python_nodes": n_py,
+                     "python_cpu_s": round(py_cpu / os.sysconf("SC_CLK_TCK"),
+                                           2)}
         if plan_dir:
             os.makedirs(plan_dir, exist_ok=True)
             with open(os.path.join(plan_dir, f"{name}_{suffix}.txt"),
