@@ -373,14 +373,12 @@ def duplicate_clusters(pairs: DataFrame, *, id_a: str = "id_a",
                            F.least(cur["lbl"],
                                    F.coalesce(F.col("__ylbl"), cur["lbl"]))
                            .alias("lbl")))
-        # LAZY checkpoint: the fixed-point probe below is the first
-        # action over it, so ONE job both materializes the iteration's
-        # label blocks and computes the probe — the eager-checkpoint
-        # form ran two driver-synchronized jobs per iteration for the
-        # same work (guide §1.3: count the jobs; measured ~2× fewer
-        # jobs across the CC loop at sf0.1 with identical labels)
+        # LAZY checkpoint, yet under AQE declaring it runs the
+        # iteration's shuffle stages at once (near_dup_clusters at
+        # sf0.01: 5 and 4 jobs for its 2 iterations); the fixed-point
+        # probe below then reads the checkpointed label blocks
         new_labels = cur.localCheckpoint(eager=False)
-        # fixed-point check rides (and materializes) the checkpoint
+        # fixed-point check over the checkpoint
         # (ADVICE r2: a component whose propagation distance exceeds a
         # fixed budget would otherwise silently return split clusters)
         if sum_check:

@@ -56,37 +56,48 @@ def _bm25_top_k(postings: DataFrame, stats: DataFrame,
                     F.row_number().over(w).cast("long").alias("rank")))
 
 
+def _bm25_index(docs: DataFrame, terms: list[str] | None, *, id_col: str,
+                text_col: str) -> tuple[DataFrame, DataFrame]:
+    """The BM25 index — built the same way for bm25_scores and
+    build_text_index: postings (doc_id, term, tf, dl) from ONE
+    tokenize → explode → groupBy(doc_id, term) pass (map-side
+    combine), and the one-row corpus stats (n_docs, avgdl). With
+    `terms`, a literal isin filter sits below the postings aggregate,
+    so only those terms' (doc, term) pairs are ever shuffled."""
+    toks = docs.select(F.col(id_col).alias("doc_id"),
+                       tokenize(text_col).alias("ts"))
+    stats = (toks.select(F.size("ts").alias("dl"))
+             .agg(F.count("*").cast("double").alias("n_docs"),
+                  F.avg("dl").alias("avgdl")))
+    ex = toks.select("doc_id", F.size("ts").alias("dl"),
+                     F.explode("ts").alias("term"))
+    if terms is not None:
+        ex = ex.filter(F.col("term").isin(terms))
+    postings = (ex.groupBy("doc_id", "term")
+                .agg(F.count("*").cast("double").alias("tf"),
+                     F.first("dl").alias("dl")))
+    return postings, stats
+
+
 def bm25_scores(docs: DataFrame, query_terms: list[str], *,
                 id_col: str = "doc_id", text_col: str = "text",
                 top_k: int = 20) -> DataFrame:
     """Okapi BM25 ranked retrieval (k1 = 1.2, b = 0.75; see
-    _bm25_top_k for the scoring formula).
+    _bm25_top_k for the scoring formula) over the query terms' slice
+    of the index `build_text_index` persists (`_bm25_index`).
 
-    Plan: tokenization is a narrow map; `postings` is ONE exploded
-    groupBy (map-side combine) with the query-term isin filter pushed
-    below it, so only the query terms' postings are ever aggregated;
-    N and avgdl are one-row broadcast scalars; per-term df rides the
+    Plan: only the query terms' postings are ever aggregated; N and
+    avgdl are one-row broadcast scalars; per-term df rides the
     postings via a window over the term key (bounded: at most
     len(query_terms) distinct keys after the cut); the final cut is
-    TakeOrderedAndProject.  Nothing here materializes the full
-    inverted index when only q terms are asked for — at 100 TB the
-    scan is still corpus-wide (tf requires it) but the shuffle
-    carries only matching (doc, term) pairs.
+    TakeOrderedAndProject. At 100 TB the scan is still corpus-wide
+    (tf requires it) but the shuffle carries only matching
+    (doc, term) pairs.
 
     Columns: <id_col>, score (round 6), rank.
     """
-    qt = [t.lower() for t in query_terms]
-    toks = docs.select(F.col(id_col).alias("doc_id"),
-                       tokenize(text_col).alias("ts"))
-    lens = toks.select("doc_id", F.size("ts").alias("dl"))
-    stats = lens.agg(F.count("*").cast("double").alias("n_docs"),
-                     F.avg("dl").alias("avgdl"))
-    postings = (toks.select("doc_id", F.size("ts").alias("dl"),
-                            F.explode("ts").alias("term"))
-                .filter(F.col("term").isin(qt))
-                .groupBy("doc_id", "term")
-                .agg(F.count("*").cast("double").alias("tf"),
-                     F.first("dl").alias("dl")))
+    postings, stats = _bm25_index(docs, [t.lower() for t in query_terms],
+                                  id_col=id_col, text_col=text_col)
     df_w = Window.partitionBy("term")
     return (_bm25_top_k(
                 postings.withColumn(
@@ -158,30 +169,27 @@ def _term_bucket(term: F.Column) -> F.Column:
             % F.lit(INDEX_BUCKETS))
 
 
+def _term_buckets(terms: list[str]) -> list[int]:
+    """`_term_bucket` of each query term, driver-side (md5 of a handful
+    of strings): a literal `bucket IN (...)` prunes at planning time."""
+    import hashlib
+
+    return sorted({int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
+                   % INDEX_BUCKETS for t in terms})
+
+
 def build_text_index(docs: DataFrame, path: str, *,
                      id_col: str = "doc_id",
                      text_col: str = "text") -> None:
-    """Materialize the BM25 inverted index `bm25_scores` builds
-    per query: postings (doc, term, tf, dl) written Parquet
-    PARTITIONED BY term bucket (md5(term) % 256 directories), plus
-    per-term df and the corpus stats (N, avgdl) as sidecar tables
-    under the same root. A probe reads only the buckets its query
-    terms hash into — planning-time partition pruning, same contract
-    as similarity.build_lsh_index — and never rebuilds corpus
-    statistics.
-
-    This is the serving shape for repeated retrieval over a standing
-    corpus: the one corpus-wide tokenize+aggregate pass happens at
-    build time, probes touch q/256 of the postings files.
+    """Write `bm25_scores`' index (`_bm25_index`, every term):
+    postings (doc, term, tf, dl) as Parquet PARTITIONED BY term bucket
+    (md5(term) % 256 directories), plus per-term df and the corpus
+    stats (N, avgdl) as sidecar tables under the same root. A probe
+    reads only the buckets its query terms hash into and never
+    rebuilds corpus statistics: the one corpus-wide tokenize+aggregate
+    pass happens at build time, probes touch q/256 of the files.
     """
-    toks = docs.select(F.col(id_col).alias("doc_id"),
-                       tokenize(text_col).alias("ts"))
-    lens = toks.select("doc_id", F.size("ts").alias("dl"))
-    post = (toks.select("doc_id", F.size("ts").alias("dl"),
-                        F.explode("ts").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").cast("double").alias("tf"),
-                 F.first("dl").alias("dl")))
+    post, stats = _bm25_index(docs, None, id_col=id_col, text_col=text_col)
     (post.withColumn("bucket", _term_bucket(F.col("term")))
          .write.mode("overwrite").partitionBy("bucket")
          .parquet(f"{path}/postings"))
@@ -189,24 +197,19 @@ def build_text_index(docs: DataFrame, path: str, *,
          .withColumn("bucket", _term_bucket(F.col("term")))
          .write.mode("overwrite").partitionBy("bucket")
          .parquet(f"{path}/df"))
-    (lens.agg(F.count("*").cast("double").alias("n_docs"),
-              F.avg("dl").alias("avgdl"))
-         .write.mode("overwrite").parquet(f"{path}/stats"))
+    stats.write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def probe_text_index(spark, path: str, query_terms: list[str], *,
                      top_k: int = 20) -> DataFrame:
-    """BM25 top-k against a persisted index. The query terms' buckets
-    are computed DRIVER-SIDE (md5 of a handful of strings), so the
-    postings/df scans carry a literal `bucket IN (...)` partition
-    filter — only those directories' files are read. Scoring is
-    bm25_scores' own kernel (_bm25_top_k). Columns: doc_id, score,
-    rank.
+    """BM25 top-k against a persisted index: the postings/df scans
+    carry the query terms' literal `bucket IN (...)` partition filter
+    (`_term_buckets`), so only those directories' files are read.
+    Scoring is bm25_scores' own kernel (_bm25_top_k). Columns: doc_id,
+    score, rank.
     """
-    import hashlib
     qt = sorted({t.lower() for t in query_terms})
-    buckets = sorted({int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-                      % INDEX_BUCKETS for t in qt})
+    buckets = _term_buckets(qt)
     post = (spark.read.parquet(f"{path}/postings")
             .filter(F.col("bucket").isin(buckets)
                     & F.col("term").isin(qt)))
@@ -289,12 +292,10 @@ def probe_phrase_index(spark, path: str, phrase: str) -> DataFrame:
 
     Columns: doc_id, n_matches (docs with ≥ 1 match).
     """
-    import hashlib
     terms = [t for t in phrase.lower().split() if t]
     m = len(terms)
     assert m >= 1, "phrase must contain at least one token"
-    buckets = sorted({int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-                      % INDEX_BUCKETS for t in terms})
+    buckets = _term_buckets(terms)
     probe = spark.createDataFrame(
         [(t, i) for i, t in enumerate(terms)], "term string, off int")
     post = (spark.read.parquet(f"{path}/postings")

@@ -805,10 +805,10 @@ def doremi_weights(domain_losses: DataFrame, *, domain_col: str = "domain",
                    - F.col(ref_col).cast("double"),
                    F.lit(0.0)).alias("__e")))
     kf = base.agg(F.count(F.lit(1)).cast("double").alias("__k"))
-    # LAZY checkpoints (r13): the chain still truncates lineage per
-    # round, but nothing probes between rounds, so the consumer's one
-    # action materializes the domain-sized tables in order instead of
-    # paying one driver-synchronized job per round.
+    # LAZY checkpoints truncate lineage per round, yet under AQE
+    # declaring one runs that round's shuffle and broadcast stages at
+    # once: doremi_weights_by_source at sf0.01 ran 8 jobs for the
+    # first and 2 for each later one while being built.
     w = (base.crossJoin(F.broadcast(kf))
          .select("__d", "__e", "__k", (1.0 / F.col("__k")).alias("__w"))
          .localCheckpoint(eager=False))

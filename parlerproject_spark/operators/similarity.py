@@ -12,6 +12,11 @@ Two paths, mirroring how a 100 TB vector table is actually served:
   Probing hamming-distance-1 buckets trades a small constant factor
   on the (tiny) query side for much better recall.
 
+Each ANN algorithm (LSH, IVF, IVF-PQ) has one build and one probe:
+the in-session operator probes the build it just made, a persisted
+`build_*_index` writes that same build partitioned by bucket or cell,
+and `probe_*_index` runs the same probe over the Parquet read.
+
 The reference's embedding store is an L2-normalized float32 matrix
 (code/embeddings.py:82-87,119); cosine over normalized vectors is
 dot product, but we compute full cosine to stay correct on
@@ -141,21 +146,61 @@ def knn_bruteforce(vectors: DataFrame, query: DataFrame, *, k: int = 10,
     return scored.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
-                      dim: int, num_planes: int, num_tables: int) -> DataFrame:
-    """Bit signature per (row, table): sign of <vec, plane> for each
-    of the table's planes (`_plane_weight`), folded MSB-first into a
-    bigint. The (N×dim)·(dim×T·P) dot products run as ONE numpy
-    matmul per batch (BLAS) instead of T·P·dim interpreted lambda
-    steps per row; a pure map — zero shuffle. Use symmetrically
-    (corpus AND query) so float summation order can never put
-    identical vectors in different buckets."""
+def _query_vector(query: DataFrame, op: str) -> list[float]:
+    """The vector of a one-row `query` frame (column q), on the
+    driver, where each probe turns it into literals. limit(2) tells
+    one row from many without collecting a large frame."""
+    rows = query.select("q").limit(2).collect()
+    if len(rows) != 1:
+        raise ValueError(f"{op} takes a one-row query frame")
+    return [float(x) for x in rows[0]["q"]]
+
+
+def _rerank(cand: DataFrame, q: list[float], *, k: int, vec_col: str,
+            dedup: bool) -> DataFrame:
+    """Every ANN probe's tail: exact cosine (6 dp) of the candidate
+    rows (vec_id, <vec_col>) to the literal query, top-k by sim desc,
+    vec_id asc. `dedup`: a vector found in several LSH tables counts
+    once."""
+    scored = cand.select("vec_id",
+                         F.round(cosine(vec_col, F.lit(q)), 6).alias("sim"))
+    if dedup:
+        scored = scored.groupBy("vec_id").agg(F.max("sim").alias("sim"))
+    return scored.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
+
+
+# LSH ------------------------------------------------------------------------
+
+def _lsh_signer(dim: int, num_planes: int, num_tables: int):
+    """V (n×dim) → (n × num_tables) bucket signatures: the sign of
+    <v, plane> for each of a table's planes (`_plane_weight`), folded
+    MSB-first into an int64. One (n×dim)·(dim×T·P) numpy matmul (BLAS)
+    for the whole batch. The corpus map (`_signatures_arrow`) and the
+    driver-side query buckets (`_lsh_query_buckets`) both sign with
+    it, so float summation order can never put identical vectors in
+    different buckets."""
     import numpy as np
-    import pandas as pd
 
     W = np.array([[_plane_weight(t, p, d) for d in range(dim)]
                   for t in range(num_tables) for p in range(num_planes)])
     bitw = (1 << np.arange(num_planes - 1, -1, -1)).astype(np.int64)
+
+    def sign(V):
+        bits = (V @ W.T >= 0).reshape(len(V), num_tables, num_planes)
+        return (bits * bitw).sum(axis=2)
+
+    return sign
+
+
+def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
+                      dim: int, num_planes: int, num_tables: int) -> DataFrame:
+    """Bit signature per (row, table) from `_lsh_signer`, one numpy
+    matmul per Arrow batch instead of T·P·dim interpreted lambda
+    steps per row; a pure map — zero shuffle."""
+    import numpy as np
+    import pandas as pd
+
+    sign = _lsh_signer(dim, num_planes, num_tables)
     fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = ", ".join(
         [f"{k} {fields[k]}" for k in key_cols]
@@ -166,9 +211,7 @@ def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
             n = len(pdf)
             if n == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            bits = (V @ W.T >= 0).reshape(n, num_tables, num_planes)
-            sigs = (bits * bitw).sum(axis=2)          # (n, num_tables)
+            sigs = sign(np.array(pdf[vec_col].tolist(), dtype=np.float64))
             out = {k: pdf[k].values.repeat(num_tables) for k in key_cols}
             out[vec_col] = pdf[vec_col].values.repeat(num_tables)
             out["tbl"] = np.tile(np.arange(num_tables, dtype=np.int32), n)
@@ -178,163 +221,189 @@ def _signatures_arrow(df: DataFrame, *, vec_col: str, key_cols: list[str],
     return df.select(*key_cols, vec_col).mapInPandas(gen, out_schema)
 
 
+def _lsh_query_buckets(q: list[float], dim: int) -> list[int]:
+    """The query's exact bucket in each of the LSH_TABLES tables,
+    signed driver-side by the corpus map's own `_lsh_signer`."""
+    import numpy as np
+
+    sign = _lsh_signer(dim, LSH_PLANES, LSH_TABLES)
+    return [int(s) for s in sign(np.array([q], dtype=np.float64))[0]]
+
+
+def _lsh_build(vectors: DataFrame, *, dim: int, id_col: str,
+               vec_col: str) -> DataFrame:
+    """The LSH index: one (vec_id, <vec_col>, tbl, sig) row per
+    (vector, table) — a narrow Arrow/BLAS map, zero shuffle."""
+    return (_signatures_arrow(vectors, vec_col=vec_col, key_cols=[id_col],
+                              dim=dim, num_planes=LSH_PLANES,
+                              num_tables=LSH_TABLES)
+            .select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig"))
+
+
+def _lsh_probe(index: DataFrame, q: list[float], *, dim: int, k: int,
+               vec_col: str) -> DataFrame:
+    """Top-k cosine probe of an LSH index frame. Multi-probe: the
+    query's exact bucket plus every hamming-1 neighbour in each
+    table, computed driver-side, so the filter is a literal
+    disjunction over (tbl, sig) — over a partitionBy(tbl, sig) Parquet
+    read it prunes partitions at planning time. Exact cosine
+    re-ranks the candidates; a vector found in several tables keeps
+    its (identical) best sim once."""
+    cond = None
+    for t, sig in enumerate(_lsh_query_buckets(q, dim)):
+        sigs = sorted({sig} | {sig ^ (1 << p) for p in range(LSH_PLANES)})
+        c = (F.col("tbl") == t) & F.col("sig").isin(sigs)
+        cond = c if cond is None else cond | c
+    return _rerank(index.filter(cond), q, k=k, vec_col=vec_col, dedup=True)
+
+
 def knn_lsh(vectors: DataFrame, query: DataFrame, *, dim: int, k: int = 10,
             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN cosine top-k: random-hyperplane LSH with multi-probe.
+    """ANN cosine top-k of a ONE-ROW `query` (column q):
+    random-hyperplane LSH with multi-probe, `_lsh_probe` over
+    `_lsh_build` — the same build and probe `build_lsh_index` /
+    `probe_lsh_index` persist and read.
 
-    Corpus side: one signature per (vector, table) — a narrow
-    Arrow/BLAS map (`_signatures_arrow`) + one partial-aggregated
-    shuffle, done once. At scale you persist this instead of
-    recomputing per query: `build_lsh_index` writes it
-    partitionBy(tbl, sig) and `probe_lsh_index` prunes to the probed
-    buckets at planning time. The matmul beat an interpreted
-    per-element fold at every size measured in r4 — 2k rows 2.2 s vs
-    2.6 s, 20k 3.9 vs 13.6, 200k 24.3 vs 138.7 (dim=64, 48 planes).
-    Query side: exact signature plus every hamming-1 neighbor
-    (LSH_PLANES probes/table) — a few dozen broadcast rows. Exact
-    cosine re-rank inside probed buckets only. Recall < 1 by design;
-    `knn_bruteforce` is the oracle. Columns: vec_id, sim.
+    Corpus side: one signature per (vector, table), a narrow Arrow/BLAS
+    map. The matmul beat an interpreted per-element fold at every size
+    measured in r4 — 2k rows 2.2 s vs 2.6 s, 20k 3.9 vs 13.6, 200k
+    24.3 vs 138.7 (dim=64, 48 planes). Query side: the exact bucket
+    plus every hamming-1 neighbour (LSH_PLANES probes/table) as a
+    literal filter. Exact cosine re-rank inside probed buckets only.
+    Recall < 1 by design; `knn_bruteforce` is the oracle.
+    Columns: vec_id, sim.
     """
-    corpus = _signatures_arrow(
-        vectors, vec_col=vec_col, key_cols=[id_col], dim=dim,
-        num_planes=LSH_PLANES, num_tables=LSH_TABLES) \
-        .select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig")
-    qsig = _signatures_arrow(
-        query.select(F.col("q")), vec_col="q", key_cols=[], dim=dim,
-        num_planes=LSH_PLANES, num_tables=LSH_TABLES)
-    return _lsh_probe_rank(corpus, qsig, vec_col=vec_col, k=k,
-                           num_planes=LSH_PLANES)
+    q = _query_vector(query, "knn_lsh")
+    return _lsh_probe(_lsh_build(vectors, dim=dim, id_col=id_col,
+                                 vec_col=vec_col),
+                      q, dim=dim, k=k, vec_col=vec_col)
 
 
-def _lsh_probe_rank(corpus: DataFrame, qsig: DataFrame, *, vec_col: str,
-                    k: int, num_planes: int) -> DataFrame:
-    """Shared LSH tail: multi-probe (exact bucket + every hamming-1
-    bucket), broadcast the few dozen probe rows into the corpus
-    signature table, exact cosine re-rank inside probed buckets."""
-    probes = qsig.selectExpr(
-        "q", "tbl",
-        f"explode(concat(array(sig), transform(sequence(0, {num_planes - 1}), "
-        "p -> sig ^ shiftleft(cast(1 as bigint), p)))) as sig")
-    cand = corpus.join(F.broadcast(probes), ["tbl", "sig"])
-    scored = cand.select("vec_id", F.round(cosine(vec_col, "q"), 6).alias("sim"))
-    best = scored.groupBy("vec_id").agg(F.max("sim").alias("sim"))
-    return best.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
+def build_lsh_index(vectors: DataFrame, path: str, *, dim: int,
+                    id_col: str = "vec_id", vec_col: str = "embedding",
+                    ) -> None:
+    """Write `knn_lsh`'s index (`_lsh_build`) as Parquet PARTITIONED
+    BY (tbl, sig) — the physical layout IS the hash buckets
+    (LSH_TABLES × 2^LSH_PLANES directories), so a probe reads
+    (1 + LSH_PLANES)/2^LSH_PLANES of each table's files. The plane
+    family is derived from (table, plane, dim) md5 — no RNG state —
+    so probes recompute identical planes from `dim` alone.
+    """
+    (_lsh_build(vectors, dim=dim, id_col=id_col, vec_col=vec_col)
+     .write.mode("overwrite").partitionBy("tbl", "sig").parquet(path))
+
+
+def probe_lsh_index(spark, path: str, query_vec: list[float], *, dim: int,
+                    k: int = 10,
+                    vec_col: str = "embedding") -> DataFrame:
+    """Top-k cosine probe against a persisted LSH index: `knn_lsh`'s
+    probe (`_lsh_probe`) over the Parquet read, whose literal
+    (tbl, sig) filter prunes to the probed buckets' files at planning
+    time. Columns: vec_id, sim.
+    """
+    return _lsh_probe(spark.read.parquet(path),
+                      [float(x) for x in query_vec],
+                      dim=dim, k=k, vec_col=vec_col)
+
+
+# IVF ------------------------------------------------------------------------
+
+def _ivf_train(vectors: DataFrame, *, num_cells: int, max_iter: int,
+               train_mod: int | None, round_c: int | None, id_col: str,
+               vec_col: str) -> list[list[float]]:
+    """The IVF cell centroids: maxmin-seeded Lloyd k-means
+    (topics.lloyd_centroids) on the deterministic 1/train_mod
+    hash-sample — cell quality needs only a sample, so training never
+    scans the full corpus; tiny inputs fall back to the full table."""
+    from parlerproject_spark.operators.topics import lloyd_centroids
+
+    return lloyd_centroids(vectors, k=num_cells, max_iter=max_iter,
+                           init="maxmin", id_col=id_col, vec_col=vec_col,
+                           train_mod=train_mod, round_c=round_c)
+
+
+def _ivf_assign(vectors: DataFrame, centroids: list[list[float]],
+                keep_cells: list[int] | None, *, id_col: str,
+                vec_col: str) -> DataFrame:
+    """The IVF index rows (vec_id, <vec_col>, cell): every vector's
+    nearest centroid by a narrow Arrow matmul map (topics._assign, no
+    shuffle). `keep_cells` drops the other cells' rows inside that
+    map, so they never cross the Arrow boundary back."""
+    from parlerproject_spark.operators.topics import _assign
+
+    return (_assign(vectors.select(F.col(id_col).alias("vec_id"),
+                                   F.col(vec_col)),
+                    centroids, id_col="vec_id", vec_col=vec_col,
+                    keep_topics=keep_cells)
+            .withColumnRenamed("topic", "cell"))
+
+
+def _probe_cells(centroids: list[list[float]], q: list[float],
+                 nprobe: int) -> list[int]:
+    """The query's top-nprobe IVF cells, ranked driver-side (num_cells
+    dot products, microseconds): dot of q with each unit-normalized
+    centroid (topics.unit_rows; a zero-norm centroid stays as-is),
+    folded sequentially like the JVM's `acc + x*y`, sorted by
+    (−sim, cell) so ties go to the lowest cell index. The knn_ivf
+    oracle replays this order."""
+    from parlerproject_spark.operators.topics import unit_rows
+
+    qv = [float(x) for x in q]
+
+    def neg_dot(c: list[float]) -> float:
+        acc = 0.0
+        for x, y in zip(qv, c):
+            acc += x * y
+        return -acc
+
+    cells = unit_rows(centroids)
+    return sorted(range(len(cells)),
+                  key=lambda i: (neg_dot(cells[i]), i))[:nprobe]
 
 
 def knn_ivf(vectors: DataFrame, query: DataFrame, *, k: int = 10,
             num_cells: int = 16, nprobe: int = 4, max_iter: int = 3,
             round_c: int | None = None,
             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """IVF (inverted-file) ANN cosine top-k — the scale path next to
-    `knn_lsh`.
+    """IVF (inverted-file) ANN cosine top-k of a ONE-ROW `query`
+    (column q) — the scale path next to `knn_lsh`, and the same
+    train (`_ivf_train`), assignment (`_ivf_assign`) and cell ranking
+    (`_probe_cells`) `build_ivf_index` / `probe_ivf_index` persist and
+    read.
 
-    Index side: k-means cells fit on the deterministic 1/8
-    hash-sample (topics.lloyd_centroids) — cell quality needs only a
-    sample, so index training never scans the full corpus; tiny
-    inputs fall back to full-table training automatically. Every
-    vector is then assigned to its nearest centroid by a narrow Arrow
-    matmul map (topics._assign, no shuffle). At scale
-    the assignment is precomputed once and the table is PARTITIONED
-    BY cell, so a probe reads nprobe/num_cells of the data — that
-    partition pruning is the entire point of IVF.
-
-    Query side: rank the centroid array in-expression, explode the
-    top-nprobe cell ids (a handful of broadcast rows), join to prune
-    the corpus to probed cells, exact cosine re-rank inside them.
-    Recall < 1 by design; `knn_bruteforce` is the oracle (pytest
-    asserts recall).  Columns: vec_id, sim.
+    Index side: k-means cells fit on the 1/8 hash-sample, then every
+    vector is assigned to its nearest centroid. Query side: the
+    top-nprobe cells are ranked on the driver and fused INTO the
+    assignment map (r14): rows outside the probed cells
+    never cross the Arrow boundary back, and no probe join is planned.
+    Exact cosine re-rank inside the probed cells. Recall < 1 by
+    design; `knn_bruteforce` is the oracle (pytest asserts recall).
+    Columns: vec_id, sim.
     """
-    from parlerproject_spark.operators.topics import (_assign,
-                                                      centroid_literal,
-                                                      lloyd_centroids,
-                                                      unit_rows)
-    from parlerproject_spark.functions.vectors import dot
-
-    centroids = lloyd_centroids(vectors, k=num_cells, max_iter=max_iter, init="maxmin",
-                                id_col=id_col, vec_col=vec_col,
-                                train_mod=8, round_c=round_c)
-    cent_rows = unit_rows(centroids)
-
-    # r14: a single-row query side ranks its top-nprobe cells on the
-    # driver (limit(2) tells one row from many without collecting a
-    # large probe set), so it fuses the probe filter INTO the
-    # full-corpus assignment pass
-    # (guide §4.2): rows outside the probed cells never cross the
-    # Arrow boundary back, and the BroadcastExchange + probe-join
-    # stage disappears from the plan. The driver dot replicates the
-    # JVM fold exactly (same sequential acc + x*y double adds), and
-    # the (−sim, cell) tuple sort is the array_sort struct order.
-    qrows = query.select("q").limit(2).collect()
-    if len(qrows) == 1:
-        qv = [float(x) for x in qrows[0]["q"]]
-
-        def _neg_dot(c: list[float]) -> float:
-            acc = 0.0
-            for x, y in zip(qv, c):
-                acc += x * y
-            return -acc
-
-        order = sorted(range(len(cent_rows)),
-                       key=lambda i: (_neg_dot(cent_rows[i]), i))
-        probe_cells = order[:nprobe]
-        cand = (_assign(vectors.select(F.col(id_col).alias("vec_id"),
-                                       F.col(vec_col)),
-                        centroids, id_col="vec_id", vec_col=vec_col,
-                        keep_topics=probe_cells)
-                .withColumnRenamed("topic", "cell"))
-        scored = cand.select(
-            "vec_id",
-            F.round(cosine(vec_col, F.lit(qv)), 6).alias("sim"))
-        return scored.orderBy(F.col("sim").desc(),
-                              F.col("vec_id").asc()).limit(k)
-
-    # multi-query probe sets keep the broadcast-join form: the cell
-    # filter is per-query, so it cannot fold into one assignment map
-    cent = centroid_literal(cent_rows)
-    assigned = (_assign(vectors.select(F.col(id_col).alias("vec_id"),
-                                       F.col(vec_col)),
-                        centroids, id_col="vec_id", vec_col=vec_col)
-                .withColumnRenamed("topic", "cell"))
-
-    # top-nprobe cells for the query: sort (−sim, idx) structs in-expression
-    idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-    ranked = F.array_sort(F.zip_with(
-        F.transform(cent, lambda c: -dot(F.col("q"), c)),
-        idx, lambda s, i: F.struct(s.alias("neg"), i.alias("cell"))))
-    probes = query.select(
-        F.col("q"),
-        F.explode(F.slice(F.transform(ranked, lambda r: r["cell"]),
-                          1, nprobe).cast("array<int>")).alias("cell"))
-
-    cand = assigned.join(F.broadcast(probes), "cell")
-    scored = cand.select("vec_id", F.round(cosine(vec_col, "q"), 6).alias("sim"))
-    return scored.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
+    centroids = _ivf_train(vectors, num_cells=num_cells, max_iter=max_iter,
+                           train_mod=8, round_c=round_c, id_col=id_col,
+                           vec_col=vec_col)
+    q = _query_vector(query, "knn_ivf")
+    cand = _ivf_assign(vectors, centroids, _probe_cells(centroids, q, nprobe),
+                       id_col=id_col, vec_col=vec_col)
+    return _rerank(cand, q, k=k, vec_col=vec_col, dedup=False)
 
 
 def build_ivf_index(vectors: DataFrame, path: str, *, num_cells: int = 16,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     ) -> list[list[float]]:
-    """Materialize the IVF index: assign every vector to its nearest
-    k-means cell and write Parquet PARTITIONED BY cell. Returns the
+    """Write `knn_ivf`'s index — 3 Lloyd rounds on the 1/8
+    hash-sample (`_ivf_train`), every vector assigned once
+    (`_ivf_assign`) — as Parquet PARTITIONED BY cell, so every later
+    probe reads only nprobe/num_cells of the files. Returns the
     centroid matrix (the index metadata a serving layer persists
     alongside the table).
-
-    This is the 100 TB shape `knn_ivf` simulates in one query: train
-    once (3 Lloyd rounds) on a 1/8 hash-sample, assign once, and let
-    every later probe read only nprobe/num_cells of the data via
-    partition pruning — the scan never touches unprobed cells' files
-    at all.
     """
-    from parlerproject_spark.operators.topics import _assign, lloyd_centroids
-
-    centroids = lloyd_centroids(vectors, k=num_cells, max_iter=3, init="maxmin",
-                                id_col=id_col, vec_col=vec_col,
-                                train_mod=8)
-    assigned = (_assign(vectors.select(F.col(id_col).alias("vec_id"),
-                                       F.col(vec_col)),
-                        centroids, id_col="vec_id", vec_col=vec_col)
-                .withColumnRenamed("topic", "cell"))
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
+    centroids = _ivf_train(vectors, num_cells=num_cells, max_iter=3,
+                           train_mod=8, round_c=None, id_col=id_col,
+                           vec_col=vec_col)
+    (_ivf_assign(vectors, centroids, None, id_col=id_col, vec_col=vec_col)
+     .write.mode("overwrite").partitionBy("cell").parquet(path))
     return centroids
 
 
@@ -343,13 +412,10 @@ def append_ivf_index(vectors: DataFrame, path: str,
                      id_col: str = "vec_id",
                      vec_col: str = "embedding") -> None:
     """Incremental index maintenance: assign NEW vectors to the
-    EXISTING cells and append their partitions — no retrain, no
-    rewrite of resident data (the standard FAISS `add` contract; a
-    drifted corpus eventually warrants a rebuild, but day-to-day
-    ingest must not reshuffle a 100 TB index).
-
-    The append is one narrow assignment map (topics._assign against
-    the given centroids) + a partitioned append write: only the
+    EXISTING cells (`_ivf_assign`) and append their partitions — no
+    retrain, no rewrite of resident data (the standard FAISS `add`
+    contract; a drifted corpus eventually warrants a rebuild, but
+    day-to-day ingest must not reshuffle a 100 TB index). Only the
     cells the new vectors land in gain files, probes keep pruning by
     the same partition column, and a concurrent reader sees the old
     snapshot until the write commits.
@@ -361,12 +427,8 @@ def append_ivf_index(vectors: DataFrame, path: str,
     vectorized-reader SchemaColumnConvertNotSupportedException —
     schema conformance is the appender's job, not each caller's.
     """
-    from parlerproject_spark.operators.topics import _assign
-
-    assigned = (_assign(vectors.select(F.col(id_col).alias("vec_id"),
-                                       F.col(vec_col)),
-                        centroids, id_col="vec_id", vec_col=vec_col)
-                .withColumnRenamed("topic", "cell"))
+    assigned = _ivf_assign(vectors, centroids, None, id_col=id_col,
+                           vec_col=vec_col)
     resident = {f.name: f.dataType
                 for f in vectors.sparkSession.read.parquet(path).schema.fields}
     for name, dt in resident.items():
@@ -375,91 +437,18 @@ def append_ivf_index(vectors: DataFrame, path: str,
     assigned.write.mode("append").partitionBy("cell").parquet(path)
 
 
-def build_lsh_index(vectors: DataFrame, path: str, *, dim: int,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    ) -> None:
-    """Materialize the LSH index `knn_lsh` simulates per-query: one
-    signature row per (vector, hash table), written Parquet
-    PARTITIONED BY (tbl, sig) — i.e. the physical layout IS the hash
-    buckets (LSH_TABLES × 2^LSH_PLANES directories). A probe then
-    reads (1 + LSH_PLANES)/2^LSH_PLANES of each table's files via
-    planning-time partition pruning and never touches the rest.
-
-    Signature generation is the Arrow/BLAS map (zero shuffle); the
-    only cost beyond the scan is the partitioned write. The plane
-    family is derived from (table, plane, dim) md5 — no RNG state —
-    so probes recompute identical planes from `dim` alone.
-    """
-    sig = _signatures_arrow(vectors, vec_col=vec_col, key_cols=[id_col],
-                            dim=dim, num_planes=LSH_PLANES,
-                            num_tables=LSH_TABLES)
-    (sig.select(F.col(id_col).alias("vec_id"), vec_col, "tbl", "sig")
-        .write.mode("overwrite").partitionBy("tbl", "sig").parquet(path))
-
-
-def probe_lsh_index(spark, path: str, query_vec: list[float], *, dim: int,
-                    k: int = 10,
-                    vec_col: str = "embedding") -> DataFrame:
-    """Top-k cosine probe against a persisted LSH index. The query's
-    signature per table — plus every hamming-1 neighbor (multi-probe)
-    — is computed DRIVER-SIDE (LSH_TABLES × LSH_PLANES dot products,
-    microseconds), so the scan filter is a literal disjunction over
-    the (tbl, sig) partition columns: pruning happens at planning
-    time and the probe reads only the probed buckets' files.
-    Exact cosine re-ranks inside them. Columns: vec_id, sim.
-    """
-    q = [float(x) for x in query_vec]
-    probes: list[tuple[int, int]] = []
-    for t in range(LSH_TABLES):
-        sig = 0
-        for p in range(LSH_PLANES):
-            w = [_plane_weight(t, p, d) for d in range(dim)]
-            d_ = sum(a * b for a, b in zip(q, w))
-            sig = sig * 2 + (1 if d_ >= 0 else 0)
-        sigs = {sig} | {sig ^ (1 << p) for p in range(LSH_PLANES)}
-        probes.extend((t, s) for s in sorted(sigs))
-
-    by_tbl: dict[int, list[int]] = {}
-    for t, s in probes:
-        by_tbl.setdefault(t, []).append(s)
-    cond = None
-    for t, sigs in by_tbl.items():
-        c = (F.col("tbl") == t) & F.col("sig").isin(sigs)
-        cond = c if cond is None else cond | c
-
-    idx = spark.read.parquet(path).filter(cond)
-    scored = idx.select(
-        "vec_id", F.round(cosine(vec_col, F.lit(q)), 6).alias("sim"))
-    best = scored.groupBy("vec_id").agg(F.max("sim").alias("sim"))
-    return best.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
-
-
 def probe_ivf_index(spark, path: str, centroids: list[list[float]],
                     query_vec: list[float], *, k: int = 10, nprobe: int = 4,
                     vec_col: str = "embedding") -> DataFrame:
-    """Top-k cosine probe against a persisted IVF index. The
-    top-nprobe cells are ranked driver-side (num_cells dot products
-    over the index metadata — microseconds), so the scan filter is a
-    LITERAL `cell IN (...)` that prunes partitions at planning time:
-    the probe reads nprobe/num_cells of the files, which is the
-    entire point of the layout. Columns: vec_id, sim.
+    """Top-k cosine probe against a persisted IVF index: `knn_ivf`'s
+    cell ranking (`_probe_cells`) becomes a LITERAL `cell IN (...)`
+    filter on the Parquet read, which prunes partitions at planning
+    time, then the same exact re-rank. Columns: vec_id, sim.
     """
-    import math
-
-    def unit(v):
-        n = math.sqrt(sum(x * x for x in v))
-        return [x / n for x in v] if n > 0 else list(v)
-
-    qn = unit([float(x) for x in query_vec])
-    ranked = sorted(
-        range(len(centroids)),
-        key=lambda i: (-sum(a * b for a, b in zip(qn, unit(centroids[i]))), i))
-    probes = ranked[:nprobe]
-
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probes))
-    q = F.lit([float(x) for x in query_vec])
-    scored = idx.select("vec_id", F.round(cosine(vec_col, q), 6).alias("sim"))
-    return scored.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
+    q = [float(x) for x in query_vec]
+    rows = spark.read.parquet(path).filter(
+        F.col("cell").isin(_probe_cells(centroids, q, nprobe)))
+    return _rerank(rows, q, k=k, vec_col=vec_col, dedup=False)
 
 
 # Product quantization -----------------------------------------------------
@@ -651,17 +640,13 @@ def build_ivfpq_index(vectors: DataFrame, path: str, *, dim: int,
     one assignment + encode pass, one partitioned write."""
     import json as _json
 
-    from parlerproject_spark.operators.topics import _assign, lloyd_centroids
-
-    cents = lloyd_centroids(vectors, k=num_cells, max_iter=3, init="maxmin",
-                            id_col=id_col, vec_col=vec_col,
-                            train_mod=train_mod)
+    cents = _ivf_train(vectors, num_cells=num_cells, max_iter=3,
+                       train_mod=train_mod, round_c=None, id_col=id_col,
+                       vec_col=vec_col)
     books = train_pq(vectors, dim=dim, m=m, ksub=ksub,
                      id_col=id_col, vec_col=vec_col)
-    assigned = (_assign(vectors.select(F.col(id_col).alias("vec_id"),
-                                       F.col(vec_col)),
-                        cents, id_col="vec_id", vec_col=vec_col)
-                .withColumnRenamed("topic", "cell"))
+    assigned = _ivf_assign(vectors, cents, None, id_col=id_col,
+                           vec_col=vec_col)
     codes = encode_pq(vectors, books, id_col=id_col, vec_col=vec_col)
     (assigned.join(codes, "vec_id")
      .select("vec_id", vec_col, "codes", "cell")
@@ -677,22 +662,16 @@ def probe_ivfpq_index(spark, path: str, query_vec: list, *, k: int = 10,
                       nprobe: int = 4, rerank: int = 64,
                       vec_col: str = "embedding") -> DataFrame:
     """Top-k cosine probe against a persisted IVF+PQ index: the
-    query ranks the cell centroids DRIVER-SIDE → a literal
-    `cell IN (...)` partition filter (planning-time pruning reads
-    nprobe/num_cells of the files); inside the probed cells the
-    stored PQ codes score and re-rank exactly as in knn_pq
-    (_adc_rerank). Columns: vec_id, sim."""
+    query ranks the cell centroids driver-side with knn_ivf's
+    `_probe_cells` → a literal `cell IN (...)` partition filter
+    (planning-time pruning reads nprobe/num_cells of the files);
+    inside the probed cells the stored PQ codes score and re-rank
+    exactly as in knn_pq (_adc_rerank). Columns: vec_id, sim."""
     import json as _json
-
-    import numpy as np
 
     model = _json.loads(
         spark.read.parquet(f"{path}/model").first()["model"])
-    C = np.array(model["centroids"], dtype=np.float64)
-    q = np.array(query_vec, dtype=np.float64)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    cells = [int(c) for c in np.argsort(-(cn @ q))[:nprobe]]
+    cells = _probe_cells(model["centroids"], query_vec, nprobe)
     rows = spark.read.parquet(f"{path}/rows").filter(
         F.col("cell").isin(cells))
     return _adc_rerank(rows.select("vec_id", "codes"),

@@ -137,15 +137,18 @@ def train_bpe(docs: DataFrame, *, n_merges: int = 50,
     sequential vocab-table jobs — r4 verdict's one genuine scale
     weak spot): rounds now scale with count-distribution flatness,
     not vocabulary size, and each round is still one vocab-sized
-    aggregation. Each round runs exactly ONE Spark job: the batch's
+    aggregation. Each round runs one collect, 2 jobs under AQE (its
+    aggregation's shuffle stage, then the result): the batch's
     merges apply in a single Arrow pass (`_apply_merges_arrow` —
     sequential greedy semantics preserved) behind a LAZY
-    localCheckpoint, so the next round's pair-count collect both
+    localCheckpoint whose declaration runs no job (a narrow map over
+    the last checkpoint), so the next round's pair-count collect both
     materializes the rewritten table (truncating the fold lineage —
     same trap and cure as dedup.duplicate_clusters) and aggregates
-    it. The r12 shape ran the collect plus 1 checkpoint job per ~4
-    applied merges (one interpreted JVM fold each); fusing them
-    measured ~8 rounds × 2-4 jobs → 8 rounds × 1 job at sf0.1 with
+    it; bpe_merges_docs at sf0.01 ran 29 jobs for 14 rounds while
+    being built. The r12 shape ran the collect plus 1 checkpoint job
+    per ~4 applied merges (one interpreted JVM fold each); fusing them
+    measured ~8 rounds × 2-4 jobs → 8 rounds × 1 collect at sf0.1 with
     an identical merge sequence. A final round whose applies no
     consumer reads is never computed at all. Stops when no pair
     occurs more than once (nothing left to compress). Pass `stats`
@@ -324,7 +327,7 @@ def train_wordpiece(docs: DataFrame, *, n_merges: int = 20,
     does NOT carry over (merging a pair changes the DENOMINATOR
     counts of every pair sharing a symbol, so a batch mate's score
     can move), hence one merge per round by design; the per-round
-    cost is ONE vocab-sized job plus one checkpoint job (r13: the
+    cost is one vocab-sized collect, 2 jobs under AQE (r13: the
     previous round shape — separate pair/symbol aggregates joined
     through two broadcast builds and a TakeOrdered collect — was 4
     jobs per round and measured 12.3 s for 8 rounds at sf0.1; the
@@ -380,11 +383,12 @@ def train_wordpiece(docs: DataFrame, *, n_merges: int = 20,
         # the accumulated interpreted folds TWICE (pair counts +
         # symbol counts), which measured 3x slower at sf0.1. The
         # table is vocab-sized; 1 materialization/round is noise.
-        # LAZY checkpoint (r13): the NEXT round's collect is the
-        # first action, so one job materializes the applied table
-        # and aggregates it — the eager form was 2 jobs/round, and
-        # the final round's apply (which no consumer reads) ran for
-        # nothing.
+        # LAZY checkpoint: the apply is a narrow map over the last
+        # checkpoint, so declaring it runs no job, and the NEXT
+        # round's collect (2 jobs under AQE: its aggregation's shuffle
+        # stage, then the result) materializes it. wordpiece_merges_docs
+        # at sf0.01 ran 25 jobs for 12 rounds while being built. The
+        # final round's apply, which no consumer reads, never runs.
         symtab = _apply_merge_to(
             symtab, a, b, merged).localCheckpoint(eager=False)
     return merges

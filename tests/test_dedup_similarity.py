@@ -188,14 +188,47 @@ def test_knn_ivf_probes_prune_to_nprobe_cells(spark):
            similarity.knn_ivf(vecs, q, k=12, num_cells=3, nprobe=1,
                               max_iter=4).collect()}
     assert got == {1, 20, 21, 22}
-    # a multi-row query side takes the broadcast probe-join form: each
-    # query row probes its own nearest cell, and nothing else is read
-    q2 = spark.createDataFrame([([0.0, 1.0, 0.05],), ([1.0, 0.05, 0.0],)],
-                               ["q"])
-    got2 = {r["vec_id"] for r in
-            similarity.knn_ivf(vecs, q2, k=12, num_cells=3, nprobe=1,
-                               max_iter=4).collect()}
-    assert got2 == {1, 20, 21, 22, 0, 10, 11, 12}
+
+
+def test_lsh_query_buckets_equal_corpus_signatures(spark):
+    """The driver-side query buckets and the corpus signature map sign
+    with one plane matrix: a corpus vector's exact bucket in every
+    table is the `sig` `_signatures_arrow` gives it, so a vector
+    always probes its own buckets. A multi-row query is rejected."""
+    import random
+
+    import pytest
+
+    rng = random.Random(11)
+    # eighths are exact in the float32 corpus column
+    rows = [(i, [rng.randint(-8, 8) / 8.0 for _ in range(16)])
+            for i in range(6)]
+    sigs = similarity._signatures_arrow(
+        _vecs(spark, rows), vec_col="embedding", key_cols=["vec_id"],
+        dim=16, num_planes=similarity.LSH_PLANES,
+        num_tables=similarity.LSH_TABLES).collect()
+    by_vec = {}
+    for r in sigs:
+        by_vec.setdefault(r["vec_id"], {})[r["tbl"]] = r["sig"]
+    for i, v in rows:
+        assert similarity._lsh_query_buckets(v, 16) == [
+            by_vec[i][t] for t in range(similarity.LSH_TABLES)]
+    two = spark.createDataFrame([([1.0] * 16,), ([0.5] * 16,)], ["q"])
+    with pytest.raises(ValueError, match="knn_lsh"):
+        similarity.knn_lsh(_vecs(spark, rows), two, dim=16)
+
+
+def test_probe_cells_ties_zero_norm_and_all_cells():
+    """IVF cell ranking (pure Python): cells rank by cosine to the
+    query, ties go to the lowest cell index, a zero-norm centroid is
+    kept as-is (similarity 0, like topics.unit_rows), and
+    nprobe >= num_cells returns every cell."""
+    cents = [[2.0, 0.0], [1.0, 0.0], [0.0, 1.0], [0.0, 0.0]]
+    # cells 0 and 1 tie after normalization; 2 and the zero cell tie at 0
+    assert similarity._probe_cells(cents, [1.0, 0.0], 2) == [0, 1]
+    assert similarity._probe_cells(cents, [1.0, 0.0], 4) == [0, 1, 2, 3]
+    assert similarity._probe_cells(cents, [-1.0, 0.0], 2) == [2, 3]
+    assert similarity._probe_cells(cents, [0.0, -1.0], 9) == [0, 1, 3, 2]
 
 
 def test_lsh_index_probe_prunes_partitions(spark, sf_dir, tmp_path):

@@ -15,6 +15,9 @@ checkpoints, AQE stage-jobs of the noop write), i.e. the number of
 sequential driver round trips. Unlike wall time it is deterministic
 and immune to CPU steal on a shared host.
 
+`python_nodes` counts the Python nodes of the executed plan (UDF
+evaluation, pandas maps and Python data-source scans), each once.
+
 `python_cpu_s` is the CPU time (utime+stime from /proc/<pid>/stat) that
 the JVM's live descendant processes, i.e. the PySpark daemon and its
 Python workers, spent over that same first run. It counts Python-worker
@@ -34,6 +37,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parlerproject_spark import queries as Q  # noqa: E402
+from parlerproject_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from parlerproject_spark.plans import inspect  # noqa: E402
 from parlerproject_spark.session import get_spark  # noqa: E402
 
@@ -63,22 +67,18 @@ def _descendant_ticks(root: int) -> dict[int, int]:
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    runs, sf_dir, plan_dir, suffix = 3, "/root/testdata/sf0.1", None, "before"
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        a = args[i]
-        if a == "--runs":
-            runs = int(args[i + 1]); i += 2
-        elif a == "--sf":
-            sf_dir = args[i + 1]; i += 2
-        elif a == "--plan-dir":
-            plan_dir = args[i + 1]; i += 2
-        elif a == "--suffix":
-            suffix = args[i + 1]; i += 2
-        else:
-            names.append(a); i += 1
+    import argparse
+
+    ap = argparse.ArgumentParser(
+        description="Time registered queries in isolation (noop sink).")
+    ap.add_argument("names", nargs="*", help="registered query names")
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--sf", dest="sf_dir", default=DEFAULT_SF_DIR)
+    ap.add_argument("--plan-dir")
+    ap.add_argument("--suffix", default="before")
+    a = ap.parse_intermixed_args()
+    names, runs, sf_dir = a.names, a.runs, a.sf_dir
+    plan_dir, suffix = a.plan_dir, a.suffix
 
     spark = get_spark("profile")
     registry = Q.queries()
@@ -112,7 +112,7 @@ def main() -> None:
         n_scan = len(re.findall(r"Scan parquet", plan))
         n_py = len(re.findall(
             r"BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|"
-            r"FlatMapGroupsInPandas", plan))
+            r"FlatMapGroupsInPandas|BatchScan [^\n]*\(Python\)", executed))
         out[name] = {"runs": per, "median": sorted(per)[len(per) // 2],
                      "jobs": jobs, "exchanges": n_ex, "scans": n_scan,
                      "python_nodes": n_py,
