@@ -20,6 +20,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from parlerproject_spark.operators.stats import (_bucketed_prefix_sum,
+                                                 _range_bucket,
+                                                 _value_bounds)
+
 
 def ranking_metrics(results: DataFrame, judgments: DataFrame, *,
                     k: int = 10, query_col: str = "query_id",
@@ -86,10 +90,6 @@ def ranking_metrics(results: DataFrame, judgments: DataFrame, *,
         .alias("recall"))
 
 
-# Range buckets of the two-level prefix sum (see _rank_sum).
-_N_BUCKETS = 1024
-
-
 def _rank_sum(rows: DataFrame, keys: list[str]) -> DataFrame:
     """The tie-exact rank-sum kernel behind roc_auc, grouped_roc_auc
     and mann_whitney_u. `rows` carries *keys, __s (double value) and
@@ -101,60 +101,29 @@ def _rank_sum(rows: DataFrame, keys: list[str]) -> DataFrame:
     NOT the textbook per-row global rank — that is a full corpus sort.
     The input collapses to the per-(keys, value) histogram (one
     map-side-combined aggregation), PERSISTED: it is the reduction
-    artifact with four consumers (bounds, bucketed rows, bucket
-    totals, final sums). A 100 TB pipeline with raw float scores
-    quantizes first, so the cached relation stays reduction-sized.
-    A float-scored classifier has distinct values ≈ rows, so the
-    prefix sum is TWO-LEVEL rather than one window per group: values
-    range-bucket into ≤_N_BUCKETS ordered buckets per group (floor
-    over (s−lo)/(hi−lo) is IEEE-monotone, so bucket order == value
-    order); cross-bucket negative offsets come from a window over
-    the ≤_N_BUCKETS bucket rows `partitionBy(keys)`; the
-    within-bucket prefix runs `partitionBy(keys, bucket)`. Ungrouped
-    callers pass a constant key column, so the per-group structures
-    are ≤_N_BUCKETS rows and the within-bucket partitions hold
-    ~distinct/B rows each.
-
-    NaN values are ISOLATED from the bucketing math: Spark's max()
-    treats NaN as the largest double (span would go NaN and
-    floor(NaN) is 0 — collapsing EVERY row into bucket 0). Bounds are
-    computed over non-NaN values only and NaN rows are routed
-    straight to the top bucket, where the within-bucket ORDER BY (NaN
-    sorts above every double) keeps the cumulative identity exact.
+    artifact with several consumers (bounds, bucket totals, ranked
+    rows). A 100 TB pipeline with raw float scores quantizes first,
+    so the cached relation stays reduction-sized. neg_below is
+    `stats._bucketed_prefix_sum` of __neg over the value-ordered
+    range buckets of each group (`stats._range_bucket`), so a
+    float-scored classifier (distinct values ≈ rows) never lands in
+    one window partition. Ungrouped callers pass a constant key
+    column. NaN values sit in the top bucket, above every double.
     """
     per = (rows.groupBy(*keys, "__s")
            .agg(F.sum("__y").alias("__pos"),
                 F.sum(1 - F.col("__y")).alias("__neg"))
            .persist())
-    s_fin = F.when(F.isnan(F.col("__s")), F.lit(None)).otherwise(F.col("__s"))
-    bounds = (per.groupBy(*keys)
-              .agg(F.min(s_fin).alias("__lo"), F.max(s_fin).alias("__hi")))
-    span = F.col("__hi") - F.col("__lo")
-    top = F.lit(_N_BUCKETS - 1)
-    bucket = F.when(F.isnan(F.col("__s")), top).otherwise(
-        F.coalesce(
-            F.when(span > 0,
-                   F.least(F.floor((F.col("__s") - F.col("__lo"))
-                                   / span * _N_BUCKETS),
-                           top)).otherwise(F.lit(0)),
-            top)).cast("long")
+    bounds = per.groupBy(*keys).agg(*_value_bounds(F.col("__s")))
+    bucket = _range_bucket(F.col("__s"), F.col("__lo"), F.col("__hi"))
     b = (per.join(F.broadcast(bounds), keys)
          .select(*keys, "__s", "__pos", "__neg", bucket.alias("__b")))
-    wo = (Window.partitionBy(*keys).orderBy("__b")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    btot = (b.groupBy(*keys, "__b")
-            .agg(F.sum("__neg").alias("__bneg"))
-            .select(*keys, "__b",
-                    F.coalesce(F.sum("__bneg").over(wo), F.lit(0))
-                    .alias("__off")))
-    wi = (Window.partitionBy(*keys, "__b").orderBy("__s")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    neg_below = (F.col("__off")
-                 + F.coalesce(F.sum("__neg").over(wi), F.lit(0)))
-    contrib = F.col("__pos") * (neg_below.cast("double")
+    ranked = _bucketed_prefix_sum(b, keys=keys, buckets=["__b"],
+                                  order=["__s"], weight=F.col("__neg"))
+    contrib = F.col("__pos") * (F.col("__before").cast("double")
                                 + F.col("__neg") / 2.0)
-    return (b.join(btot, [*keys, "__b"])
-            .select(*keys, "__s", "__pos", "__neg", contrib.alias("__c")))
+    return ranked.select(*keys, "__s", "__pos", "__neg",
+                         contrib.alias("__c"))
 
 
 def _auc_columns() -> list[Column]:
@@ -179,7 +148,7 @@ def roc_auc(df: DataFrame, *, score_col: str = "score",
     identity AUC = Σ_s pos_s · (neg_below_s + neg_s/2) / (n_pos·n_neg)
     over `_rank_sum` with one constant group key. No unpartitioned
     window anywhere — every shuffle is keyed and every
-    single-partition structure is ≤_N_BUCKETS rows.
+    single-partition structure is ≤ stats.RANK_BUCKETS rows.
     """
     rows = df.select(F.lit(0).alias("__g"),
                      F.col(score_col).cast("double").alias("__s"),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from parlerproject_spark.functions.text import stable_hash31, tokenize
+from parlerproject_spark.operators.stats import _top_k
 
 
 # Okapi BM25 term-saturation and length-normalization constants.
@@ -47,13 +48,9 @@ def _bm25_top_k(postings: DataFrame, stats: DataFrame,
                        / (F.col("tf") + _K1 * (1.0 - _B + _B * F.col("dl")
                                                / F.col("avgdl"))))
                       .alias("s")))
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.groupBy("doc_id")
-            .agg(F.round(F.sum("s"), 6).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(top_k)
-            .select("doc_id", "score",
-                    F.row_number().over(w).cast("long").alias("rank")))
+    return _top_k(scored.groupBy("doc_id")
+                  .agg(F.round(F.sum("s"), 6).alias("score")),
+                  [F.col("score").desc(), F.col("doc_id").asc()], top_k)
 
 
 def _bm25_index(docs: DataFrame, terms: list[str] | None, *, id_col: str,
@@ -148,13 +145,8 @@ def pmi_collocations(docs: DataFrame, *, text_col: str = "text",
                                     / ((F.col("c1") / F.col("n_uni"))
                                        * (F.col("c2") / F.col("n_uni")))),
                               6).alias("pmi")))
-    w = Window.orderBy(F.col("pmi").desc(), F.col("w1").asc(),
-                       F.col("w2").asc())
-    return (scored
-            .orderBy(F.col("pmi").desc(), F.col("w1").asc(),
-                     F.col("w2").asc())
-            .limit(top_k)
-            .withColumn("rank", F.row_number().over(w).cast("long")))
+    return _top_k(scored, [F.col("pmi").desc(), F.col("w1").asc(),
+                           F.col("w2").asc()], top_k)
 
 
 # Persisted inverted index -------------------------------------------------
@@ -387,16 +379,14 @@ def hybrid_rerank(docs: DataFrame, query_terms: list[str], *,
            .agg(F.round(F.count_distinct("t") / F.lit(float(len(terms))),
                         6).alias("coverage")))
     mx = cand.agg(F.max("score").alias("__mx"))
-    w = Window.orderBy(F.col("rerank_score").desc(), F.col("doc_id").asc())
-    return (cand.join(cov, "doc_id")
-            .crossJoin(F.broadcast(mx))
-            .withColumn("rerank_score",
-                        F.round(0.5 * F.col("coverage")
-                                + 0.5 * F.col("score") / F.col("__mx"), 6))
-            .orderBy(F.col("rerank_score").desc(), F.col("doc_id").asc())
-            .limit(top_k)
-            .select("doc_id", "score", "coverage", "rerank_score",
-                    F.row_number().over(w).cast("long").alias("rank")))
+    scored = (cand.join(cov, "doc_id")
+              .crossJoin(F.broadcast(mx))
+              .select("doc_id", "score", "coverage",
+                      F.round(0.5 * F.col("coverage")
+                              + 0.5 * F.col("score") / F.col("__mx"), 6)
+                      .alias("rerank_score")))
+    return _top_k(scored, [F.col("rerank_score").desc(),
+                           F.col("doc_id").asc()], top_k)
 
 
 def hashed_embedding(docs: DataFrame, *, dim: int = 16,
@@ -466,8 +456,7 @@ def hashed_query_vector(query: str, *, dim: int = 16) -> list[float]:
 
 def rrf_fuse(rankings: DataFrame, *, k: int = 60,
              id_col: str = "doc_id", system_col: str = "system",
-             rank_col: str = "rank",
-             top_k: int | None = None) -> DataFrame:
+             rank_col: str = "rank", top_k: int) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) — the standard
     hybrid-search combiner: given ranked lists from several
     retrieval systems (lexical BM25, dense ANN, ...) as one long
@@ -480,8 +469,8 @@ def rrf_fuse(rankings: DataFrame, *, k: int = 60,
 
     Shape: ONE keyed aggregation over the (already top-k-bounded)
     ranked lists — input size is systems × k rows, never the corpus
-    — then the TakeOrdered cut; the final rank window rides on the
-    ≤ top_k-row limited result (the bm25_scores pattern). The 1/(k+r)
+    — then `stats._top_k`: the TakeOrdered cut, and the rank window
+    over its ≤ top_k rows. The 1/(k+r)
     sum over ≤ |systems| values is order-independent in IEEE
     addition for the 2-system case and rounded at 6 dp before the
     deterministic (score desc, id asc) tie-break.
@@ -495,8 +484,5 @@ def rrf_fuse(rankings: DataFrame, *, k: int = 60,
            .groupBy("doc_id")
            .agg(F.count(F.lit(1)).cast("long").alias("n_systems"),
                 F.round(F.sum("__r"), 6).alias("rrf_score")))
-    cut = (agg.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-           .limit(top_k) if top_k is not None else agg)
-    w = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-    return (cut.select("doc_id", "n_systems", "rrf_score")
-            .withColumn("rank", F.row_number().over(w).cast("long")))
+    return _top_k(agg, [F.col("rrf_score").desc(), F.col("doc_id").asc()],
+                  top_k)

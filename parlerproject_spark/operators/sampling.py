@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from parlerproject_spark.functions.text import stable_hash31
+from parlerproject_spark.operators.stats import _bucketed_prefix_sum
 
 #: hash-bucket resolution for sampling fractions (1/10000 granularity)
 SAMPLE_BUCKETS = 10_000
@@ -540,30 +541,19 @@ def curriculum_order(df: DataFrame, *, id_col: str, band_col: str,
     (curriculum learning), produced WITHOUT a global sort.
 
     `band_col` is any precomputed integer difficulty band (length
-    band, perplexity bucket, quality decile). The global index is a
-    two-level prefix sum: docs hash into `shards` independent
-    streams per band; (band, shard) group sizes — a ≤B·S-row frame —
-    get cross-group offsets from a broadcast cross join (no
-    unpartitioned window; the two-level prefix sum of
-    evaluation._rank_sum); the
-    within-group rank is a `partitionBy(band, shard)` row_number
-    over the seeded md5 key. Equivalent to
+    band, perplexity bucket, quality decile). The global index is
+    `stats._bucketed_prefix_sum` of 1 with the (band, shard) cell as
+    the bucket: docs hash into `shards` independent streams per band,
+    the cell offsets are a running sum over the ≤B·S-row cell-count
+    table, and the in-cell position is a `partitionBy(band, shard)`
+    running count in seeded md5 key order. Equivalent to
     row_number() over (order by band, shard, md5(seed:id), id) - 1,
-    but every shuffle is keyed and the only single-partition
-    structure is the B·S-cell offset table. One keyed exchange for
-    the window + two tiny aggregations.
+    but every corpus shuffle is keyed and the only single-partition
+    structure is the B·S-cell count table. One keyed exchange for the
+    window, one map-side-combined cell count (a second narrow scan)
+    and the tiny offset window.
 
     Columns: <id_col>, <band_col>, shard, order_idx.
-
-    Plan shape note: the size/offset branches re-scan the input
-    (3 narrow scans total) rather than sharing the window's
-    exchange. Deliberate: the branches map-side-combine to ≤B·S-row
-    partials before their exchanges, so the extra cost is two
-    projection-pruned column scans — forcing co-partitioning with
-    repartition() instead would push the FULL corpus through three
-    shuffles (measured), and a shared-subtree rewrite is defeated by
-    Catalyst correctly pruning the unused window from the count
-    branch.
     """
     key = F.md5(F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string")))
     staged = df.select(
@@ -571,23 +561,10 @@ def curriculum_order(df: DataFrame, *, id_col: str, band_col: str,
         (stable_hash31(F.col(id_col).cast("string")) % shards)
         .cast("int").alias("shard"),
         key.alias("__key"))
-    cnt = staged.groupBy(band_col, "shard").agg(F.count("*").alias("__n"))
-    other = cnt.select(F.col(band_col).alias("__b2"),
-                       F.col("shard").alias("__s2"),
-                       F.col("__n").alias("__n2"))
-    off = (cnt.crossJoin(F.broadcast(other))
-           .groupBy(band_col, "shard")
-           .agg(F.sum(F.when(
-               (F.col("__b2") < F.col(band_col))
-               | ((F.col("__b2") == F.col(band_col))
-                  & (F.col("__s2") < F.col("shard"))),
-               F.col("__n2")).otherwise(F.lit(0))).alias("__off")))
-    w = Window.partitionBy(band_col, "shard").orderBy("__key", id_col)
-    return (staged
-            .withColumn("__rn", F.row_number().over(w).cast("long"))
-            .join(F.broadcast(off), [band_col, "shard"])
+    return (_bucketed_prefix_sum(staged, keys=[], buckets=[band_col, "shard"],
+                                 order=["__key", id_col], weight=F.lit(1))
             .select(id_col, band_col, "shard",
-                    (F.col("__off") + F.col("__rn") - 1).alias("order_idx")))
+                    F.col("__before").alias("order_idx")))
 
 
 def length_bucket_batches(docs: DataFrame, *, id_col: str,

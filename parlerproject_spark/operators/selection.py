@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from parlerproject_spark.functions.text import tokenize
+from parlerproject_spark.operators.stats import (_bucketed_prefix_sum,
+                                                 _range_bucket,
+                                                 _value_bounds)
 from parlerproject_spark.operators.text_analysis import lm_score
 
 # 16^3 = 4096 hashed feature buckets: md5 prefix, engine-portable
@@ -385,51 +388,29 @@ def quantile_band_filter(df: DataFrame, *, group_col: str,
     window partition.
 
     A row survives iff its within-group ascending rank r (ties
-    broken by id) satisfies lo·n < r ≤ hi·n. Rank is a two-level
-    prefix sum (the evaluation._rank_sum kernel's shape):
-    scores range-bucket into ≤512 ordered buckets per group
-    (floor over (s−min)/span is IEEE-monotone, so bucket order
-    follows score order and equal scores share a bucket); the
-    cross-bucket offset is a `partitionBy(group)` running sum over
-    ≤512 rows per group; the within-bucket rank is a
-    `partitionBy(group, bucket)` row_number. Every shuffle is keyed
-    on (group) or (group, bucket); no partition holds more than one
-    bucket of one group.
+    broken by id) satisfies lo·n < r ≤ hi·n. r − 1 is
+    `stats._bucketed_prefix_sum` of 1 over each group's value-ordered
+    `stats._range_bucket`s, ordered (score, id) inside a bucket:
+    every shuffle is keyed on (group) or (group, bucket), and no
+    partition holds more than one bucket of one group.
 
-    The two reduction artifacts — per-group bounds (one row per
-    group) and per-(group, bucket) offsets (≤512 rows per
-    group) — persist (round-13, the _rank_sum idiom), so the FINAL
-    ranked pass is the only corpus consumer: one scan, one keyed
-    exchange, two broadcast joins against cached model-sized tables
-    (was 4 corpus scans).
+    The per-group bounds (one row per group, with the group size)
+    persist, so the bucket totals and the ranked pass read one
+    materialization of them.
 
     Columns: <group_col>, <id_col>, <score_col>, rank, n.
     """
     s = F.col(score_col).cast("double")
     base = df.select(F.col(group_col), F.col(id_col), s.alias("__s"))
     gb = (base.groupBy(group_col)
-          .agg(F.min("__s").alias("__lo"), F.max("__s").alias("__hi"),
-               F.count("*").alias("__n"))
+          .agg(*_value_bounds(F.col("__s")), F.count("*").alias("__n"))
           .persist())
-    span = F.col("__hi") - F.col("__lo")
-    bucket = F.when(span > 0,
-                    F.least(F.floor((F.col("__s") - F.col("__lo"))
-                                    / span * 512),
-                            F.lit(511))) \
-        .otherwise(F.lit(0)).cast("long")
+    bucket = _range_bucket(F.col("__s"), F.col("__lo"), F.col("__hi"))
     b = (base.join(F.broadcast(gb), group_col)
          .select(group_col, id_col, "__s", "__n", bucket.alias("__b")))
-    cnt = b.groupBy(group_col, "__b").agg(F.count("*").alias("__bn"))
-    woff = (Window.partitionBy(group_col).orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    off = (cnt.withColumn(
-               "__off", F.coalesce(F.sum("__bn").over(woff), F.lit(0)))
-           .select(group_col, "__b", "__off")
-           .persist())
-    wrn = Window.partitionBy(group_col, "__b").orderBy("__s", id_col)
-    ranked = (b.withColumn("__rn", F.row_number().over(wrn).cast("long"))
-              .join(F.broadcast(off), [group_col, "__b"])
-              .withColumn("rank", F.col("__off") + F.col("__rn")))
+    ranked = (_bucketed_prefix_sum(b, keys=[group_col], buckets=["__b"],
+                                   order=["__s", id_col], weight=F.lit(1))
+              .withColumn("rank", F.col("__before") + 1))
     return (ranked
             .filter((F.col("rank") > F.lit(lo) * F.col("__n"))
                     & (F.col("rank") <= F.lit(hi) * F.col("__n")))
@@ -512,8 +493,7 @@ def weak_label_summary(df: DataFrame, lf_cols: list[str], *,
 
 def quantile_match_scores(df: DataFrame, *, group_col: str = "source",
                           score_col: str = "score",
-                          id_col: str = "doc_id",
-                          n_buckets: int = 512) -> DataFrame:
+                          id_col: str = "doc_id") -> DataFrame:
     """Cross-group quantile NORMALIZATION — one step past
     `calibrate_scores`' per-group percent-rank: map every row's
     within-group rank onto the GLOBAL score distribution's order
@@ -528,27 +508,24 @@ def quantile_match_scores(df: DataFrame, *, group_col: str = "source",
     k = floor(pct·(N−1)) + 1; `calibrated` = the k-th smallest score
     globally (order: score, id).
 
-    Scale shape: the global ranking is NEVER a single-partition
-    window — it is the two-level prefix-sum of quantile_band_filter
-    applied globally: scores range-bucket into ≤ n_buckets ordered
-    buckets (floor is IEEE-monotone, equal scores share a bucket;
-    bounds are three collected doubles, injected as literals so no
-    stats subtree is re-planned per branch), the cross-bucket offset
-    is a running sum over the ≤ n_buckets-row count table (bounded
-    by the constant parameter, never the data — and BROADCAST back),
-    and within-bucket row_number windows partition BY BUCKET. The
-    rank→score map then joins on the rank key — a plain keyed
-    shuffle. Per-group pct is a group-partitioned window. Total
-    corpus cost: three column-pruned scans (stats, pct, ranking) and
-    two keyed exchanges; if the input is an expensive derived
-    pipeline rather than a columnar table, persist it first — the
-    operator deliberately does not cache on the caller's behalf.
+    Scale shape: the global rank is NEVER a single-partition window —
+    it is `stats._bucketed_prefix_sum` with no key: scores range-bucket
+    into ≤ stats.RANK_BUCKETS ordered buckets (bounds are three
+    collected doubles, injected as literals so no stats subtree is
+    re-planned per branch), the offsets are a running sum over the
+    bucket-count table (bounded by the constant, never the data), and
+    the within-bucket windows partition BY BUCKET. The rank→score map
+    then joins on the rank key — a plain keyed shuffle. Per-group pct
+    is a group-partitioned window. Total corpus cost: the bounds
+    collect, then three column-pruned scans (pct, bucket counts,
+    ranking); if the input is
+    an expensive derived pipeline rather than a columnar table,
+    persist it first — the operator deliberately does not cache on the
+    caller's behalf.
 
     Columns: <id_col>, <group_col>, score, pct (round 6), calibrated
     (an exact data value — no float synthesis, no rounding).
     """
-    from pyspark.sql import Window
-
     s = F.col(score_col).cast("double")
     base = df.select(F.col(id_col), F.col(group_col), s.alias("__s"))
 
@@ -560,39 +537,18 @@ def quantile_match_scores(df: DataFrame, *, group_col: str = "source",
     # train_scalar_quantizer contract): as literals they stop the
     # stats subquery from being re-planned under every branch that
     # needs the bucket expression
-    st = base.agg(F.min("__s").alias("__lo"),
-                  F.max("__s").alias("__hi"),
+    st = base.agg(*_value_bounds(F.col("__s")),
                   F.count(F.lit(1)).alias("__N")).collect()[0]
-    lo, hi, n_total = st["__lo"], st["__hi"], float(st["__N"])
-    span = (hi - lo) if (lo is not None and hi is not None) else 0.0
-    if span > 0:
-        bucket = F.least(F.floor((F.col("__s") - F.lit(lo))
-                                 / F.lit(span) * n_buckets),
-                         F.lit(n_buckets - 1)).cast("long")
-    else:
-        bucket = F.lit(0).cast("long")
+    bucket = _range_bucket(F.col("__s"), F.lit(st["__lo"]).cast("double"),
+                           F.lit(st["__hi"]).cast("double"))
     b = base.select(id_col, "__s", bucket.alias("__b"))
-    # ONE corpus exchange on the bucket key serves BOTH per-bucket
-    # windows (row_number and bucket size share the partitioning);
-    # the distinct below reuses the same exchange subtree and
-    # map-side-reduces to <= n_buckets rows before it shuffles
-    wrn = Window.partitionBy("__b").orderBy("__s", id_col)
-    bw = (b.withColumn("__rn", F.row_number().over(wrn).cast("long"))
-          .withColumn("__bn",
-                      F.count(F.lit(1)).over(Window.partitionBy("__b"))))
-    cnt = bw.select("__b", "__bn").distinct()
-    # running offset over the <= n_buckets-row count table (bounded
-    # by the constant parameter, not the data — the
-    # quantile_band_filter contract, applied globally)
-    woff = (Window.orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    off = cnt.withColumn("__off",
-                         F.coalesce(F.sum("__bn").over(woff), F.lit(0)))
-    ranked = (bw.join(F.broadcast(off.select("__b", "__off")), "__b")
-              .select((F.col("__off") + F.col("__rn")).alias("__gr"),
+    ranked = (_bucketed_prefix_sum(b, keys=[], buckets=["__b"],
+                                   order=["__s", id_col], weight=F.lit(1))
+              .select((F.col("__before") + 1).alias("__gr"),
                       F.col("__s").alias("__gs")))
 
-    k = (F.floor(F.col("__pct") * F.lit(n_total - 1.0)) + 1).cast("long")
+    k = (F.floor(F.col("__pct") * F.lit(float(st["__N"]) - 1.0)) + 1) \
+        .cast("long")
     tgt = pct.withColumn("__k", k)
     return (tgt.join(ranked, tgt["__k"] == ranked["__gr"])
             .select(F.col(id_col), F.col(group_col),

@@ -134,10 +134,10 @@ def psi_timeline(ref: DataFrame, cur: DataFrame, *, time_col: str,
     Columns: period, n_events, psi (round 6).
     """
     # the two reduction artifacts (1-row edges, bins-row reference
-    # histogram) persist — the evaluation._rank_sum idiom — so their
-    # three consumers read one materialization each instead of
-    # re-running the reference scans per subtree (was 5 static
-    # source scans)
+    # histogram) persist, as the histogram evaluation._rank_sum feeds
+    # to `_bucketed_prefix_sum` does, so their three consumers read
+    # one materialization each instead of re-running the reference
+    # scans per subtree (was 5 static source scans)
     edges = ref.agg(F.min(val_col).cast("double").alias("__mn"),
                     F.max(val_col).cast("double").alias("__mx")).persist()
     w = (F.col("__mx") - F.col("__mn")) / F.lit(float(bins))
@@ -208,6 +208,76 @@ def _cumulative_counts(ref: DataFrame, cur: DataFrame, key_col: str,
             .withColumn("n_r", F.sum("c_ref").over(byk))
             .withColumn("n_c", F.sum("c_cur").over(byk))
             .filter((F.col("n_r") > 0) & (F.col("n_c") > 0)))
+
+
+#: Ordered range buckets per key group of `_bucketed_prefix_sum`.
+RANK_BUCKETS = 1024
+
+
+def _value_bounds(s: Column) -> list[Column]:
+    """min/max aggregates of `s` over its non-NaN values (__lo, __hi):
+    Spark's max() ranks NaN above every double, so one NaN would make
+    the span NaN."""
+    fin = F.when(~F.isnan(s), s)
+    return [F.min(fin).alias("__lo"), F.max(fin).alias("__hi")]
+
+
+def _range_bucket(s: Column, lo: Column, hi: Column) -> Column:
+    """Ordered bucket of `s` in [0, RANK_BUCKETS) given its group's
+    `_value_bounds`: floor((s − lo)/(hi − lo)·B) is IEEE-monotone, so
+    bucket order follows value order and equal values share a bucket.
+    NaN goes to the top bucket, and so does NULL when the span is
+    positive; the in-bucket order places them. The other values of a
+    zero-span group share bucket 0."""
+    span = hi - lo
+    top = F.lit(RANK_BUCKETS - 1)
+    return (F.when(F.isnan(s), top)
+            .when(span > 0, F.least(F.floor((s - lo) / span * RANK_BUCKETS),
+                                    top))
+            .otherwise(F.lit(0)).cast("long"))
+
+
+def _bucketed_prefix_sum(rows: DataFrame, *, keys: list[str],
+                         buckets: list[str], order: list,
+                         weight: Column) -> DataFrame:
+    """`rows` plus `__before`: Σ `weight` over every row of the same
+    `keys` group that precedes this one in (buckets, order) order —
+    the one exact-rank kernel (AUC / Mann-Whitney rank sums, quantile
+    bands and matching, curriculum positions), never a global sort.
+
+    Two levels: the per-(keys, buckets) weight totals are one
+    map-side-combined aggregation, and their running sum over a
+    `partitionBy(keys)` window ordered by the buckets is each bucket's
+    offset — a window over at most groups × buckets rows, joined back
+    on (keys, buckets) with no hint, so adaptive execution picks the
+    broadcast side from the real sizes. Inside a bucket the running
+    sum is a `partitionBy(keys, buckets)` window in `order`, so no
+    partition holds more than one bucket of one group. Weights are
+    integers, so the sums are exact.
+    """
+    before = Window.unboundedPreceding, -1
+    totals = (rows.groupBy(*keys, *buckets)
+              .agg(F.sum(weight).alias("__bw")))
+    w_off = Window.partitionBy(*keys).orderBy(*buckets).rowsBetween(*before)
+    offsets = totals.select(
+        *keys, *buckets,
+        F.coalesce(F.sum("__bw").over(w_off), F.lit(0)).alias("__off"))
+    w_in = (Window.partitionBy(*keys, *buckets).orderBy(*order)
+            .rowsBetween(*before))
+    inner = F.coalesce(F.sum(weight).over(w_in), F.lit(0))
+    return (rows.join(offsets, [*keys, *buckets])
+            .withColumn("__before", F.col("__off") + inner)
+            .drop("__off"))
+
+
+def _top_k(df: DataFrame, order: list[Column], k: int) -> DataFrame:
+    """The first `k` rows of `df` in `order`, numbered 1..k in `rank`
+    (long): the cut is TakeOrderedAndProject, never a global sort, and
+    the numbering window runs over the ≤ k cut rows only."""
+    return (df.orderBy(*order).limit(k)
+            .withColumn("rank",
+                        F.row_number().over(Window.orderBy(*order))
+                        .cast("long")))
 
 
 def ks_drift(ref: DataFrame, cur: DataFrame, *, key_col: str,

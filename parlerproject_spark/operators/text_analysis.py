@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from parlerproject_spark.functions.text import tokenize
+from parlerproject_spark.operators.stats import _top_k
 
 # Marker words per language for the n-gram-heuristic language ID.
 # Deterministic and tiny by design: language ID over 100 TB must stay
@@ -503,13 +504,11 @@ def vocab_coverage(docs: DataFrame, *, text_col: str = "text",
     tf = (docs.select(F.explode(tokenize(text_col)).alias("term"))
           .groupBy("term").agg(F.count("*").alias("tf")))
     total = tf.agg(F.sum("tf").cast("double").alias("total"))
-    top = (tf.orderBy(F.col("tf").desc(), F.col("term").asc())
-           .limit(top_k))
-    w = (Window.orderBy(F.col("tf").desc(), F.col("term").asc())
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    top = _top_k(tf, [F.col("tf").desc(), F.col("term").asc()], top_k)
+    w = Window.orderBy("rank").rowsBetween(Window.unboundedPreceding,
+                                           Window.currentRow)
     return (top.crossJoin(F.broadcast(total))
-            .select("term", "tf",
-                    F.row_number().over(w).cast("long").alias("rank"),
+            .select("term", "tf", "rank",
                     F.round(F.sum("tf").over(w) / F.col("total"), 6)
                     .alias("cum_share")))
 
@@ -574,10 +573,7 @@ def corpus_zipf_stats(docs: DataFrame, *,
           .localCheckpoint(eager=True))
     totals = tf.agg(F.count("*").cast("long").alias("vocab_size"),
                     F.sum("tf").cast("long").alias("total_tokens"))
-    w = Window.orderBy(F.col("tf").desc(), F.col("term").asc())
-    head = (tf.orderBy(F.col("tf").desc(), F.col("term").asc())
-            .limit(1000)
-            .withColumn("rank", F.row_number().over(w)))
+    head = _top_k(tf, [F.col("tf").desc(), F.col("term").asc()], 1000)
     slope = head.agg(F.round(
         F.regr_slope(F.log("tf"), F.log("rank")), 6).alias("zipf_slope"))
     ent = (tf.crossJoin(F.broadcast(

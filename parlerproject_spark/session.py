@@ -1,8 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Defaults target the test harness (local[32], 128 GiB single JVM) but
-every setting is chosen to also be correct on a 1000-executor cluster
-reading ~100 TB: AQE on (runtime re-plan, skew-join splitting,
+Defaults size the local session to `local_cores()`, but every setting
+is chosen to also be correct on a 1000-executor cluster reading
+~100 TB: AQE on (runtime re-plan, skew-join splitting,
 partition coalescing), broadcast threshold sized for star-schema dims,
 Arrow enabled for the pandas-UDF layer, and UTC session time so
 results are reproducible across engines (the DuckDB oracle runs UTC).
@@ -14,11 +14,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def local_cores() -> int:
+    """Cores of the local session: $SPARK_GRAFT_CPUS when set, else the
+    CPUs this process may run on. Read at call time, so a caller that
+    sets the variable after importing the engine is still obeyed."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 # At 100 TB scale these would be set per-cluster; the values here are
-# ratios, not absolutes: shuffle partitions ~= 2-3x total cores, and
-# maxPartitionBytes kept at 128m so scan tasks stay memory-bounded.
+# ratios, not absolutes: one shuffle partition per local core (set in
+# get_spark), and maxPartitionBytes kept at 128m so scan tasks stay
+# memory-bounded.
 _DEFAULT_CONF = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -45,9 +54,9 @@ def get_spark(app_name: str = "parlerproject-spark", **overrides: str) -> SparkS
     ``overrides`` are applied after defaults, so tests can e.g. drop
     the broadcast threshold to force sort-merge plans.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = local_cores()
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    conf = dict(_DEFAULT_CONF)
+    conf = dict(_DEFAULT_CONF, **{"spark.sql.shuffle.partitions": str(cpus)})
     conf.update({k: str(v) for k, v in overrides.items()})
     for key, value in conf.items():
         builder = builder.config(key, value)

@@ -73,3 +73,10 @@ def test_no_flagged_never_invents_one():
     headline, timings, flagged = _mk(31, 0)
     line = bench._printed_line(headline, timings, flagged)
     assert "flagged" not in json.loads(line)
+
+
+def test_every_timed_name_is_a_registered_query():
+    # an unregistered name is a KeyError in every run's `errors`
+    from parlerproject_spark import queries as Q
+    names = set(Q.queries())
+    assert [n for n in bench.HEADLINE + bench.EXTRA if n not in names] == []

@@ -217,10 +217,15 @@ _BOUNDED_WINDOW_ALLOWLIST = {
                                # combined daily aggregation; never
                                # corpus rows
     "quantile_match_events",   # bucket-offset running sum over the
-                               # <= n_buckets(512)-row global count
-                               # table — bounded by the constant
-                               # parameter, never the data; all
+                               # <= stats.RANK_BUCKETS(1024)-row global
+                               # count table — bounded by the
+                               # constant, never the data; all
                                # row-level windows partition by bucket
+    "curriculum_order_docs",   # cell-offset running sum over the
+                               # (band, shard) count table: at most
+                               # bands × 16 shards rows (8 × 16 here),
+                               # never the docs; the row-level window
+                               # partitions by (band, shard)
     "unimax_mixture_docs",     # water-fill cumsum over the per-SOURCE
                                # count table: one row per source,
                                # bounded by the domain alphabet
@@ -238,6 +243,14 @@ _BOUNDED_WINDOW_ALLOWLIST = {
                                # the corpus (the rrf_hybrid_docs
                                # precedent, composed)
 }
+
+
+def test_plan_lists_name_registered_queries():
+    """A stale name in the allowlist or the scan budgets exempts
+    nothing and hides that its query is gone."""
+    names = set(Q.queries())
+    assert set(_BOUNDED_WINDOW_ALLOWLIST) <= names
+    assert set(_SCAN_BUDGET_OVERRIDES) <= names
 
 
 def test_registry_has_no_unpartitioned_window_over_unbounded_input(
@@ -353,7 +366,6 @@ _SCAN_BUDGET_OVERRIDES = {
     "semantic_decontaminate_embeddings": 3,
     "token_budget_sample_docs": 3,
     "association_rules_events": 3,
-    "curriculum_order_docs": 3,
     "ips_policy_value_events": 3,
     "robust_outliers_events": 3,
     "theil_sen_trend_users": 3,
@@ -381,6 +393,9 @@ _SCAN_BUDGET_OVERRIDES = {
     # cut_substring_spans_docs (was 4): round-13 combined
     # token+gram-hash stream — count table and cutting pass share one
     # exploded scan, coverage via rows-window; 2 scans statically
+    # curriculum_order_docs (was 3): the (band, shard) cell counts are
+    # one aggregation feeding the offset window, where a broadcast
+    # cross join re-planned them — 2 scans, the default covers it
     # quantile_band_docs (was 4): round-13 persisted bounds + offset
     # tables (roc_auc idiom) — final ranked pass is the only corpus
     # consumer; 2 scans statically

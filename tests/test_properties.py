@@ -240,7 +240,7 @@ def test_quantile_match_output_is_permutation_of_global_scores(
     df = spark.createDataFrame(
         [(i, g, float(v)) for i, (g, v) in enumerate(rows)],
         "doc_id bigint, source string, score double")
-    out = quantile_match_scores(df, n_buckets=4).collect()
+    out = quantile_match_scores(df).collect()
     assert len(out) == len(rows)
     scores = sorted(float(v) for _, v in rows)
     for r in out:

@@ -497,7 +497,7 @@ class TestRRFFuse:
         rows = [("bm25", 1, 1), ("bm25", 2, 2), ("bm25", 3, 3),
                 ("dense", 2, 1), ("dense", 1, 2), ("dense", 4, 3)]
         df = spark.createDataFrame(rows, "system string, doc_id long, rank long")
-        out = {r["doc_id"]: r for r in rrf_fuse(df, k=60).collect()}
+        out = {r["doc_id"]: r for r in rrf_fuse(df, k=60, top_k=4).collect()}
         # docs 1 and 2 appear in both systems with ranks {1,2} -> tie
         assert out[1]["n_systems"] == 2 and out[2]["n_systems"] == 2
         assert out[1]["rrf_score"] == out[2]["rrf_score"]

@@ -100,8 +100,9 @@ def _run_sharded(sf_dir: str, names: list[str], jobs: int) -> int:
     import re
     import subprocess
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or "32")
-    per = max(2, cpus // jobs)
+    from parlerproject_spark.session import local_cores
+
+    per = max(2, local_cores() // jobs)
     # driver heap per shard: 80% of physical memory split over the
     # shards, at least 2g — four default 8g heaps overcommit a 16 GiB
     # host, and the kernel then kills a worker JVM mid-run

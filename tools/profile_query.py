@@ -15,8 +15,13 @@ checkpoints, AQE stage-jobs of the noop write), i.e. the number of
 sequential driver round trips. Unlike wall time it is deterministic
 and immune to CPU steal on a shared host.
 
-`python_nodes` counts the Python nodes of the executed plan (UDF
-evaluation, pandas maps and Python data-source scans), each once.
+`scans` counts the parquet scans and `python_nodes` the Python nodes
+(UDF evaluation, pandas maps and Python data-source scans) of the
+executed plan, each once.
+
+After a query's runs the tool calls `caching.release_all`, so the next
+query plans over its own sources, never over a relation an earlier
+query persisted. Runs of one query share its cache, as in bench.py.
 
 `python_cpu_s` is the CPU time (utime+stime from /proc/<pid>/stat) that
 the JVM's live descendant processes, i.e. the PySpark daemon and its
@@ -37,6 +42,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parlerproject_spark import queries as Q  # noqa: E402
+from parlerproject_spark.caching import release_all  # noqa: E402
 from parlerproject_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from parlerproject_spark.plans import inspect  # noqa: E402
 from parlerproject_spark.session import get_spark  # noqa: E402
@@ -85,6 +91,7 @@ def main() -> None:
     # Warm JVM + Arrow daemons, as bench.py does.
     Q.flagship(spark, sf_dir).count()
     spark.range(32).mapInPandas(lambda it: it, "id long").count()
+    release_all(spark)
 
     def timed_run(fn) -> float:
         start = time.perf_counter()
@@ -106,10 +113,9 @@ def main() -> None:
         py_cpu = sum(t - before.get(pid, 0) for pid, t in after.items())
         per += [timed_run(fn) for _ in range(runs - 1)]
         df = fn(spark, sf_dir)
-        plan = inspect.formatted_plan(df)
         executed = inspect.executed_plan(df)
         n_ex = inspect.exchange_count(executed)
-        n_scan = len(re.findall(r"Scan parquet", plan))
+        n_scan = len(re.findall(r"Scan parquet", executed))
         n_py = len(re.findall(
             r"BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|"
             r"FlatMapGroupsInPandas|BatchScan [^\n]*\(Python\)", executed))
@@ -122,7 +128,8 @@ def main() -> None:
             os.makedirs(plan_dir, exist_ok=True)
             with open(os.path.join(plan_dir, f"{name}_{suffix}.txt"),
                       "w") as fh:
-                fh.write(plan)
+                fh.write(inspect.formatted_plan(df))
+        release_all(spark)
         print(json.dumps({name: out[name]}))
     print(json.dumps(out))
 
