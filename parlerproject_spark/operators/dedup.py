@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from parlerproject_spark.caching import session_broadcast
+from parlerproject_spark.caching import fixpoint, session_broadcast
 from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.functions.text import (fingerprint_md5,
                                                 stable_hash31,
@@ -301,12 +301,11 @@ def duplicate_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     iterations; max_iter=8 covers diameters into the tens of
     thousands. Only (id, id) pairs ever shuffle.
 
-    The label table is localCheckpoint()ed each iteration: the
-    pointer-jump self-join references it twice, so without lineage
-    truncation the logical plan doubles per iteration (exponential
-    analysis time — the standard iterative-algorithm trap GraphX
-    checkpoints around). This is an iterative operator like
-    knn_ivf's Lloyd loop: constructing it runs jobs by design.
+    `caching.fixpoint` checkpoints the label table each iteration:
+    the pointer-jump self-join references it twice, so without
+    lineage truncation the logical plan doubles per iteration
+    (exponential analysis time — the trap GraphX checkpoints
+    around). Constructing the operator runs jobs by design.
 
     Fixed-point detection: labels are per-vertex monotone
     non-increasing (every update is a least() including the current
@@ -316,6 +315,8 @@ def duplicate_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     ~1e12 rows of max-bigint ids without overflow). Non-integral ids
     (strings, floats) don't cast losslessly to decimal, so they use
     a changed-rows probe between consecutive checkpoints instead.
+    No fixed point within `max_iter` iterations raises RuntimeError
+    (split clusters would be a silent wrong answer — ADVICE r2).
     Columns: doc_id, cluster_id.
     """
     if symmetric:
@@ -347,21 +348,10 @@ def duplicate_clusters(pairs: DataFrame, *, id_a: str = "id_a",
                     .select("e.src", "e.dst")
                     .distinct()
                     .localCheckpoint(eager=True))
-    labels = (edges_sl.select(F.col("src").alias("v")).distinct()
-              .select("v", F.col("v").alias("lbl")))
-    # The one-scalar sum comparison is only sound for INTEGRAL ids:
-    # strings cast to decimal(38,0) as NULL (sum None == None would
-    # "converge" after one iteration with split clusters — ADVICE r8)
-    # and fractional floats alias under the decimal truncation. For
-    # every other id type, fall back to a changed-rows probe against
-    # the previous checkpoint (one extra join per iteration, but both
-    # sides are already-materialized checkpoints).
-    from pyspark.sql.types import IntegralType
-    sum_check = isinstance(labels.schema["lbl"].dataType, IntegralType)
-    converged = False
-    prev_sum = None
-    prev_labels = None
-    for _ in range(max_iter):
+    seed = (edges_sl.select(F.col("src").alias("v")).distinct()
+            .select("v", F.col("v").alias("lbl")))
+
+    def propagate(labels):
         cur = (edges_sl.join(labels, edges_sl["dst"] == labels["v"])
                .groupBy("src").agg(F.min("lbl").alias("lbl"))
                .select(F.col("src").alias("v"), "lbl"))
@@ -373,42 +363,34 @@ def duplicate_clusters(pairs: DataFrame, *, id_a: str = "id_a",
                            F.least(cur["lbl"],
                                    F.coalesce(F.col("__ylbl"), cur["lbl"]))
                            .alias("lbl")))
-        # LAZY checkpoint, yet under AQE declaring it runs the
-        # iteration's shuffle stages at once (near_dup_clusters at
-        # sf0.01: 5 and 4 jobs for its 2 iterations); the fixed-point
-        # probe below then reads the checkpointed label blocks
-        new_labels = cur.localCheckpoint(eager=False)
-        # fixed-point check over the checkpoint
-        # (ADVICE r2: a component whose propagation distance exceeds a
-        # fixed budget would otherwise silently return split clusters)
-        if sum_check:
-            cur_sum = (new_labels
-                       .agg(F.sum(F.col("lbl").cast("decimal(38,0)"))
-                            .alias("s")).collect()[0]["s"])
-            if cur_sum is not None and cur_sum == prev_sum:
-                labels = new_labels
-                converged = True
-                break
-            prev_sum = cur_sum
-        elif prev_labels is not None:
-            p = prev_labels.select(F.col("v").alias("__pv"),
-                                   F.col("lbl").alias("__plbl"))
-            changed = (new_labels
-                       .join(p, new_labels["v"] == p["__pv"])
-                       .where(F.col("lbl") != F.col("__plbl"))
-                       .limit(1).count())
-            if changed == 0:
-                labels = new_labels
-                converged = True
-                break
-        prev_labels = labels = new_labels
-    if not converged:
-        import warnings
-        warnings.warn(
-            f"duplicate_clusters: no fixed point within max_iter={max_iter} "
-            "iterations — some clusters may be split; raise max_iter "
-            "(each iteration path-halves, so +1 iter doubles reach)",
-            RuntimeWarning, stacklevel=2)
+        return cur
+
+    # The sum probe is only sound for INTEGRAL ids: strings cast to
+    # decimal(38,0) as NULL (None == None would fake a fixed point with
+    # split clusters — ADVICE r8) and fractional floats alias under the
+    # truncation. Other ids join two checkpoints for a changed row;
+    # round 1 has only the seed to compare with, so it skips the probe.
+    from pyspark.sql.types import IntegralType
+    if isinstance(seed.schema["lbl"].dataType, IntegralType):
+        prev_sum = object()  # equal to no round's sum
+
+        def converged(_prev, cur):
+            nonlocal prev_sum
+            s = (cur.agg(F.sum(F.col("lbl").cast("decimal(38,0)")))
+                 .collect()[0][0])
+            done, prev_sum = s == prev_sum, s
+            return done
+    else:
+        def converged(prev, cur):
+            if prev is seed:
+                return False
+            p = prev.select(F.col("v").alias("__pv"),
+                            F.col("lbl").alias("__plbl"))
+            return (cur.join(p, cur["v"] == p["__pv"])
+                    .where(F.col("lbl") != F.col("__plbl"))
+                    .limit(1).count()) == 0
+    labels = fixpoint(seed, propagate, rounds=max_iter,
+                      name="duplicate_clusters", converged=converged)
     return labels.select(F.col("v").alias("doc_id"),
                          F.col("lbl").alias("cluster_id"))
 

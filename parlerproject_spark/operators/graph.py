@@ -19,8 +19,12 @@ exactly reproducible.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from parlerproject_spark.caching import fixpoint
 
 
 def cointeraction_edges(events: DataFrame, *,
@@ -119,8 +123,8 @@ def _power_iteration(edges: DataFrame, start: DataFrame, *,
 
     `tol` adds an eager post-hoc convergence check: the max per-node
     |Δrank| of the last iteration, with a RuntimeWarning above tol
-    (the duplicate_clusters non-convergence guard, r4 verdict #6).
-    Like duplicate_clusters' fixed-point count it runs a job at
+    (r4 verdict #6; `iters` rounds is the defined result, so it warns).
+    Like duplicate_clusters' fixed-point probe it runs a job at
     construction time, so the default stays fully lazy (and the
     oracles' unrolled CTEs bit-identical).
 
@@ -310,7 +314,7 @@ def triangle_counts(edges: DataFrame, *,
                         .otherwise(F.lit(0.0)), 6).alias("clustering")))
 
 
-def label_propagation(edges: DataFrame, *, iters: int = 3) -> DataFrame:
+def label_propagation(edges: DataFrame, *, iters: int) -> DataFrame:
     """Synchronous label-propagation community detection, fixed
     iteration count, fully deterministic tie-break.
 
@@ -335,29 +339,24 @@ def label_propagation(edges: DataFrame, *, iters: int = 3) -> DataFrame:
     sym = (und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
            .unionAll(und.select(F.col("b").alias("src"),
                                 F.col("a").alias("dst"))))
-    labels = (sym.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
-    for _ in range(iters):
+
+    def adopt(labels):
         nb = (sym.join(labels.withColumnRenamed("node", "dst"), "dst")
               .groupBy(F.col("src").alias("node"), "label")
               .agg(F.count("*").alias("cnt")))
-        labels = (nb.groupBy("node")
-                  .agg(F.max_by(
-                      "label", F.struct(F.col("cnt"), (-F.col("label"))
-                                        .alias("neg"))).alias("label"))
-                  # cut the lineage each round (mirrors bfs_distances):
-                  # the labels frame is node-sized, and without the cut
-                  # round k's plan re-analyzes k nested join+agg layers.
-                  # LAZY, yet under AQE declaring it runs the round's
-                  # shuffle stages at once: label_propagation_events
-                  # at sf0.01 ran 4, 3 and 3 jobs for its 3 rounds
-                  # while being built, before any action.
-                  .localCheckpoint(eager=False))
+        return (nb.groupBy("node")
+                .agg(F.max_by(
+                    "label", F.struct(F.col("cnt"), (-F.col("label"))
+                                      .alias("neg"))).alias("label")))
+
+    labels = fixpoint(sym.select(F.col("src").alias("node")).distinct()
+                      .withColumn("label", F.col("node")),
+                      adopt, rounds=iters, name="label_propagation")
     return labels.select("node", "label")
 
 
 def bfs_distances(edges: DataFrame, seeds: DataFrame, *,
-                  max_hops: int = 3, directed: bool = True,
+                  max_hops: int, directed: bool = True,
                   materialized: bool = False) -> DataFrame:
     """Multi-source BFS: shortest hop-distance from any seed node,
     bounded to `max_hops` levels.
@@ -389,26 +388,21 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, *,
     # distinct shuffle + second materialization.
     if not materialized:
         e = e.distinct().localCheckpoint(eager=True)
-    visited = seeds.select("node").distinct() \
-        .withColumn("dist", F.lit(0).cast("long"))
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (e.join(frontier.withColumnRenamed("node", "src"), "src")
-               .select(F.col("dst").alias("node"))
-               .distinct()
-               .join(visited.select("node"), "node", "left_anti")
-               .withColumn("dist", F.lit(hop).cast("long")))
-        # each round's frontier/visited feed the next round's join
-        # twice (expand + anti); localCheckpoint truncates the
-        # re-executed lineage exactly like pagerank's per-iteration
-        # barrier. LAZY, yet under AQE declaring it runs the hop's
-        # shuffle and broadcast stages at once: bfs_distances_events
-        # at sf0.01 ran 3, 4 and 5 jobs for its 3 hops while being
-        # built, before any action.
-        nxt = nxt.localCheckpoint(eager=False)
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+    reached = []  # the seeds, then each hop's checkpointed frontier
+
+    def expand(frontier):
+        reached.append(frontier)
+        visited = reduce(DataFrame.unionByName, reached)
+        return (e.join(frontier.withColumnRenamed("node", "src"), "src")
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .withColumn("dist", F.lit(len(reached)).cast("long")))
+
+    last = fixpoint(seeds.select("node").distinct()
+                    .withColumn("dist", F.lit(0).cast("long")),
+                    expand, rounds=max_hops, name="bfs_distances")
+    return reduce(DataFrame.unionByName, reached + [last])
 
 
 def k_core(edges: DataFrame, *, k: int, max_iter: int = 20) -> DataFrame:
@@ -419,46 +413,43 @@ def k_core(edges: DataFrame, *, k: int, max_iter: int = 20) -> DataFrame:
     whose current degree is < k, recompute degrees on the surviving
     subgraph, repeat to a fixed point.
 
-    Iterative-operator contract (same as duplicate_clusters / BFS):
-    each round is one degree aggregation + two semi-joins over
-    (id, id) pairs only, the shrinking edge list is
-    localCheckpoint()ed so the plan never compounds, and the loop
-    EARLY-EXITS when no vertex was peeled (the fixed point; peeling
-    converges in ≤ |V| rounds, in practice a handful — max_iter is
-    the runaway bound and overrunning it raises rather than
-    returning a wrong subgraph).
+    Each round is one degree aggregation + two semi-joins over
+    (id, id) pairs, run by `caching.fixpoint` like duplicate_clusters:
+    the shrinking edge list is checkpointed per round, and the loop
+    EARLY-EXITS when no vertex was peeled (peeling converges in ≤ |V|
+    rounds, in practice a handful — overrunning max_iter raises
+    rather than returning a wrong subgraph).
 
     Input: directed or undirected (src, dst) — canonicalized
     internally. Columns: vertex, degree (degree WITHIN the k-core).
     """
     und = undirected_edges(edges).localCheckpoint(eager=True)
-    cur = und
-    # edge counts are monotone non-increasing; each round's count is
-    # the next round's "before" count, so ONE count job per round
-    # (which also materializes the round's lazy checkpoint) replaces
-    # the r12 shape of checkpoint job + cur.count() + nxt.count() —
-    # 3 driver-synchronized jobs per peel (guide §1.3)
-    n_cur = cur.count()
-    for _ in range(max_iter):
+
+    def peel(cur):
         deg = (cur.select(F.col("a").alias("v"))
                .unionByName(cur.select(F.col("b").alias("v")))
                .groupBy("v").agg(F.count(F.lit(1)).alias("d")))
         keep = deg.filter(F.col("d") >= k).select("v")
-        nxt = (cur.join(keep.select(F.col("v").alias("a")), "a", "left_semi")
-               .join(keep.select(F.col("v").alias("b")), "b", "left_semi")
-               .localCheckpoint(eager=False))
-        n_nxt = nxt.count()
-        converged = n_nxt == n_cur
-        n_cur, cur = n_nxt, nxt
-        if converged:
-            final = (cur.select(F.col("a").alias("vertex"))
-                     .unionByName(cur.select(F.col("b").alias("vertex")))
-                     .groupBy("vertex")
-                     .agg(F.count(F.lit(1)).cast("long").alias("degree")))
-            return final.filter(F.col("degree") >= k)
-    raise RuntimeError(
-        f"k_core: no fixed point within max_iter={max_iter} peels — "
-        "raise max_iter (each peel strictly shrinks the edge set)")
+        return (cur.join(keep.select(F.col("v").alias("a")), "a", "left_semi")
+                .join(keep.select(F.col("v").alias("b")), "b", "left_semi"))
+
+    # edge counts are monotone non-increasing, so ONE count job per
+    # round (the next round's "before" count) finds the fixed point
+    n_edges = und.count()
+
+    def none_peeled(_prev, cur):
+        nonlocal n_edges
+        n = cur.count()
+        done, n_edges = n == n_edges, n
+        return done
+
+    core = fixpoint(und, peel, rounds=max_iter, name="k_core",
+                    converged=none_peeled)
+    return (core.select(F.col("a").alias("vertex"))
+            .unionByName(core.select(F.col("b").alias("vertex")))
+            .groupBy("vertex")
+            .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+            .filter(F.col("degree") >= k))
 
 
 def graph_stats(edges: DataFrame) -> DataFrame:

@@ -18,18 +18,19 @@ table (one groupBy, bounded by distinct item pairs, never raw
 comparisons); each MM iteration is two keyed joins of that table
 against the item-sized strengths frame plus one aggregation —
 nothing driver-side, fixed iteration count, and the strengths frame
-is localCheckpoint()ed per round (the standard iterative-lineage
-cut, as in graph.label_propagation). Determinism across engines
-comes from the round_c contract used by topics.lloyd_centroids:
-strengths re-round to 6 decimals after every normalized
-update, re-synchronizing float state so an unrolled-CTE oracle
-replays the fit exactly.
+is checkpointed per round by `caching.fixpoint` (the standard
+iterative-lineage cut). Determinism across engines comes from the
+round_c contract used by topics.lloyd_centroids: strengths re-round
+to 6 decimals after every normalized update, re-synchronizing float
+state so an unrolled-CTE oracle replays the fit exactly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from parlerproject_spark.caching import fixpoint
 
 
 def pairwise_matchups(comparisons: DataFrame, *,
@@ -80,8 +81,8 @@ def bradley_terry(comparisons: DataFrame, *,
                           loser_col=loser_col) \
         .localCheckpoint(eager=True)
     wtot = m.groupBy("i").agg(F.sum("w").alias("__W"))
-    p = wtot.select(F.col("i").alias("item"), F.lit(1.0).alias("p"))
-    for _ in range(3):
+
+    def mm_update(p):
         den = (m
                .join(p.select(F.col("item").alias("i"),
                               F.col("p").alias("__pi")), "i")
@@ -102,13 +103,10 @@ def bradley_terry(comparisons: DataFrame, *,
         # the strength table itself (items, not rows, bound it).
         w_all = Window.partitionBy()
         z = F.count(F.lit(1)).over(w_all) / F.sum("__r").over(w_all)
-        # LAZY checkpoint, yet under AQE declaring it runs the
-        # update's shuffle and broadcast stages at once:
-        # bradley_terry_sources at sf0.01 ran 7 jobs per MM update
-        # (25 while being built, before any action; 9 in its write).
-        p = (raw.select("item",
-                        F.round(F.col("__r") * z, 6).alias("p"))
-             .localCheckpoint(eager=False))
+        return raw.select("item", F.round(F.col("__r") * z, 6).alias("p"))
+
+    p = fixpoint(wtot.select(F.col("i").alias("item"), F.lit(1.0).alias("p")),
+                 mm_update, rounds=3, name="bradley_terry")
     obs_w = (comparisons.groupBy(F.col(winner_col).alias("item"))
              .agg(F.count(F.lit(1)).alias("__ow")))
     obs_l = (comparisons.groupBy(F.col(loser_col).alias("item"))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import fixpoint
 from parlerproject_spark.functions.text import stable_hash31
 from parlerproject_spark.operators.stats import _bucketed_prefix_sum
 
@@ -771,8 +772,8 @@ def doremi_weights(domain_losses: DataFrame, *, domain_col: str = "domain",
     domains, not corpus); every round is scalar algebra on that
     k-row frame joined to its own one-row normalizer via broadcast
     cross join (BNLJ — the engine-wide scalar-subquery pattern),
-    localCheckpoint()ed per round. Weights re-round to 6 decimals
-    each round (the lloyd/bradley_terry re-sync contract),
+    checkpointed per round by `caching.fixpoint`. Weights re-round to
+    6 decimals each round (the lloyd/bradley_terry re-sync contract),
     so an unrolled-CTE oracle replays the fit exactly.
     Columns: <domain_col>, excess, weight (round 6).
     """
@@ -782,22 +783,20 @@ def doremi_weights(domain_losses: DataFrame, *, domain_col: str = "domain",
                    - F.col(ref_col).cast("double"),
                    F.lit(0.0)).alias("__e")))
     kf = base.agg(F.count(F.lit(1)).cast("double").alias("__k"))
-    # LAZY checkpoints truncate lineage per round, yet under AQE
-    # declaring one runs that round's shuffle and broadcast stages at
-    # once: doremi_weights_by_source at sf0.01 ran 8 jobs for the
-    # first and 2 for each later one while being built.
     w = (base.crossJoin(F.broadcast(kf))
          .select("__d", "__e", "__k", (1.0 / F.col("__k")).alias("__w"))
          .localCheckpoint(eager=False))
-    for _ in range(3):
+
+    def update(w):
         up = w.withColumn("__w1", F.col("__w") * F.exp(F.col("__e")))
         z = up.agg(F.sum("__w1").alias("__z"))
-        w = (up.crossJoin(F.broadcast(z))
-             .select("__d", "__e", "__k",
-                     F.round(0.9 * F.col("__w1") / F.col("__z")
-                             + F.lit(0.1) / F.col("__k"),
-                             6).alias("__w"))
-             .localCheckpoint(eager=False))
+        return (up.crossJoin(F.broadcast(z))
+                .select("__d", "__e", "__k",
+                        F.round(0.9 * F.col("__w1") / F.col("__z")
+                                + F.lit(0.1) / F.col("__k"),
+                                6).alias("__w")))
+
+    w = fixpoint(w, update, rounds=3, name="doremi_weights")
     return w.select(F.col("__d").alias(domain_col),
                     F.round("__e", 6).alias("excess"),
                     F.col("__w").alias("weight"))

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import fixpoint
 from parlerproject_spark.functions.text import tokenize
 from parlerproject_spark.operators.stats import (_bucketed_prefix_sum,
                                                  _range_bucket,
@@ -278,14 +279,8 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
              # iteration's margin AND gradient pass re-reads this
              # materialization instead of re-running the tokenize →
              # hash → normalize cascade (2·n_iters+1 consumers).
-             # LAZY defers only the checkpoint's own RDD. Under AQE,
-             # localCheckpoint(eager=False) still calls
-             # executedPlan.execute(), and AdaptiveSparkPlanExec runs
-             # every shuffle and broadcast stage of the checkpointed
-             # plan there. So each checkpoint below launches jobs
-             # while the query is being built, on top of
-             # labels.count(): building logreg_quality_scores_docs
-             # at sf0.01 runs 29 jobs before its result is read.
+             # Declaring a lazy checkpoint runs the plan's stages
+             # under AQE (see caching.fixpoint).
              .localCheckpoint(eager=False))
     labels = (docs.select(F.col(id_col).alias("doc_id"),
                           F.col(label_col).cast("double").alias("y"))
@@ -294,7 +289,8 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
     weights = (feats.select("j").distinct()
                .select("j", F.lit(0.0).alias("wt"))
                .localCheckpoint(eager=False))
-    for _ in range(n_iters):
+
+    def descend(weights):
         margins = (feats.join(F.broadcast(weights), "j")
                    .groupBy("doc_id")
                    .agg(F.sum(F.col("x") * F.col("wt")).alias("m")))
@@ -308,11 +304,13 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
         # every observed bucket appears in some doc and every doc has
         # a residual, so grad covers all of weights' keys; the left
         # join is belt-and-braces for an empty corpus
-        weights = (weights.join(grad, "j", "left")
-                   .select("j", (F.col("wt")
-                                 - lr * F.coalesce(F.col("g"), F.lit(0.0)))
-                           .alias("wt"))
-                   .localCheckpoint(eager=False))
+        return (weights.join(grad, "j", "left")
+                .select("j", (F.col("wt")
+                              - lr * F.coalesce(F.col("g"), F.lit(0.0)))
+                        .alias("wt")))
+
+    weights = fixpoint(weights, descend, rounds=n_iters,
+                       name="logreg_quality_classifier")
     margins = (feats.join(F.broadcast(weights), "j")
                .groupBy("doc_id")
                .agg(F.sum(F.col("x") * F.col("wt")).alias("m")))

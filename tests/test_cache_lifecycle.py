@@ -18,13 +18,17 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # A cross-section of the persist-using families flagged in ADVICE
 # r12: AUC histograms, NB model table, fused n-gram LM counts,
-# quantile-band offsets, embedding-drift per-dim stats.
+# quantile-band offsets, embedding-drift per-dim stats; plus two
+# that pin localCheckpoint blocks: an eager checkpoint (the Zipf
+# term table) and a fixpoint loop (k-core peels).
 PERSIST_QUERIES = [
     "roc_auc_docs",
     "nb_quality_scores_docs",
     "stupid_backoff_docs",
     "quantile_band_docs",
     "embedding_drift_snapshots",
+    "corpus_zipf_stats_docs",
+    "k_core_users",
 ]
 
 
@@ -42,6 +46,20 @@ def test_release_all_drops_every_pinned_relation(spark):
     assert released >= 1
     assert cached_rdd_count(spark) == 0, (
         "release_all left cached relations behind")
+
+
+def test_release_all_unpins_checkpoints(spark):
+    """The cache manager does not track localCheckpoint blocks; every
+    fixpoint round leaves one pinned until release_all unpins it."""
+    from parlerproject_spark.operators.graph import k_core
+
+    release_all(spark)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)],
+                                  "src long, dst long")
+    assert k_core(edges, k=2).collect()
+    assert cached_rdd_count(spark) > 0
+    release_all(spark)
+    assert cached_rdd_count(spark) == 0
 
 
 def test_release_all_destroys_partner_broadcast(spark):

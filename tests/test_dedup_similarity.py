@@ -369,6 +369,20 @@ def test_duplicate_clusters_string_ids(spark):
     assert got["x"] == got["y"] == "x"
 
 
+def test_duplicate_clusters_raises_without_fixed_point(spark):
+    """A chain longer than the iteration budget can reach is an error,
+    not split clusters, under both convergence probes: the decimal
+    sum (bigint ids) and the changed-rows join (string ids)."""
+    import pytest
+
+    chain = [(100 + i, 101 + i) for i in range(39)]
+    for pairs in (spark.createDataFrame(chain, "id_a long, id_b long"),
+                  spark.createDataFrame([(str(a), str(b)) for a, b in chain],
+                                        "id_a string, id_b string")):
+        with pytest.raises(RuntimeError, match="no fixed point"):
+            dedup.duplicate_clusters(pairs, max_iter=1)
+
+
 def test_exact_substring_spans_finds_shared_run(spark):
     shared = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     docs = spark.createDataFrame(

@@ -175,3 +175,42 @@ def test_every_option_is_passed_by_a_caller():
     assert not unset, (
         "options no caller sets — make each a constant at its use: "
         + ", ".join(sorted(unset)))
+
+
+# Loops that still checkpoint inline, with why they are not fixpoints:
+# both tokenizer trainers are budgeted greedy searches whose stop comes
+# from each round's own collect, not from a probe of the new state.
+_INLINE_CHECKPOINT_LOOPS = {
+    ("parlerproject_spark/operators/tokenizer.py", "train_bpe"),
+    ("parlerproject_spark/operators/tokenizer.py", "train_wordpiece"),
+}
+
+
+def test_iterative_operators_checkpoint_through_fixpoint():
+    """Every per-round checkpoint of an iterative operator goes through
+    `caching.fixpoint`, the one place that owns the round's lineage
+    cut, job tag and non-convergence policy: no `for`/`while` body
+    under `parlerproject_spark/operators/` may call `localCheckpoint`
+    outside the listed trainers. Pure AST, no Spark."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "parlerproject_spark"
+    sites = set()
+    for f in [pkg / "caching.py", *sorted((pkg / "operators").rglob("*.py"))]:
+        rel = f.relative_to(root).as_posix()
+        for fn in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for loop in ast.walk(fn):
+                if not isinstance(loop, (ast.For, ast.While)):
+                    continue
+                if any(isinstance(n, ast.Call)
+                       and isinstance(n.func, ast.Attribute)
+                       and n.func.attr == "localCheckpoint"
+                       for stmt in loop.body + loop.orelse
+                       for n in ast.walk(stmt)):
+                    sites.add((rel, fn.name))
+    assert sites == _INLINE_CHECKPOINT_LOOPS | {
+        ("parlerproject_spark/caching.py", "fixpoint")}, sorted(sites)

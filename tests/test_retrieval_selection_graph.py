@@ -470,6 +470,30 @@ class TestKCore:
         with pytest.raises(RuntimeError, match="no fixed point"):
             k_core(self._edges(spark, pairs), k=2, max_iter=1)
 
+    def test_rounds_tag_their_jobs(self, spark):
+        from parlerproject_spark.operators.graph import k_core
+        # the path loses both ends per peel: 6 → 4 → 2 → 0 edges, and
+        # the 4th peel finds the fixed point
+        sc = spark.sparkContext
+        group = "test-k-core-job-tags"
+        sc.setJobGroup(group, "caller")
+        try:
+            k_core(self._edges(spark, [(i, i + 1) for i in range(6)]),
+                   k=2).collect()
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobGroup(None, None)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
+        tags = set()
+        for job_id in sc.statusTracker().getJobIdsForGroup(group):
+            desc = store.job(job_id).description()
+            tags.add(desc.get() if desc.isDefined() else None)
+        assert {t for t in tags if t.startswith("k_core#")} == {
+            f"k_core#{i}" for i in range(1, 5)}
+        assert "caller" in tags
+
 
 class TestGraphStats:
     def test_triangle_with_tail(self, spark):
