@@ -1,24 +1,21 @@
-"""Session-level cache lifecycle (SCALE.md §7, VERDICT r12 item 6).
+"""Session-level cache lifecycle and iterative-fit state (SCALE.md §5,
+§7; VERDICT r12 item 6).
 
 Operators persist their model-sized reduction artifacts (distinct-
 score histograms, n-gram count tables, NB/LM model tables, per-group
-quantile offsets) with the LAZY `.persist()` API: every consumer of
-the returned DataFrame reads the one materialization, and repeated
-identical calls are deduped by Spark's plan-keyed CacheManager. What
-the lazy API cannot know is when the LAST consumer has run — that
-boundary belongs to the session driving the queries, not to the
-operator. A long session running hundreds of registered queries
-(the oracle gate, the round driver) therefore accumulates cached
-relations unless it releases them at its own query boundaries.
-
-`release_all(spark)` is that boundary: it drops every cached
-relation (Catalog.clearCache, which also unpins the backing RDD
-blocks), unpins every other persistent RDD (`localCheckpoint`
-blocks, e.g. each `fixpoint` round's) and destroys every
-`session_broadcast`. Hot-path operators with an in-query release
-point keep their explicit unpersist/cache_out seams (dedup.py,
-topics.py, similarity.py's `cache_out`); this helper is the
-backstop for everything else.
+quantile offsets) with the LAZY `.persist()` API: every consumer reads
+the one materialization, and Spark's plan-keyed CacheManager dedupes
+repeated identical calls. When the LAST consumer has run is known only
+to the session driving the queries, so a long session (the oracle
+gate, a registry-wide run) releases at its own query boundaries:
+`release_all(spark)` drops every cached relation, unpins every other
+persistent RDD (`localCheckpoint` blocks, e.g. each `fixpoint`
+round's) and destroys every `session_broadcast`. Hot-path operators
+with an in-query release point keep their explicit unpersist/cache_out
+seams (dedup.py, topics.py, similarity.py's `cache_out`).
+Iterative fits keep corpus-sized state in a DataFrame that `fixpoint`
+checkpoints each round, and model-sized state on the driver, collected
+each round by the capped `collect_state`.
 
 A DataFrame built before a release must not run after it, and
 callers that RE-run the same query (bench.py's median-of-N) must
@@ -29,10 +26,15 @@ plan-keyed cache; bench documents that reliance instead.
 from __future__ import annotations
 
 import weakref
+from contextlib import contextmanager
 
 #: Broadcast variables awaiting the next `release_all`, per
 #: SparkContext (weak, so a stopped context's entries go with it).
 _BROADCASTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+#: `collect_state` cap where the data sizes a fit's state (DoReMi's
+#: domains, Bradley-Terry's items): it ships in every task's plan.
+MODEL_STATE_ROWS = 65_536
 
 
 def session_broadcast(spark, value):
@@ -69,27 +71,44 @@ def release_all(spark) -> int:
     return n
 
 
-def fixpoint(state, step, *, rounds, name, converged=None):
-    """The one driver loop of the iterative operators: at most `rounds`
-    rounds of `state = step(state).localCheckpoint(eager=False)`, so no
-    round's plan compounds. LAZY, yet under AQE declaring the checkpoint
-    runs the round's shuffle and broadcast stages at once, so building
-    the query runs each round's jobs; they carry the job description
-    `{name}#{i}` (i from 1; the job group callers count jobs by is left
-    alone). With `converged(prev, cur)` (one probe job per round) the
-    loop returns at the first round where it holds and raises when none
-    does: a fit cut short is a wrong answer. Without it, exactly
-    `rounds` rounds run."""
-    sc = state.sparkSession.sparkContext
+@contextmanager
+def _job_description(sc, desc):
+    """Tag the block's jobs `desc`, then restore the caller's tag."""
     caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
     try:
-        for i in range(1, rounds + 1):
-            sc.setJobDescription(f"{name}#{i}")
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+
+
+def collect_state(df, *, cap, name):
+    """A model-sized fit's state on the driver: the rows of `df`, collected
+    under the job description `name`. Raises `ValueError` past `cap`
+    rows; the driver never holds more than cap + 1."""
+    with _job_description(df.sparkSession.sparkContext, name):
+        rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(f"{name}: model state exceeds cap={cap} rows")
+    return rows
+
+
+def fixpoint(state, step, *, rounds, name, converged=None):
+    """The one driver loop of the corpus-sized iterative operators (CC,
+    label propagation, BFS, k-core): at most `rounds` rounds of
+    `state = step(state).localCheckpoint(eager=False)`, so no round's
+    plan compounds. Under AQE declaring the lazy checkpoint runs the
+    round's shuffle and broadcast stages at once, as jobs tagged
+    `{name}#{i}` (i from 1). With `converged(prev, cur)` (one probe job
+    per round) the loop returns at the first round where it holds and
+    raises when none does: a fit cut short is a wrong answer. Without
+    it, exactly `rounds` rounds run."""
+    sc = state.sparkSession.sparkContext
+    for i in range(1, rounds + 1):
+        with _job_description(sc, f"{name}#{i}"):
             prev, state = state, step(state).localCheckpoint(eager=False)
             if converged is not None and converged(prev, state):
                 return state
-    finally:
-        sc.setLocalProperty("spark.job.description", caller)
     if converged is not None:
         raise RuntimeError(f"{name}: no fixed point within "
                            f"max_iter={rounds} rounds")

@@ -15,22 +15,25 @@ leaderboards fit (their logistic "Elo" is the same likelihood).
 
 Scale shape: comparisons collapse ONCE to a per-ordered-pair matchup
 table (one groupBy, bounded by distinct item pairs, never raw
-comparisons); each MM iteration is two keyed joins of that table
-against the item-sized strengths frame plus one aggregation —
-nothing driver-side, fixed iteration count, and the strengths frame
-is checkpointed per round by `caching.fixpoint` (the standard
-iterative-lineage cut). Determinism across engines comes from the
-round_c contract used by topics.lloyd_centroids: strengths re-round
-to 6 decimals after every normalized update, re-synchronizing float
-state so an unrolled-CTE oracle replays the fit exactly.
+comparisons). The strengths, one float per item, are model state on
+the driver: each of the fixed MM iterations reads them as a literal
+map, aggregates the matchup table once and collects the item-keyed
+update through `caching.collect_state`. Determinism across engines
+comes from the round_c contract used by topics.lloyd_centroids:
+strengths re-round to 6 decimals after every normalized update,
+re-synchronizing float state so an unrolled-CTE oracle replays the
+fit exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parlerproject_spark.caching import fixpoint
+from parlerproject_spark import caching
+from parlerproject_spark.functions.py_udfs import round_half_up
 
 
 def pairwise_matchups(comparisons: DataFrame, *,
@@ -80,39 +83,35 @@ def bradley_terry(comparisons: DataFrame, *,
     m = pairwise_matchups(comparisons, winner_col=winner_col,
                           loser_col=loser_col) \
         .localCheckpoint(eager=True)
-    wtot = m.groupBy("i").agg(F.sum("w").alias("__W"))
-
-    def mm_update(p):
-        den = (m
-               .join(p.select(F.col("item").alias("i"),
-                              F.col("p").alias("__pi")), "i")
-               .join(p.select(F.col("item").alias("j"),
-                              F.col("p").alias("__pj")), "j")
-               .groupBy("i")
-               .agg(F.sum(F.col("n") / (F.col("__pi") + F.col("__pj")))
-                    .alias("__D")))
-        raw = (wtot.join(den, "i")
-               .select(F.col("i").alias("item"),
-                       (F.col("__W") / F.col("__D")).alias("__r")))
-        # r14: the mean-1 renormalization scalar rides a GLOBAL
-        # window over the raw update instead of a separate
-        # agg + crossJoin(broadcast) — the broadcast build was one
-        # extra driver-synchronized job PER MM update (the r13
-        # verdict's last 2-jobs/round trainer). The single-partition
-        # window is safe here by the same bounded-model contract as
-        # the strength table itself (items, not rows, bound it).
-        w_all = Window.partitionBy()
-        z = F.count(F.lit(1)).over(w_all) / F.sum("__r").over(w_all)
-        return raw.select("item", F.round(F.col("__r") * z, 6).alias("p"))
-
-    p = fixpoint(wtot.select(F.col("i").alias("item"), F.lit(1.0).alias("p")),
-                 mm_update, rounds=3, name="bradley_terry")
+    t = m.schema["i"].dataType.simpleString()
+    W = dict(caching.collect_state(m.groupBy("i").agg(F.sum("w")),
+                                   cap=caching.MODEL_STATE_ROWS,
+                                   name="bradley_terry"))
+    p = dict.fromkeys(sorted(i for i in W if i is not None), 1.0)
+    for it in range(1, 4):
+        if not p:               # no items (empty input): nothing to fit
+            break
+        pm = F.create_map(*[F.lit(x) for kv in p.items() for x in kv]) \
+            .cast(f"map<{t},double>")
+        den = m.groupBy("i").agg(
+            F.sum(F.col("n") / (pm[F.col("i")] + pm[F.col("j")])))
+        # an item without a fitted opponent gets no update (null sum)
+        raw = sorted((i, W[i] / d) for i, d in caching.collect_state(
+            den, cap=caching.MODEL_STATE_ROWS, name=f"bradley_terry#{it}")
+            if d is not None)
+        z = len(raw) / math.fsum(x for _, x in raw) if raw else 0.0
+        p = {i: round_half_up(x * z, 6) for i, x in raw}
+    # a JVM literal frame: createDataFrame would start Python workers
+    strengths = comparisons.sparkSession.range(1).select(F.inline(
+        F.array(*[F.struct(F.lit(i), F.lit(x)) for i, x in p.items()])
+        .cast(f"array<struct<item:{t},strength:double>>")))
     obs_w = (comparisons.groupBy(F.col(winner_col).alias("item"))
              .agg(F.count(F.lit(1)).alias("__ow")))
     obs_l = (comparisons.groupBy(F.col(loser_col).alias("item"))
              .agg(F.count(F.lit(1)).alias("__ol")))
-    return (p.join(obs_w, "item", "left").join(obs_l, "item", "left")
-            .select("item", F.col("p").alias("strength"),
+    return (strengths.join(obs_w, "item", "left")
+            .join(obs_l, "item", "left")
+            .select("item", "strength",
                     F.coalesce("__ow", F.lit(0)).cast("long")
                     .alias("n_wins"),
                     (F.coalesce("__ow", F.lit(0))

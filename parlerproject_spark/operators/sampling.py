@@ -10,10 +10,13 @@ replayable by the DuckDB oracle bit-for-bit.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from parlerproject_spark.caching import fixpoint
+from parlerproject_spark import caching
+from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.functions.text import stable_hash31
 from parlerproject_spark.operators.stats import _bucketed_prefix_sum
 
@@ -769,37 +772,30 @@ def doremi_weights(domain_losses: DataFrame, *, domain_col: str = "domain",
     smoothing the rounds do not collapse into one step).
 
     Scale shape: the input is already per-domain (cardinality =
-    domains, not corpus); every round is scalar algebra on that
-    k-row frame joined to its own one-row normalizer via broadcast
-    cross join (BNLJ — the engine-wide scalar-subquery pattern),
-    checkpointed per round by `caching.fixpoint`. Weights re-round to
-    6 decimals each round (the lloyd/bradley_terry re-sync contract),
-    so an unrolled-CTE oracle replays the fit exactly.
+    domains, not corpus), so one `caching.collect_state` brings its
+    k rows to the driver, the rounds are Python scalar algebra and
+    the result is a literal frame. Weights re-round to 6 decimals
+    each round (`round_half_up`, the lloyd/bradley_terry re-sync
+    contract), so an unrolled-CTE oracle replays the fit exactly.
     Columns: <domain_col>, excess, weight (round 6).
     """
-    base = (domain_losses.select(
-        F.col(domain_col).alias("__d"),
-        F.greatest(F.col(loss_col).cast("double")
-                   - F.col(ref_col).cast("double"),
-                   F.lit(0.0)).alias("__e")))
-    kf = base.agg(F.count(F.lit(1)).cast("double").alias("__k"))
-    w = (base.crossJoin(F.broadcast(kf))
-         .select("__d", "__e", "__k", (1.0 / F.col("__k")).alias("__w"))
-         .localCheckpoint(eager=False))
-
-    def update(w):
-        up = w.withColumn("__w1", F.col("__w") * F.exp(F.col("__e")))
-        z = up.agg(F.sum("__w1").alias("__z"))
-        return (up.crossJoin(F.broadcast(z))
-                .select("__d", "__e", "__k",
-                        F.round(0.9 * F.col("__w1") / F.col("__z")
-                                + F.lit(0.1) / F.col("__k"),
-                                6).alias("__w")))
-
-    w = fixpoint(w, update, rounds=3, name="doremi_weights")
-    return w.select(F.col("__d").alias(domain_col),
-                    F.round("__e", 6).alias("excess"),
-                    F.col("__w").alias("weight"))
+    e = F.greatest(F.col(loss_col).cast("double")
+                   - F.col(ref_col).cast("double"), F.lit(0.0))
+    rows = caching.collect_state(
+        domain_losses.select(domain_col, e, F.round(e, 6)),
+        cap=caching.MODEL_STATE_ROWS, name="doremi_weights")
+    k = len(rows)
+    w = [1.0 / k] * k if k else []      # no domains: nothing to weigh
+    for _ in range(3):
+        w1 = [x * math.exp(r[1]) for x, r in zip(w, rows)]
+        z = math.fsum(w1)
+        w = [round_half_up(0.9 * x / z + 0.1 / k, 6) for x in w1]
+    # a JVM literal frame: createDataFrame would start Python workers
+    d = domain_losses.schema[domain_col].dataType.simpleString()
+    t = f"array<struct<`{domain_col}`:{d},excess:double,weight:double>>"
+    return domain_losses.sparkSession.range(1).select(F.inline(F.array(*[
+        F.struct(F.lit(r[0]), F.lit(r[2]), F.lit(x))
+        for r, x in zip(rows, w)]).cast(t)))
 
 
 def unimax_allocation(counts: DataFrame, *, budget: float,

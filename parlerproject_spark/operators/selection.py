@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from parlerproject_spark.caching import fixpoint
+from parlerproject_spark.caching import collect_state
 from parlerproject_spark.functions.text import tokenize
 from parlerproject_spark.operators.stats import (_bucketed_prefix_sum,
                                                  _range_bucket,
@@ -241,18 +241,14 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
     Features are tf-NORMALIZED counts (bucket count / doc tokens) so
     margins stay in a bounded range: no exp() overflow on long
     documents, and the gradient scale is corpus-size-invariant.
-    Each of the `n_iters` unrolled iterations is pure relational
-    algebra — margins = feature⋈weights (weights are ≤ 257 rows,
-    always BROADCAST) + one doc-keyed aggregate;
-    gradient = feature⋈residuals (both already doc-keyed) + one
-    bucket-keyed aggregate of at most |w| rows; update = weights
-    left-join gradient. Nothing ever collects to the driver and the
-    corpus-scale feature table shuffles ONCE (localCheckpoint) and
-    is re-read by every iteration, so the 100 TB cost is
-    n_iters × (two keyed aggregations) — the same contract as
-    `pagerank`. The fit is not one action chain: building it runs
-    `labels.count()` plus, under AQE, the shuffle and broadcast
-    stages below every lazy `localCheckpoint`, as sequential jobs.
+    The ≤ 257 weights live on the driver; each of the `n_iters`
+    iterations reads them as a literal array: margins = one doc-keyed
+    aggregate of x · w[j]; gradient = feature⋈residuals + one
+    bucket-keyed aggregate, collected by `caching.collect_state`;
+    w − lr · g runs in Python. The corpus-scale feature table shuffles
+    ONCE (localCheckpoint) and is re-read by every iteration, so the
+    100 TB cost is n_iters × (two keyed aggregations) — the same
+    contract as `pagerank`.
     Deterministic end-to-end (w0 = 0, fixed lr), so the DuckDB
     oracle retrains the identical model with the iterations
     unrolled as CTEs.
@@ -275,49 +271,34 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
              .select("doc_id", "j", (F.col("c") / F.col("nt")).alias("x"))
              .unionByName(ntok.select(
                  "doc_id", F.lit(n_buckets).alias("j"), F.lit(1.0).alias("x")))
-             # one shuffle for the whole training loop: every
-             # iteration's margin AND gradient pass re-reads this
-             # materialization instead of re-running the tokenize →
-             # hash → normalize cascade (2·n_iters+1 consumers).
-             # Declaring a lazy checkpoint runs the plan's stages
-             # under AQE (see caching.fixpoint).
+             # one shuffle for the whole training loop: every margin
+             # and gradient pass re-reads this materialization instead
+             # of re-running tokenize → hash → normalize (2·n_iters+1
+             # consumers); under AQE declaring it runs the plan's stages.
              .localCheckpoint(eager=False))
     labels = (docs.select(F.col(id_col).alias("doc_id"),
                           F.col(label_col).cast("double").alias("y"))
               .localCheckpoint(eager=False))
     n_docs = float(labels.count())
-    weights = (feats.select("j").distinct()
-               .select("j", F.lit(0.0).alias("wt"))
-               .localCheckpoint(eager=False))
 
-    def descend(weights):
-        margins = (feats.join(F.broadcast(weights), "j")
-                   .groupBy("doc_id")
-                   .agg(F.sum(F.col("x") * F.col("wt")).alias("m")))
-        resid = (margins.join(labels, "doc_id")
-                 .select("doc_id",
-                         (1.0 / (1.0 + F.exp(-F.col("m"))) - F.col("y"))
-                         .alias("r")))
-        grad = (feats.join(resid, "doc_id")
-                .groupBy("j")
-                .agg((F.sum(F.col("x") * F.col("r")) / n_docs).alias("g")))
-        # every observed bucket appears in some doc and every doc has
-        # a residual, so grad covers all of weights' keys; the left
-        # join is belt-and-braces for an empty corpus
-        return (weights.join(grad, "j", "left")
-                .select("j", (F.col("wt")
-                              - lr * F.coalesce(F.col("g"), F.lit(0.0)))
-                        .alias("wt")))
+    def margins(wt):
+        w = F.element_at(F.array(*map(F.lit, wt)), F.col("j") + 1)
+        return feats.groupBy("doc_id").agg(F.sum(F.col("x") * w).alias("m"))
 
-    weights = fixpoint(weights, descend, rounds=n_iters,
-                       name="logreg_quality_classifier")
-    margins = (feats.join(F.broadcast(weights), "j")
-               .groupBy("doc_id")
-               .agg(F.sum(F.col("x") * F.col("wt")).alias("m")))
-    return (margins.select(
+    prob = 1.0 / (1.0 + F.exp(-F.col("m")))
+    wt = [0.0] * (n_buckets + 1)
+    for i in range(1, n_iters + 1):
+        resid = margins(wt).join(labels, "doc_id").select(
+            "doc_id", (prob - F.col("y")).alias("r"))
+        grad = (feats.join(resid, "doc_id").groupBy("j")
+                .agg(F.sum(F.col("x") * F.col("r")) / n_docs))
+        for j, g in collect_state(grad, cap=n_buckets + 1,
+                                  name=f"logreg_quality_classifier#{i}"):
+            wt[j] -= lr * g
+    return (margins(wt).select(
         F.col("doc_id").alias(id_col),
         F.round("m", 6).alias("margin"),
-        F.round(1.0 / (1.0 + F.exp(-F.col("m"))), 6).alias("prob"))
+        F.round(prob, 6).alias("prob"))
         .withColumn("pred", (F.col("margin") > 0).cast("long")))
 
 

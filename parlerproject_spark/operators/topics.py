@@ -27,6 +27,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import collect_state
 from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.operators.relational import share_of_total
 from parlerproject_spark.operators.text_analysis import topic_terms
@@ -136,7 +137,7 @@ def _maxmin_init(cands: list[list[float]], k: int) -> list[int]:
 
 
 def _lloyd_partial_sums(train: DataFrame, centroids: list[list[float]],
-                        *, dim: int, vec_col: str):
+                        *, dim: int, vec_col: str, name: str):
     """One Lloyd iteration's statistics, computed with the
     assignment FUSED into per-batch partial sums: each Arrow batch
     assigns its vectors (one BLAS matmul) and emits k×dim partial
@@ -148,7 +149,7 @@ def _lloyd_partial_sums(train: DataFrame, centroids: list[list[float]],
     nothing. Float-sum order changes with batching, exactly as a
     shuffled groupBy's does; the `round_c` rounded-centroid
     contract absorbs both. Returns the collected per-(topic, pos)
-    totals (k×dim rows — model-sized)."""
+    totals (k×dim rows — model-sized), tagged `name`."""
     import numpy as np
     import pandas as pd
 
@@ -177,9 +178,9 @@ def _lloyd_partial_sums(train: DataFrame, centroids: list[list[float]],
 
     parts = train.select(vec_col).mapInPandas(
         gen, "topic int, pos int, s double, n long")
-    return (parts.groupBy("topic", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect())
+    return collect_state(parts.groupBy("topic", "pos")
+                         .agg(F.sum("s").alias("s"), F.sum("n").alias("n")),
+                         cap=k * dim, name=name)
 
 
 def lloyd_centroids(vectors: DataFrame, *, k: int = 8, max_iter: int = 5,
@@ -237,9 +238,10 @@ def lloyd_centroids(vectors: DataFrame, *, k: int = 8, max_iter: int = 5,
             centroids = pool[:k]
         dim = len(centroids[0])
 
-        for _ in range(max_iter):
+        for i in range(1, max_iter + 1):
             rows = _lloyd_partial_sums(train, centroids, dim=dim,
-                                       vec_col=vec_col)
+                                       vec_col=vec_col,
+                                       name=f"lloyd_centroids#{i}")
             acc: dict[int, list[float]] = {}
             cnt: dict[int, int] = {}
             for r in rows:

@@ -6,9 +6,13 @@ suite pins both halves of that contract: persist-heavy queries do
 pin relations when materialized, and release_all drops every one of
 them, so a long driver/oracle session that releases at its query
 boundaries (tools/check_oracle.py does) cannot accumulate caches.
+The model-sized fits keep their state on the driver instead, through
+caching.collect_state: its row cap and job tag are pinned here too.
 """
 
 from __future__ import annotations
+
+import pytest
 
 import parlerproject_spark.queries as Q
 from parlerproject_spark import caching
@@ -85,3 +89,41 @@ def test_release_between_queries_keeps_results_identical(spark):
     release_all(spark)
     second = Q.queries()[name](spark, SF_DIR).collect()
     assert first == second
+
+
+def test_collect_state_caps_rows_and_restores_the_description(spark):
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        assert len(caching.collect_state(spark.range(5), cap=5,
+                                         name="probe_state")) == 5
+        with pytest.raises(ValueError, match="probe_state"):
+            caching.collect_state(spark.range(5), cap=4, name="probe_state")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_model_fits_keep_the_empty_input_result(spark):
+    """A fit over no rows returns no rows in its usual schema, not a
+    driver-side division by zero."""
+    from parlerproject_spark.operators.preference import bradley_terry
+    from parlerproject_spark.operators.sampling import doremi_weights
+    from parlerproject_spark.operators.selection import (
+        logreg_quality_classifier)
+
+    def empty(ddl):
+        return spark.createDataFrame([], ddl)
+
+    fits = [
+        (doremi_weights(empty("domain string, loss double, ref_loss double")),
+         "struct<domain:string,excess:double,weight:double>"),
+        (bradley_terry(empty("winner string, loser string")),
+         "struct<item:string,strength:double,n_wins:bigint,n_games:bigint>"),
+        (logreg_quality_classifier(
+            empty("doc_id bigint, text string, label int")),
+         "struct<doc_id:bigint,margin:double,prob:double,pred:bigint>"),
+    ]
+    for out, schema in fits:
+        assert out.schema.simpleString() == schema
+        assert out.collect() == []

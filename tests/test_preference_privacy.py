@@ -64,6 +64,17 @@ def test_bradley_terry_all_losing_item_positive(spark):
     assert got["a"] > got["z"] and got["b"] > got["z"]
 
 
+def test_bradley_terry_caps_its_driver_state(spark, monkeypatch):
+    """The strengths live on the driver, one per item: past the
+    model-state cap the fit raises instead of collecting them."""
+    from parlerproject_spark import caching
+    monkeypatch.setattr(caching, "MODEL_STATE_ROWS", 2)
+    df = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")],
+                               ["winner", "loser"])
+    with pytest.raises(ValueError, match="bradley_terry"):
+        bradley_terry(df)
+
+
 def test_pairwise_matchups_symmetry(spark):
     df = spark.createDataFrame([("a", "b"), ("a", "b"), ("b", "a")],
                                ["winner", "loser"])

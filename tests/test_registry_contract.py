@@ -214,3 +214,36 @@ def test_iterative_operators_checkpoint_through_fixpoint():
                     sites.add((rel, fn.name))
     assert sites == _INLINE_CHECKPOINT_LOOPS | {
         ("parlerproject_spark/caching.py", "fixpoint")}, sorted(sites)
+
+
+# Un-keyed `Window.partitionBy()` windows, each with the bound on the
+# rows it gathers into one partition.
+_GLOBAL_PARTITION_WINDOWS = {
+    ("parlerproject_spark/operators/relational.py", "share_of_total"):
+        "one row per group of the grouped counts",
+}
+
+
+def test_global_partition_windows_are_listed():
+    """Every un-keyed `Window.partitionBy()` under `parlerproject_spark/`
+    moves all its rows into one partition, so each is listed above with
+    its written bound and a new one fails here. Pure AST, no Spark."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    sites = set()
+    for f in sorted((root / "parlerproject_spark").rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        for fn in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for n in ast.walk(fn):
+                if (isinstance(n, ast.Call)
+                        and isinstance(n.func, ast.Attribute)
+                        and n.func.attr == "partitionBy"
+                        and isinstance(n.func.value, ast.Name)
+                        and n.func.value.id == "Window"
+                        and not n.args and not n.keywords):
+                    sites.add((rel, fn.name))
+    assert sites == set(_GLOBAL_PARTITION_WINDOWS), sorted(sites)

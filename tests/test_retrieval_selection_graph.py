@@ -565,6 +565,28 @@ class TestDoremiWeights:
         out = {r["domain"]: r["weight"] for r in doremi_weights(df).collect()}
         assert out["a"] == out["b"] == 0.5
 
+    def test_collect_is_tagged(self, spark):
+        from parlerproject_spark.operators.sampling import doremi_weights
+        df = spark.createDataFrame(
+            [("a", 2.0, 1.0), ("b", 1.0, 1.0), ("c", 0.5, 1.0)],
+            "domain string, loss double, ref_loss double")
+        sc = spark.sparkContext
+        group = "test-doremi-job-tags"
+        sc.setJobGroup(group, "caller")
+        try:
+            doremi_weights(df).collect()
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobGroup(None, None)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
+        tags = set()
+        for job_id in sc.statusTracker().getJobIdsForGroup(group):
+            desc = store.job(job_id).description()
+            tags.add(desc.get() if desc.isDefined() else None)
+        assert "doremi_weights" in tags
+
 
 # --------------------------------------------------------------------------
 # Hashing-trick embeddings + the composed RAG pipeline (round 11)
