@@ -12,10 +12,12 @@ gate, a registry-wide run) releases at its own query boundaries:
 persistent RDD (`localCheckpoint` blocks, e.g. each `fixpoint`
 round's) and destroys every `session_broadcast`. Hot-path operators
 with an in-query release point keep their explicit unpersist/cache_out
-seams (dedup.py, topics.py, similarity.py's `cache_out`).
+seams (dedup.py, topics.py).
 Iterative fits keep corpus-sized state in a DataFrame that `fixpoint`
 checkpoints each round, and model-sized state on the driver, collected
 each round by the capped `collect_state`.
+`collect_state` is the one way out of a plan to the driver;
+`literal` / `literal_frame` are the one way a driver value enters one.
 
 A DataFrame built before a release must not run after it, and
 callers that RE-run the same query (bench.py's median-of-N) must
@@ -25,8 +27,12 @@ plan-keyed cache; bench documents that reliance instead.
 
 from __future__ import annotations
 
+import json
 import weakref
 from contextlib import contextmanager
+
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: Broadcast variables awaiting the next `release_all`, per
 #: SparkContext (weak, so a stopped context's entries go with it).
@@ -91,6 +97,25 @@ def collect_state(df, *, cap, name):
     if len(rows) > cap:
         raise ValueError(f"{name}: model state exceeds cap={cap} rows")
     return rows
+
+
+def literal(value, ddl):
+    """`value` (JSON-serializable) as a Column of type `ddl`: one
+    `from_json` of one string, which constant folding turns into one
+    Literal (`lit(list)` and `array(*lits)` cost a py4j call per
+    element). FAILFAST: a value that does not fit `ddl` raises instead
+    of reading as NULL. JSON keys are strings, so a map is
+    `F.map_from_entries` over an `array<struct<key,value>>` literal."""
+    return F.from_json(F.lit(json.dumps(value)), ddl, {"mode": "FAILFAST"})
+
+
+def literal_frame(spark, rows, ddl):
+    """The tuples `rows` as a DataFrame of schema `ddl` ("a string, b
+    double"), inlined from one `literal`: unlike `createDataFrame` no
+    Python worker starts, and no rows give an empty frame."""
+    schema = T.StructType.fromDDL(ddl)
+    return spark.range(1).select(F.inline(literal(
+        [dict(zip(schema.names, r)) for r in rows], T.ArrayType(schema))))
 
 
 def fixpoint(state, step, *, rounds, name, converged=None):

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal
+
 
 def funnel(events: DataFrame, steps: list[str], *,
            user_col: str = "user_id", ts_col: str = "ts",
@@ -39,8 +41,8 @@ def funnel(events: DataFrame, steps: list[str], *,
     pure in-array fold: state = funnel depth + timestamp of the
     last conversion; each event advances depth iff it is the next
     step and strictly later."""
-    idx = F.array_position(
-        F.array(*[F.lit(s) for s in steps]), F.col(type_col))
+    idx = F.array_position(literal(steps, "array<string>"),
+                           F.col(type_col))
     ev = (events.filter(F.col(type_col).isin(steps))
           .select(F.col(user_col),
                   F.struct(F.col(ts_col).alias("ts"),

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal_frame
 from parlerproject_spark.functions.text import tokenize
 
 
@@ -97,8 +98,8 @@ def semantic_contamination_hits(corpus_emb: DataFrame, eval_emb: DataFrame,
                          F.col(vec_col).alias("__ev"))
     ev_rows = ev.collect()          # eval suite: small by construction
     if not ev_rows:
-        return corpus_emb.sparkSession.createDataFrame(
-            [], f"doc_id {id_type}, n_hits bigint, max_sim double")
+        return literal_frame(corpus_emb.sparkSession, [], f"doc_id {id_type}, "
+                             "n_hits bigint, max_sim double")
     E = np.array([list(r["__ev"]) for r in ev_rows], dtype=np.float64)
     eids = np.array([r["__eid"] for r in ev_rows])
     en = np.linalg.norm(E, axis=1)

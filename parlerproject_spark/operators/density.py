@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal
 from parlerproject_spark.operators.dedup import (duplicate_clusters,
                                                  embedding_near_dups)
 
@@ -177,7 +178,7 @@ def sampled_density_assign(vectors: DataFrame, *, sample_mod: int = 4,
     labels = [int(r["cluster"]) for r in ex_rows]
     assigned = _assign(vectors, exemplar_vecs, id_col=id_col,
                        vec_col=vec_col, outlier_threshold=assign_threshold)
-    lab = F.lit(labels)
+    lab = literal(labels, "array<bigint>")
     return assigned.select(
         F.col(id_col),
         F.when(F.col("topic") >= 0,

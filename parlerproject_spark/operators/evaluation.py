@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from parlerproject_spark.caching import literal
 from parlerproject_spark.operators.stats import (_bucketed_prefix_sum,
                                                  _range_bucket,
                                                  _value_bounds)
@@ -967,7 +968,7 @@ def pass_at_k(results: DataFrame, *, task_col: str = "task_id",
                 .agg(F.count(F.lit(1)).alias("__n"),
                      F.sum(F.col(correct_col).cast("int")).alias("__c")))
     tk = (per_task.withColumn(
-        "__k", F.explode(F.array(*[F.lit(int(k)) for k in ks]))))
+        "__k", F.explode(literal([int(k) for k in ks], "array<int>"))))
     logsum = (tk.filter((F.col("__c") > 0)
                         & (F.col("__n") - F.col("__c") >= F.col("__k")))
               .withColumn("__i", F.explode(

@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal
+
 
 def scale_to_bits(col: Column | str, *, lo: float, hi: float,
                   bits: int = 16) -> Column:
@@ -57,7 +59,7 @@ def equi_depth_bits(df: DataFrame, col: str, *, bits: int = 8) -> Column:
     2^bits-1 literal array — no join, no window, no UDF."""
     n = 1 << bits
     cuts = df.approxQuantile(col, [i / n for i in range(1, n)], 0.001)
-    arr = F.lit([float(c) for c in cuts])
+    arr = literal([float(c) for c in cuts], "array<double>")
     x = F.col(col).cast("double")
     return F.size(F.filter(arr, lambda b: b <= x)).cast("bigint")
 

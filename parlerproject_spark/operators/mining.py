@@ -65,13 +65,13 @@ def hard_negatives(vectors: DataFrame, *, k: int,
         pairs = an.join(bn, (F.col("anchor_id") != F.col("neg_id"))
                         & (F.col("ga") != F.col("gb")))
     elif mode == "cell":
-        from parlerproject_spark.operators.topics import (centroid_literal,
-                                                          lloyd_centroids,
+        from parlerproject_spark.caching import literal
+        from parlerproject_spark.operators.topics import (lloyd_centroids,
                                                           unit_rows)
         centroids = lloyd_centroids(vectors, k=num_cells, max_iter=3,
                                     id_col=id_col, vec_col=vec_col,
                                     train_mod=8, round_c=round_c)
-        cent = centroid_literal(unit_rows(centroids))
+        cent = literal(unit_rows(centroids), "array<array<double>>")
         # candidate side: nearest cell per vector, computed with a
         # sequential JVM dot fold (pure map, argmax ties to the lowest
         # cell — the summation order a SQL replay reproduces); at

@@ -91,8 +91,9 @@ def bradley_terry(comparisons: DataFrame, *,
     for it in range(1, 4):
         if not p:               # no items (empty input): nothing to fit
             break
-        pm = F.create_map(*[F.lit(x) for kv in p.items() for x in kv]) \
-            .cast(f"map<{t},double>")
+        pm = F.map_from_entries(caching.literal(
+            [{"key": i, "value": x} for i, x in p.items()],
+            f"array<struct<key:{t},value:double>>"))
         den = m.groupBy("i").agg(
             F.sum(F.col("n") / (pm[F.col("i")] + pm[F.col("j")])))
         # an item without a fitted opponent gets no update (null sum)
@@ -101,10 +102,8 @@ def bradley_terry(comparisons: DataFrame, *,
             if d is not None)
         z = len(raw) / math.fsum(x for _, x in raw) if raw else 0.0
         p = {i: round_half_up(x * z, 6) for i, x in raw}
-    # a JVM literal frame: createDataFrame would start Python workers
-    strengths = comparisons.sparkSession.range(1).select(F.inline(
-        F.array(*[F.struct(F.lit(i), F.lit(x)) for i, x in p.items()])
-        .cast(f"array<struct<item:{t},strength:double>>")))
+    strengths = caching.literal_frame(comparisons.sparkSession, p.items(),
+                                      f"item {t}, strength double")
     obs_w = (comparisons.groupBy(F.col(winner_col).alias("item"))
              .agg(F.count(F.lit(1)).alias("__ow")))
     obs_l = (comparisons.groupBy(F.col(loser_col).alias("item"))

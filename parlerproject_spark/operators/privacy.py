@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal_frame
+
 #: detection patterns, applied in this order (email first: an email's
 #: local part may contain digit runs a later pattern could clip).
 #: Each maps pii_type -> (pattern, replacement token).
@@ -64,13 +66,8 @@ def erase_keys(tables: dict, key_cols: dict, keys, *, spark=None):
     as a pure whole-stage-codegen scan aggregate: no join, no
     driver-built key frame, one pass per table. Batches past
     _ISIN_AUDIT_MAX keys fall back to a broadcast left-join count
-    (literal IN-lists that large bloat the plan). Neither shape is
-    the eager before/after double-count an earlier version paid
-    (2 scans per table, serial from the driver; at 100 TB that
-    doubled the erasure job's I/O). The key frame's type is inferred
-    per table from the key column's schema, so string subject ids
-    (user/document ids) join correctly rather than failing or
-    silently mis-casting against a hardcoded bigint.
+    (literal IN-lists that large bloat the plan). The key frame takes
+    each table's key-column type, so string subject ids join as strings.
 
     At 100 TB this composes with layout.overwrite_partitions: rewrite
     only the partitions the audit shows contain subject rows. Erasure
@@ -80,17 +77,14 @@ def erase_keys(tables: dict, key_cols: dict, keys, *, spark=None):
     """
     from functools import reduce
 
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
     sp = spark or next(iter(tables.values())).sparkSession
     uniq = list(dict.fromkeys(keys))  # dup keys must not dup joined rows
     cleaned, audits = {}, []
     for name, df in tables.items():
         kc = key_cols[name]
-        kdf = F.broadcast(sp.createDataFrame(
-            [(k,) for k in uniq],
-            T.StructType([T.StructField(
-                "__erase_key", df.schema[kc].dataType, False)])))
+        kdf = F.broadcast(literal_frame(
+            sp, [(k,) for k in uniq],
+            f"__erase_key {df.schema[kc].dataType.simpleString()}"))
         cleaned[name] = df.join(
             kdf, df[kc] == kdf["__erase_key"], "left_anti")
         if len(uniq) <= _ISIN_AUDIT_MAX:

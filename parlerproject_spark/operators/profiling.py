@@ -26,6 +26,8 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal_frame
+
 
 def profile_table(df: DataFrame, cols: Sequence[str], *,
                   approx: bool = False) -> DataFrame:
@@ -204,8 +206,8 @@ def file_size_report(spark, path: str) -> "DataFrame":
                     .alias("file_name"))
             .groupBy("file_name")
             .agg(F.count(F.lit(1)).alias("n_rows")))
-    size_df = spark.createDataFrame(
-        [(k, int(v)) for k, v in sorted(sizes.items())],
+    size_df = literal_frame(
+        spark, [(k, int(v)) for k, v in sorted(sizes.items())],
         "file_name string, bytes long")
     return rows.join(F.broadcast(size_df), "file_name", "full_outer") \
         .select("file_name",
@@ -235,8 +237,8 @@ def schema_diff(spark, path_a: str, path_b: str) -> "DataFrame":
                   "added" if ta is None else
                   "same" if ta == tb else "type_changed")
         rows.append((c, status, ta, tb))
-    return spark.createDataFrame(
-        rows, "col_name string, status string, type_a string, type_b string")
+    return literal_frame(spark, rows, "col_name string, status string, "
+                         "type_a string, type_b string")
 
 
 def embedding_drift(old: DataFrame, new: DataFrame, *,

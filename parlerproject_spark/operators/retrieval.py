@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal_frame
 from parlerproject_spark.functions.text import stable_hash31, tokenize
 from parlerproject_spark.operators.stats import _top_k
 
@@ -288,8 +289,8 @@ def probe_phrase_index(spark, path: str, phrase: str) -> DataFrame:
     m = len(terms)
     assert m >= 1, "phrase must contain at least one token"
     buckets = _term_buckets(terms)
-    probe = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(terms)], "term string, off int")
+    probe = literal_frame(spark, [(t, i) for i, t in enumerate(terms)],
+                          "term string, off int")
     post = (spark.read.parquet(f"{path}/postings")
             .filter(F.col("bucket").isin(buckets)
                     & F.col("term").isin(sorted(set(terms)))))

@@ -790,12 +790,11 @@ def doremi_weights(domain_losses: DataFrame, *, domain_col: str = "domain",
         w1 = [x * math.exp(r[1]) for x, r in zip(w, rows)]
         z = math.fsum(w1)
         w = [round_half_up(0.9 * x / z + 0.1 / k, 6) for x in w1]
-    # a JVM literal frame: createDataFrame would start Python workers
     d = domain_losses.schema[domain_col].dataType.simpleString()
-    t = f"array<struct<`{domain_col}`:{d},excess:double,weight:double>>"
-    return domain_losses.sparkSession.range(1).select(F.inline(F.array(*[
-        F.struct(F.lit(r[0]), F.lit(r[2]), F.lit(x))
-        for r, x in zip(rows, w)]).cast(t)))
+    return caching.literal_frame(
+        domain_losses.sparkSession,
+        [(r[0], r[2], x) for r, x in zip(rows, w)],
+        f"`{domain_col}` {d}, excess double, weight double")
 
 
 def unimax_allocation(counts: DataFrame, *, budget: float,

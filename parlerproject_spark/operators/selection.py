@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from parlerproject_spark.caching import collect_state
+from parlerproject_spark.caching import collect_state, literal
 from parlerproject_spark.functions.text import tokenize
 from parlerproject_spark.operators.stats import (_bucketed_prefix_sum,
                                                  _range_bucket,
@@ -126,9 +126,8 @@ def perplexity_buckets(docs: DataFrame, *, id_col: str = "doc_id",
     Columns: <id_col>, lm_logp, bucket (1=head), band.
     """
     scored = lm_score(docs, id_col=id_col, text_col=text_col)
-    fracs = [1 / 3, 2 / 3]
     edges = scored.agg(F.percentile(
-        "lm_logp", F.lit(fracs).cast("array<double>")).alias("qs"))
+        "lm_logp", literal([1 / 3, 2 / 3], "array<double>")).alias("qs"))
     # k = #edges at or below this score (0..2); bucket 1 = head
     k = F.size(F.filter(F.col("qs"),
                         lambda e: F.col("lm_logp") >= e))
@@ -282,7 +281,7 @@ def logreg_quality_classifier(docs: DataFrame, *, id_col: str = "doc_id",
     n_docs = float(labels.count())
 
     def margins(wt):
-        w = F.element_at(F.array(*map(F.lit, wt)), F.col("j") + 1)
+        w = F.element_at(literal(wt, "array<double>"), F.col("j") + 1)
         return feats.groupBy("doc_id").agg(F.sum(F.col("x") * w).alias("m"))
 
     prob = 1.0 / (1.0 + F.exp(-F.col("m")))

@@ -30,6 +30,7 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal, literal_frame
 from parlerproject_spark.functions.py_udfs import round_half_up
 from parlerproject_spark.functions.vectors import cosine
 
@@ -162,8 +163,9 @@ def _rerank(cand: DataFrame, q: list[float], *, k: int, vec_col: str,
     rows (vec_id, <vec_col>) to the literal query, top-k by sim desc,
     vec_id asc. `dedup`: a vector found in several LSH tables counts
     once."""
+    qlit = literal(q, "array<double>")
     scored = cand.select("vec_id",
-                         F.round(cosine(vec_col, F.lit(q)), 6).alias("sim"))
+                         F.round(cosine(vec_col, qlit), 6).alias("sim"))
     if dedup:
         scored = scored.groupBy("vec_id").agg(F.max("sim").alias("sim"))
     return scored.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
@@ -577,10 +579,12 @@ def _adc_rerank(codes: DataFrame, rows: DataFrame, vec_col: str,
     m, dsub = len(B), B[0].shape[1]
     q = np.array(query_vec, dtype=np.float64)
     lut = [B[s] @ q[s * dsub:(s + 1) * dsub] for s in range(m)]
-    lut_lit = F.lit([[float(x) for x in row] for row in lut])
+    lut_lit = literal([[float(x) for x in row] for row in lut],
+                      "array<array<double>>")
     # per-subspace centroid self-dots → reconstructed-norm lookup
     n2 = [(B[s] * B[s]).sum(axis=1) for s in range(m)]
-    n2_lit = F.lit([[float(x) for x in row] for row in n2])
+    n2_lit = literal([[float(x) for x in row] for row in n2],
+                     "array<array<double>>")
 
     def lut_sum(table):
         return F.aggregate(
@@ -593,7 +597,7 @@ def _adc_rerank(codes: DataFrame, rows: DataFrame, vec_col: str,
     cand = (codes.select("vec_id", score.alias("adc"))
             .orderBy(F.col("adc").desc(), F.col("vec_id").asc())
             .limit(rerank))
-    qlit = F.lit([float(x) for x in query_vec])
+    qlit = literal([float(x) for x in query_vec], "array<double>")
     return (rows.join(F.broadcast(cand.select("vec_id")), "vec_id")
             .select("vec_id",
                     F.round(cosine(vec_col, qlit), 6).alias("sim"))
@@ -654,7 +658,7 @@ def build_ivfpq_index(vectors: DataFrame, path: str, *, dim: int,
      .parquet(f"{path}/rows"))
     spark = vectors.sparkSession
     model = _json.dumps({"centroids": cents, "codebooks": books})
-    (spark.createDataFrame([(model,)], "model string")
+    (literal_frame(spark, [(model,)], "model string")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/model"))
 
 
@@ -767,27 +771,16 @@ def mmr_rerank(vectors: DataFrame, query: DataFrame, *,
              .filter(F.col("ia") != F.col("ib"))
              .select("ia", "ib", F.round(cosine("va", "vb"), 6).alias("s"))
              .persist())
-    # greedy selection holds ONE ROW per step — collect it and carry
-    # the selected-id list as a literal isin() predicate (r13). The
-    # r12 form kept each pick as a checkpointed 1-row DataFrame and
-    # re-joined `sel` twice per step, which cost a checkpoint job
-    # plus two broadcast builds per pick; a k_select-row driver list
-    # is model-sized by construction (the duplicate_clusters /
-    # lloyd_centroids bounded-collect contract), and each step is
-    # now exactly one collect over the persisted candidate
-    # relations. Plan equality: isin(sel_ids) selects the same rows
-    # the anti-join/semi-join pair did; ordering, rounding and
-    # tie-breaks are unchanged, so the greedy path is identical.
+    # greedy selection: each step is one collect of ONE row over the
+    # persisted candidates; the k_select picks (model-sized) stay on
+    # the driver as a literal isin() predicate and the result frame.
     first = (cand.orderBy(F.col("rel").desc(), F.col("vec_id").asc())
              .limit(1).collect()[0])
     picks = [(1, first["vec_id"], float(first["rel"]),
               float(first["rel"]))]
     sel_ids = [first["vec_id"]]
-    # null-guard note (VERDICT r13 minor): ~isin(sel_ids) is NULL for
-    # a NULL vec_id where the old left-anti join kept the row — ids
-    # here are non-null by construction (they came out of
-    # knn_bruteforce's keyed top-k), so the forms coincide; a caller
-    # feeding nullable ids must filter them first.
+    # ~isin(sel_ids) is NULL for a NULL vec_id: ids here are non-null
+    # (they come out of knn_bruteforce's keyed top-k).
     for t in range(2, k_select + 1):
         scored = (cand.filter(~F.col("vec_id").isin(sel_ids))
                   .join(pairs, F.col("vec_id") == F.col("ia"))
@@ -807,16 +800,17 @@ def mmr_rerank(vectors: DataFrame, query: DataFrame, *,
                       float(r["mmr_score"])))
         sel_ids.append(r["vec_id"])
     id_t = vectors.schema[id_col].dataType.simpleString()
-    return vectors.sparkSession.createDataFrame(
-        picks, f"rank long, vec_id {id_t}, rel double, mmr_score double")
+    return literal_frame(
+        vectors.sparkSession, picks,
+        f"rank long, vec_id {id_t}, rel double, mmr_score double")
 
 
 def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
                        margin_threshold: float = 1.0, mutual: bool = True,
                        mode: str = "exact", dim: int | None = None,
                        num_planes: int = 4, num_tables: int = 8,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       cache_out: list | None = None) -> DataFrame:
+                       id_col: str = "vec_id",
+                       vec_col: str = "embedding") -> DataFrame:
     """Margin-based parallel-pair mining (Artetxe & Schwenk 2019,
     the CCMatrix/LASER bitext-mining criterion): score every
     candidate (src, tgt) pair by its cosine RELATIVE to each side's
@@ -902,13 +896,9 @@ def margin_pair_mining(src: DataFrame, tgt: DataFrame, *, k: int = 4,
     # the |A|×|B| scoring pass runs three times (measured 6.1 s →
     # 2.6 s warm at sf0.1). The persisted unit is the CANDIDATE table: all
     # pairs in exact mode (bounded sides by contract), bucket-collided
-    # pairs in lsh mode — never corpus-squared at scale.
+    # pairs in lsh mode — never corpus-squared at scale. The session's
+    # next `caching.release_all` unpersists it.
     sims = sims.persist()
-    if cache_out is not None:
-        # surface the persisted handle (embedding_near_dups contract):
-        # callers that materialize the result unpersist via this list,
-        # otherwise MEMORY_AND_DISK blocks accumulate across calls.
-        cache_out.append(sims)
     wf = Window.partitionBy("id_a").orderBy(F.col("sim").desc(),
                                             F.col("id_b").asc())
     wb = Window.partitionBy("id_b").orderBy(F.col("sim").desc(),
@@ -950,9 +940,7 @@ def truncation_recall(vectors: DataFrame, query: DataFrame, *,
     ANN index degrades (truncation is the cheapest compression: no
     re-encode, prefix-sliced storage, d/D of the scan bytes).
 
-    Fully declarative and ONE corpus scan (the round-11 scan-budget
-    audit caught the old one-knn-per-d form reading the vectors
-    |dims|+1 times): every prefix cosine — each d plus the full
+    Fully declarative and ONE corpus scan: every prefix cosine — each d plus the full
     width, tagged dim = −1 — is computed in a single projection
     (identical slice/fold ops to per-d knn_bruteforce, so values are
     bit-equal), exploded to (dim, sim) rows, and top-k'd per dim
@@ -1021,11 +1009,9 @@ def late_interaction_topk(doc_tokens: DataFrame,
     """
     if not query_vecs:
         raise ValueError("late_interaction_topk needs >= 1 query vector")
-    sims = [
-        F.round(cosine(vec_col, F.array(*[F.lit(float(x)) for x in q])), 6)
-        .alias(f"__s{j}")
-        for j, q in enumerate(query_vecs)
-    ]
+    sims = [F.round(cosine(vec_col, literal([float(x) for x in q],
+                                            "array<double>")), 6)
+            .alias(f"__s{j}") for j, q in enumerate(query_vecs)]
     per = doc_tokens.select(F.col(id_col), *sims)
     maxes = [F.max(f"__s{j}").alias(f"__m{j}")
              for j in range(len(query_vecs))]
@@ -1047,11 +1033,8 @@ def train_scalar_quantizer(vectors: DataFrame, *, dim: int,
                            vec_col: str = "embedding") -> dict:
     """Per-dimension uniform quantizer bounds from ONE pass:
     {mins: [d], maxs: [d]}. posexplode → groupBy(pos) min/max, so the
-    plan is DIMENSION-INDEPENDENT — the old 2·dim-aggregate-expression
-    form compiled one codegen term per dimension and risked Janino's
-    per-method bytecode limit at real embedding widths (the
-    reference's all-MiniLM-L6-v2 is 384-d, reference
-    code/embeddings.py:60). Map-side partial aggregation keeps the
+    plan is dimension-independent: one codegen term, not 2·dim, at
+    the reference's 384-d (code/embeddings.py:60). Map-side partial aggregation keeps the
     shuffle at partitions × dim rows; the collected state is dim rows
     of two doubles, model-sized. The codec this parameterizes stores
     each float32 dimension as an 8-bit level (4× memory cut on the
@@ -1092,17 +1075,14 @@ def encode_scalar(vectors: DataFrame, params: dict, *,
     pure narrow map (no shuffle): columns <id_col>, codes
     (array<int>, each 0..255).
 
-    The bounds ride along as ONE constant-folded array<struct>
-    literal and the codes come from a single `zip_with` — the
-    expression tree is dimension-INDEPENDENT, so whole-stage codegen
-    emits the same bytecode at 384-d (the reference's real
-    dimensionality) as at the 64-d fixture; the old per-dimension
-    `F.array(...)` unroll grew one codegen term per dimension and
-    courted Janino's method-size fallback."""
+    The bounds ride along as ONE `caching.literal` array<struct> and
+    the codes come from a single `zip_with`: the expression tree is
+    dimension-independent, so whole-stage codegen emits the same
+    bytecode at 384-d as at 64-d."""
     mins, maxs = params["mins"], params["maxs"]
-    bounds = F.array(*[
-        F.struct(F.lit(float(mn)).alias("mn"), F.lit(float(mx)).alias("mx"))
-        for mn, mx in zip(mins, maxs)])
+    bounds = literal([{"mn": float(mn), "mx": float(mx)}
+                      for mn, mx in zip(mins, maxs)],
+                     "array<struct<mn:double,mx:double>>")
     codes = F.zip_with(F.col(vec_col), bounds,
                        lambda x, b: _sq_code(x, b["mn"], b["mx"]))
     return vectors.select(F.col(id_col), codes.alias("codes"))
@@ -1146,10 +1126,8 @@ def knn_scalar(vectors: DataFrame, query_vec: list, params: dict, *,
     qc = [code1(query_vec[d], mins[d], maxs[d]) for d in range(dim)]
     scales = [(maxs[d] - mins[d]) / 255.0 for d in range(dim)]
     enc = encode_scalar(vectors, params, id_col=id_col, vec_col=vec_col)
-    qz = F.array(*[
-        F.struct(F.lit(int(qc[d])).alias("q"),
-                 F.lit(float(scales[d])).alias("s"))
-        for d in range(dim)])
+    qz = literal([{"q": int(qc[d]), "s": float(scales[d])}
+                  for d in range(dim)], "array<struct<q:int,s:double>>")
 
     def sq_term(c, z):
         v = (c - z["q"]).cast("double") * z["s"]

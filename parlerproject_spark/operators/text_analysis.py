@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal
 from parlerproject_spark.functions.text import tokenize
 from parlerproject_spark.operators.stats import _top_k
 
@@ -131,7 +132,8 @@ def language_id(docs: DataFrame, *, text_col: str = "text",
         {k: v for k, v in _LANG_MARKERS.items() if k != "zh"}
         if script_aware else _LANG_MARKERS)
     toks = F.array_distinct(tokenize(text_col))
-    scores = {lang: F.size(F.array_intersect(toks, F.array(*[F.lit(m) for m in markers])))
+    scores = {lang: F.size(F.array_intersect(
+                  toks, literal(markers, "array<string>")))
               for lang, markers in voting_langs.items()}
     best = F.greatest(*scores.values())
     pred = F.lit("und")

@@ -33,14 +33,6 @@ from parlerproject_spark.operators.relational import share_of_total
 from parlerproject_spark.operators.text_analysis import topic_terms
 
 
-def centroid_literal(centroids: list[list[float]]) -> F.Column:
-    """k×dim centroid matrix as ONE array<array<double>> literal —
-    a single Literal node, not k×dim Column objects (k=16, dim=384
-    would otherwise be 6,144 expression-tree leaves, which dominates
-    driver-side plan construction and analysis time)."""
-    return F.lit([[float(x) for x in c] for c in centroids])
-
-
 def unit_rows(centroids: list[list[float]]) -> list[list[float]]:
     """L2-normalize each centroid driver-side: argmax_c cos(v, c) ==
     argmax_c dot(v, c/|c|), so assignment needs ONE dot per cell
@@ -142,11 +134,8 @@ def _lloyd_partial_sums(train: DataFrame, centroids: list[list[float]],
     assignment FUSED into per-batch partial sums: each Arrow batch
     assigns its vectors (one BLAS matmul) and emits k×dim partial
     (sum, count) rows, so the per-iteration shuffle carries
-    batches·k·dim rows instead of the n·dim exploded coordinates
-    the old assign→posexplode→groupBy shape shuffled — at a
-    terabyte-scale training sample that is the difference between
-    re-shuffling the sample every iteration and shuffling (almost)
-    nothing. Float-sum order changes with batching, exactly as a
+    batches·k·dim rows, not the sample's n·dim exploded coordinates.
+    Float-sum order changes with batching, exactly as a
     shuffled groupBy's does; the `round_c` rounded-centroid
     contract absorbs both. Returns the collected per-(topic, pos)
     totals (k×dim rows — model-sized), tagged `name`."""

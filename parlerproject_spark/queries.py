@@ -27,6 +27,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parlerproject_spark.caching import literal, literal_frame
 from parlerproject_spark.catalog import load_table
 from parlerproject_spark.functions.geo import dms_to_decimal
 from parlerproject_spark.functions.text import (
@@ -1637,9 +1638,9 @@ GROUP BY tier
 def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval (range) join: events bucketed into value tiers via a
     broadcast nested-loop against a 3-row interval table."""
-    tiers = spark.createDataFrame(
-        [("small", 0.0, 50.0), ("mid", 50.0, 200.0), ("large", 200.0, 1e9)],
-        ["tier", "lo", "hi"])
+    tiers = literal_frame(spark, [("small", 0.0, 50.0), ("mid", 50.0, 200.0),
+                                  ("large", 200.0, 1e9)],
+                          "tier string, lo double, hi double")
     joined = relational.range_join(_t(spark, sf_dir, "events"), tiers,
                                    value_col="value")
     return (joined.filter(F.col("tier").isNotNull())
@@ -1817,7 +1818,8 @@ def doc_frequency_stopworded(spark: SparkSession, sf_dir: str) -> DataFrame:
         PARLER_STOP_WORDS,
         tokenize,
     )
-    stops = F.array(*[F.lit(w) for w in PARLER_STOP_WORDS + BASIC_ENGLISH_STOP_WORDS])
+    stops = literal(PARLER_STOP_WORDS + BASIC_ENGLISH_STOP_WORDS,
+                    "array<string>")
     d = _t(spark, sf_dir, "documents")
     terms = d.select(
         "doc_id",
@@ -5194,8 +5196,8 @@ def bpe_merges_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parlerproject_spark.operators.tokenizer import train_bpe
     merges = train_bpe(_t(spark, sf_dir, "documents"), n_merges=20)
     rows = [(i + 1, a, b) for i, (a, b) in enumerate(merges)]
-    return spark.createDataFrame(rows or [(0, "", "")],
-                                 "rank long, left string, right string")
+    return literal_frame(spark, rows or [(0, "", "")],
+                         "rank long, left string, right string")
 
 
 @register("bpe_segment_docs", _bpe_segment_oracle())
@@ -6654,8 +6656,8 @@ def unigram_vocab_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     vocab = train_unigram(d, vocab_size=80, n_iters=2,
                           max_piece_len=5, n_seed=150)
-    return spark.createDataFrame(
-        [(p, round(lp, 6)) for p, lp in vocab], "piece string, logp double")
+    return literal_frame(spark, [(p, round(lp, 6)) for p, lp in vocab],
+                         "piece string, logp double")
 
 
 @register("unigram_segment_docs",
@@ -12534,8 +12536,8 @@ def wordpiece_merges_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = train_wordpiece(_t(spark, sf_dir, "documents"), n_merges=12)
     rows = [(i + 1, a, b, m, cnt, ca, cb)
             for i, (a, b, m, cnt, ca, cb) in enumerate(merges)]
-    return spark.createDataFrame(
-        rows or [(0, "", "", "", 0, 0, 0)],
+    return literal_frame(
+        spark, rows or [(0, "", "", "", 0, 0, 0)],
         "rank long, left string, right string, piece string, "
         "cnt long, ca long, cb long")
 
@@ -13104,12 +13106,12 @@ def unimax_mixture_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # ONE corpus tokenization pass; the collected count table is one
     # row per source (bounded model state), and the water-fill then
-    # runs over the local relation — the corpus is never re-scanned
+    # runs over a literal frame — the corpus is never re-scanned
     rows = (d.groupBy("source")
             .agg(F.sum(F.size(tokenize("text"))).alias("n_tokens"))
             .collect())
     total = sum(r["n_tokens"] for r in rows)
-    cnt = spark.createDataFrame(rows, "source string, n_tokens bigint")
+    cnt = literal_frame(spark, rows, "source string, n_tokens bigint")
     return (unimax_allocation(cnt, budget=0.95 * float(total),
                               max_epochs=1.0)
             .orderBy("source"))
@@ -13202,7 +13204,7 @@ def mojibake_repair_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     repertoire — the docstring'd limit of this corruption class."""
     from parlerproject_spark.functions.text import repair_mojibake
     rows = [(i, _moji_corrupt(s)) for i, s in _MOJI_FIXTURE]
-    df = spark.createDataFrame(rows, "doc_id bigint, corrupted string")
+    df = literal_frame(spark, rows, "doc_id bigint, corrupted string")
     rep = repair_mojibake("corrupted")
     return (df.select("doc_id", "corrupted", rep.alias("repaired"),
                       (rep != F.col("corrupted")).alias("changed"))
@@ -13265,7 +13267,7 @@ def card_luhn_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         (5, "no digits at all"),
         (6, "amex 378282246310005 and a 13-digit 4222222222222"),
     ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    df = literal_frame(spark, rows, "doc_id bigint, text string")
     return card_flags(df).orderBy("doc_id")
 
 
@@ -13574,8 +13576,8 @@ def rag_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = (hashed_embedding(chunks, dim=16, id_col="ck",
                              text_col="chunk_text")
             .select(F.col("ck").alias("vec_id"), "embedding"))
-    q = spark.createDataFrame(
-        [(hashed_query_vector("spark join query", dim=16),)],
+    q = literal_frame(
+        spark, [(hashed_query_vector("spark join query", dim=16),)],
         "q array<double>")
     dw = Window.orderBy(F.col("sim").desc(), F.col("vec_id").asc())
     dense = (knn_bruteforce(vecs, q, k=50)

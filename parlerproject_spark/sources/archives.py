@@ -835,6 +835,8 @@ def tar_shard_manifest(spark, out_dir: str):
     import os
     import tarfile as tf
 
+    from parlerproject_spark.caching import literal_frame
+
     rows = []
     for fn in sorted(os.listdir(out_dir)):
         if not (fn.endswith(".tar") or fn.endswith(".tar.gz")):
@@ -845,6 +847,5 @@ def tar_shard_manifest(spark, out_dir: str):
         pts = (len(build_gzip_sync_index(path))
                if fn.endswith(".gz") else 0)
         rows.append((fn, n, os.path.getsize(path), pts))
-    return spark.createDataFrame(
-        rows, "shard string, n_members long, n_bytes long, "
-              "sync_points long")
+    return literal_frame(spark, rows, "shard string, n_members long, "
+                         "n_bytes long, sync_points long")

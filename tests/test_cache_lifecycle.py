@@ -127,3 +127,71 @@ def test_model_fits_keep_the_empty_input_result(spark):
     for out, schema in fits:
         assert out.schema.simpleString() == schema
         assert out.collect() == []
+
+
+# Values where a JSON round trip could drift: NaN, ±inf, -0.0, the
+# smallest subnormal, near-max, a non-shortest sum, a bigint past 2^53,
+# NULL, and a string needing escapes and surrogate pairs.
+EDGE_DDL = "x double, n bigint, s string"
+EDGE_ROWS = [
+    (float("nan"), 2 ** 62 + 1, "é☃😀\"\\"),
+    (float("inf"), None, None),
+    (float("-inf"), -(2 ** 63), ""),
+    (-0.0, 0, "a"),
+    (5e-324, 1, None),
+    (1.797e308, 2, "x"),
+    (0.1 + 0.2, 3, "y"),
+    (None, 4, "z"),
+]
+
+
+def test_literal_frame_round_trips_like_create_dataframe(spark):
+    """`literal_frame` gives the values and the schema `createDataFrame`
+    gives (repr tells NaN and -0.0 apart where == would not)."""
+    got = caching.literal_frame(spark, EDGE_ROWS, EDGE_DDL)
+    ref = spark.createDataFrame(EDGE_ROWS, EDGE_DDL)
+    assert got.schema == ref.schema
+    assert ([tuple(map(repr, r)) for r in got.collect()]
+            == [tuple(map(repr, r)) for r in ref.collect()])
+
+
+def test_literal_frame_of_no_rows_keeps_the_schema(spark):
+    got = caching.literal_frame(spark, [], EDGE_DDL)
+    assert got.collect() == []
+    assert got.schema == spark.createDataFrame([], EDGE_DDL).schema
+
+
+def test_literal_raises_on_a_value_that_does_not_fit(spark):
+    """FAILFAST: a string where a bigint belongs is an error, not NULL."""
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        spark.range(1).select(
+            caching.literal({"a": "x"}, "struct<a:bigint>")).collect()
+
+
+def test_literal_folds_to_one_literal(spark):
+    """The optimizer folds the JSON parse away: the optimized plan holds
+    the value itself, and no `from_json` runs per row."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(3).select(
+        F.element_at(caching.literal([1.5, 2.5], "array<double>"),
+                     (F.col("id") % 2 + 1).cast("int")).alias("w"),
+        F.map_from_entries(caching.literal(
+            [{"key": 5, "value": 1.0}, {"key": 7, "value": 2.0}],
+            "array<struct<key:bigint,value:double>>"))[F.col("id") + 5]
+        .alias("p"))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in plan, plan
+    assert [tuple(r) for r in df.collect()] == [
+        (1.5, 1.0), (2.5, None), (1.5, 2.0)]
+
+
+def test_literal_frame_scans_no_python_rdd(spark):
+    """`createDataFrame` plans a Python RDD scan (Python workers start);
+    `literal_frame` plans none."""
+    from parlerproject_spark.plans.inspect import executed_plan
+
+    got = caching.literal_frame(spark, EDGE_ROWS, EDGE_DDL)
+    ref = spark.createDataFrame(EDGE_ROWS, EDGE_DDL)
+    assert "ExistingRDD" in executed_plan(ref)
+    assert "ExistingRDD" not in executed_plan(got)

@@ -117,15 +117,3 @@ def test_non_mutual_keeps_every_source(spark):
     assert len(rows) == len(src)
     assert len({r.src_id for r in rows}) == len(src)
 
-
-def test_margin_mining_cache_out_surfaces_persisted_sims(spark):
-    src_rows, tgt_rows = _sides(seed=11, n=8, dim=8)
-    src, tgt = _df(spark, src_rows), _df(spark, tgt_rows)
-    handles = []
-    out = margin_pair_mining(src, tgt, cache_out=handles)
-    out.count()
-    # the persisted candidate-sims frame is surfaced so callers can
-    # release it (embedding_near_dups contract)
-    assert len(handles) == 1
-    assert handles[0].storageLevel.useMemory
-    handles[0].unpersist()

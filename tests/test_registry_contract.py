@@ -224,15 +224,52 @@ _GLOBAL_PARTITION_WINDOWS = {
 }
 
 
-def test_global_partition_windows_are_listed():
-    """Every un-keyed `Window.partitionBy()` under `parlerproject_spark/`
-    moves all its rows into one partition, so each is listed above with
-    its written bound and a new one fails here. Pure AST, no Spark."""
+# Un-keyed `Window.orderBy(...)` windows (no partitionBy at all), each
+# with the bound on the rows it sorts in one partition, one entry per
+# site in source order.
+_UNKEYED_ORDER_WINDOWS = {
+    ("parlerproject_spark/operators/analytics.py", "kaplan_meier"): (
+        "one row per distinct duration in days (at-risk sum)",
+        "one row per distinct duration in days (survival product)"),
+    ("parlerproject_spark/operators/evaluation.py", "gains_curve"): (
+        "at most n_bands band rows",),
+    ("parlerproject_spark/operators/evaluation.py",
+     "krippendorff_alpha_metric"): (
+        "one row per distinct label value",),
+    ("parlerproject_spark/operators/profiling.py", "key_skew_report"): (
+        "at most `top` rows after the top-k cut",),
+    ("parlerproject_spark/operators/sampling.py",
+     "negative_sampling_draws"): (
+        "one row per vocabulary token kept by min_count",),
+    ("parlerproject_spark/operators/sampling.py", "unimax_allocation"): (
+        "one row per source",),
+    ("parlerproject_spark/operators/stats.py", "_top_k"): (
+        "at most k rows after the limit",),
+    ("parlerproject_spark/operators/text_analysis.py", "vocab_coverage"): (
+        "at most top_k rows after the top-k cut",),
+    ("parlerproject_spark/operators/timeseries.py", "seasonal_decompose"): (
+        "one row per (day, weekday) of the series",),
+    ("parlerproject_spark/queries.py", "corpus_shuffle_order"): (
+        "50 rows after the limit",),
+    ("parlerproject_spark/queries.py", "ntile_value_quartiles"): (
+        "4000 rows after the limit",),
+    ("parlerproject_spark/queries.py", "rag_context_budget"): (
+        "k=8 rows of the dense top-k",
+        "k=8 rows of the dense top-k"),
+    ("parlerproject_spark/queries.py", "rag_pipeline_docs"): (
+        "k=50 rows of the dense top-k",),
+    ("parlerproject_spark/queries.py", "rrf_hybrid_docs"): (
+        "k=50 rows of the dense top-k",),
+}
+
+
+def _window_calls(attr):
+    """(file, function, call node) of every `Window.<attr>(...)` call
+    under `parlerproject_spark/`, once per call."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]
-    sites = set()
     for f in sorted((root / "parlerproject_spark").rglob("*.py")):
         rel = f.relative_to(root).as_posix()
         for fn in ast.walk(ast.parse(f.read_text())):
@@ -241,9 +278,78 @@ def test_global_partition_windows_are_listed():
             for n in ast.walk(fn):
                 if (isinstance(n, ast.Call)
                         and isinstance(n.func, ast.Attribute)
-                        and n.func.attr == "partitionBy"
+                        and n.func.attr == attr
                         and isinstance(n.func.value, ast.Name)
-                        and n.func.value.id == "Window"
-                        and not n.args and not n.keywords):
-                    sites.add((rel, fn.name))
+                        and n.func.value.id == "Window"):
+                    yield rel, fn.name, n
+
+
+def test_global_partition_windows_are_listed():
+    """Every un-keyed `Window.partitionBy()` under `parlerproject_spark/`
+    moves all its rows into one partition, so each is listed above with
+    its written bound and a new one fails here. Pure AST, no Spark."""
+    sites = {(rel, fn) for rel, fn, n in _window_calls("partitionBy")
+             if not n.args and not n.keywords}
     assert sites == set(_GLOBAL_PARTITION_WINDOWS), sorted(sites)
+
+
+def test_unkeyed_order_windows_are_listed():
+    """Every `Window.orderBy(...)` without a partitionBy sorts all its
+    rows in one partition, so each site is listed above with its
+    written row bound and a new one fails here. Pure AST, no Spark."""
+    from collections import Counter
+
+    sites = Counter((rel, fn) for rel, fn, _ in _window_calls("orderBy"))
+    assert sites == {k: len(v) for k, v in _UNKEYED_ORDER_WINDOWS.items()}, \
+        sorted(sites.items())
+
+
+def _f_call(node):
+    """`name` when `node` is a call `F.<name>(...)`, else None."""
+    import ast
+    if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"):
+        return node.func.attr
+    return None
+
+
+def test_driver_values_enter_plans_through_caching_literal():
+    """A driver-side value enters a plan only through `caching.literal` /
+    `caching.literal_frame` (one JSON literal the optimizer folds).
+    Fails under `parlerproject_spark/` on any `createDataFrame` call
+    (it starts Python workers), on `F.lit` of a list display or
+    comprehension, and on `F.array` / `F.create_map` over `*map(F.lit,
+    ...)` or over a starred comprehension whose elements are built
+    from `F.lit` / `F.struct` calls alone (one py4j call per element).
+    Mixed column/literal structs stay legal. Pure AST, no Spark."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    bad = []
+    for f in sorted((root / "parlerproject_spark").rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        for n in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(n, ast.Call):
+                continue
+            if (isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "createDataFrame"):
+                bad.append((rel, n.lineno, "createDataFrame"))
+            elif (_f_call(n) == "lit" and n.args
+                    and isinstance(n.args[0], (ast.List, ast.ListComp))):
+                bad.append((rel, n.lineno, "F.lit(list)"))
+            elif _f_call(n) in ("array", "create_map"):
+                for a in n.args:
+                    v = a.value if isinstance(a, ast.Starred) else None
+                    if (isinstance(v, ast.Call)
+                            and isinstance(v.func, ast.Name)
+                            and v.func.id == "map" and v.args
+                            and isinstance(v.args[0], ast.Attribute)
+                            and v.args[0].attr == "lit"):
+                        bad.append((rel, n.lineno, "*map(F.lit, ...)"))
+                    elif isinstance(v, (ast.ListComp, ast.GeneratorExp)):
+                        fs = {_f_call(c) for c in ast.walk(v.elt)} - {None}
+                        if "lit" in fs and fs <= {"lit", "struct"}:
+                            bad.append((rel, n.lineno, "[F.lit ...]"))
+    assert not bad, bad
